@@ -36,11 +36,12 @@ PRIORITY = [
     # --- round-13: the engine-exact rounding conversion (the r12
     # VERDICT #3 tie-class pass). Every name below had a displayed
     # ratio moved from round(double, 6) to the exact integer quotient
-    # WITH ITS ORACLE CHANGED IN LOCKSTEP (the `_avg6` pattern) — the
-    # one result-affecting class this round, so the gate re-proves
-    # them same-round. All re-proven locally at 3 SFs. Ordered
-    # most-delicate-first: signed/decimal-headroom sites, then the
-    # operator-shared families, then plain count/count outputs. ---
+    # WITH ITS ORACLE CHANGED IN LOCKSTEP (today `half_up` with its
+    # twin `half_up_sql`) — the one result-affecting class this
+    # round, so the gate re-proves them same-round. All re-proven
+    # locally at 3 SFs. Ordered most-delicate-first: signed/decimal-
+    # headroom sites, then the operator-shared families, then plain
+    # count/count outputs. ---
     "label_centroids", "rater_agreement_kappa", "user_activity_gini",
     "dp_noised_histogram", "doc_trigram_backoff_ppl",
     "softdedup_weights", "pipeline_weighted_mixture",

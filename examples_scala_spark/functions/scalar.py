@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 
 
 def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+    """Column name -> column, Python number -> literal, Column as is."""
+    if isinstance(col, str):
+        return F.col(col)
+    return F.lit(col) if isinstance(col, (int, float)) else col
 
 
 def fahrenheit_to_celsius_col(col) -> Column:
@@ -45,78 +48,75 @@ def epoch_seconds(ts_col) -> Column:
     return _c(ts_col).cast("long")
 
 
-def ratio6(num, den) -> Column:
-    """round-half-up(num/den, 6) computed as EXACT integer arithmetic:
-    (2*num*10^6 + den) div (2*den) / 1e6 — the engine-neutral twin of
-    round(double, 6) for nonnegative-integer-valued num over positive-
-    integer den. round(double, 6) is not engine-neutral when the exact
-    rational terminates at a 6-dp half (reduced denominator 2^7 * 5^j):
-    Spark rounds the double's shortest decimal repr, DuckDB the raw
-    binary, and they split on the last digit (the r12 _avg6 class).
-    Count-valued denominators hit that class, so count/count ratio
-    sites use this instead of F.round. The quotient is built with long
-    `%` (exact) rather than floor() of a double division, which could
-    misround exactly at the tie. NULL-propagating like `/`; den = 0
-    yields NULL on both engines. Overflow bound: num <= ~4.6e12
-    (2*num*10^6 must fit BIGINT) — widen at the call site if a
-    corpus-scaled numerator can exceed it.
+_D38 = "decimal(38,0)"
 
-    DuckDB twin fragment (oracle SQL):
-      ((2 * CAST(a AS BIGINT) * 1000000 + b)
-       // (2 * CAST(b AS BIGINT))) / 1e6
+
+def half_up(num, den, scale: int = 6) -> Column:
+    """round-half-away-from-zero(num/den, scale) as a DOUBLE, computed
+    as EXACT integer arithmetic — the repo's one engine-exact rounding
+    rule. num and den are exact-integer-valued columns of any sign;
+    den = 0 (or NULL) yields NULL, like `/`.
+
+    Why not round(double, 6): it is not engine-neutral when the exact
+    rational terminates at a `scale`-dp half (reduced denominator
+    2^7 * 5^j at 6 dp). Spark rounds the double's SHORTEST decimal
+    repr (BigDecimal.valueOf), DuckDB the raw binary value, and they
+    split on the last digit. An sf0.1 window landed on avg =
+    2089.93/32 = 65.3103125 exactly; count-valued denominators hit the
+    class routinely (precision/recall, shares, dup fractions, means of
+    integer cents or nano-units). So every such site computes on the
+    exact rational instead:
+
+      q = (2*|num|*10^scale + |den|) div (2*|den|)
+
+    then sign(num) * sign(den) * (double(q) / 10^scale). Rounding the
+    magnitude and applying the sign after is what makes the rule
+    half-away-from-zero (the same as round() on both engines) rather
+    than half-toward-+inf, and it keeps every division on nonnegative
+    operands. The sign multiplies the double, not the integer, because
+    DuckDB's HUGEINT to DOUBLE cast is not correctly rounded for
+    negative values above 2^53. A negative ratio that rounds to zero
+    gives -0.0, identically on both engines.
+
+    Headroom: everything runs in DECIMAL(38,0) — HUGEINT in the DuckDB
+    twin, half_up_sql — so 2*|num|*10^scale must stay below 10^38
+    (|num| < 5e31 at scale 6). The two engines agree bit for bit while
+    q < 2^64, i.e. |num/den| < 1.8e13 at scale 6 (1.8e7 at scale 12):
+    above that DuckDB's HUGEINT to DOUBLE cast is not correctly
+    rounded; Spark's stays exact. Counts, cent sums and nano-unit sums
+    at corpus scale are far inside both bounds. There is one DECIMAL
+    path and no BIGINT fast path: a per-site choice between the two is
+    how BIGINT overflow crept into corpus-scaled sites before. The
+    price is BigDecimal arithmetic, about 0.5 us more per evaluation
+    than a BIGINT quotient (2M-row projection, 4-core x86 host).
+
+    Common shapes: a mean of integer cents is half_up(sum_cents,
+    100 * cnt); a signed nano-unit value is half_up(units, 10**9); the
+    12-dp quantisation MSE is half_up(err, n * 10**12, scale=12).
+
+    What stays on F.round: constant denominators whose reduction
+    carries fewer than `scale`+1 factors of 2 (e.g. /5, /16) can never
+    tie, and transcendental values (log, exp, sqrt) have no exact
+    decimal expansion, so round(double) agrees on both engines there.
     """
-    n = _c(num).cast("long")
-    # den = 0 -> NULL (as DuckDB's // 0): ANSI mode would throw on % 0
-    d = F.nullif(_c(den).cast("long"), F.lit(0).cast("long"))
-    n2 = n * F.lit(2_000_000) + d
-    d2 = d * F.lit(2)
-    return ((n2 - n2 % d2) / d2) / F.lit(1_000_000.0)
+    n = _c(num).cast(_D38)
+    d = F.nullif(_c(den).cast(_D38), F.lit(0).cast(_D38))
+    a, b = F.abs(n), F.abs(d)
+    n2 = a * F.lit(2 * 10 ** scale) + b
+    d2 = b * F.lit(2)
+    q = ((n2 - n2 % d2) / d2).cast(_D38)
+    # the sign product as an integer, like DuckDB's sign(): 0 * -1
+    # must give 0, not the -0.0 a double product would
+    sgn = (F.signum(n) * F.signum(d)).cast("int")
+    return sgn * (q.cast("double") / F.lit(float(10 ** scale)))
 
 
-def ratio6_dec(num, den) -> Column:
-    """ratio6 in DECIMAL(38,0) for integer-valued numerators beyond the
-    BIGINT headroom (corpus-token counts, squared cent sums). DuckDB
-    twin: the same quotient over HUGEINT."""
-    n = _c(num).cast("decimal(38,0)")
-    d = F.nullif(_c(den).cast("decimal(38,0)"),
-                 F.lit(0).cast("decimal(38,0)"))
-    n2 = n * F.lit(2_000_000) + d
-    d2 = d * F.lit(2)
-    return (((n2 - F.pmod(n2, d2)) / d2)
-            .cast("decimal(38,0)").cast("double") / F.lit(1e6))
-
-
-def units6(u, unit: int = 1_000_000_000) -> Column:
-    """round-half-up(u/unit, 6) for a SIGNED exact-integer column u —
-    the /1e9 nano-unit (and /1e6 micro-unit) display class. Same tie
-    exposure as ratio6 (10^9 carries 2^9). Sign is handled explicitly:
-    round() is half-AWAY-FROM-ZERO on both engines, and the quotient
-    runs over |u| because Spark's integer div truncates toward zero
-    while DuckDB's // floors — identical only for nonnegative operands.
-
-    DuckDB twin fragment:
-      (CASE WHEN u < 0 THEN -1 ELSE 1 END)
-      * ((2 * abs(u)::BIGINT * 1000000 + UNIT) // (2 * UNIT)) / 1e6
-    """
-    c = _c(u).cast("long")
-    sgn = F.when(c < 0, F.lit(-1)).otherwise(F.lit(1))
-    a = F.abs(c)
-    n2 = a * F.lit(2_000_000) + F.lit(unit)
-    d2 = F.lit(2 * unit)
-    return sgn * ((n2 - n2 % d2) / d2) / F.lit(1_000_000.0)
-
-
-def sratio6_dec(num, den) -> Column:
-    """Signed ratio6 in DECIMAL(38,0): round-half-away-from-zero
-    (num/den, 6) for an exact-integer num of either sign over a
-    positive exact-integer den, both beyond BIGINT headroom. DuckDB
-    twin: the same quotient over HUGEINT with CASE WHEN sign * abs."""
-    n = _c(num).cast("decimal(38,0)")
-    d = F.nullif(_c(den).cast("decimal(38,0)"),
-                 F.lit(0).cast("decimal(38,0)"))
-    sgn = F.when(n < 0, F.lit(-1)).otherwise(F.lit(1))
-    a = F.abs(n)
-    n2 = a * F.lit(2_000_000) + d
-    d2 = d * F.lit(2)
-    return sgn * (((n2 - F.pmod(n2, d2)) / d2)
-                  .cast("decimal(38,0)").cast("double") / F.lit(1e6))
+def half_up_sql(num: str, den: str, scale: int = 6) -> str:
+    """DuckDB twin of half_up as a SQL fragment over the expressions
+    num and den: the same quotient over HUGEINT, the same sign rule,
+    NULL on den = 0. The oracles build every half-up quotient through
+    this; none is written out by hand."""
+    n = f"CAST(({num}) AS HUGEINT)"
+    d = f"NULLIF(CAST(({den}) AS HUGEINT), 0)"
+    q = f"((2 * abs({n}) * {10 ** scale} + abs({d})) // (2 * abs({d})))"
+    return f"(sign({n}) * sign({d}) * ({q} / 1e{scale}))"

@@ -36,13 +36,6 @@ def exact_sum(col: str | Column, alias: str) -> Column:
     return F.sum(dec(col)).cast("double").alias(alias)
 
 
-def exact_avg(col: str | Column, alias: str) -> Column:
-    """avg = exact decimal sum / count, divided in double — identical
-    bits on any engine that sums the same decimals."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(dec(c)).cast("double") / F.count(c)).alias(alias)
-
-
 def tumbling(ts_col: str, size: str) -> Column:
     """W1/W2/W3 — tumbling window bucket."""
     return F.window(F.col(ts_col), size)

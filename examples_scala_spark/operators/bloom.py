@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalar import ratio6
+from ..functions.scalar import half_up
 from .dedup import shingle_hashes
 
 DEFAULT_M_BITS = 1 << 17
@@ -134,7 +134,7 @@ def bloom_benchmark_overlap(docs: DataFrame, bench_docs: DataFrame,
     return out.select(
         F.col(id_col), F.col("n_shingles").cast("bigint"),
         F.col("n_overlap").cast("bigint"),
-        ratio6(F.col("n_overlap"), F.col("n_shingles"))
+        half_up(F.col("n_overlap"), F.col("n_shingles"))
          .alias("overlap_frac"),
         (F.col("n_overlap") / F.col("n_shingles") >= frac_threshold)
         .alias("contaminated"))

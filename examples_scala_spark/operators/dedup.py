@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.scalar import ratio6
+from ..functions.scalar import half_up
 from ..session import scoped_shuffle_partitions
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
@@ -366,8 +366,8 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
         .filter(F.col("jaccard") >= threshold)
         # count/count ratio: exact half-up at 6 dp (r13 tie class)
         .select("doc_a", "doc_b",
-                ratio6(F.col("inter"),
-                       F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+                half_up(F.col("inter"),
+                        F.col("sz_a") + F.col("sz_b") - F.col("inter"))
                 .alias("jaccard"))
     )
     return out
@@ -420,7 +420,7 @@ def benchmark_overlap(docs: DataFrame, bench_docs: DataFrame, n: int = 5,
     return out.select(
         F.col(id_col), F.col("n_shingles").cast("bigint"),
         F.col("n_overlap").cast("bigint"),
-        ratio6(F.col("n_overlap"), F.col("n_shingles"))
+        half_up(F.col("n_overlap"), F.col("n_shingles"))
          .alias("overlap_frac"),
         (F.col("n_overlap") / F.col("n_shingles") >= frac_threshold)
         .alias("contaminated"))
@@ -508,7 +508,7 @@ def substring_dup_stats(docs: DataFrame, L: int = 30,
     return out.select(
         F.col(id_col), F.col("n_positions").cast("bigint"),
         F.col("n_dup").cast("bigint"),
-        ratio6(F.col("n_dup"), F.col("n_positions"))
+        half_up(F.col("n_dup"), F.col("n_positions"))
          .alias("dup_frac"))
 
 def substring_dedup_rewrite(docs: DataFrame, L: int = 30,
@@ -1044,6 +1044,6 @@ def setsim_prefix_join(docs: DataFrame, n: int = 3,
                         / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
             .filter(F.col("jaccard") >= F.lit(t_num) / F.lit(t_den))
             .select("doc_a", "doc_b",
-                    ratio6(F.col("inter"),
-                           F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+                    half_up(F.col("inter"),
+                            F.col("sz_a") + F.col("sz_b") - F.col("inter"))
                     .alias("jaccard")))

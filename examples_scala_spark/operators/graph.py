@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalar import ratio6
+from ..functions.scalar import half_up
 from ..session import scoped_shuffle_partitions
 
 
@@ -317,6 +317,6 @@ def triangle_stats(nodes: DataFrame, edges: DataFrame,
                 F.coalesce("triangles", F.lit(0)).cast("bigint")
                  .alias("triangles"),
                 F.when(F.coalesce("degree", F.lit(0)) >= 2,
-                       ratio6(2 * F.coalesce("triangles", F.lit(0)),
-                              F.col("degree") * (F.col("degree") - 1)))
+                       half_up(2 * F.coalesce("triangles", F.lit(0)),
+                               F.col("degree") * (F.col("degree") - 1)))
                  .otherwise(F.lit(0.0)).alias("lcc")))

@@ -136,43 +136,6 @@ def asof_join(left: DataFrame, right: DataFrame, ts: str = "ts",
     return filled.filter(F.col("__tag") == 1).drop("__tag")
 
 
-def smoke_alert(readings: DataFrame, smoke: DataFrame,
-                threshold: float = 100.0) -> DataFrame:
-    """J1 — RaiseAlertFlatMap twin: emit an alert for every reading with
-    temperature > threshold while the (global, un-keyed) smoke level is
-    'High'. The control value 'currently in effect' is the as-of
-    semantics of the reference's mutable per-task variable."""
-    enriched = asof_join(readings, smoke, ts="ts", right_cols=["level"])
-    return (
-        enriched.filter((F.col("level") == "High") & (F.col("temperature") > threshold))
-        .select(
-            F.concat(F.lit("Risk of fire! "), F.col("id")).alias("message"),
-            F.col("timestamp").alias("timestamp"),
-            F.col("temperature"),
-        )
-    )
-
-
-def switch_filter(readings: DataFrame, switches: DataFrame,
-                  key: str = "id") -> DataFrame:
-    """J2 — ReadingFilter twin (chapter6/CoProcessFunctionTimers.scala:49-102):
-    a switch (id, enable_ts, duration_ms) forwards that sensor's readings
-    for duration_ms. Batch/relational form: interval join — readings
-    within [enable_ts, enable_ts + duration]. Broadcast the tiny switch
-    table; the fact side stays unshuffled."""
-    sw = switches.select(
-        F.col(key),
-        F.col("enable_ts"),
-        (F.col("enable_ts") + F.make_interval(secs=F.col("duration_ms") / 1000.0)).alias("disable_ts"),
-    )
-    return readings.alias("r").join(
-        F.broadcast(sw).alias("s"),
-        (F.col(f"r.{key}") == F.col(f"s.{key}"))
-        & (F.col("r.ts") >= F.col("s.enable_ts"))
-        & (F.col("r.ts") < F.col("s.disable_ts")),
-        "inner",
-    ).select("r.*")
-
 def range_join(left: DataFrame, right: DataFrame, value_col: str,
                lo_col: str, hi_col: str, granularity: float,
                extra_keys: list[str] | None = None,

@@ -44,40 +44,3 @@ def classify_late(df: DataFrame, delay_ms: int = 5_000,
     streaming observability twin."""
     return with_running_watermark(df, delay_ms, arrival_col, ts_ms_col) \
         .withColumn("is_late", F.col(ts_ms_col) < F.col("watermark_ms"))
-
-
-def late_rows(df: DataFrame, **kw) -> DataFrame:
-    return classify_late(df, **kw).filter(F.col("is_late")).drop("is_late")
-
-
-def on_time_rows(df: DataFrame, **kw) -> DataFrame:
-    return classify_late(df, **kw).filter(~F.col("is_late")).drop("is_late")
-
-
-def updating_window_counts(df: DataFrame, size_s: int = 10,
-                           key: str = "id",
-                           delay_ms: int = 5_000,
-                           lateness_ms: int = 5_000,
-                           arrival_col: str = "event_id",
-                           ts_ms_col: str = "timestamp") -> DataFrame:
-    """T7 — allowedLateness + UpdatingWindowCountFunction twin
-    (chapter6/LateDataHandling.scala:112-172): per key+window, the count
-    of rows accepted while the window was open (on time, or late within
-    the lateness allowance), tagged first/update.
-
-    Output: key, window_end_ms, cnt, update_cnt (number of late-but-
-    accepted rows => reference emits 1 'first' + update_cnt 'update'
-    records). In SS this is exactly update output mode with
-    withWatermark(delay + lateness).
-    """
-    classified = classify_late(df, delay_ms, arrival_col, ts_ms_col)
-    win_end = (F.col(ts_ms_col) / 1000 / size_s).cast("long") * size_s + size_s
-    accepted = classified.withColumn("window_end", win_end).filter(
-        # accepted while open: not dropped until watermark passes
-        # window_end + lateness
-        F.col("watermark_ms") < F.col("window_end") * 1000 + F.lit(lateness_ms)
-    )
-    return accepted.groupBy(key, "window_end").agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.col("is_late").cast("long")).alias("update_cnt"),
-    )

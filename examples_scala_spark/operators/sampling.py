@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalar import units6
+from ..functions.scalar import half_up
 
 
 def _hash_col(id_col: str, salt: str) -> F.Column:
@@ -235,7 +235,7 @@ def dsir_importance(docs: DataFrame, target, n_buckets: int = 512,
                     F.coalesce("n_feats", F.lit(0)).cast("bigint")
                      .alias("n_feats"),
                     # signed nano-units: exact half-away (r13 tie class)
-                    units6(F.coalesce("units", F.lit(0)))
+                    half_up(F.coalesce("units", F.lit(0)), 10**9)
                      .alias("logweight")))
 
 
@@ -270,7 +270,7 @@ def gumbel_topk(weights: DataFrame, k: int = 100,
     win = Window.orderBy(F.desc("units"), id_col)
     return (top.withColumn("rnk", F.row_number().over(win).cast("long"))
             .select(id_col, weight_col,
-                    units6(F.col("units")).alias("score"),
+                    half_up(F.col("units"), 10**9).alias("score"),
                     "rnk"))
 
 

@@ -26,17 +26,3 @@ def freezing_monitor(readings: DataFrame,
         F.col("temperature"),
     )
     return main, side
-
-
-def branch_writer(main_sink, side_sink, threshold: float = 32.0):
-    """Streaming twin: one foreachBatch closure writing both branches —
-    the scan and the freezing filter run once per micro-batch."""
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            main, side = freezing_monitor(batch_df, threshold)
-            main_sink(main, batch_id)
-            side_sink(side, batch_id)
-        finally:
-            batch_df.unpersist()
-    return write

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.scalar import (ratio6, ratio6_dec, sratio6_dec)
+from ..functions.scalar import half_up
 
 # deterministic pseudo-random hyperplane component for (plane, dim):
 # ((p*131 + d)*2654435761 mod 1000003)/1000003 - 0.5
@@ -843,46 +843,12 @@ def label_centroids(emb: DataFrame, dim: int = 64,
         .select("label", "dim", "n",
                 # s is DECIMAL(28,12): *1e12 -> exact SIGNED integer;
                 # the mean is an integer rational (r13 tie class)
-                sratio6_dec((F.col("s") * F.lit(1_000_000_000_000))
-                            .cast("decimal(38,0)"),
-                            F.col("n").cast("decimal(38,0)")
-                            * F.lit(1_000_000_000_000))
+                half_up((F.col("s") * F.lit(1_000_000_000_000))
+                        .cast("decimal(38,0)"),
+                        F.col("n").cast("decimal(38,0)")
+                        * F.lit(1_000_000_000_000))
                  .alias("centroid"))
     )
-
-# ---------------------------------------------------------------------
-# Johnson-Lindenstrauss sign projection (dimensionality reduction)
-# ---------------------------------------------------------------------
-
-def rp_sign(k: int, d: int) -> float:
-    """Deterministic ±1 projection-matrix entry for (output dim k,
-    input dim d) — same integer-hash stream as the LSH hyperplanes,
-    offset so the two matrices are uncorrelated."""
-    return 1.0 if _plane_component(1000 + k, d) >= 0 else -1.0
-
-
-def rp_project(emb: DataFrame, out_dim: int = 16, dim: int = 64,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
-    """Johnson-Lindenstrauss random projection: dim -> out_dim with a
-    deterministic ±1 sign matrix (Achlioptas' database-friendly JL —
-    no gaussians, exact arithmetic on the input floats). The 1/sqrt(m)
-    JL scale factor is dropped because cosine is scale-invariant.
-
-    Scale shape: a pure narrow map — out_dim fused JVM folds per row
-    inside whole-stage codegen, no Python, no shuffle; the sign matrix
-    is (out_dim x dim) literals riding the plan. At 100 TB this is the
-    cheap first stage that cuts every downstream ANN distance
-    computation (and candidate shuffle width) by dim/out_dim, paying
-    only the JL distortion ~sqrt(8 ln n / out_dim) quantified by
-    ann_recall_rp."""
-    v = F.col(vec_col).cast("array<double>")
-    comps = []
-    for kk in range(out_dim):
-        signs = F.array(*[F.lit(rp_sign(kk, d)) for d in range(dim)])
-        comps.append(F.aggregate(F.zip_with(v, signs, lambda a, b: a * b),
-                                 F.lit(0.0), lambda acc, x: acc + x))
-    return emb.select(F.col(id_col), F.array(*comps).alias("embedding_rp"))
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.35,
@@ -1041,7 +1007,7 @@ def semantic_dedup_sweep(emb: DataFrame,
                               1).otherwise(0)).cast("long")
                  .alias("n_dropped"))
             .select("threshold", "n_docs", "n_dropped",
-                    ratio6(F.col("n_dropped"), F.col("n_docs"))
+                    half_up(F.col("n_dropped"), F.col("n_docs"))
                     .alias("drop_frac")))
 
 
@@ -1534,8 +1500,8 @@ def rerank_cross_encoder(docs: DataFrame, candidates: DataFrame,
     enr = docs.join(F.broadcast(candidates), id_col)
     scored = enr.select(
         F.col(id_col), F.col("rrf"),
-        ratio6(F.size(F.array_intersect(toks, qarr)),
-               F.size(F.array_union(toks, qarr))).alias("ce_score"))
+        half_up(F.size(F.array_intersect(toks, qarr)),
+                F.size(F.array_union(toks, qarr))).alias("ce_score"))
     out = scored.select(
         id_col, "rrf", "ce_score",
         F.round(F.col("ce_score") + rrf_weight * F.col("rrf"), 6)

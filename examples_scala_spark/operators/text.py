@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalar import ratio6, sratio6_dec
+from ..functions.scalar import half_up
 from ..session import scoped_shuffle_partitions
 
 # tiny deterministic stopword lists per language for the n-gram/stopword
@@ -130,10 +130,10 @@ def quality_score(docs: DataFrame, text_col: str = "text",
         # count/count ratios: exact half-up at 6 dp (r13 tie class);
         # the score itself is an exact multiple of 0.25 (binary-exact,
         # round(.,2) is the identity) and stays on F.round
-        ratio6(n_chars - (n_words - 1), n_words).alias("mean_word_len"),
-        ratio6(n_punct, n_chars).alias("punct_ratio"),
-        ratio6(n_digit, n_chars).alias("digit_ratio"),
-        ratio6(n_stop, n_words).alias("stop_ratio"),
+        half_up(n_chars - (n_words - 1), n_words).alias("mean_word_len"),
+        half_up(n_punct, n_chars).alias("punct_ratio"),
+        half_up(n_digit, n_chars).alias("digit_ratio"),
+        half_up(n_stop, n_words).alias("stop_ratio"),
         F.round(score, 2).alias("quality_score"),
     )
 
@@ -362,7 +362,7 @@ def bpe_encode_doc_stats(docs: DataFrame, k_merges: int = 12,
                     F.coalesce("n_subwords", F.lit(0)).cast("bigint")
                      .alias("n_subwords"),
                     # count/count ratio: exact half-up (r13 tie class)
-                    ratio6(F.col("n_subwords"), F.col("n_words"))
+                    half_up(F.col("n_subwords"), F.col("n_words"))
                      .alias("fertility")))
 
 
@@ -537,8 +537,8 @@ def rare_token_stats(docs: DataFrame, rare_df_num: int = 1,
         .select(
             F.col(id_col),
             "n_tokens", "n_terms", "n_rare",
-            ratio6(F.col("n_terms"), F.col("n_tokens")).alias("ttr"),
-            ratio6(F.col("n_rare"), F.col("n_tokens"))
+            half_up(F.col("n_terms"), F.col("n_tokens")).alias("ttr"),
+            half_up(F.col("n_rare"), F.col("n_tokens"))
              .alias("rare_ratio"),
         )
     )
@@ -775,7 +775,7 @@ def dup_ngram_char_fraction(docs: DataFrame, n: int = 5,
         F.col(id_col), "n_words", "word_chars",
         dc.alias("dup_ngram_chars"),
         F.when(F.col("word_chars") == 0, F.lit(0.0))
-         .otherwise(ratio6(dc, F.col("word_chars")))
+         .otherwise(half_up(dc, F.col("word_chars")))
          .alias("dup_char_frac"))
 
 
@@ -863,9 +863,9 @@ def softdedup_weights(docs: DataFrame, n: int = 4,
         F.col(id_col), "n_grams",
         # signed nano-units over n_grams*1e9: exact half-away, DECIMAL
         # headroom (r13 tie class)
-        sratio6_dec(F.col("units"),
-                    F.col("n_grams").cast("decimal(38,0)")
-                    * F.lit(1_000_000_000)).alias("mean_logp"))
+        half_up(F.col("units"),
+                F.col("n_grams").cast("decimal(38,0)")
+                * F.lit(1_000_000_000)).alias("mean_logp"))
     st = m.agg(F.min("mean_logp").alias("__mn"),
                F.max("mean_logp").alias("__mx"))
     out = (docs.select(F.col(id_col))
@@ -878,8 +878,8 @@ def softdedup_weights(docs: DataFrame, n: int = 4,
     amx = F.round(F.col("__mx") * 1e6).cast("long")
     w = (F.when(F.col("n_grams").isNull(), F.lit(1.0))
          .when(F.col("__mx") == F.col("__mn"), F.lit(1.0))
-         .otherwise(ratio6(2 * (amx - amn) - (am - amn),
-                           2 * (amx - amn))))
+         .otherwise(half_up(2 * (amx - amn) - (am - amn),
+                            2 * (amx - amn))))
     return out.select(
         F.col(id_col),
         F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
@@ -953,7 +953,7 @@ def top_ngram_char_fraction(docs: DataFrame, ns: tuple[int, ...] = (2, 3, 4),
             .select(F.col(id_col), F.col("e.n").alias("n"),
                     F.col("e.r.gram").alias("top_gram"),
                     F.col("e.r.cnt").alias("top_count"),
-                    ratio6(F.col("e.r.cnt")
-                           * (F.length("e.r.gram") - (F.col("e.n") - 1)),
-                           F.col("wc")).alias("top_char_frac")))
+                    half_up(F.col("e.r.cnt")
+                            * (F.length("e.r.gram") - (F.col("e.n") - 1)),
+                            F.col("wc")).alias("top_char_frac")))
     return rows

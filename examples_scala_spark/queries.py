@@ -32,9 +32,9 @@ from .session import tune
 from .sources.tables import (
     load_table, normalize_ts, sensor_readings, SENSOR_READINGS_SQL)
 from .operators import aggregations as agg
-from .operators import dedup, joins, late_data, similarity, text, multimodal
+from .operators import dedup, joins, similarity, text, multimodal
 from .operators.aggregations import dec
-from .functions import scalar as scalar_fn
+from .functions.scalar import half_up, half_up_sql
 
 
 @dataclass(frozen=True)
@@ -64,111 +64,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _rebalance_scan(df: DataFrame) -> DataFrame:
-    """UNUSED since r13 — kept as the record of a measured rejection.
-
-    The r12 idea (guide §2.5, input skew / unsplittable files): when
-    the scan yields fewer partitions than cores (single-row-group
-    parquet fixtures), inject `repartition(defaultParallelism)` after
-    the pushed filters so partial aggregates run core-wide; a no-op at
-    production scale where splits >= cores.
-
-    The r13 quiet-window interleaved A/B (18/18 pairs, same session,
-    alternating per run) REVERSED the r12 in-session claim: the
-    identity form beat the rebalanced form on every TPC-H head, 20-40%
-    (q1 0.95 vs 1.10 s, q3 0.81 vs 1.17, q5 0.81 vs 1.40, q10 0.71 vs
-    1.13, q18 1.05 vs 1.64, w_avg_temp 1.05 vs 1.17 — best-of-3 each).
-    The round-robin exchange of the whole filtered scan plus the
-    per-call `.rdd.getNumPartitions()` physical-plan compile cost more
-    than the extra parallelism won back at bench volume, and at scale
-    the helper never fires by construction — so the call sites were
-    removed outright (OPTIMIZATION_r13.md). Plan shape returns to r11.
-
-    BATCH-ONLY if ever reused: `.rdd` throws on a streaming DataFrame
-    (guarded below, r12 VERDICT #4); the decision depends on core
-    count and fixture layout, so plan dumps record defaultParallelism
-    in their header (tools/dump_plans.py, r12 ADVICE)."""
-    if df.isStreaming:
-        return df
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:  # plan-only, no job
-        return df.repartition(par)
-    return df
-
-
 SENSORS_CTE = f"WITH sensors AS ({SENSOR_READINGS_SQL})"
 
 
-# --- engine-exact 6-dp averages over the 2-dp `value` column ----------
-# round(double_division, 6) is NOT engine-neutral at round-half ties:
-# Spark's round goes through the double's SHORTEST decimal repr
-# (BigDecimal.valueOf), DuckDB's rounds the raw binary value — a
-# window at sf0.1 landed on avg = 2089.93/32 = 65.3103125 exactly and
-# the two engines split on the final digit (r12 full-sf0.1-sweep
-# find; the sf0.01 driver gate never hits a tie). The fix computes
-# round-half-up on the EXACT rational instead: sum the values as
-# integer cents, then one integer division implements half-up at 6 dp
-# identically on both engines (value >= 0, exactly 2 dp — asserted of
-# the events fixture; BIGINT headroom to ~4.6e14 cents per group,
-# beyond which widen to DECIMAL(38,0)). The unrounded avg queries
-# (w_avg_temp etc.) need none of this: identical division operands
-# give identical doubles.
-
-#: Spark aggregate: exact integer cent sum of `value`.
+#: Spark aggregate: exact integer cent sum of `value` (value >= 0 with
+#: exactly 2 dp in the events fixture). Its 6-dp mean is
+#: half_up("sc", F.col("cnt") * 100); AVG_CENTS_SQL is the DuckDB twin
+#: of both steps as one aggregate expression.
 def _cents_sum(col: str = "value") -> F.Column:
     return F.sum(F.round(F.col(col) * 100).cast("long")).alias("sc")
 
 
-#: Spark post-aggregate: half-up 6-dp average from (sc, cnt) as DOUBLE.
-def _avg6(sc: str = "sc", cnt: str = "cnt") -> F.Column:
-    return (F.expr(f"(2 * {sc} * 10000 + {cnt}) div (2 * {cnt})") / 1e6)
-
-
-#: DuckDB twin of _cents_sum + _avg6 as one aggregate expression.
-AVG6_SQL = ("((2 * SUM(CAST(round(value * 100) AS BIGINT)) * 10000"
-            " + count(*)) // (2 * count(*))) / 1e6")
-
-
-# --- engine-exact 6-dp ratios of nonnegative integers ------------------
-# The same round-half-tie class as _avg6, for the count/count ratio
-# sites (precision/recall, conditional probabilities, shares, dup
-# fractions — r12 VERDICT #3 inventory): round(double(a/b), 6) splits
-# between Spark (shortest-decimal-repr) and DuckDB (raw binary) when
-# the exact rational a/b terminates at a 6-dp half, i.e. when the
-# reduced denominator is 2^7 * 5^j — which count-valued denominators
-# hit (the r12 tie had cnt = 32 over cents: denominator 3200). The fix
-# computes half-up on the EXACT rational: one integer quotient
-# (2a*10^6 + b) div (2b), identical on both engines. Preconditions:
-# a >= 0, b > 0, a <= ~4.6e12 (2a*10^6 must fit BIGINT; counts at any
-# test SF are orders of magnitude below — widen to DECIMAL(38,0) at
-# the site if a corpus-scaled numerator can exceed it). Constant
-# denominators whose reduction has fewer than seven 2s (e.g. /5, /16)
-# can never tie and stay on F.round; transcendental values (log, exp,
-# sqrt) have no exact decimal expansion and stay on F.round.
-
-#: canonical implementations live with the scalar function surface so
-#: the operator modules share them
-_ratio6 = scalar_fn.ratio6
-_ratio6_dec = scalar_fn.ratio6_dec
-
-
-def _ratio12_dec(num: F.Column, n_vals: F.Column) -> F.Column:
-    """round-half-up(num/(n_vals*10^12), 12) in DECIMAL(38,0) — the
-    12-dp variant of _ratio6_dec for the int8-quant MSE."""
-    d38 = "decimal(38,0)"
-    n = num.cast(d38)
-    d = n_vals.cast(d38) * F.lit(1_000_000_000_000)
-    n2 = n * F.lit(2_000_000_000_000) + d
-    d2 = d * F.lit(2)
-    return (((n2 - F.pmod(n2, d2)) / d2)
-            .cast(d38).cast("double") / F.lit(1e12))
-
-
-def R6(a: str, b: str) -> str:
-    """DuckDB twin of _ratio6 as a SQL fragment over expressions a, b."""
-    return (f"(((2 * CAST(({a}) AS BIGINT) * 1000000 + ({b}))"
-            f" // (2 * CAST(({b}) AS BIGINT))) / 1e6)")
+AVG_CENTS_SQL = half_up_sql("SUM(CAST(round(value * 100) AS BIGINT))",
+                            "100 * count(*)")
 
 
 # ======================================================================
@@ -491,7 +399,7 @@ def w_session_stats(spark, sf_dir):
            min(tu) AS session_start_us,
            max(tu + g) AS session_end_us,
            count(*)::BIGINT AS cnt,
-           {AVG6_SQL} AS avg_value
+           {AVG_CENTS_SQL} AS avg_value
     FROM s GROUP BY event_type, sid""",
     "reference", "W1", "session", "dynamic-gap",
 )
@@ -523,7 +431,7 @@ def w_session_dynamic_gap(spark, sf_dir):
          .alias("session_start_us"),
         F.unix_micros(F.col("session_window.end")).alias("session_end_us"),
         F.col("cnt").cast("bigint").alias("cnt"),
-        _avg6().alias("avg_value"),
+        half_up("sc", F.col("cnt") * 100).alias("avg_value"),
     )
 
 
@@ -1855,7 +1763,8 @@ def dedup_canonical(spark, sf_dir):
       FROM pairs p JOIN lab a ON p.doc_a = a.doc_id
                    JOIN lab b ON p.doc_b = b.doc_id)
     SELECT src_a, src_b, count(*)::BIGINT AS n_pairs,
-           {R6('SUM(CAST(sig_sim * 16 AS BIGINT))', 'count(*) * 16')}
+           {half_up_sql("SUM(CAST(sig_sim * 16 AS BIGINT))",
+                        "count(*) * 16")}
              AS avg_sig_sim,
            max(sig_sim) AS max_sig_sim
     FROM e GROUP BY src_a, src_b""",
@@ -1892,8 +1801,8 @@ def dedup_source_overlap(spark, sf_dir):
             .groupBy("src_a", "src_b")
             .agg(F.count("*").cast("long").alias("n_pairs"),
                  # sig_sim is an exact sixteenth: *16 -> exact integer,
-                 # so the mean is a count/count rational (_ratio6)
-                 _ratio6(F.sum((F.col("sig_sim") * 16).cast("long")),
+                 # so the mean is a count/count rational
+                 half_up(F.sum((F.col("sig_sim") * 16).cast("long")),
                          F.count("*") * 16).alias("avg_sig_sim"),
                  F.max("sig_sim").alias("max_sig_sim")))
 
@@ -1987,7 +1896,7 @@ def simhash_near_pairs(spark, sf_dir):
     sh AS (
       SELECT DISTINCT doc_id,
              ('0x' || substr(md5(shingle_str), 1, 15))::BIGINT AS shingle
-      FROM sh_str)""" + """,
+      FROM sh_str)""" + f""",
     sz AS (SELECT doc_id, count(*)::BIGINT AS sz FROM sh GROUP BY doc_id),
     inter AS (
       SELECT l.doc_id AS doc_a, r.doc_id AS doc_b, count(*)::BIGINT AS inter
@@ -1995,8 +1904,7 @@ def simhash_near_pairs(spark, sf_dir):
       WHERE l.doc_id < r.doc_id
       GROUP BY 1, 2)
     SELECT doc_a, doc_b,
-           ((2 * inter * 1000000 + (sa.sz + sb.sz - inter))
-            // (2 * (sa.sz + sb.sz - inter))) / 1e6 AS jaccard
+           {half_up_sql("inter", "sa.sz + sb.sz - inter")} AS jaccard
     FROM inter JOIN sz sa ON sa.doc_id = doc_a
                JOIN sz sb ON sb.doc_id = doc_b
     WHERE inter / (sa.sz + sb.sz - inter) >= 0.5""",
@@ -2299,14 +2207,11 @@ def _quality_sql(rel: str = "documents") -> str:
              ({stop})::BIGINT AS n_stop
       FROM {rel})
     SELECT doc_id, n_chars_m, n_words,
-           ((2 * (n_chars_m - (n_words - 1)) * 1000000 + n_words)
-            // (2 * n_words)) / 1e6 AS mean_word_len,
-           ((2 * n_punct * 1000000 + n_chars_m)
-            // (2 * n_chars_m)) / 1e6 AS punct_ratio,
-           ((2 * n_digit * 1000000 + n_chars_m)
-            // (2 * n_chars_m)) / 1e6 AS digit_ratio,
-           ((2 * n_stop * 1000000 + n_words)
-            // (2 * n_words)) / 1e6 AS stop_ratio,
+           {half_up_sql("n_chars_m - (n_words - 1)",
+                        "n_words")} AS mean_word_len,
+           {half_up_sql("n_punct", "n_chars_m")} AS punct_ratio,
+           {half_up_sql("n_digit", "n_chars_m")} AS digit_ratio,
+           {half_up_sql("n_stop", "n_words")} AS stop_ratio,
            round(
              (CASE WHEN n_words >= 10 AND n_words <= 100000 THEN 0.25 ELSE 0.0 END)
            + (CASE WHEN (n_chars_m - (n_words - 1)) / n_words >= 3
@@ -2348,7 +2253,7 @@ def doc_fingerprint(spark, sf_dir):
 
 @register(
     "winnow_fingerprint_pairs",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
       FROM documents),
@@ -2377,8 +2282,7 @@ def doc_fingerprint(spark, sf_dir):
       WHERE l.doc_id < r.doc_id
       GROUP BY 1, 2)
     SELECT doc_a, doc_b, n_shared,
-           ((2 * CAST(n_shared AS BIGINT) * 1000000 + least(n_a, n_b))
-            // (2 * CAST(least(n_a, n_b) AS BIGINT))) / 1e6
+           {half_up_sql("n_shared", "least(n_a, n_b)")}
              AS containment
     FROM p WHERE n_shared >= 2""",
     "llm", "dedup", "text",
@@ -2421,7 +2325,7 @@ def winnow_fingerprint_pairs(spark, sf_dir):
                  F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"))
             .filter(F.col("n_shared") >= 2)
             .select("doc_a", "doc_b", "n_shared",
-                    _ratio6(F.col("n_shared"),
+                    half_up(F.col("n_shared"),
                             F.least(F.col("n_a"), F.col("n_b")))
                      .alias("containment")))
 
@@ -2464,9 +2368,7 @@ def _dsir_sql(table: str = "documents") -> str:
       FROM fb JOIN lp USING (b) GROUP BY doc_id)
     SELECT d.doc_id,
            coalesce(sc.n_feats, 0)::BIGINT AS n_feats,
-           (CASE WHEN coalesce(sc.units, 0) < 0 THEN -1 ELSE 1 END)
-             * ((2 * abs(coalesce(sc.units, 0))::BIGINT * 1000000 + 1000000000)
-                // 2000000000) / 1e6 AS logweight
+           {half_up_sql("coalesce(sc.units, 0)", "1000000000")} AS logweight
     FROM {table} d LEFT JOIN sc ON sc.doc_id = d.doc_id"""
 
 
@@ -2545,9 +2447,7 @@ def _bpe_oracle_sql(k: int = 12, apply: bool = False,
            coalesce(sum(p.n_words), 0)::BIGINT AS n_words,
            coalesce(sum(p.n_subwords), 0)::BIGINT AS n_subwords,
            CASE WHEN coalesce(sum(p.n_words), 0) = 0 THEN 0.0
-                ELSE ((2 * sum(p.n_subwords)::BIGINT * 1000000
-                       + sum(p.n_words))
-                      // (2 * sum(p.n_words)::BIGINT)) / 1e6
+                ELSE {half_up_sql("sum(p.n_subwords)", "sum(p.n_words)")}
                 END AS fertility
     FROM documents d LEFT JOIN perdoc p USING (doc_id)
     GROUP BY d.lang""")
@@ -2568,8 +2468,7 @@ def _bpe_oracle_sql(k: int = 12, apply: bool = False,
     SELECT d.doc_id,
            coalesce(p.n_words, 0)::BIGINT AS n_words,
            coalesce(p.n_subwords, 0)::BIGINT AS n_subwords,
-           ((2 * p.n_subwords::BIGINT * 1000000 + p.n_words)
-            // (2 * p.n_words::BIGINT)) / 1e6 AS fertility
+           {half_up_sql("p.n_subwords", "p.n_words")} AS fertility
     FROM documents d LEFT JOIN per p USING (doc_id)""")
         return "".join(sql)
     if apply:
@@ -2607,7 +2506,7 @@ def bpe_train_merges(spark, sf_dir):
 
 @register(
     "dsir_resample_topk",
-    "WITH wts AS MATERIALIZED (" + _dsir_sql() + """),
+    "WITH wts AS MATERIALIZED (" + _dsir_sql() + f"""),
     g AS (
       SELECT doc_id, logweight,
              round(logweight * 1e9)::BIGINT
@@ -2617,9 +2516,7 @@ def bpe_train_merges(spark, sf_dir):
                / 4503599627370498.0)) * 1e9)::BIGINT AS units
       FROM wts)
     SELECT doc_id, logweight,
-           (CASE WHEN units < 0 THEN -1 ELSE 1 END)
-             * ((2 * abs(units)::BIGINT * 1000000 + 1000000000)
-                // 2000000000) / 1e6 AS score,
+           {half_up_sql("units", "1000000000")} AS score,
            row_number() OVER (ORDER BY units DESC, doc_id)::BIGINT
              AS rnk
     FROM g ORDER BY units DESC, doc_id LIMIT 100""",
@@ -2700,7 +2597,7 @@ def bpe_fertility_by_lang(spark, sf_dir):
     return out.select(
         "lang", "n_docs", "n_words", "n_subwords",
         F.when(F.col("n_words") == 0, F.lit(0.0))
-         .otherwise(_ratio6(F.col("n_subwords"), F.col("n_words")))
+         .otherwise(half_up(F.col("n_subwords"), F.col("n_words")))
          .alias("fertility"))
 
 
@@ -2894,7 +2791,7 @@ def substring_dedup_scrub(spark, sf_dir):
 
 @register(
     "doc_trigram_backoff_ppl",
-    r"""
+    rf"""
     WITH t AS (SELECT count(*) * 4 // 5 AS thr FROM documents),
     hw AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
            FROM documents, t WHERE doc_id < thr),
@@ -2944,10 +2841,7 @@ def substring_dedup_scrub(spark, sf_dir):
       GROUP BY doc_id)
     SELECT d.doc_id,
            coalesce(sc.n_trigrams, 0)::BIGINT AS n_trigrams,
-           (CASE WHEN -sc.units < 0 THEN -1 ELSE 1 END)
-             * ((2 * abs(sc.units)::HUGEINT * 1000000
-                 + sc.n_trigrams::HUGEINT * 1000000000)
-                // (2 * sc.n_trigrams::HUGEINT * 1000000000)) / 1e6
+           {half_up_sql("-sc.units", "sc.n_trigrams::HUGEINT * 1000000000")}
              AS avg_neg_logscore
     FROM documents d CROSS JOIN t LEFT JOIN sc USING (doc_id)
     WHERE d.doc_id >= t.thr""",
@@ -3030,7 +2924,7 @@ def doc_trigram_backoff_ppl(spark, sf_dir):
                      .alias("n_trigrams"),
                     # -units/(n*1e9): signed integer rational beyond
                     # BIGINT headroom (r13 tie class)
-                    scalar_fn.sratio6_dec(
+                    half_up(
                         -F.col("units"),
                         F.col("n_trigrams") * F.lit(1_000_000_000))
                     .alias("avg_neg_logscore")))
@@ -3038,7 +2932,7 @@ def doc_trigram_backoff_ppl(spark, sf_dir):
 
 @register(
     "mixture_waterfill_alloc",
-    r"""
+    rf"""
     WITH s AS (
       SELECT source,
              sum(len(string_split_regex(trim(text), '\s+')))::BIGINT AS n
@@ -3063,14 +2957,11 @@ def doc_trigram_backoff_ppl(spark, sf_dir):
     SELECT r.source, r.n AS n_tokens,
            r.j <= lam.kk AS capped,
            CASE WHEN r.j <= lam.kk THEN r.n::DOUBLE
-                ELSE ((2 * (lam.b - lam.snk)::BIGINT * 1000000
-                       + (lam.m - lam.kk))
-                      // (2 * (lam.m - lam.kk))) / 1e6
+                ELSE {half_up_sql("lam.b - lam.snk", "lam.m - lam.kk")}
                 END AS alloc_tokens,
            CASE WHEN r.j <= lam.kk THEN 1.0
-                ELSE ((2 * (lam.b - lam.snk)::BIGINT * 1000000
-                       + (lam.m - lam.kk) * r.n)
-                      // (2 * (lam.m - lam.kk) * r.n)) / 1e6
+                ELSE {half_up_sql("lam.b - lam.snk",
+                                  "(lam.m - lam.kk) * r.n")}
                 END AS rate
     FROM r, lam""",
     "llm", "sampling", "mixture",
@@ -3118,17 +3009,17 @@ def mixture_waterfill_alloc(spark, sf_dir):
                (F.col("j") <= F.col("kk")).alias("capped"),
                F.when(F.col("j") <= F.col("kk"),
                       F.col("n").cast("double"))
-                .otherwise(_ratio6(lam_num, F.col("m") - F.col("kk")))
+                .otherwise(half_up(lam_num, F.col("m") - F.col("kk")))
                 .alias("alloc_tokens"),
                F.when(F.col("j") <= F.col("kk"), F.lit(1.0))
-                .otherwise(_ratio6(lam_num, (F.col("m") - F.col("kk"))
+                .otherwise(half_up(lam_num, (F.col("m") - F.col("kk"))
                                    * F.col("n"))).alias("rate")))
     return out
 
 
 @register(
     "mixture_epoch_plan",
-    r"""
+    rf"""
     WITH s AS (
       SELECT source,
              sum(len(string_split_regex(trim(text), '\s+')))::BIGINT AS n
@@ -3168,7 +3059,7 @@ def mixture_waterfill_alloc(spark, sf_dir):
       FROM r, lam)
     SELECT source, n AS n_tokens, w AS weight_units, capped,
            a::BIGINT AS alloc_tokens,
-           ((2 * a * 1000000 + n) // (2 * n::HUGEINT)) / 1e6 AS epochs
+           {half_up_sql("a", "n")} AS epochs
     FROM alloc""",
     "llm", "sampling", "mixture",
 )
@@ -3236,14 +3127,9 @@ def mixture_epoch_plan(spark, sf_dir):
     q = ((wnum - F.pmod(wnum, den)) / den).cast("decimal(38,0)")
     a = F.when(F.col("j") <= F.col("kk"),
                F.col("c").cast("decimal(38,0)")).otherwise(q)
-    # epochs = alloc/n is an integer/integer rational with a count
-    # denominator (the r13 tie class) — exact half-up at 6 dp in
-    # DECIMAL(38,0) (alloc is corpus-token-scaled, beyond _ratio6's
-    # BIGINT headroom), remainder-style like the floor division above
-    ep_num = a * F.lit(2_000_000) + F.col("n").cast("decimal(38,0)")
-    ep_den = F.col("n").cast("decimal(38,0)") * F.lit(2)
-    epochs = (((ep_num - F.pmod(ep_num, ep_den)) / ep_den)
-              .cast("decimal(38,0)").cast("double") / F.lit(1e6))
+    # epochs = alloc/n: an integer rational with a count denominator
+    # (the r13 tie class); alloc is corpus-token-scaled
+    epochs = half_up(a, F.col("n"))
     return (r.crossJoin(F.broadcast(k)).crossJoin(F.broadcast(at_k))
             .select("source", F.col("n").alias("n_tokens"),
                     F.col("w").alias("weight_units"),
@@ -3301,9 +3187,7 @@ def _curation_v4_sql() -> str:
                / 4503599627370498.0)) * 1e9)::BIGINT AS units
       FROM wts),
     sel AS (
-      SELECT doc_id, logweight, (CASE WHEN units < 0 THEN -1 ELSE 1 END)
-             * ((2 * abs(units)::BIGINT * 1000000 + 1000000000)
-                // 2000000000) / 1e6 AS score,
+      SELECT doc_id, logweight, {half_up_sql("units", "1000000000")} AS score,
              row_number() OVER (ORDER BY units DESC, doc_id)::BIGINT
                AS rnk
       FROM g ORDER BY units DESC, doc_id LIMIT 150)
@@ -4370,7 +4254,7 @@ def events_rollup(spark, sf_dir):
 
 @register(
     "events_value_stats",
-    """
+    f"""
     WITH s AS (
       SELECT event_type, count(*)::BIGINT AS cnt,
              SUM(CAST(value AS DECIMAL(14,2)))::DOUBLE AS total,
@@ -4381,9 +4265,9 @@ def events_rollup(spark, sf_dir):
                AS sc2
       FROM events GROUP BY event_type)
     SELECT event_type, cnt, total,
-           ((2 * sc * 1000000 + 100 * cnt) // (200 * cnt)) / 1e6 AS mean,
-           ((2 * (sc2 * cnt - sc * sc) * 1000000 + 10000 * cnt * cnt)
-            // (2 * 10000 * cnt::HUGEINT * cnt)) / 1e6 AS var_pop
+           {half_up_sql("sc", "100 * cnt")} AS mean,
+           {half_up_sql("sc2 * cnt - sc * sc",
+                        "10000 * cnt::HUGEINT * cnt")} AS var_pop
     FROM s""",
     "relational", "aggregates", "numeric_stability",
 )
@@ -4411,14 +4295,14 @@ def events_value_stats(spark, sf_dir):
         F.col("sc2").cast("decimal(38,0)")
     return s.select(
         "event_type", "cnt", "total",
-        _ratio6_dec(sc, cnt * 100).alias("mean"),
-        _ratio6_dec(sc2 * cnt - sc * sc,
+        half_up(sc, cnt * 100).alias("mean"),
+        half_up(sc2 * cnt - sc * sc,
                     cnt * cnt * 10_000).alias("var_pop"))
 
 
 @register(
     "bigram_cond_prob",
-    """
+    f"""
     WITH toks AS (
       SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS w
       FROM documents),
@@ -4433,7 +4317,7 @@ def events_value_stats(spark, sf_dir):
             FROM toks)
       GROUP BY bigram)
     SELECT bigram, cnt, first_cnt,
-           ((2 * cnt * 1000000 + first_cnt) // (2 * first_cnt)) / 1e6
+           {half_up_sql("cnt", "first_cnt")}
              AS cond_p
     FROM bcnt JOIN ucnt ON string_split(bigram, ' ')[1] = w1
     ORDER BY cnt DESC, bigram LIMIT 50""",
@@ -4460,7 +4344,7 @@ def bigram_cond_prob(spark, sf_dir):
     j = bcnt.join(ucnt, F.split(F.col("bigram"), " ").getItem(0) == F.col("w1"))
     return (j.select(
         "bigram", "cnt", "first_cnt",
-        _ratio6(F.col("cnt"), F.col("first_cnt")).alias("cond_p"))
+        half_up(F.col("cnt"), F.col("first_cnt")).alias("cond_p"))
         .orderBy(F.col("cnt").desc(), "bigram").limit(50))
 
 
@@ -4520,7 +4404,7 @@ def stream_session_windows(spark, sf_dir):
 
 @register(
     "doc_repetition_stats",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
       FROM documents),
@@ -4536,10 +4420,9 @@ def stream_session_windows(spark, sf_dir):
              max(n_words) AS n_words, max(n_distinct) AS n_distinct
       FROM base GROUP BY doc_id, bigram)
     SELECT doc_id, max(n_words)::BIGINT AS n_words,
-           ((2 * (max(n_words) - max(n_distinct)) * 1000000
-             + max(n_words)) // (2 * max(n_words))) / 1e6
+           {half_up_sql("max(n_words) - max(n_distinct)", "max(n_words)")}
              AS dup_word_frac,
-           ((2 * max(c) * 1000000 + sum(c)) // (2 * sum(c)::BIGINT)) / 1e6
+           {half_up_sql("max(c)", "sum(c)")}
              AS top_bigram_frac
     FROM bi GROUP BY doc_id""",
     "llm", "text", "quality",
@@ -4586,9 +4469,9 @@ def doc_repetition_stats(spark, sf_dir):
                      .alias("n_distinct"),
                     max_run.alias("max_c"))
             .select("doc_id", "n_words",
-                    _ratio6(F.col("n_words") - F.col("n_distinct"),
+                    half_up(F.col("n_words") - F.col("n_distinct"),
                             F.col("n_words")).alias("dup_word_frac"),
-                    _ratio6(F.col("max_c"), F.col("n_words") - 1)
+                    half_up(F.col("max_c"), F.col("n_words") - 1)
                      .alias("top_bigram_frac")))
 
 
@@ -4651,7 +4534,7 @@ def funnel_conversion(spark, sf_dir):
 
 @register(
     "decontaminate_overlap",
-    """
+    f"""
     WITH w AS (
       SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
       FROM documents),
@@ -4674,8 +4557,7 @@ def funnel_conversion(spark, sf_dir):
       LEFT JOIN bench b USING (shingle)
       GROUP BY c.doc_id)
     SELECT o.doc_id, s.n_shingles, o.n_overlap,
-           ((2 * o.n_overlap * 1000000 + s.n_shingles)
-            // (2 * s.n_shingles::BIGINT)) / 1e6 AS overlap_frac,
+           {half_up_sql("o.n_overlap", "s.n_shingles")} AS overlap_frac,
            (o.n_overlap / s.n_shingles::DOUBLE >= 0.1) AS contaminated
     FROM ov o JOIN sz s USING (doc_id)""",
     "llm", "dedup", "decontamination",
@@ -4838,7 +4720,7 @@ def doc_chunks(spark, sf_dir):
 
 @register(
     "doc_rare_token_stats",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
                AS term
@@ -4854,11 +4736,9 @@ def doc_chunks(spark, sf_dir):
            count(*)::BIGINT AS n_terms,
            sum(CASE WHEN df * 5 <= n_docs THEN tf ELSE 0 END)::BIGINT
              AS n_rare,
-           ((2 * count(*) * 1000000 + sum(tf))
-            // (2 * sum(tf)::BIGINT)) / 1e6 AS ttr,
-           ((2 * sum(CASE WHEN df * 5 <= n_docs THEN tf ELSE 0 END)::BIGINT
-             * 1000000 + sum(tf))
-            // (2 * sum(tf)::BIGINT)) / 1e6 AS rare_ratio
+           {half_up_sql("count(*)", "sum(tf)")} AS ttr,
+           {half_up_sql("sum(CASE WHEN df * 5 <= n_docs THEN tf ELSE 0 END)",
+                        "sum(tf)")} AS rare_ratio
     FROM j GROUP BY doc_id""",
     "llm", "text",
 )
@@ -4872,17 +4752,15 @@ def doc_rare_token_stats(spark, sf_dir):
 
 @register(
     "label_centroids",
-    """
+    f"""
     WITH dims AS (SELECT unnest(generate_series(0, 63)) AS dim),
     e AS (
       SELECT label::BIGINT AS label, d.dim::BIGINT AS dim,
              (embedding[d.dim + 1]::DOUBLE)::DECIMAL(28,12) AS x
       FROM embeddings CROSS JOIN dims d)
     SELECT label, dim, count(*)::BIGINT AS n,
-           (CASE WHEN sum(x) < 0 THEN -1 ELSE 1 END)
-           * ((2 * abs(CAST(sum(x) * 1000000000000 AS HUGEINT)) * 1000000
-               + count(*)::HUGEINT * 1000000000000)
-              // (2 * count(*)::HUGEINT * 1000000000000)) / 1e6
+           {half_up_sql("sum(x) * 1000000000000",
+                        "count(*)::HUGEINT * 1000000000000")}
              AS centroid
     FROM e GROUP BY label, dim""",
     "llm", "similarity",
@@ -5115,12 +4993,10 @@ def _corpus_stats_sql() -> str:
            count(*)::BIGINT AS n_docs,
            sum(n_words)::BIGINT AS total_words,
            sum(n_chars)::BIGINT AS total_chars,
-           ((2 * sum(n_words)::BIGINT * 1000000 + count(*))
-            // (2 * count(*))) / 1e6 AS mean_words,
-           ((2 * sum(n_chars)::BIGINT * 1000000 + count(*))
-            // (2 * count(*))) / 1e6 AS mean_chars,
-           ((2 * sum(CAST(q * 4 AS BIGINT)) * 1000000 + 4 * count(*))
-            // (2 * 4 * count(*))) / 1e6 AS mean_quality
+           {half_up_sql("sum(n_words)", "count(*)")} AS mean_words,
+           {half_up_sql("sum(n_chars)", "count(*)")} AS mean_chars,
+           {half_up_sql("sum(CAST(q * 4 AS BIGINT))",
+                        "4 * count(*)")} AS mean_quality
     FROM g GROUP BY source, lang"""
 
 
@@ -5142,12 +5018,12 @@ def corpus_stats_by_source(spark, sf_dir):
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_words").cast("long").alias("total_words"),
                  F.sum("n_chars").cast("long").alias("total_chars"),
-                 _ratio6(F.sum("n_words"), F.count("*"))
+                 half_up(F.sum("n_words"), F.count("*"))
                   .alias("mean_words"),
-                 _ratio6(F.sum("n_chars"), F.count("*"))
+                 half_up(F.sum("n_chars"), F.count("*"))
                   .alias("mean_chars"),
                  # q is an exact quarter: *4 -> integer (r13 tie class)
-                 _ratio6(F.sum((F.col("q") * 4).cast("long")),
+                 half_up(F.sum((F.col("q") * 4).cast("long")),
                          F.count("*") * 4).alias("mean_quality")))
 
 
@@ -5243,7 +5119,7 @@ def shared_passages(spark, sf_dir):
 
 @register(
     "doc_passage_dup_ratio",
-    "WITH" + _chunk_hash_cte() + """,
+    "WITH" + _chunk_hash_cte() + f""",
     shared AS (
       SELECT h FROM c GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
     tot AS (
@@ -5254,8 +5130,7 @@ def shared_passages(spark, sf_dir):
       GROUP BY doc_id)
     SELECT doc_id, n_chunks,
            coalesce(n_dup, 0)::BIGINT AS n_dup,
-           ((2 * coalesce(n_dup, 0)::BIGINT * 1000000 + n_chunks)
-            // (2 * n_chunks)) / 1e6 AS dup_ratio
+           {half_up_sql("coalesce(n_dup, 0)", "n_chunks")} AS dup_ratio
     FROM tot LEFT JOIN dup USING (doc_id)""",
     "llm", "dedup",
 )
@@ -5277,7 +5152,7 @@ def doc_passage_dup_ratio(spark, sf_dir):
     return (tot.join(dup, "doc_id", "left")
             .select("doc_id", "n_chunks",
                     F.coalesce("n_dup", F.lit(0)).cast("long").alias("n_dup"),
-                    _ratio6(F.coalesce("n_dup", F.lit(0)),
+                    half_up(F.coalesce("n_dup", F.lit(0)),
                             F.col("n_chunks")).alias("dup_ratio")))
 
 
@@ -5291,7 +5166,7 @@ def doc_passage_dup_ratio(spark, sf_dir):
     a AS (
       SELECT event_type, w_start,
              count(*)::BIGINT AS cnt,
-             {AVG6_SQL} AS avg_value
+             {AVG_CENTS_SQL} AS avg_value
       FROM w GROUP BY event_type, w_start),
     mx AS (SELECT max(ms) AS mx FROM e)
     SELECT event_type, w_start AS window_start_ms,
@@ -5308,7 +5183,7 @@ def stream_windowed_avg(spark, sf_dir):
     <= the final watermark (max event time, 0 s delay) — the windows a
     real unbounded run would have emitted by end-of-stream. Averages
     are exact integer-cent sums with half-up 6-dp integer rounding
-    (_avg6 — engine-neutral at round-half ties, unlike round(double)),
+    (half_up — engine-neutral at round-half ties, unlike round(double)),
     so state merge order cannot perturb the hash. State is O(open
     windows x types);
     eviction at the watermark bounds memory at any stream length."""
@@ -5321,7 +5196,7 @@ def stream_windowed_avg(spark, sf_dir):
         "event_type",
         F.expr("unix_micros(window.start) div 1000").alias("window_start_ms"),
         F.expr("unix_micros(window.end) div 1000").alias("window_end_ms"),
-        "cnt", _avg6().alias("avg_value"))
+        "cnt", half_up("sc", F.col("cnt") * 100).alias("avg_value"))
     return _run_to_memory(spark, out, "stream_windowed_avg_result")
 
 
@@ -5346,7 +5221,7 @@ def stream_windowed_avg(spark, sf_dir):
       SELECT event_type, min(tu) AS session_start_us,
              max(tu) + 600000000 AS session_end_us,
              count(*)::BIGINT AS cnt,
-             {AVG6_SQL} AS avg_value
+             {AVG_CENTS_SQL} AS avg_value
       FROM g GROUP BY event_type, sid)
     SELECT event_type, session_start_us, session_end_us, cnt, avg_value
     FROM s, mx WHERE session_end_us <= mx""",
@@ -5364,7 +5239,7 @@ def stream_session_stats(spark, sf_dir):
     watermark (max event time) — precisely what an unbounded run
     would have emitted by end-of-stream; trailing still-open sessions
     correctly stay in state and NOT in the output. Averages are exact
-    integer-cent sums with half-up 6-dp integer rounding (_avg6), so
+    integer-cent sums with half-up 6-dp integer rounding (half_up), so
     session-merge order inside the state store cannot perturb the
     hash. State is O(open sessions x types), evicted at the
     watermark — bounded at any stream length."""
@@ -5378,7 +5253,7 @@ def stream_session_stats(spark, sf_dir):
         F.unix_micros("session_window.start").alias("session_start_us"),
         F.unix_micros("session_window.end").alias("session_end_us"),
         F.col("cnt").cast("bigint").alias("cnt"),
-        _avg6().alias("avg_value"))
+        half_up("sc", F.col("cnt") * 100).alias("avg_value"))
     return _run_to_memory(spark, out, "stream_session_stats_result")
 
 
@@ -5395,7 +5270,7 @@ def stream_session_stats(spark, sf_dir):
     a AS (
       SELECT event_type, w_start,
              count(*)::BIGINT AS cnt,
-             {AVG6_SQL} AS avg_value
+             {AVG_CENTS_SQL} AS avg_value
       FROM m GROUP BY event_type, w_start)
     SELECT event_type, w_start AS window_start, cnt, avg_value
     FROM a, mx WHERE (w_start + 3600) * 1000000 <= mx""",
@@ -5421,7 +5296,7 @@ def stream_sliding_avg(spark, sf_dir):
         "event_type",
         F.col("window.start").cast("long").alias("window_start"),
         F.col("cnt").cast("bigint").alias("cnt"),
-        _avg6().alias("avg_value"))
+        half_up("sc", F.col("cnt") * 100).alias("avg_value"))
     return _run_to_memory(spark, out, "stream_sliding_avg_result")
 
 
@@ -5911,7 +5786,7 @@ def stream_rolling_max_state(spark, sf_dir):
 
 @register(
     "dataset_mixture_rates",
-    """
+    f"""
     WITH s AS (
       SELECT source, count(*)::BIGINT AS n_docs FROM documents
       GROUP BY source),
@@ -5919,8 +5794,7 @@ def stream_rolling_max_state(spark, sf_dir):
                  count(*)::BIGINT AS n_sources FROM s)
     SELECT source, n_docs,
            CASE WHEN total >= n_sources * n_docs THEN 1.0
-                ELSE ((2 * total * 1000000 + n_sources * n_docs)
-                      // (2 * n_sources * n_docs)) / 1e6
+                ELSE {half_up_sql("total", "n_sources * n_docs")}
            END AS sample_rate,
            CAST(floor(n_docs * least(1.0, (total::DOUBLE / n_sources)
                                           / n_docs)) AS BIGINT)
@@ -5948,7 +5822,7 @@ def dataset_mixture_rates(spark, sf_dir):
             .select("source", F.col("n_docs").cast("long").alias("n_docs"),
                     F.when(F.col("total") >=
                            F.col("n_sources") * F.col("n_docs"), F.lit(1.0))
-                     .otherwise(_ratio6(F.col("total"),
+                     .otherwise(half_up(F.col("total"),
                                         F.col("n_sources")
                                         * F.col("n_docs")))
                      .alias("sample_rate"),
@@ -6891,7 +6765,7 @@ def semantic_dedup_auto(spark, sf_dir):
 
 @register(
     "semantic_dedup_sweep",
-    """
+    f"""
     WITH e AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     n AS (
@@ -6925,9 +6799,8 @@ def semantic_dedup_auto(spark, sf_dir):
            count(*)::BIGINT AS n_docs,
            sum(CASE WHEN pd.best_lower >= ts.threshold
                     THEN 1 ELSE 0 END)::BIGINT AS n_dropped,
-           ((2 * sum(CASE WHEN pd.best_lower >= ts.threshold
-                          THEN 1 ELSE 0 END)::BIGINT * 1000000
-             + count(*)) // (2 * count(*))) / 1e6 AS drop_frac
+           {half_up_sql("sum(CASE WHEN pd.best_lower >= ts.threshold"
+                        " THEN 1 ELSE 0 END)", "count(*)")} AS drop_frac
     FROM pd CROSS JOIN ts GROUP BY ts.threshold""",
     "llm", "dedup", "similarity", "diagnostics",
 )
@@ -7025,11 +6898,10 @@ def semantic_dedup_snm(spark, sf_dir):
              ::BIGINT AS dropped_both,
            CASE WHEN sum(CASE WHEN NOT p.kept THEN 1 ELSE 0 END) = 0
                 THEN 1.0
-                ELSE ((2 * sum(CASE WHEN NOT p.kept AND NOT s.kept
-                                    THEN 1 ELSE 0 END)::BIGINT * 1000000
-                       + sum(CASE WHEN NOT p.kept THEN 1 ELSE 0 END))
-                      // (2 * sum(CASE WHEN NOT p.kept
-                                  THEN 1 ELSE 0 END)::BIGINT)) / 1e6
+                ELSE {half_up_sql("sum(CASE WHEN NOT p.kept AND NOT s.kept"
+                                  " THEN 1 ELSE 0 END)",
+                                  "sum(CASE WHEN NOT p.kept"
+                                  " THEN 1 ELSE 0 END)")}
            END AS drop_recall
     FROM ({_SEMDEDUP_SQL}) p JOIN ({_SEMDEDUP_SNM_SQL}) s
     USING (vec_id)""",
@@ -7070,7 +6942,7 @@ def semantic_dedup_snm_recall(spark, sf_dir):
     ).select(
         "n_vectors", "dropped_plain", "dropped_snm", "dropped_both",
         F.when(F.col("dropped_plain") == 0, F.lit(1.0))
-         .otherwise(_ratio6(F.col("dropped_both"),
+         .otherwise(half_up(F.col("dropped_both"),
                             F.col("dropped_plain")))
          .alias("drop_recall"))
 
@@ -7740,14 +7612,14 @@ def stream_curation_gate(spark, sf_dir):
             du_arr, (bucket(f) + 1).cast("int")))
     scored = feats.select(
         "doc_id", F.size("fs").cast("long").alias("n_feats"),
-        scalar_fn.units6(units).alias("logweight"))
+        half_up(units, 10**9).alias("logweight"))
     out = scored.filter(F.col("logweight") > 0)
     return _run_to_memory(spark, out, "stream_curation_gate_result")
 
 
 @register(
     "stream_decontaminate_gate",
-    r"""
+    rf"""
     WITH w AS (
       SELECT doc_id, string_split_regex(trim(text), '\s+') AS words
       FROM documents),
@@ -7776,8 +7648,7 @@ def stream_curation_gate(spark, sf_dir):
       FROM c JOIN bench USING (b) GROUP BY c.doc_id)
     SELECT s.doc_id, s.n_buckets,
            COALESCE(o.n_overlap, 0)::BIGINT AS n_overlap,
-           ((2 * COALESCE(o.n_overlap, 0)::BIGINT * 1000000
-             + s.n_buckets) // (2 * s.n_buckets)) / 1e6
+           {half_up_sql("COALESCE(o.n_overlap, 0)", "s.n_buckets")}
              AS overlap_frac
     FROM sz s LEFT JOIN ov o USING (doc_id)
     WHERE COALESCE(o.n_overlap, 0) / s.n_buckets::DOUBLE >= 0.25""",
@@ -7878,7 +7749,7 @@ def stream_decontaminate_gate(spark, sf_dir):
     o = F.size(F.array_intersect("bs", barr)).cast("long")
     scored = bs.filter(F.size("bs") > 0).select(
         "doc_id", n.alias("n_buckets"), o.alias("n_overlap"),
-        _ratio6(o, n).alias("overlap_frac"))
+        half_up(o, n).alias("overlap_frac"))
     out = scored.filter(
         F.col("n_overlap") / F.col("n_buckets").cast("double") >= 0.25)
     return _run_to_memory(spark, out, "stream_decontaminate_gate_result")
@@ -8135,7 +8006,7 @@ def stream_trending_tokens(spark, sf_dir):
 
 @register(
     "key_skew_report",
-    """
+    f"""
     WITH k AS (
       SELECT user_id, count(*)::BIGINT AS n FROM events GROUP BY user_id),
     s AS (
@@ -8147,7 +8018,7 @@ def stream_trending_tokens(spark, sf_dir):
                AS p99
       FROM k)
     SELECT n_keys, total, p50, p99, max_n,
-           ((2 * max_n * n_keys * 1000000 + total) // (2 * total)) / 1e6
+           {half_up_sql("max_n * n_keys", "total")}
              AS max_over_mean
     FROM s""",
     "llm", "skew", "diagnostics",
@@ -8172,7 +8043,7 @@ def key_skew_report(spark, sf_dir):
     return s.select(
         "n_keys", "total", "p50", "p99", "max_n",
         # max/mean = max_n*n_keys/total: count rational (r13 tie class)
-        _ratio6(F.col("max_n") * F.col("n_keys"), F.col("total"))
+        half_up(F.col("max_n") * F.col("n_keys"), F.col("total"))
         .alias("max_over_mean"))
 
 
@@ -8449,20 +8320,15 @@ def hybrid_retrieval_rrf(spark, sf_dir):
 
 def _rerank_cross_encoder_sql() -> str:
     hybrid = REGISTRY["hybrid_retrieval_rrf"].oracle
+    toks = r"list_distinct(string_split_regex(trim(d.text), '\s+'))"
+    qarr = "['spark', 'join', 'window']"
+    ce_score = half_up_sql(f"len(list_intersect({toks}, {qarr}))",
+                           f"len(list_distinct(list_concat({toks}, {qarr})))")
     return rf"""
     WITH cand AS MATERIALIZED (SELECT doc_id, rrf FROM ({hybrid})),
     scored AS (
       SELECT d.doc_id, c.rrf,
-             ((2 * len(list_intersect(
-                     list_distinct(string_split_regex(trim(d.text), '\s+')),
-                     ['spark', 'join', 'window']))::BIGINT * 1000000
-               + len(list_distinct(list_concat(
-                     list_distinct(string_split_regex(trim(d.text), '\s+')),
-                     ['spark', 'join', 'window']))))
-              // (2 * len(list_distinct(list_concat(
-                     list_distinct(string_split_regex(trim(d.text), '\s+')),
-                     ['spark', 'join', 'window'])))::BIGINT)) / 1e6
-               AS ce_score
+             {ce_score} AS ce_score
       FROM documents d JOIN cand c USING (doc_id)),
     fin AS (
       SELECT doc_id, rrf, ce_score,
@@ -8499,7 +8365,7 @@ def rerank_cross_encoder(spark, sf_dir):
 
 @register(
     "bloom_decontaminate",
-    """
+    f"""
     WITH w AS (
       SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
       FROM documents),
@@ -8521,8 +8387,7 @@ def rerank_cross_encoder(spark, sf_dir):
       JOIN bench b USING (shingle)
       GROUP BY c.doc_id)
     SELECT o.doc_id, s.n_shingles, o.n_overlap,
-           ((2 * o.n_overlap * 1000000 + s.n_shingles)
-            // (2 * s.n_shingles::BIGINT)) / 1e6 AS overlap_frac,
+           {half_up_sql("o.n_overlap", "s.n_shingles")} AS overlap_frac,
            (o.n_overlap / s.n_shingles::DOUBLE >= 0.05) AS contaminated
     FROM ov o JOIN sz s USING (doc_id)""",
     "llm", "dedup", "decontamination", "bloom",
@@ -8684,7 +8549,7 @@ def corpus_shuffle_shards(spark, sf_dir):
 
 @register(
     "substring_dup_stats",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id, text, length(text)::BIGINT AS n FROM documents
       WHERE length(text) >= 30),
@@ -8701,8 +8566,7 @@ def corpus_shuffle_shards(spark, sf_dir):
       FROM p JOIN c USING (g) GROUP BY p.doc_id)
     SELECT d.doc_id, (d.n - 29)::BIGINT AS n_positions,
            coalesce(dup.n_dup, 0)::BIGINT AS n_dup,
-           ((2 * coalesce(dup.n_dup, 0)::BIGINT * 1000000 + (d.n - 29))
-            // (2 * (d.n - 29))) / 1e6 AS dup_frac
+           {half_up_sql("coalesce(dup.n_dup, 0)", "d.n - 29")} AS dup_frac
     FROM d LEFT JOIN dup USING (doc_id)""",
     "llm", "dedup", "text",
 )
@@ -8916,7 +8780,7 @@ def pipeline_curation_v2(spark, sf_dir):
     f"""
     WITH b AS (
       SELECT user_id, epoch_us(ts) // 3600000000 AS bucket,
-             {AVG6_SQL} AS v
+             {AVG_CENTS_SQL} AS v
       FROM events WHERE user_id < 20
       GROUP BY user_id, epoch_us(ts) // 3600000000),
     r AS (SELECT user_id, min(bucket) AS lo, max(bucket) AS hi
@@ -8946,7 +8810,8 @@ def events_gap_fill(spark, sf_dir):
                    "value")
          .groupBy("user_id", "bucket")
          .agg(F.count("*").alias("cnt"), _cents_sum("value"))
-         .select("user_id", "bucket", _avg6().alias("v")))
+         .select("user_id", "bucket",
+                 half_up("sc", F.col("cnt") * 100).alias("v")))
     return gap_fill_locf(b, "user_id", "bucket", "v")
 
 
@@ -8957,11 +8822,10 @@ def events_gap_fill(spark, sf_dir):
     d AS (SELECT q.doc_id, s.source, q.quality_score
           FROM q JOIN documents s USING (doc_id))
     SELECT doc_id, source, quality_score,
-           ((2 * (count(*) OVER (PARTITION BY source ORDER BY quality_score
-                                 RANGE BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW))::BIGINT * 1000000
-             + count(*) OVER (PARTITION BY source))
-            // (2 * count(*) OVER (PARTITION BY source))) / 1e6 AS pct
+           {half_up_sql("count(*) OVER (PARTITION BY source"
+                        " ORDER BY quality_score RANGE BETWEEN"
+                        " UNBOUNDED PRECEDING AND CURRENT ROW)",
+                        "count(*) OVER (PARTITION BY source)")} AS pct
     FROM d""",
     "llm", "quality",
 )
@@ -8985,7 +8849,7 @@ def quality_percentile_by_source(spark, sf_dir):
     wt = Window.partitionBy("source")
     dist = g.select(
         "source", "quality_score",
-        _ratio6(F.sum("c").over(w), F.sum("c").over(wt)).alias("pct"))
+        half_up(F.sum("c").over(w), F.sum("c").over(wt)).alias("pct"))
     return scored.join(F.broadcast(dist), ["source", "quality_score"])\
                  .select("doc_id", "source", "quality_score", "pct")
 
@@ -9076,7 +8940,7 @@ def ivf_incremental_assign(spark, sf_dir):
 
 @register(
     "part_cooccurrence_lift",
-    """
+    f"""
     WITH op AS (
       SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
     n AS (SELECT count(DISTINCT o)::BIGINT AS n_orders FROM op),
@@ -9086,16 +8950,14 @@ def ivf_incremental_assign(spark, sf_dir):
       FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
       GROUP BY a.p, b.p HAVING count(*) >= 3)
     SELECT part_a, part_b, pair_cnt,
-           ((2 * pair_cnt * 1000000 + sa.s) // (2 * sa.s)) / 1e6
+           {half_up_sql("pair_cnt", "sa.s")}
              AS confidence_a_b,
-           ((2 * pair_cnt * n.n_orders * 1000000 + sa.s * sb.s)
-            // (2 * sa.s * sb.s)) / 1e6 AS lift
+           {half_up_sql("pair_cnt * n.n_orders", "sa.s * sb.s")} AS lift
     FROM pairs
     JOIN supp sa ON sa.p = part_a
     JOIN supp sb ON sb.p = part_b
     CROSS JOIN n
-    ORDER BY ((2 * pair_cnt * n.n_orders * 1000000 + sa.s * sb.s)
-              // (2 * sa.s * sb.s)) / 1e6 DESC,
+    ORDER BY {half_up_sql("pair_cnt * n.n_orders", "sa.s * sb.s")} DESC,
              part_a, part_b
     LIMIT 20""",
     "relational", "basket",
@@ -9124,7 +8986,7 @@ def part_cooccurrence_lift(spark, sf_dir):
     sa = supp.select(F.col("p").alias("part_a"), F.col("s").alias("sa"))
     sb = supp.select(F.col("p").alias("part_b"), F.col("s").alias("sb"))
     # lift/confidence are count rationals (r13 tie class): exact 6-dp
-    lift = _ratio6(F.col("pair_cnt") * F.col("n_orders"),
+    lift = half_up(F.col("pair_cnt") * F.col("n_orders"),
                    F.col("sa") * F.col("sb"))
     # sa/sb are part-keyed (SF-scaled): no broadcast hint (r12) — the
     # scalar n stays hinted
@@ -9132,7 +8994,7 @@ def part_cooccurrence_lift(spark, sf_dir):
             .join(sb, "part_b")
             .crossJoin(F.broadcast(n))
             .select("part_a", "part_b", "pair_cnt",
-                    _ratio6(F.col("pair_cnt"), F.col("sa"))
+                    half_up(F.col("pair_cnt"), F.col("sa"))
                      .alias("confidence_a_b"),
                     lift.alias("lift"))
             .orderBy(F.col("lift").desc(), "part_a", "part_b")
@@ -9467,7 +9329,7 @@ def events_mad_anomalies(spark, sf_dir):
 
 @register(
     "revenue_pareto_abc",
-    """
+    f"""
     WITH u AS (
       SELECT user_id, SUM(CAST(round(value * 100) AS BIGINT)) AS cents
       FROM events WHERE event_type = 'purchase' GROUP BY user_id),
@@ -9478,8 +9340,7 @@ def events_mad_anomalies(spark, sf_dir):
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
       FROM u)
     SELECT user_id, cents::BIGINT AS cents, cum::BIGINT AS cum_cents,
-           ((2 * cum::BIGINT * 1000000 + t.total)
-            // (2 * t.total)) / 1e6 AS cum_share,
+           {half_up_sql("cum", "t.total")} AS cum_share,
            CASE WHEN cum <= 0.5 * t.total THEN 'A'
                 WHEN cum <= 0.8 * t.total THEN 'B'
                 ELSE 'C' END AS revenue_class
@@ -9507,7 +9368,7 @@ def revenue_pareto_abc(spark, sf_dir):
     return (cum.crossJoin(F.broadcast(total))
             .select("user_id", "cents",
                     "cum_cents",
-                    _ratio6(F.col("cum_cents"), F.col("total"))
+                    half_up(F.col("cum_cents"), F.col("total"))
                      .alias("cum_share"),
                     F.when(F.col("cum_cents") <= 0.5 * F.col("total"), "A")
                      .when(F.col("cum_cents") <= 0.8 * F.col("total"), "B")
@@ -9516,17 +9377,15 @@ def revenue_pareto_abc(spark, sf_dir):
 
 @register(
     "event_type_transitions",
-    """
+    f"""
     WITH seq AS (
       SELECT user_id, event_type,
              lag(event_type) OVER (PARTITION BY user_id
                                    ORDER BY ts, event_id) AS prev
       FROM events)
     SELECT prev, event_type AS next, count(*)::BIGINT AS n,
-           ((2 * count(*) * 1000000
-             + sum(count(*)) OVER (PARTITION BY prev))
-            // (2 * (sum(count(*)) OVER (PARTITION BY prev))::BIGINT))
-           / 1e6 AS p
+           {half_up_sql("count(*)",
+                        "sum(count(*)) OVER (PARTITION BY prev)")} AS p
     FROM seq WHERE prev IS NOT NULL GROUP BY prev, event_type""",
     "relational", "analytics",
 )
@@ -9545,7 +9404,7 @@ def event_type_transitions(spark, sf_dir):
          .agg(F.count("*").alias("n")))
     wp = Window.partitionBy("prev")
     return g.select("prev", "next", "n",
-                    _ratio6(F.col("n"), F.sum("n").over(wp)).alias("p"))
+                    half_up(F.col("n"), F.sum("n").over(wp)).alias("p"))
 
 
 @register(
@@ -9571,8 +9430,7 @@ def event_type_transitions(spark, sf_dir):
       WHERE l.doc_id < r.doc_id GROUP BY 1, 2),
     jac AS (
       SELECT doc_a, doc_b,
-             ((2 * i2 * 1000000 + (sa.sz + sb.sz - i2))
-              // (2 * (sa.sz + sb.sz - i2))) / 1e6 AS jaccard
+             {half_up_sql("i2", "sa.sz + sb.sz - i2")} AS jaccard
       FROM inter2 JOIN sz2 sa ON sa.doc_id = doc_a
                   JOIN sz2 sb ON sb.doc_id = doc_b)
     SELECT l.doc_a, l.doc_b, round(l.sig_sim, 6) AS sig_sim,
@@ -9634,10 +9492,8 @@ def minhash_accuracy(spark, sf_dir):
     np AS (SELECT count(*)::BIGINT AS n_pred FROM lsh),
     nt AS (SELECT count(*)::BIGINT AS n_true FROM t2)
     SELECT np.n_pred, nt.n_true, hits.tp,
-           ((2 * hits.tp * 1000000 + np.n_pred)
-            // (2 * np.n_pred)) / 1e6 AS precision,
-           ((2 * hits.tp * 1000000 + nt.n_true)
-            // (2 * nt.n_true)) / 1e6 AS recall
+           {half_up_sql("hits.tp", "np.n_pred")} AS precision,
+           {half_up_sql("hits.tp", "nt.n_true")} AS recall
     FROM np CROSS JOIN nt CROSS JOIN hits""",
     "llm", "dedup", "diagnostics",
 )
@@ -9663,8 +9519,8 @@ def lsh_precision_recall(spark, sf_dir):
         [(n_pred, n_true, tp)], "n_pred bigint, n_true bigint, tp bigint")
     return one.select(
         "n_pred", "n_true", "tp",
-        _ratio6(F.col("tp"), F.col("n_pred")).alias("precision"),
-        _ratio6(F.col("tp"), F.col("n_true")).alias("recall"))
+        half_up(F.col("tp"), F.col("n_pred")).alias("precision"),
+        half_up(F.col("tp"), F.col("n_true")).alias("recall"))
 
 
 @register(
@@ -9703,11 +9559,9 @@ def lsh_precision_recall(spark, sf_dir):
     nt AS (SELECT count(*)::BIGINT AS n_true FROM t2)
     SELECT np.n_pred, nt.n_true, hits.tp,
            (CASE WHEN np.n_pred > 0
-                 THEN ((2 * hits.tp * 1000000 + np.n_pred)
-                       // (2 * np.n_pred)) / 1e6 END) AS precision,
+                 THEN {half_up_sql("hits.tp", "np.n_pred")} END) AS precision,
            (CASE WHEN nt.n_true > 0
-                 THEN ((2 * hits.tp * 1000000 + nt.n_true)
-                       // (2 * nt.n_true)) / 1e6 END) AS recall
+                 THEN {half_up_sql("hits.tp", "nt.n_true")} END) AS recall
     FROM np CROSS JOIN nt CROSS JOIN hits""",
     "llm", "dedup", "diagnostics",
 )
@@ -9736,9 +9590,9 @@ def lsh_tuning_sampled(spark, sf_dir):
     return one.select(
         "n_pred", "n_true", "tp",
         F.when(F.col("n_pred") > 0,
-               _ratio6(F.col("tp"), F.col("n_pred"))).alias("precision"),
+               half_up(F.col("tp"), F.col("n_pred"))).alias("precision"),
         F.when(F.col("n_true") > 0,
-               _ratio6(F.col("tp"), F.col("n_true"))).alias("recall"))
+               half_up(F.col("tp"), F.col("n_true"))).alias("recall"))
 
 
 @register(
@@ -9903,9 +9757,8 @@ def events_trend_ols(spark, sf_dir):
            coalesce(dg.degree, 0)::BIGINT AS degree,
            coalesce(tc.triangles, 0)::BIGINT AS triangles,
            CASE WHEN coalesce(dg.degree, 0) >= 2
-                THEN ((2 * 2 * coalesce(tc.triangles, 0)::BIGINT
-                       * 1000000 + dg.degree * (dg.degree - 1))
-                      // (2 * dg.degree::BIGINT * (dg.degree - 1))) / 1e6
+                THEN {half_up_sql("2 * coalesce(tc.triangles, 0)",
+                                  "dg.degree * (dg.degree - 1)")}
                 ELSE 0.0 END AS lcc
     FROM documents d
     LEFT JOIN dg ON dg.id = d.doc_id
@@ -9928,7 +9781,7 @@ def neardup_triangle_stats(spark, sf_dir):
 
 @register(
     "setsim_jaccard_prefix",
-    """
+    f"""
     WITH w AS (
       SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
       FROM documents),
@@ -9950,8 +9803,7 @@ def neardup_triangle_stats(spark, sf_dir):
       WHERE l.doc_id < r.doc_id
       GROUP BY 1, 2)
     SELECT doc_a, doc_b,
-           ((2 * inter * 1000000 + (sa.sz + sb.sz - inter))
-            // (2 * (sa.sz + sb.sz - inter))) / 1e6 AS jaccard
+           {half_up_sql("inter", "sa.sz + sb.sz - inter")} AS jaccard
     FROM inter JOIN sz sa ON sa.doc_id = doc_a
                JOIN sz sb ON sb.doc_id = doc_b
     WHERE inter / (sa.sz + sb.sz - inter) >= 0.5""",
@@ -10108,7 +9960,7 @@ def user_lifecycle_states(spark, sf_dir):
 
 @register(
     "ab_test_zscores",
-    """
+    f"""
     WITH e AS (
       SELECT event_type,
              ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT % 2
@@ -10128,11 +9980,9 @@ def user_lifecycle_states(spark, sf_dir):
       FROM e GROUP BY event_type)
     SELECT event_type, na::BIGINT AS n_a, nb::BIGINT AS n_b,
            CASE WHEN na > 0
-                THEN ((2 * sa::HUGEINT * 1000000 + 100 * na)
-                      // (2 * 100 * na::HUGEINT)) / 1e6 END AS mean_a,
+                THEN {half_up_sql("sa", "100 * na")} END AS mean_a,
            CASE WHEN nb > 0
-                THEN ((2 * sb::HUGEINT * 1000000 + 100 * nb)
-                      // (2 * 100 * nb::HUGEINT)) / 1e6 END AS mean_b,
+                THEN {half_up_sql("sb", "100 * nb")} END AS mean_b,
            CASE WHEN na > 1 AND nb > 1
                 AND (na * qa - sa * sa > 0 OR nb * qb - sb * sb > 0)
                 THEN round((sa::DOUBLE / na::DOUBLE - sb::DOUBLE / nb::DOUBLE)
@@ -10188,9 +10038,9 @@ def ab_test_zscores(spark, sf_dir):
         F.col("na").cast("bigint").alias("n_a"),
         F.col("nb").cast("bigint").alias("n_b"),
         F.when(F.col("na") > 0,
-               _ratio6_dec(F.col("sa"), F.col("na") * 100)).alias("mean_a"),
+               half_up(F.col("sa"), F.col("na") * 100)).alias("mean_a"),
         F.when(F.col("nb") > 0,
-               _ratio6_dec(F.col("sb"), F.col("nb") * 100)).alias("mean_b"),
+               half_up(F.col("sb"), F.col("nb") * 100)).alias("mean_b"),
         F.when(z_ok, F.round((sa / na - sb / nb)
                              / F.sqrt(va / na + vb / nb), 6)).alias("z"))
 
@@ -10239,7 +10089,7 @@ def inverted_index_postings(spark, sf_dir):
 
 @register(
     "mutual_information_bands",
-    """
+    f"""
     WITH c AS (
       SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
       FROM events),
@@ -10258,7 +10108,7 @@ def inverted_index_postings(spark, sf_dir):
     mx AS (SELECT event_type, sum(n)::BIGINT AS nx FROM xy GROUP BY 1),
     my AS (SELECT band, sum(n)::BIGINT AS ny FROM xy GROUP BY 1)
     SELECT xy.event_type, xy.band::INT AS band, xy.n,
-           ((2 * xy.n * 1000000 + total) // (2 * total)) / 1e6 AS p_xy,
+           {half_up_sql("xy.n", "total")} AS p_xy,
            round(ln((xy.n::DOUBLE * total::DOUBLE)
                     / (nx::DOUBLE * ny::DOUBLE)), 6) AS pmi,
            round(xy.n / total::DOUBLE
@@ -10304,7 +10154,7 @@ def mutual_information_bands(spark, sf_dir):
              / (F.col("nx").cast("double") * F.col("ny").cast("double")))
     return j.select("event_type", F.col("band").cast("int").alias("band"),
                     "n",
-                    _ratio6(F.col("n"), F.col("total")).alias("p_xy"),
+                    half_up(F.col("n"), F.col("total")).alias("p_xy"),
                     F.round(F.log(ratio), 6).alias("pmi"),
                     F.round(F.col("n") / F.col("total") * F.log(ratio), 6)
                      .alias("mi_term"))
@@ -10312,7 +10162,7 @@ def mutual_information_bands(spark, sf_dir):
 
 @register(
     "doc_containment_pairs",
-    """
+    f"""
     WITH w AS (
       SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
       FROM documents),
@@ -10331,9 +10181,9 @@ def mutual_information_bands(spark, sf_dir):
       FROM sh l JOIN sh r USING (shingle)
       WHERE l.doc_id < r.doc_id GROUP BY 1, 2)
     SELECT doc_a, doc_b,
-           ((2 * i * 1000000 + sa.sz) // (2 * sa.sz)) / 1e6
+           {half_up_sql("i", "sa.sz")}
              AS cont_a_in_b,
-           ((2 * i * 1000000 + sb.sz) // (2 * sb.sz)) / 1e6
+           {half_up_sql("i", "sb.sz")}
              AS cont_b_in_a
     FROM inter JOIN sz sa ON sa.doc_id = doc_a
                JOIN sz sb ON sb.doc_id = doc_b
@@ -10363,9 +10213,9 @@ def doc_containment_pairs(spark, sf_dir):
             .filter((F.col("i") / F.col("sz_a") >= 0.8)
                     | (F.col("i") / F.col("sz_b") >= 0.8))
             .select("doc_a", "doc_b",
-                    _ratio6(F.col("i"), F.col("sz_a"))
+                    half_up(F.col("i"), F.col("sz_a"))
                      .alias("cont_a_in_b"),
-                    _ratio6(F.col("i"), F.col("sz_b"))
+                    half_up(F.col("i"), F.col("sz_b"))
                      .alias("cont_b_in_a")))
 
 
@@ -10644,7 +10494,7 @@ def stream_cusum_drift(spark, sf_dir):
 
 @register(
     "part_neighbors_cosine",
-    """
+    f"""
     WITH li AS (
       SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
     supp AS (SELECT p, count(*)::BIGINT AS s FROM li GROUP BY p),
@@ -10662,7 +10512,7 @@ def stream_cusum_drift(spark, sf_dir):
       -- whose value is never a terminating 7-dp decimal
       SELECT item, neighbor, c,
              CASE WHEN si.s = sn.s
-                  THEN ((2 * c * 1000000 + si.s) // (2 * si.s)) / 1e6
+                  THEN {half_up_sql("c", "si.s")}
                   ELSE round(c / sqrt(si.s * sn.s), 6) END AS cosine
       FROM sym JOIN supp si ON si.p = item
                JOIN supp sn ON sn.p = neighbor),
@@ -10706,7 +10556,7 @@ def part_neighbors_cosine(spark, sf_dir):
            .join(sn, "neighbor")
            .select("item", "neighbor", "c",
                    F.when(F.col("si") == F.col("sn"),
-                          _ratio6(F.col("c"), F.col("si")))
+                          half_up(F.col("c"), F.col("si")))
                     .otherwise(
                         F.round(F.col("c")
                                 / F.sqrt(F.col("si") * F.col("sn")), 6))
@@ -10782,7 +10632,7 @@ def source_token_entropy(spark, sf_dir):
 
 @register(
     "events_decayed_counts",
-    """
+    f"""
     WITH mx AS (SELECT max(epoch_us(ts)) AS t_end FROM events),
     u AS (
       SELECT event_type,
@@ -10791,8 +10641,7 @@ def source_token_entropy(spark, sf_dir):
                AS units
       FROM events CROSS JOIN mx)
     SELECT event_type, count(*)::BIGINT AS n_events,
-           ((2 * sum(units)::HUGEINT * 1000000 + 1000000000)
-            // 2000000000) / 1e6 AS decayed_count
+           {half_up_sql("sum(units)", "1000000000")} AS decayed_count
     FROM u GROUP BY event_type""",
     "relational", "timeseries",
 )
@@ -10819,13 +10668,13 @@ def events_decayed_counts(spark, sf_dir):
     return (u.groupBy("event_type")
             .agg(F.count("*").cast("bigint").alias("n_events"),
                  # nano-unit sum beyond BIGINT ratio headroom at scale
-                 _ratio6_dec(F.sum("units"), F.lit(1_000_000_000))
+                 half_up(F.sum("units"), F.lit(1_000_000_000))
                   .alias("decayed_count")))
 
 
 @register(
     "events_psi_drift",
-    """
+    f"""
     WITH mx AS (SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi
                 FROM events),
     c AS (
@@ -10862,10 +10711,8 @@ def events_decayed_counts(spark, sf_dir):
              abs(n0 * nt1 - n1 * nt0) AS ks_num, nt0 * nt1 AS ks_den
       FROM w)
     SELECT event_type,
-           ((2 * sum(psi_units)::HUGEINT * 1000000 + 1000000000)
-            // 2000000000) / 1e6 AS psi,
-           ((2 * max(ks_num)::HUGEINT * 1000000 + max(ks_den))
-            // (2 * max(ks_den)::HUGEINT)) / 1e6 AS max_band_gap
+           {half_up_sql("sum(psi_units)", "1000000000")} AS psi,
+           {half_up_sql("max(ks_num)", "max(ks_den)")} AS max_band_gap
     FROM terms GROUP BY event_type""",
     "relational", "analytics", "anomaly",
 )
@@ -10921,15 +10768,15 @@ def events_psi_drift(spark, sf_dir):
          .alias("ks_num"),
         (F.col("nt0") * F.col("nt1")).alias("ks_den"))
     return (terms.groupBy("event_type")
-            .agg(_ratio6_dec(F.sum("psi_units"),
+            .agg(half_up(F.sum("psi_units"),
                              F.lit(1_000_000_000)).alias("psi"),
-                 _ratio6_dec(F.max("ks_num"), F.max("ks_den"))
+                 half_up(F.max("ks_num"), F.max("ks_den"))
                  .alias("max_band_gap")))
 
 
 @register(
     "benford_price_audit",
-    """
+    f"""
     WITH d AS (
       SELECT CAST(substr(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
                               AS VARCHAR), 1, 1) AS INT) AS digit
@@ -10937,7 +10784,7 @@ def events_psi_drift(spark, sf_dir):
     c AS (SELECT digit, count(*)::BIGINT AS n FROM d GROUP BY digit),
     t AS (SELECT sum(n)::BIGINT AS total FROM c)
     SELECT digit, n,
-           ((2 * n * 1000000 + total) // (2 * total)) / 1e6 AS observed,
+           {half_up_sql("n", "total")} AS observed,
            round(ln(1.0 + 1.0 / digit) / ln(10.0), 6) AS benford,
            round(abs(n / total::DOUBLE
                      - ln(1.0 + 1.0 / digit) / ln(10.0)), 6) AS abs_dev
@@ -10962,7 +10809,7 @@ def benford_price_audit(spark, sf_dir):
                       / F.log(F.lit(10.0)), 6)
     return (c.crossJoin(F.broadcast(t))
             .select("digit", "n",
-                    _ratio6(F.col("n"), F.col("total"))
+                    half_up(F.col("n"), F.col("total"))
                      .alias("observed"),
                     benford.alias("benford"),
                     F.round(F.abs(F.col("n") / F.col("total")
@@ -11121,7 +10968,7 @@ def order_cohort_ltv(spark, sf_dir):
 
 @register(
     "part_demand_abc_xyz",
-    """
+    f"""
     WITH wk AS (
       SELECT l_partkey AS part,
              date_diff('day', DATE '1970-01-01', l_shipdate::DATE) // 7
@@ -11147,8 +10994,7 @@ def order_cohort_ltv(spark, sf_dir):
            CASE WHEN 4 * (n * q - s * s) <= s * s THEN 'X'
                 WHEN (n * q - s * s) <= s * s THEN 'Y'
                 ELSE 'Z' END AS xyz_class,
-           ((2 * (n * q - s * s)::HUGEINT * 1000000 + (s * s)::HUGEINT)
-            // (2 * (s * s)::HUGEINT)) / 1e6 AS cv2
+           {half_up_sql("n * q - s * s", "s * s")} AS cv2
     FROM abc""",
     "relational", "analytics",
 )
@@ -11205,7 +11051,7 @@ def part_demand_abc_xyz(spark, sf_dir):
                      .otherwise("Z").alias("xyz_class"),
                     # n*q - s^2 over s^2: exact integer rational
                     # beyond BIGINT headroom (r13 tie class)
-                    _ratio6_dec(var, F.col("s") * F.col("s"))
+                    half_up(var, F.col("s") * F.col("s"))
                      .alias("cv2")))
 
 
@@ -11340,7 +11186,7 @@ def ann_topk_ivfpq(spark, sf_dir):
 
 @register(
     "supplier_return_wilson",
-    """
+    f"""
     WITH s AS (
       SELECT l_suppkey AS supplier, count(*)::BIGINT AS n,
              sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT
@@ -11356,7 +11202,7 @@ def ann_topk_ivfpq(spark, sf_dir):
              / (1 + 3.8416 / n) AS lb
       FROM s WHERE n > 0)
     SELECT supplier, n, returns,
-           ((2 * returns * 1000000 + n) // (2 * n)) / 1e6 AS return_rate,
+           {half_up_sql("returns", "n")} AS return_rate,
            round(lb, 6) AS wilson_lb
     FROM wb""",
     "relational", "analytics",
@@ -11381,7 +11227,7 @@ def supplier_return_wilson(spark, sf_dir):
                            + 0.9604 / (F.col("n") * F.col("n"))))
           / (1 + 3.8416 / F.col("n")))
     return s.select("supplier", "n", "returns",
-                    _ratio6(F.col("returns"), F.col("n"))
+                    half_up(F.col("returns"), F.col("n"))
                     .alias("return_rate"),
                     F.round(lb, 6).alias("wilson_lb"))
 
@@ -11534,7 +11380,7 @@ def lineitem_quantity_equidepth(spark, sf_dir):
 
 @register(
     "stream_ab_guardrail",
-    """
+    f"""
     WITH e AS (
       SELECT event_type,
              ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT % 2
@@ -11554,11 +11400,9 @@ def lineitem_quantity_equidepth(spark, sf_dir):
       FROM e GROUP BY event_type)
     SELECT event_type, na::BIGINT AS n_a, nb::BIGINT AS n_b,
            CASE WHEN na > 0
-                THEN ((2 * sa::HUGEINT * 1000000 + 100 * na)
-                      // (2 * 100 * na::HUGEINT)) / 1e6 END AS mean_a,
+                THEN {half_up_sql("sa", "100 * na")} END AS mean_a,
            CASE WHEN nb > 0
-                THEN ((2 * sb::HUGEINT * 1000000 + 100 * nb)
-                      // (2 * 100 * nb::HUGEINT)) / 1e6 END AS mean_b,
+                THEN {half_up_sql("sb", "100 * nb")} END AS mean_b,
            CASE WHEN na > 1 AND nb > 1
                 AND (na * qa - sa * sa > 0 OR nb * qb - sb * sb > 0)
                 THEN round((sa::DOUBLE / na::DOUBLE - sb::DOUBLE / nb::DOUBLE)
@@ -11619,16 +11463,16 @@ def stream_ab_guardrail(spark, sf_dir):
         F.col("na").cast("bigint").alias("n_a"),
         F.col("nb").cast("bigint").alias("n_b"),
         F.when(F.col("na") > 0,
-               _ratio6_dec(F.col("sa"), F.col("na") * 100)).alias("mean_a"),
+               half_up(F.col("sa"), F.col("na") * 100)).alias("mean_a"),
         F.when(F.col("nb") > 0,
-               _ratio6_dec(F.col("sb"), F.col("nb") * 100)).alias("mean_b"),
+               half_up(F.col("sb"), F.col("nb") * 100)).alias("mean_b"),
         F.when(z_ok, F.round((sa / na - sb / nb)
                              / F.sqrt(va / na + vb / nb), 6)).alias("z"))
 
 
 @register(
     "funnel_time_percentiles",
-    """
+    f"""
     WITH v AS (
       SELECT user_id, min(epoch_us(ts)) AS v_us
       FROM events WHERE event_type = 'view' GROUP BY user_id),
@@ -11641,8 +11485,8 @@ def stream_ab_guardrail(spark, sf_dir):
       SELECT p.user_id, p.p_us - v.v_us AS us
       FROM p JOIN v USING (user_id))
     SELECT count(*)::BIGINT AS n_converted,
-           ((2 * CAST(quantile_cont(us, 0.5) * 2 AS BIGINT) * 1000000
-             + 2000000) // (2 * 2000000)) / 1e6 AS p50_s,
+           {half_up_sql("CAST(quantile_cont(us, 0.5) * 2 AS BIGINT)",
+                        "2000000")} AS p50_s,
            round(quantile_cont(us, 0.9) / 1000000.0, 6) AS p90_s,
            round(max(us) / 1000000.0, 6) AS max_s
     FROM lat""",
@@ -11673,7 +11517,7 @@ def funnel_time_percentiles(spark, sf_dir):
         F.count("*").cast("long").alias("n_converted"),
         # p50 of integer us is an exact half-integer: S/(2*10^6) is the
         # r13 tie class (2*p50 = S recovers the integer exactly)
-        _ratio6((F.expr("percentile(us, 0.5)") * 2).cast("long"),
+        half_up((F.expr("percentile(us, 0.5)") * 2).cast("long"),
                 F.lit(2_000_000)).alias("p50_s"),
         F.round(F.expr("percentile(us, 0.9)") / 1_000_000.0, 6)
          .alias("p90_s"),
@@ -11710,22 +11554,17 @@ def _lsh_band_sweep_sql() -> str:
         r = 16 // b
         per.append(f"lsh_{b} AS (SELECT DISTINCT doc_a, doc_b FROM "
                    f"({_minhash_pairs_sql(bands=b, rows=r, threshold=0.0)}))")
+        tp = f"(SELECT count(*) FROM lsh_{b} JOIN truth USING (doc_a, doc_b))"
         sel.append(f"""
     SELECT {b} AS bands, {r} AS rows_per_band,
            (SELECT count(*) FROM lsh_{b})::BIGINT AS n_pred,
            (SELECT count(*) FROM truth)::BIGINT AS n_true,
            (SELECT count(*) FROM lsh_{b} JOIN truth USING (doc_a, doc_b))
              ::BIGINT AS tp,
-           ((2 * (SELECT count(*) FROM lsh_{b} JOIN truth
-                   USING (doc_a, doc_b))::BIGINT * 1000000
-             + greatest((SELECT count(*) FROM lsh_{b}), 1))
-            // (2 * greatest((SELECT count(*) FROM lsh_{b}), 1)::BIGINT))
-           / 1e6 AS precision,
-           ((2 * (SELECT count(*) FROM lsh_{b} JOIN truth
-                   USING (doc_a, doc_b))::BIGINT * 1000000
-             + greatest((SELECT count(*) FROM truth), 1))
-            // (2 * greatest((SELECT count(*) FROM truth), 1)::BIGINT))
-           / 1e6 AS recall""")
+           {half_up_sql(tp, f"greatest((SELECT count(*) FROM lsh_{b}), 1)")}
+             AS precision,
+           {half_up_sql(tp, "greatest((SELECT count(*) FROM truth), 1)")}
+             AS recall""")
     return ("WITH " + truth.lstrip()[0:] + ",\n    "
             + ",\n    ".join(per) + "\n" + "\n    UNION ALL".join(sel))
 
@@ -11770,9 +11609,9 @@ def lsh_band_sweep(spark, sf_dir):
             "tp bigint")
         row = row.select(
             "*",
-            _ratio6(F.col("tp"), F.greatest(F.col("n_pred"), F.lit(1)))
+            half_up(F.col("tp"), F.greatest(F.col("n_pred"), F.lit(1)))
              .alias("precision"),
-            _ratio6(F.col("tp"), F.greatest(F.col("n_true"), F.lit(1)))
+            half_up(F.col("tp"), F.greatest(F.col("n_true"), F.lit(1)))
              .alias("recall"))
         out = row if out is None else out.unionByName(row)
     return out
@@ -11833,7 +11672,7 @@ def events_chi2_independence(spark, sf_dir):
 
 @register(
     "vocab_coverage_curve",
-    """
+    f"""
     WITH cnt AS (
       SELECT w, count(*)::BIGINT AS c FROM (
         SELECT unnest(string_split_regex(trim(text), '\\s+')) AS w
@@ -11850,9 +11689,8 @@ def events_chi2_independence(spark, sf_dir):
            coalesce((SELECT max(cum) FROM rk WHERE rank <= k), 0)::BIGINT
              AS covered,
            t.total AS total_tokens,
-           ((2 * coalesce((SELECT max(cum) FROM rk WHERE rank <= k),
-                          0)::BIGINT * 1000000 + t.total)
-            // (2 * t.total)) / 1e6 AS coverage
+           {half_up_sql("coalesce((SELECT max(cum) FROM rk"
+                        " WHERE rank <= k), 0)", "t.total")} AS coverage
     FROM ks CROSS JOIN t""",
     "llm", "text", "diagnostics",
 )
@@ -11886,7 +11724,7 @@ def vocab_coverage_curve(spark, sf_dir):
                 .alias("covered")))
     return (cov.crossJoin(F.broadcast(t))
             .select("k", "covered", "total_tokens",
-                    _ratio6(F.col("covered"), F.col("total_tokens"))
+                    half_up(F.col("covered"), F.col("total_tokens"))
                      .alias("coverage")))
 
 
@@ -12097,7 +11935,7 @@ def stream_distinct_sketch(spark, sf_dir):
 
 @register(
     "user_activity_gini",
-    """
+    f"""
     WITH u AS (
       SELECT user_id, count(*)::BIGINT AS x FROM events GROUP BY user_id),
     r AS (
@@ -12107,9 +11945,7 @@ def stream_distinct_sketch(spark, sf_dir):
              sum(rk::HUGEINT * x)::HUGEINT AS srx
       FROM r)
     SELECT n::BIGINT AS n_users, sx::BIGINT AS n_events,
-           (CASE WHEN 2 * srx - (n + 1) * sx < 0 THEN -1 ELSE 1 END)
-           * ((2 * abs(2 * srx - (n + 1) * sx) * 1000000 + n * sx)
-              // (2 * n * sx)) / 1e6 AS gini
+           {half_up_sql("2 * srx - (n + 1) * sx", "n * sx")} AS gini
     FROM m""",
     "relational", "analytics",
 )
@@ -12140,7 +11976,7 @@ def user_activity_gini(spark, sf_dir):
         F.col("sx").cast("bigint").alias("n_events"),
         # gini = (2*srx - (n+1)*sx)/(n*sx): signed integer rational
         # beyond BIGINT headroom (r13 tie class)
-        scalar_fn.sratio6_dec(
+        half_up(
             2 * F.col("srx") - (F.col("n") + 1) * F.col("sx"),
             F.col("n") * F.col("sx")).alias("gini"))
 
@@ -12221,7 +12057,7 @@ def events_runs_test(spark, sf_dir):
 
 @register(
     "kanon_risk_audit",
-    """
+    f"""
     WITH cls AS (
       SELECT c_mktsegment, c_nationkey,
              floor(c_acctbal / 2000)::BIGINT AS bal_band,
@@ -12233,9 +12069,8 @@ def events_runs_test(spark, sf_dir):
            min(sz)::BIGINT AS min_class_size,
            sum(CASE WHEN sz = 1 THEN 1 ELSE 0 END)::BIGINT AS n_singletons,
            sum(CASE WHEN sz < 5 THEN sz ELSE 0 END)::BIGINT AS n_below_k,
-           ((2 * sum(CASE WHEN sz < 5 THEN sz ELSE 0 END)::BIGINT
-             * 1000000 + sum(sz))
-            // (2 * sum(sz)::BIGINT)) / 1e6 AS pct_below_k
+           {half_up_sql("sum(CASE WHEN sz < 5 THEN sz ELSE 0 END)",
+                        "sum(sz)")} AS pct_below_k
     FROM cls GROUP BY c_mktsegment""",
     "llm", "privacy", "diagnostics",
 )
@@ -12269,7 +12104,7 @@ def kanon_risk_audit(spark, sf_dir):
                   .cast("long").alias("n_below_k"))
             .select("c_mktsegment", "n_customers", "n_classes",
                     "min_class_size", "n_singletons", "n_below_k",
-                    _ratio6(F.col("n_below_k"), F.col("n_customers"))
+                    half_up(F.col("n_below_k"), F.col("n_customers"))
                      .alias("pct_below_k")))
 
 
@@ -12334,7 +12169,7 @@ def compaction_bin_packing(spark, sf_dir):
 
 @register(
     "doc_ngram_novelty",
-    _SHINGLES_CTE + """,
+    _SHINGLES_CTE + f""",
     f AS (
       SELECT doc_id, shingle,
              min(doc_id) OVER (PARTITION BY shingle) AS first_doc
@@ -12342,9 +12177,8 @@ def compaction_bin_packing(spark, sf_dir):
     SELECT doc_id, count(*)::BIGINT AS n_shingles,
            sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)::BIGINT
              AS n_novel,
-           ((2 * sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0
-                     END)::BIGINT * 1000000 + count(*))
-            // (2 * count(*))) / 1e6 AS novelty
+           {half_up_sql("sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)",
+                        "count(*)")} AS novelty
     FROM f GROUP BY doc_id""",
     "llm", "text", "dedup",
 )
@@ -12381,7 +12215,7 @@ def doc_ngram_novelty(spark, sf_dir):
                     F.coalesce("n_novel", F.lit(0)).cast("long")
                      .alias("n_novel"))
             .withColumn("novelty",
-                        _ratio6(F.col("n_novel"), F.col("n_shingles"))))
+                        half_up(F.col("n_novel"), F.col("n_shingles"))))
 
 
 # ======================================================================
@@ -12435,8 +12269,7 @@ def _ndcg_sql() -> str:
     SELECT i.query_id,
            coalesce(n_results, 0)::BIGINT AS n_results,
            coalesce(n_hits, 0)::BIGINT AS n_hits,
-           ((2 * coalesce(dcg_nanos, 0)::BIGINT * 1000000 + idcg_nanos)
-            // (2 * idcg_nanos)) / 1e6
+           {half_up_sql("coalesce(dcg_nanos, 0)", "idcg_nanos")}
              AS ndcg_at_5,
            coalesce(CASE first_hit {mrr} END, 0.0) AS mrr_at_5
     FROM ideal i LEFT JOIN sys ON i.query_id = sys.query_id"""
@@ -12502,7 +12335,7 @@ def ann_ndcg_mrr(spark, sf_dir):
                      .alias("n_results"),
                     F.coalesce("n_hits", F.lit(0)).cast("long")
                      .alias("n_hits"),
-                    _ratio6(F.coalesce("dcg_nanos", F.lit(0)),
+                    half_up(F.coalesce("dcg_nanos", F.lit(0)),
                             F.col("idcg_nanos")).alias("ndcg_at_5"),
                     F.coalesce(mrr, F.lit(0.0)).alias("mrr_at_5")))
 
@@ -12549,7 +12382,7 @@ def _calibration_sql() -> str:
       SELECT band, max(m) AS cal FROM inner_min GROUP BY band)
     SELECT b.band,
            b.n AS n_docs, b.pos AS n_pos,
-           ((2 * b.pos * 1000000 + b.n) // (2 * b.n)) / 1e6 AS rate,
+           {half_up_sql("b.pos", "b.n")} AS rate,
            round(cal, 6) AS calibrated
     FROM bands b JOIN fit USING (band)"""
 
@@ -12601,13 +12434,13 @@ def quality_calibration_isotonic(spark, sf_dir):
             .select("band",
                     F.col("n").alias("n_docs"),
                     F.col("pos").alias("n_pos"),
-                    _ratio6(F.col("pos"), F.col("n")).alias("rate"),
+                    half_up(F.col("pos"), F.col("n")).alias("rate"),
                     F.round("cal", 6).alias("calibrated")))
 
 
 @register(
     "dp_noised_histogram",
-    """
+    f"""
     WITH cells AS (
       SELECT event_type,
              ((epoch_us(ts) // 1000000) // 86400)::BIGINT AS day,
@@ -12621,15 +12454,9 @@ def quality_calibration_isotonic(spark, sf_dir):
       FROM cells),
     rel AS (
       SELECT event_type, day,
-             (CASE WHEN c::HUGEINT * 1000000000
-                        + round(-sign(s) * ln(1.0 - 2 * abs(s))
-                                * 1e9)::BIGINT < 0
-                   THEN -1 ELSE 1 END)
-             * ((2 * abs(c::HUGEINT * 1000000000
-                         + round(-sign(s) * ln(1.0 - 2 * abs(s))
-                                 * 1e9)::BIGINT) * 1000000
-                 + 1000000000::HUGEINT)
-                // (2 * 1000000000::HUGEINT)) / 1e6 AS noisy_count
+             {half_up_sql("c::HUGEINT * 1000000000"
+                          " + round(-sign(s) * ln(1.0 - 2 * abs(s)) * 1e9)"
+                          "::BIGINT", "1000000000")} AS noisy_count
       FROM n)
     SELECT event_type, day, noisy_count
     FROM rel WHERE noisy_count >= 10.0""",
@@ -12666,7 +12493,7 @@ def dp_noised_histogram(spark, sf_dir):
             .select("event_type", "day",
                     # (c*1e9 + nanos)/1e9: signed integer rational
                     # beyond BIGINT headroom (r13 tie class)
-                    scalar_fn.sratio6_dec(
+                    half_up(
                         F.col("c") * F.lit(1_000_000_000) + nanos,
                         F.lit(1_000_000_000))
                      .alias("noisy_count"))
@@ -12702,6 +12529,7 @@ def _kappa_sql() -> str:
     stop = " + ".join(
         f"len(regexp_extract_all(lower(text), '\\b{w}\\b'))"
         for w in text.STOPWORDS)
+    cross = "(n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)"
     return f"""
     WITH {_GOPHER_KEEP_CTE},
     qf AS (
@@ -12731,24 +12559,10 @@ def _kappa_sql() -> str:
              sum((NOT keep_a AND NOT keep_b)::INT)::BIGINT AS n00
       FROM qa JOIN gkeep USING (doc_id))
     SELECT n, n11, n10, n01, n00,
-           ((2 * (n11 + n00) * 1000000 + n) // (2 * n)) / 1e6 AS po,
-           ((2 * ((n11 + n10) * (n11 + n01)
-                  + (n01 + n00) * (n10 + n00))::HUGEINT * 1000000
-             + n::HUGEINT * n)
-            // (2 * n::HUGEINT * n)) / 1e6 AS pe,
-           (CASE WHEN n * (n11 + n00)
-                      - ((n11 + n10) * (n11 + n01)
-                         + (n01 + n00) * (n10 + n00)) < 0
-                 THEN -1 ELSE 1 END)
-           * ((2 * abs(n::HUGEINT * (n11 + n00)
-                       - ((n11 + n10) * (n11 + n01)
-                          + (n01 + n00) * (n10 + n00))) * 1000000
-               + (n::HUGEINT * n
-                  - ((n11 + n10) * (n11 + n01)
-                     + (n01 + n00) * (n10 + n00))))
-              // (2 * (n::HUGEINT * n
-                       - ((n11 + n10) * (n11 + n01)
-                          + (n01 + n00) * (n10 + n00))))) / 1e6 AS kappa
+           {half_up_sql("n11 + n00", "n")} AS po,
+           {half_up_sql(cross, "n::HUGEINT * n")} AS pe,
+           {half_up_sql(f"n::HUGEINT * (n11 + n00) - ({cross})",
+                        f"n::HUGEINT * n - ({cross})")} AS kappa
     FROM cm"""
 
 
@@ -12790,15 +12604,15 @@ def rater_agreement_kappa(spark, sf_dir):
         "n", "n11", "n10", "n01", "n00",
         # po/pe/kappa are integer rationals (r13 tie class); kappa is
         # signed and its products exceed BIGINT headroom at scale
-        _ratio6(n11 + n00, n).alias("po"),
-        _ratio6_dec(cross, n * n).alias("pe"),
-        scalar_fn.sratio6_dec(n * (n11 + n00) - cross,
+        half_up(n11 + n00, n).alias("po"),
+        half_up(cross, n * n).alias("pe"),
+        half_up(n * (n11 + n00) - cross,
                               n * n - cross).alias("kappa"))
 
 
 @register(
     "embedding_int8_quant",
-    """
+    f"""
     WITH e AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     el AS (
@@ -12826,9 +12640,8 @@ def rater_agreement_kappa(spark, sf_dir):
            round(mn, 6) AS mn, round(mx, 6) AS mx,
            round(scale, 9) AS scale,
            err_units,
-           ((2 * err_units::HUGEINT * 1000000000000
-             + n_vals::HUGEINT * 1000000000000)
-            // (2 * n_vals::HUGEINT * 1000000000000)) / 1e12 AS mse
+           {half_up_sql("err_units", "n_vals::HUGEINT * 1000000000000",
+                        scale=12)} AS mse
     FROM p JOIN u USING (dim)""",
     "llm", "similarity", "diagnostics",
 )
@@ -12874,7 +12687,9 @@ def embedding_int8_quant(spark, sf_dir):
                     "err_units",
                     # u/(n*1e12) at 12 dp: exact integer rational in
                     # DECIMAL(38,0) (r13 tie class, 12-dp variant)
-                    _ratio12_dec(F.col("err_units"), F.col("n_vals"))
+                    half_up(F.col("err_units"),
+                            F.col("n_vals").cast("decimal(38,0)") * 10**12,
+                            scale=12)
                     .alias("mse")))
 
 
@@ -13169,7 +12984,7 @@ def w_sliding_topk(spark, sf_dir):
       SELECT event_type, min(tu) AS session_start_us,
              max(tu + g) AS session_end_us,
              count(*)::BIGINT AS cnt,
-             {AVG6_SQL} AS avg_value
+             {AVG_CENTS_SQL} AS avg_value
       FROM s GROUP BY event_type, sid)
     SELECT event_type, session_start_us, session_end_us, cnt, avg_value
     FROM a, mx WHERE session_end_us <= mx""",
@@ -13187,7 +13002,7 @@ def stream_session_dynamic_gap(spark, sf_dir):
     watermark passes its end; the oracle keeps sessions whose end <=
     the final watermark (max event time, 0 s delay) — trailing
     still-open sessions correctly stay in state, not in the output.
-    Exact integer-cent sums + half-up integer rounding (_avg6) make
+    Exact integer-cent sums + half-up integer rounding (half_up) make
     state-merge order unobservable in the hash. State is O(open
     sessions x types), watermark-evicted."""
     tune(spark)
@@ -13203,7 +13018,7 @@ def stream_session_dynamic_gap(spark, sf_dir):
         F.unix_micros("session_window.start").alias("session_start_us"),
         F.unix_micros("session_window.end").alias("session_end_us"),
         F.col("cnt").cast("bigint").alias("cnt"),
-        _avg6().alias("avg_value"))
+        half_up("sc", F.col("cnt") * 100).alias("avg_value"))
     return _run_to_memory(spark, out, "stream_session_dynamic_gap_result")
 
 
@@ -13315,7 +13130,7 @@ def ann_hamming_recall(spark, sf_dir):
 
 @register(
     "dup_ngram_char_fraction",
-    r"""
+    rf"""
     WITH w AS (
       SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
       FROM documents),
@@ -13348,8 +13163,8 @@ def ann_hamming_recall(spark, sf_dir):
     SELECT t.doc_id, n_words, word_chars,
            COALESCE(dup_ngram_chars, 0)::BIGINT AS dup_ngram_chars,
            CASE WHEN word_chars = 0 THEN 0.0
-                ELSE ((2 * COALESCE(dup_ngram_chars, 0)::BIGINT * 1000000
-                       + word_chars) // (2 * word_chars)) / 1e6
+                ELSE {half_up_sql("COALESCE(dup_ngram_chars, 0)",
+                                  "word_chars")}
                 END AS dup_char_frac
     FROM tot t LEFT JOIN dchars d ON t.doc_id = d.doc_id""",
     "llm", "text", "quality",
@@ -13376,7 +13191,7 @@ def dup_ngram_char_fraction(spark, sf_dir):
 
 @register(
     "top_ngram_char_fraction",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, regexp_extract_all(lower(coalesce(text, '')),
                                         '[a-z0-9]+') AS w
@@ -13398,8 +13213,7 @@ def dup_ngram_char_fraction(spark, sf_dir):
                                 ORDER BY cnt DESC, gram) AS rn
       FROM c)
     SELECT doc_id, n::BIGINT AS n, gram AS top_gram, cnt AS top_count,
-           ((2 * cnt * (length(gram) - (n - 1)) * 1000000 + wc)
-            // (2 * wc::BIGINT)) / 1e6
+           {half_up_sql("cnt * (length(gram) - (n - 1))", "wc")}
              AS top_char_frac
     FROM r WHERE rn = 1""",
     "llm", "text", "quality",
@@ -13430,7 +13244,7 @@ def top_ngram_char_fraction(spark, sf_dir):
 
 @register(
     "softdedup_weights",
-    r"""
+    rf"""
     WITH w AS (
       SELECT doc_id,
              string_split_regex(trim(coalesce(text, '')), '\s+') AS ws
@@ -13455,28 +13269,23 @@ def top_ngram_char_fraction(spark, sf_dir):
       FROM dgc d JOIN lp USING (gram) GROUP BY 1),
     m AS (
       SELECT doc_id, n_grams,
-             (CASE WHEN units < 0 THEN -1 ELSE 1 END)
-             * ((2 * abs(units)::HUGEINT * 1000000
-                 + n_grams::HUGEINT * 1000000000)
-                // (2 * n_grams::HUGEINT * 1000000000)) / 1e6
+             {half_up_sql("units", "n_grams::HUGEINT * 1000000000")}
                AS mean_logp
       FROM sc),
-    st AS (SELECT min(mean_logp) AS mn, max(mean_logp) AS mx FROM m)
+    st AS (
+      SELECT min(mean_logp) AS mn, max(mean_logp) AS mx,
+             CAST(round(min(mean_logp) * 1000000) AS BIGINT) AS amn,
+             CAST(round(max(mean_logp) * 1000000) AS BIGINT) AS amx
+      FROM m)
     SELECT doc.doc_id,
            coalesce(m.n_grams, 0)::BIGINT AS n_grams,
            m.mean_logp AS mean_logp,
            CASE WHEN m.n_grams IS NULL THEN 1.0
                 WHEN st.mx = st.mn THEN 1.0
-                ELSE ((2 * (2 * (CAST(round(st.mx * 1000000) AS BIGINT)
-                               - CAST(round(st.mn * 1000000) AS BIGINT))
-                          - (CAST(round(m.mean_logp * 1000000) AS BIGINT)
-                             - CAST(round(st.mn * 1000000) AS BIGINT)))
-                       * 1000000
-                       + 2 * (CAST(round(st.mx * 1000000) AS BIGINT)
-                              - CAST(round(st.mn * 1000000) AS BIGINT)))
-                      // (2 * 2 * (CAST(round(st.mx * 1000000) AS BIGINT)
-                                   - CAST(round(st.mn * 1000000)
-                                          AS BIGINT)))) / 1e6
+                ELSE {half_up_sql("2 * (st.amx - st.amn)"
+                                  " - (CAST(round(m.mean_logp * 1000000)"
+                                  " AS BIGINT) - st.amn)",
+                                  "2 * (st.amx - st.amn)")}
            END AS softdedup_weight
     FROM documents doc LEFT JOIN m USING (doc_id) CROSS JOIN st""",
     "llm", "dedup", "quality",
@@ -13529,11 +13338,9 @@ def _weighted_mixture_sql() -> str:
              sum(kp * units)::HUGEINT AS eff_units
       FROM u GROUP BY source)
     SELECT source, n_docs, n_kept,
-           ((2 * eff_units * 1000000 + 1000000000000::HUGEINT)
-            // (2 * 1000000000000::HUGEINT)) / 1e6 AS eff_weight,
+           {half_up_sql("eff_units", "1000000000000")} AS eff_weight,
            CASE WHEN sum(eff_units) OVER () = 0 THEN 0.0
-                ELSE ((2 * eff_units * 1000000 + sum(eff_units) OVER ())
-                      // (2 * sum(eff_units) OVER ())) / 1e6
+                ELSE {half_up_sql("eff_units", "sum(eff_units) OVER ()")}
            END AS eff_share
     FROM agg"""
 
@@ -13592,10 +13399,10 @@ def pipeline_weighted_mixture(spark, sf_dir):
     return agg.select(
         "source", "n_docs", "n_kept",
         # micro-unit sums beyond BIGINT headroom: exact 6-dp in DECIMAL
-        _ratio6_dec(F.col("eff_units"),
+        half_up(F.col("eff_units"),
                     F.lit(1_000_000_000_000)).alias("eff_weight"),
         F.when(F.sum("eff_units").over(w) == 0, F.lit(0.0))
-         .otherwise(_ratio6_dec(F.col("eff_units"),
+         .otherwise(half_up(F.col("eff_units"),
                                 F.sum("eff_units").over(w)))
          .alias("eff_share"))
 

@@ -28,30 +28,6 @@ def average_sensor_readings(spark: SparkSession,
     return out.select(F.col("window.end").alias("window_end"), "id", "avg_temp")
 
 
-def global_window_average(spark: SparkSession,
-                          rows_per_second: int = 100) -> DataFrame:
-    """chapter8/TransactionalSinkExample.scala:78-89 — non-keyed 1 s
-    window global average with ISO window-end string."""
-    s = sensor_source_stream(spark, rows_per_second)
-    out = (
-        s.withWatermark("ts", "5 seconds")
-        .groupBy(F.window("ts", "1 second"))
-        .agg(F.avg("temperature").alias("avg_temp"))
-    )
-    return out.select(
-        F.date_format("window.end", "yyyy-MM-dd'T'HH:mm:ss").alias("window_end_iso"),
-        "avg_temp",
-    )
-
-
-def rolling_max_stream(spark: SparkSession,
-                       rows_per_second: int = 100) -> DataFrame:
-    """chapter5/KeyedTransformations.scala:49-52 — running per-key max,
-    update output mode re-emits refreshed values each micro-batch."""
-    s = sensor_source_stream(spark, rows_per_second)
-    return s.groupBy("id").agg(F.max("temperature").alias("max_temp"))
-
-
 def stream_interval_join(left: DataFrame, right: DataFrame,
                          keys: list[str] | None,
                          left_ts: str, right_ts: str,

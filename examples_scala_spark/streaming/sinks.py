@@ -18,11 +18,6 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 
-def console_sink(df: DataFrame, **options):
-    """K1 — print() sink (every reference example)."""
-    return df.writeStream.format("console").options(**options)
-
-
 def memory_sink(df: DataFrame, name: str, output_mode: str = "update"):
     """R3/K6 — queryable state: asQueryableState('maxTemperature')
     (chapter7/QueryableState.scala:47-49) becomes a named in-memory

@@ -124,34 +124,36 @@ class TestAvg6EngineExactTies:
         # the r12 sf0.1 find: sum 2089.93 over 32 rows -> avg
         # 65.3103125 exactly; round(double, 6) split the engines
         # (Spark HALF_UP on the shortest repr vs DuckDB on the binary
-        # value). _avg6's integer half-up must agree with the SQL twin
-        # bit-for-bit on the engineered tie.
+        # value). half_up over the cent sum must agree with its SQL
+        # twin bit-for-bit on the engineered tie.
         import duckdb
-        from examples_scala_spark.queries import (
-            AVG6_SQL, _avg6, _cents_sum)
+        from examples_scala_spark.functions.scalar import half_up
+        from examples_scala_spark.queries import AVG_CENTS_SQL, _cents_sum
         vals = [65.31] * 31 + [65.32]          # cents sum 208993
         assert round(sum(round(v * 100) for v in vals)) == 208993
         df = spark.createDataFrame([(v,) for v in vals], "value double")
         got = (df.groupBy().agg(F.count("*").alias("cnt"),
                                 _cents_sum("value"))
-               .select(_avg6().alias("avg_value")).collect()[0].avg_value)
+               .select(half_up("sc", F.col("cnt") * 100).alias("avg_value"))
+               .collect()[0].avg_value)
         want = duckdb.sql(
-            "SELECT " + AVG6_SQL + " AS a FROM (SELECT unnest(["
+            "SELECT " + AVG_CENTS_SQL + " AS a FROM (SELECT unnest(["
             + ",".join(str(v) for v in vals) + "]) AS value)"
         ).fetchone()[0]
         assert got == want == 65.310313        # half-up, both engines
 
     def test_plain_average_still_exact(self, spark):
         import duckdb
-        from examples_scala_spark.queries import (
-            AVG6_SQL, _avg6, _cents_sum)
+        from examples_scala_spark.functions.scalar import half_up
+        from examples_scala_spark.queries import AVG_CENTS_SQL, _cents_sum
         vals = [1.01, 2.02, 3.05]
         df = spark.createDataFrame([(v,) for v in vals], "value double")
         got = (df.groupBy().agg(F.count("*").alias("cnt"),
                                 _cents_sum("value"))
-               .select(_avg6().alias("a")).collect()[0].a)
+               .select(half_up("sc", F.col("cnt") * 100).alias("a"))
+               .collect()[0].a)
         want = duckdb.sql(
-            "SELECT " + AVG6_SQL + " AS a FROM (SELECT unnest(["
+            "SELECT " + AVG_CENTS_SQL + " AS a FROM (SELECT unnest(["
             + ",".join(str(v) for v in vals) + "]) AS value)"
         ).fetchone()[0]
         assert got == want == 2.026667

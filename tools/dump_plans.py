@@ -17,7 +17,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from examples_scala_spark.plans.inspect import explain_str  # noqa: E402
 from examples_scala_spark.queries import REGISTRY  # noqa: E402
@@ -38,7 +39,7 @@ def main() -> None:
     outdir = args[1] if len(args) > 1 else "r12"
     names = args[2:] or DEFAULT
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    dest = os.path.join("/root/repo/plans", outdir)
+    dest = os.path.join(ROOT, "plans", outdir)
     os.makedirs(dest, exist_ok=True)
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
@@ -54,10 +55,8 @@ def main() -> None:
             continue
         df = spec.fn(spark, sf_dir)
         with open(path, "w") as f:
-            # record the environment the plan shape depends on
-            # (_rebalance_scan keys off defaultParallelism vs the
-            # fixture's scan split count — r12 ADVICE: make cross-host
-            # plan diffs interpretable)
+            # record the environment the plan shape depends on, so
+            # cross-host plan diffs stay interpretable
             f.write(f"# defaultParallelism={spark.sparkContext.defaultParallelism} "
                     f"sf_dir={sf_dir}\n")
             f.write(explain_str(df, "formatted"))

@@ -11,6 +11,13 @@ Usage: python tools/verify_local.py [--vanilla] [--gate-order]
 --head N      only the first N of that order — with --gate-order and
               --vanilla this is an exact dress-rehearsal of the
               driver's per-round correctness gate (budget ~50)
+
+Every OK (and no-oracle `rows`) line ends with the Spark value hash,
+so two checkouts can be compared result-for-result, not only
+engine-against-engine: the oracles change with the Spark code, so
+agreement alone cannot show a result is unchanged. Compare with
+  diff <(grep -E '^(OK|rows)' a.log | awk '{print $2, $NF}') \
+       <(grep -E '^(OK|rows)' b.log | awk '{print $2, $NF}')
 """
 
 from __future__ import annotations
@@ -18,11 +25,12 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from examples_scala_spark.queries import REGISTRY  # noqa: E402
 from examples_scala_spark.session import get_spark  # noqa: E402
@@ -95,7 +103,7 @@ def main() -> int:
         t1 = time.time()
         if spec.oracle is None:
             print(f"rows  {name:28s} {len(sdf):>8} rows (no oracle) "
-                  f"[spark {t1 - t0:.1f}s]")
+                  f"[spark {t1 - t0:.1f}s] {value_hash(sdf)}")
             continue
         try:
             odf = con.sql(spec.oracle).df()
@@ -127,7 +135,7 @@ def main() -> int:
                 pass
         else:
             print(f"OK    {name:28s} {len(sdf):>8} rows "
-                  f"[spark {t1 - t0:.1f}s duck {t2 - t1:.1f}s]")
+                  f"[spark {t1 - t0:.1f}s duck {t2 - t1:.1f}s] {hs}")
     print(f"\n{len(names) - len(failures)}/{len(names)} passed")
     if failures:
         print("failed:", " ".join(failures))
