@@ -41,6 +41,9 @@ class IdempotentBatchWriter:
       WriteAheadSinkExample.scala:151-193): the committed-id file;
     - TransactionalFileSink (K5, TransactionalSinkExample.scala:137-197):
       tmp-write + atomic rename.
+
+    A `write_fn` that runs more than one action on `batch_df` must
+    persist it: each action re-executes the upstream micro-batch.
     """
 
     def __init__(self, target_dir: str,
@@ -128,6 +131,11 @@ def parquet_upsert_writer(table_dir: str, key_col: str, val_col: str,
     batch — the shape of update-mode stateful aggregates, K3's use
     case (IdempotentSinkFunctionExample.scala:72-109).
 
+    The batch is persisted once and every step reads the cached rows:
+    foreachBatch hands over a plan, not data, so each action on it (the
+    bucket collect, both merge branches, the write) would re-run the
+    upstream micro-batch, stateful operator and state commit included.
+
     At 100 TB: `buckets` scales with the table so one bucket ~ one
     task; the only driver traffic is the touched-bucket id list
     (bounded by B)."""
@@ -138,12 +146,8 @@ def parquet_upsert_writer(table_dir: str, key_col: str, val_col: str,
         b = batch_df.select(
             F.col(key_col), F.col(val_col),
             F.pmod(F.xxhash64(F.col(key_col)), F.lit(buckets))
-             .cast("int").alias("bucket"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
+             .cast("int").alias("bucket")).persist()
         try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           "dynamic")
             # probe through the Hadoop FileSystem API, NOT the driver's
             # local filesystem: os.listdir on an s3a://-style table_dir
             # always said "no table", skipping the merge and silently
@@ -166,7 +170,7 @@ def parquet_upsert_writer(table_dir: str, key_col: str, val_col: str,
                 # overwrite below doesn't read the path it's replacing
                 out = keep.unionByName(b).localCheckpoint(eager=True)
             (out.write.mode("overwrite").partitionBy("bucket")
-             .parquet(table_dir))
+             .option("partitionOverwriteMode", "dynamic").parquet(table_dir))
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            b.unpersist()
     return write

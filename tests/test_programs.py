@@ -62,6 +62,14 @@ def test_program_runs_live(spark, name):
         q.stop()
 
 
+def test_idempotent_sink_program_runs_its_upsert_writer(spark):
+    """The live test above always attaches a memory sink; this one runs
+    a program through its own foreachBatch writer (the bucketed
+    parquet upsert, K3). awaitTermination re-raises a failed query's
+    error, so a broken writer fails here."""
+    programs.run_program(spark, "idempotent_sink", duration=12)
+
+
 def test_program_count_covers_reference_mains():
     # 20 runnable concept programs in the reference (SURVEY §2/§3);
     # the registry must not silently shrink

@@ -225,6 +225,38 @@ def test_parquet_upsert_writer_merges_without_driver_collect(spark, tmpdir):
     assert got2 == {(0, 2.0), (1, 1.0)}
 
 
+def test_parquet_upsert_writer_runs_upstream_once(spark, tmpdir):
+    """The merge runs several actions on the batch (bucket collect,
+    anti-join, union, write); each must read one materialization, not
+    re-run the stateful upstream and its state-store update per action.
+    The cache entry must not outlive its micro-batch."""
+    path = os.path.join(tmpdir, "in")
+    rows = [(k, float(10 * i + k)) for i in range(3) for k in range(5)]
+    for i in range(3):
+        spark.createDataFrame(rows[5 * i:5 * i + 5], ["k", "x"]) \
+            .repartition(1).write.mode("append").parquet(path)
+    agg = (spark.readStream.schema("k long, x double")
+           .option("maxFilesPerTrigger", 1).parquet(path)
+           .groupBy("k").agg(F.sum("x").alias("v")))
+    table = os.path.join(tmpdir, "state")
+    q = (agg.writeStream
+         .foreachBatch(sinks.parquet_upsert_writer(table, "k", "v", 4))
+         .outputMode("update")
+         .option("checkpointLocation", os.path.join(tmpdir, "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    updated = [p["stateOperators"][0]["numRowsUpdated"]
+               for p in q.recentProgress if p["numInputRows"] > 0]
+    assert updated == [5, 5, 5]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    got = {(r.k, r.v) for r in
+           spark.read.parquet(table).select("k", "v").collect()}
+    want = {(r.k, r.v) for r in
+            spark.read.parquet(path).groupBy("k")
+            .agg(F.sum("x").alias("v")).collect()}
+    assert got == want
+
+
 def test_recovery_from_checkpoint_exactly_once(spark, tmpdir):
     """R5 — FailingMapper-style recovery: sink fails mid-stream, the
     restarted query resumes from the checkpoint and the idempotent
