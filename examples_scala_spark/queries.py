@@ -3507,8 +3507,9 @@ def stream_delta_alerts(spark, sf_dir):
     tune(spark)
     from .streaming.stateful import temperature_delta_alerts_traced
 
-    src = _staged_events_stream_ordered(spark, sf_dir, n_files=4,
-                                        order_cols=("event_id",))
+    ev = load_table(spark, sf_dir, "events")
+    src = _replay(spark, [ev.repartitionByRange(4, "event_id")
+                          .sortWithinPartitions("event_id")])
     readings = src.select(
         "event_id",
         F.concat(F.lit("sensor_"),
@@ -3546,8 +3547,9 @@ def stream_delta_alerts_smallbatch(spark, sf_dir):
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-        src = _staged_events_stream_ordered(spark, sf_dir, n_files=4,
-                                            order_cols=("event_id",))
+        ev = load_table(spark, sf_dir, "events")
+        src = _replay(spark, [ev.repartitionByRange(4, "event_id")
+                              .sortWithinPartitions("event_id")])
         readings = src.select(
             "event_id",
             F.concat(F.lit("sensor_"),
@@ -3599,8 +3601,6 @@ def stream_early_firing(spark, sf_dir):
     (A multi-batch replay would interleave partial fires per batch —
     the timer semantics themselves are additionally covered by
     dedicated tests.)"""
-    import tempfile
-
     tune(spark)
     from .streaming.timers import early_firing_window_counts
 
@@ -3614,90 +3614,6 @@ def stream_early_firing(spark, sf_dir):
         readings, window_ms=3_600_000, interval_ms=600_000,
         watermark_delay="5 seconds")
     return _run_to_memory(spark, out, "stream_early_firing_result")
-
-
-def _staged_events_stream_quartile(spark, sf_dir, n_files: int = 4,
-                                   assert_tick_ms: int | None = None,
-                                   assert_key_expr: str | None = None):
-    """Stage events as n_files EQUAL-COUNT time-quantile parquet files
-    (file k = the k-th quartile of the (ts, event_id) total order) and
-    stream them one per micro-batch in order. Unlike
-    _staged_events_stream_ordered (repartitionByRange — boundaries
-    come from Spark's range-partitioner SAMPLING), the bucket
-    boundaries here are a closed form — bucket = (rank-1)*n // N — so
-    a SQL oracle can recompute the exact per-batch watermark
-    trajectory. Replay scaffolding only: the global row_number is a
-    single-partition sort, bounded by the replay corpus by design.
-
-    assert_tick_ms/assert_key_expr (ADVICE r5): when set, assert the
-    two corpus invariants the multibatch closed-form oracle depends on
-    — every key has rows in every bucket, and consecutive-bucket
-    watermark jumps exceed the tick interval — against the ACTUAL
-    staged buckets, so a fixture/corpus change invalidates the oracle
-    loudly here instead of silently drifting."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    ev = (load_table(spark, sf_dir, "events")
-          .withColumn("ts", F.expr("unix_micros(ts)")))
-    n = ev.count()
-    b = (ev.withColumn("rn", F.row_number().over(
-            Window.orderBy("ts", "event_id")))
-         .withColumn("bucket",
-                     F.expr(f"CAST(((rn - 1) * {n_files}) DIV {n} AS INT)"))
-         .select("event_id", "ts", "user_id", "event_type", "value",
-                 "props", "bucket")
-         # pin once: the first consumer (invariant collect or the
-         # first bucket write) materializes the lazy checkpoint and
-         # every later bucket write reads the persisted blocks — the
-         # global sort still runs exactly once, without a dedicated
-         # checkpoint job (r12 job-fold)
-         .localCheckpoint(eager=False))
-    # The invariant re-check costs two extra Spark actions per build
-    # on a static corpus (ADVICE r6): skip it when the gate latency
-    # matters via SPARK_GRAFT_SKIP_STAGE_ASSERTS=1 (default: on —
-    # safety over speed; pytest exercises both paths implicitly).
-    if os.environ.get("SPARK_GRAFT_SKIP_STAGE_ASSERTS") == "1":
-        assert_tick_ms = None
-    if assert_tick_ms is not None:
-        per = (b.withColumn("k", F.expr(assert_key_expr))
-               .groupBy("bucket")
-               .agg(F.max(F.expr("ts div 1000")).alias("mx"),
-                    F.countDistinct("k").alias("nk"))
-               .orderBy("bucket").collect())
-        n_keys = (b.select(F.expr(assert_key_expr).alias("k"))
-                  .distinct().count())
-        assert len(per) == n_files and all(r["nk"] == n_keys for r in per), (
-            f"multibatch oracle invariant broken: not every key appears in "
-            f"every bucket ({[(r['bucket'], r['nk']) for r in per]} vs "
-            f"{n_keys} keys) — the fires-every-batch closed form no longer "
-            f"models the replay; restage or fix the oracle")
-        jumps = [per[k]["mx"] - per[k - 1]["mx"] for k in range(1, len(per))]
-        assert min(jumps) > assert_tick_ms, (
-            f"multibatch oracle invariant broken: consecutive-bucket "
-            f"watermark jumps {jumps} do not all exceed the tick interval "
-            f"{assert_tick_ms} ms — partial-fire attribution would diverge")
-    work = tempfile.mkdtemp(prefix="sgs_qstage_work_")
-    d = tempfile.mkdtemp(prefix="sgs_qstaged_")
-    base = 1_700_000_000
-    for k in range(n_files):
-        sub = os.path.join(work, f"b{k}")
-        (b.filter(F.col("bucket") == k).drop("bucket")
-         .coalesce(1).write.mode("overwrite").parquet(sub))
-        part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-        dst = os.path.join(d, f"part-{k:05d}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (base + k, base + k))
-    shutil.rmtree(work, ignore_errors=True)
-    src = (
-        spark.readStream.schema(
-            "event_id bigint, ts bigint, user_id bigint, event_type string, "
-            "value double, props string")
-        .option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    return src.withColumn("ts", F.timestamp_micros("ts"))
 
 
 @register(
@@ -3741,13 +3657,15 @@ def stream_early_firing_multibatch(spark, sf_dir):
     """W4 under a MULTI-batch replay — the full interleaved-fire
     semantics of the reference trigger
     (chapter6/CustomWindow.scala:87-148), value-checked: the events
-    table streams as 4 time-quartile micro-batches
-    (_staged_events_stream_quartile — closed-form bucket boundaries),
-    so the watermark advances batch by batch and windows fire
-    PARTIALLY in one batch and FINALLY in a later one, with cnt
-    snapshotting the rows absorbed so far. The oracle simulates the
-    trajectory exactly: wm_k = (max ms of quartile k-1) - 5000 for
-    data batches 1-3 and the trailing no-data batch (k=4); at batch k
+    table streams as 4 time-quartile micro-batches (file k = the k-th
+    quartile of the (ts, event_id) order, bucket = (rank-1)*4 // N: a
+    closed form the oracle recomputes, where repartitionByRange's
+    boundaries come from sampling), so the watermark advances batch by
+    batch and windows fire PARTIALLY in one batch and FINALLY in a
+    later one, with cnt snapshotting the rows absorbed so far. The
+    oracle simulates the trajectory exactly: wm_k = (max ms of
+    quartile k-1) - 5000 for data batches 1-3 and the trailing no-data
+    batch (k=4); at batch k
     every live window fires — FIRE_AND_PURGE at the first k with
     wm_k >= end (fire_ms = end, cnt = rows through quartile
     min(k,3)), else a partial FIRE at the latest 10-min tick
@@ -3755,23 +3673,52 @@ def stream_early_firing_multibatch(spark, sf_dir):
     The fires-every-batch model is exact for this corpus because every
     key has data in every quartile AND consecutive-quartile watermark
     jumps (~10^4 min) dwarf the tick interval, so every keyed timer
-    has expired by the next batch — both properties ASSERTED against
+    has expired by the next batch — both properties CHECKED against
     the actual staged buckets at stage time (ADVICE r5), so a corpus
     change fails loudly instead of silently drifting the oracle."""
     tune(spark)
     from .streaming.timers import early_firing_window_counts
 
-    src = _staged_events_stream_quartile(
-        spark, sf_dir, n_files=4, assert_tick_ms=600_000,
-        assert_key_expr="(user_id % 10) + 1")
+    tick_ms = 600_000
+    ev = load_table(spark, sf_dir, "events")
+    n = ev.count()
+    # the global row_number is a single-partition sort: replay
+    # scaffolding, bounded by the replay corpus by design
+    b = (ev.withColumn("rn", F.row_number().over(
+            Window.orderBy("ts", "event_id")))
+         .withColumn("bucket", F.expr(f"CAST(((rn - 1) * 4) DIV {n} AS INT)"))
+         .drop("rn")
+         # pin once: the invariant collect materializes the lazy
+         # checkpoint and every bucket write reads the persisted blocks
+         # — the global sort runs exactly once (r12 job-fold)
+         .localCheckpoint(eager=False))
+    key = (F.col("user_id") % 10) + 1
+    per = (b.groupBy("bucket")
+           .agg(F.max(F.unix_millis("ts")).alias("mx"),
+                F.countDistinct(key).alias("nk"))
+           .orderBy("bucket").collect())
+    n_keys = b.select(key).distinct().count()
+    if len(per) != 4 or any(r["nk"] != n_keys for r in per):
+        raise RuntimeError(
+            f"multibatch oracle invariant broken: not every key appears in "
+            f"every bucket ({[(r['bucket'], r['nk']) for r in per]} vs "
+            f"{n_keys} keys) — the fires-every-batch closed form no longer "
+            f"models the replay; restage or fix the oracle")
+    jumps = [per[k]["mx"] - per[k - 1]["mx"] for k in range(1, len(per))]
+    if min(jumps) <= tick_ms:
+        raise RuntimeError(
+            f"multibatch oracle invariant broken: consecutive-bucket "
+            f"watermark jumps {jumps} do not all exceed the tick interval "
+            f"{tick_ms} ms — partial-fire attribution would diverge")
+    src = _replay(spark, [b.filter(F.col("bucket") == k).drop("bucket")
+                          .coalesce(1) for k in range(4)])
     readings = src.select(
-        F.concat(F.lit("sensor_"),
-                 ((F.col("user_id") % 10) + 1).cast("string")).alias("id"),
+        F.concat(F.lit("sensor_"), key.cast("string")).alias("id"),
         F.expr("unix_micros(ts) div 1000").alias("timestamp"),
         F.col("value").alias("temperature"),
     )
     out = early_firing_window_counts(
-        readings, window_ms=3_600_000, interval_ms=600_000,
+        readings, window_ms=3_600_000, interval_ms=tick_ms,
         watermark_delay="5 seconds")
     return _run_to_memory(spark, out, "stream_early_firing_mb_result")
 
@@ -3927,8 +3874,6 @@ def stream_interval_join_query(spark, sf_dir):
     interval join builder. Append-mode inner-join output is exactly the
     batch join's match set, so unlike the stateful stream_* entries
     this streaming query is fully oracle-checked."""
-    import tempfile
-
     tune(spark)
     from .streaming.pipelines import stream_interval_join
 
@@ -3963,37 +3908,87 @@ def _events_stream(spark, sf_dir):
     return normalize_ts(src, "ts")
 
 
-def _run_to_memory(spark, out, name, mode="append"):
-    """Run a bounded streaming replay to a memory sink and return the
-    materialized table.
+#: Replay harness constants: the state-store partitions of every
+#: bounded replay, and how long a replay may run before it is stopped
+#: and reported as failed.
+REPLAY_STATE_PARTITIONS = 8
+REPLAY_TIMEOUT_S = 300
 
-    State-store partitioning is sized to the REPLAY's volume (8), not
-    the session's scale default: a streaming query locks its stateful
-    shuffle partitioning into the (fresh) checkpoint at start, and at
-    correctness-gate SF the per-micro-batch fixed cost of 32 state
-    stores dominates runtime (measured 2-4x on the stream-stream
-    joins). A production deployment sizes this to the stream rate —
-    the knob is per-query, exactly as here. The session conf is
-    restored before returning; the memory table is already
-    materialized, so callers' batch reads are unaffected. The
-    checkpoint dir is deleted once the replay terminates — the memory
-    sink holds the rows driver-side, so nothing reads it again (the
-    staged INPUT dirs, by contrast, must persist: batch twins scan
-    them lazily)."""
+
+def _replay(spark, parts, per_trigger=1):
+    """Stage a bounded replay and return it as a streaming DataFrame.
+
+    `parts` are DataFrames in micro-batch order. Part k is written to
+    its own directory, one parquet file per partition, and the file
+    mtimes are pinned to ascend in (part, file) order: FileStreamSource
+    takes files oldest-first, `per_trigger` files per micro-batch. The
+    caller shapes the batches — `coalesce(1)` makes a part one batch,
+    `repartitionByRange(n, ...).sortWithinPartitions(...)` an ordered
+    run of n batches, `repartition(n)` n files to group by
+    `per_trigger`. Do not union slices into one part: Spark may merge
+    the union's `coalesce(1)` branches into one partition. The staged
+    files stay on disk: batch twins may scan them lazily."""
+    import glob
+    import os
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix="sgs_replay_")
+    files = []
+    for k, part in enumerate(parts):
+        sub = os.path.join(d, f"b{k:03d}")
+        part.write.parquet(sub)
+        files += sorted(glob.glob(os.path.join(sub, "part-*")))
+    base = 1_700_000_000
+    for i, f in enumerate(files):
+        os.utime(f, (base + i, base + i))
+    return (spark.readStream.schema(parts[0].schema)
+            .option("maxFilesPerTrigger", per_trigger)
+            .option("recursiveFileLookup", "true").parquet(d))
+
+
+def _run_replay(spark, out, sink):
+    """Run the bounded replay `out` to completion. `sink` configures
+    its DataStreamWriter (memory format or foreachBatch, output mode,
+    query name); this adds a throwaway checkpoint and the availableNow
+    trigger.
+
+    State-store partitioning is sized to the REPLAY's volume
+    (REPLAY_STATE_PARTITIONS), not the session's scale default: a
+    streaming query locks its stateful shuffle partitioning into the
+    (fresh) checkpoint at start, and at correctness-gate SF the
+    per-micro-batch fixed cost of 32 state stores dominates runtime
+    (measured 2-4x on the stream-stream joins). A production
+    deployment sizes this to the stream rate — the knob is per-query,
+    exactly as here. The session conf is restored and the checkpoint
+    deleted whatever happens. A replay still running after
+    REPLAY_TIMEOUT_S is stopped and raises TimeoutError, so a slow run
+    never returns a partial result."""
     import shutil
     import tempfile
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     ckpt = tempfile.mkdtemp(prefix="sgs_ckpt_")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (out.writeStream.format("memory").queryName(name).outputMode(mode)
-             .option("checkpointLocation", ckpt)
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(REPLAY_STATE_PARTITIONS))
+        q = (sink(out.writeStream).option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        if not q.awaitTermination(REPLAY_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"streaming replay {q.name or q.id} did not finish in "
+                f"{REPLAY_TIMEOUT_S} s; stopped it")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _run_to_memory(spark, out, name, mode="append"):
+    """Run a bounded replay to a memory sink and return the
+    materialized table (held driver-side, so callers' batch reads do
+    not depend on the deleted checkpoint)."""
+    _run_replay(spark, out, lambda w: (
+        w.format("memory").queryName(name).outputMode(mode)))
     return spark.table(name)
 
 
@@ -5244,7 +5239,9 @@ def stream_session_stats(spark, sf_dir):
     hash. State is O(open sessions x types), evicted at the
     watermark — bounded at any stream length."""
     tune(spark)
-    src = _staged_events_stream_ordered(spark, sf_dir, n_files=4)
+    ev = load_table(spark, sf_dir, "events")
+    src = _replay(spark, [ev.repartitionByRange(4, "ts", "event_id")
+                          .sortWithinPartitions("ts", "event_id")])
     agg = (src.withWatermark("ts", "0 seconds")
            .groupBy(F.session_window("ts", "10 minutes"), "event_type")
            .agg(F.count("*").alias("cnt"), _cents_sum("value")))
@@ -5288,7 +5285,9 @@ def stream_sliding_avg(spark, sf_dir):
     oracle enumerates covering windows and keeps those whose end <=
     the final watermark — exactly the append-mode emission set."""
     tune(spark)
-    src = _staged_events_stream_ordered(spark, sf_dir, n_files=4)
+    ev = load_table(spark, sf_dir, "events")
+    src = _replay(spark, [ev.repartitionByRange(4, "ts", "event_id")
+                          .sortWithinPartitions("ts", "event_id")])
     agg = (src.withWatermark("ts", "0 seconds")
            .groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
            .agg(F.count(F.lit(1)).alias("cnt"), _cents_sum("value")))
@@ -5709,26 +5708,6 @@ def customer_rfm_segments(spark, sf_dir):
          .otherwise("regular"))
 
 
-def _staged_events_stream(spark, sf_dir, n_files: int = 4):
-    """Stage the events table as n_files parquet files and stream them
-    one per micro-batch — a REAL multi-batch replay (the single-file
-    testdata layout would otherwise collapse to one batch)."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="sgs_staged_")
-    (load_table(spark, sf_dir, "events")
-     .withColumn("ts", F.expr("unix_micros(ts)"))  # stage as BIGINT micros
-     .repartition(n_files)
-     .write.mode("overwrite").parquet(d))
-    src = (
-        spark.readStream.schema(
-            "event_id bigint, ts bigint, user_id bigint, event_type string, "
-            "value double, props string")
-        .option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    return src.withColumn("ts", F.timestamp_micros("ts"))
-
-
 @register(
     "stream_incremental_state",
     """
@@ -5747,7 +5726,7 @@ def stream_incremental_state(spark, sf_dir):
     Spark's unified batch/stream contract; DECIMAL partials make the
     4-batch merge order irrelevant to the hash."""
     tune(spark)
-    src = _staged_events_stream(spark, sf_dir, n_files=4)
+    src = _replay(spark, [load_table(spark, sf_dir, "events").repartition(4)])
     agg = src.groupBy("event_type").agg(
         F.count("*").alias("cnt"),
         F.sum(dec("value", 14)).cast("double").alias("total"))
@@ -5775,7 +5754,7 @@ def stream_rolling_max_state(spark, sf_dir):
     aggregation holds. Lexicographic struct-max gives a unique
     tie-break (value, then event_id)."""
     tune(spark)
-    src = _staged_events_stream(spark, sf_dir, n_files=4)
+    src = _replay(spark, [load_table(spark, sf_dir, "events").repartition(4)])
     agg = (src.groupBy("user_id")
            .agg(F.max(F.struct("value", "event_id")).alias("m"))
            .select("user_id", F.col("m.value").alias("value"),
@@ -5830,34 +5809,33 @@ def dataset_mixture_rates(spark, sf_dir):
                      .alias("expected_kept")))
 
 
-def _staged_sentinel_side(spark, ev, etype: str, sid: int,
-                          far: int, cols: list[str]) -> DataFrame:
-    """Stage one event-type slice of the (BIGINT-micros ts) events table
-    plus a far-future sentinel row, and return it as a streaming
-    DataFrame. Each side gets its OWN directory (two independent file
-    sources, as two real streams would be): a self-join re-scans one
-    file source twice, which proved unreliable for batch/listing
-    alignment. One file per side: the sentinel must ride in the same
-    file as the data so the bounded replay is a single deterministic
-    batch (staging is a replay harness, not the scale path)."""
-    import tempfile
+def _sentinel_join_sides(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
+    """The errors (event_id, user_id, err_ts) and clicks (user_id,
+    click_ts) streams of the outer and semi interval joins. Each side
+    is its own replay (two independent file sources, as two real
+    streams would be: a self-join re-scans one file source twice,
+    which proved unreliable for batch/listing alignment) of one event
+    type plus a far-future sentinel row in the same single file, so
+    the bounded replay is one deterministic batch whose sentinel
+    pushes the final watermark past every real row."""
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "ts", F.expr("unix_micros(ts)"))  # stage as BIGINT micros
+    far = ev.agg(F.max("ts")).first()[0] + 48 * 3600 * 10**6
 
-    d = tempfile.mkdtemp(prefix=f"sgs_sentinel_{etype}_")
-    side = ev.filter(F.col("event_type") == etype).select(
-        "event_id", "ts", "user_id")
-    # SQL literal, not createDataFrame: parallelize() spreads one row
-    # over defaultParallelism partitions, each paying a Python-worker
-    # spin-up — measured ~5 s per staged side at gate SF; the
-    # LocalRelation stays JVM-side and costs nothing
-    sent = spark.sql(
-        f"SELECT {int(sid)}::BIGINT AS event_id, {int(far)}::BIGINT AS ts, "
-        f"{int(sid)}::BIGINT AS user_id")
-    side.unionByName(sent).coalesce(1).write.mode("overwrite").parquet(d)
-    return (spark.readStream
-            .schema("event_id bigint, ts bigint, user_id bigint")
-            .parquet(d)
-            .select(F.col("event_id").alias(cols[0]), "user_id",
-                    F.timestamp_micros("ts").alias(cols[1])))
+    def side(etype: str, sid: int, ts_col: str) -> DataFrame:
+        rows = ev.filter(F.col("event_type") == etype).select(
+            "event_id", "ts", "user_id")
+        # SQL literal, not createDataFrame: parallelize() spreads one
+        # row over defaultParallelism partitions, each paying a
+        # Python-worker spin-up — measured ~5 s per staged side at gate
+        # SF; the LocalRelation stays JVM-side and costs nothing
+        sent = spark.sql(f"SELECT {sid}::BIGINT AS event_id, "
+                         f"{far}::BIGINT AS ts, {sid}::BIGINT AS user_id")
+        return _replay(spark, [rows.unionByName(sent).coalesce(1)]).select(
+            "event_id", "user_id", F.timestamp_micros("ts").alias(ts_col))
+
+    return (side("error", -1, "err_ts"),
+            side("click", -2, "click_ts").drop("event_id"))
 
 
 @register(
@@ -5889,13 +5867,7 @@ def stream_left_outer_join(spark, sf_dir):
     tune(spark)
     from .streaming.pipelines import stream_interval_join
 
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.expr("unix_micros(ts)"))  # stage as BIGINT micros
-    far = ev.agg(F.max("ts")).first()[0] + 48 * 3600 * 10**6
-    errors = _staged_sentinel_side(
-        spark, ev, "error", -1, far, ["event_id", "err_ts"])
-    clicks = _staged_sentinel_side(
-        spark, ev, "click", -2, far, ["click_id", "click_ts"]).drop("click_id")
+    errors, clicks = _sentinel_join_sides(spark, sf_dir)
     out = stream_interval_join(
         errors, clicks, keys=["user_id"], left_ts="err_ts",
         right_ts="click_ts", lookback="1 hour", how="leftOuter")
@@ -5946,13 +5918,7 @@ def stream_full_outer_join(spark, sf_dir):
     tune(spark)
     from .streaming.pipelines import stream_interval_join
 
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.expr("unix_micros(ts)"))
-    far = ev.agg(F.max("ts")).first()[0] + 48 * 3600 * 10**6
-    errors = _staged_sentinel_side(
-        spark, ev, "error", -1, far, ["event_id", "err_ts"])
-    clicks = _staged_sentinel_side(
-        spark, ev, "click", -2, far, ["click_id", "click_ts"]).drop("click_id")
+    errors, clicks = _sentinel_join_sides(spark, sf_dir)
     out = stream_interval_join(
         errors, clicks, keys=["user_id"], left_ts="err_ts",
         right_ts="click_ts", lookback="1 hour", how="fullOuter")
@@ -6243,13 +6209,7 @@ def stream_semi_join(spark, sf_dir):
     tune(spark)
     from .streaming.pipelines import stream_interval_join
 
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.expr("unix_micros(ts)"))
-    far = ev.agg(F.max("ts")).first()[0] + 48 * 3600 * 10**6
-    errors = _staged_sentinel_side(
-        spark, ev, "error", -1, far, ["event_id", "err_ts"])
-    clicks = _staged_sentinel_side(
-        spark, ev, "click", -2, far, ["click_id", "click_ts"]).drop("click_id")
+    errors, clicks = _sentinel_join_sides(spark, sf_dir)
     out = stream_interval_join(
         errors, clicks, keys=["user_id"], left_ts="err_ts",
         right_ts="click_ts", lookback="1 hour", how="leftSemi")
@@ -7330,43 +7290,25 @@ def stream_upsert_state(spark, sf_dir):
     collect anywhere). The final table must equal the batch aggregate,
     whatever the batch split was. Sums run in DECIMAL so accumulation
     order can't move the hash."""
-    import os
     import tempfile
     from .streaming.sinks import parquet_upsert_writer
 
     tune(spark)
     ev = _t(spark, sf_dir, "events").select("user_id", "value", "ts")
-    stage = tempfile.mkdtemp(prefix="sgs_upsert_in_")
-    # three ts-range slices -> three deterministic micro-batches
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    bounds = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    for i in range(3):
-        cond = (F.col("ts") >= bounds[i]) & (
-            (F.col("ts") < bounds[i + 1]) if i < 2
-            else (F.col("ts") <= bounds[3]))
-        (ev.filter(cond).drop("ts").coalesce(1)
-         .write.mode("overwrite").parquet(os.path.join(stage, f"f{i}")))
-    agg = (spark.readStream.schema("user_id bigint, value double")
-           .option("maxFilesPerTrigger", 1)
-           .option("recursiveFileLookup", "true").parquet(stage)
+    # three equal ts ranges -> three deterministic micro-batches
+    us = F.unix_micros("ts")
+    lo, hi = ev.agg(F.min(us), F.max(us)).first()
+    third = F.least(F.lit(2), ((us - lo) * 3 / max(hi - lo, 1)).cast("int"))
+    agg = (_replay(spark, [ev.filter(third == k).drop("ts").coalesce(1)
+                           for k in range(3)])
            .groupBy("user_id")
            .agg(F.count("*").alias("n"),
                 F.sum(F.col("value").cast("decimal(18,6)")).alias("total"))
            .select("user_id", F.struct("n", "total").alias("v")))
     table = tempfile.mkdtemp(prefix="sgs_upsert_state_")
-    # state partitions sized to the replay volume, as _run_to_memory
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        q = (agg.writeStream
-             .foreachBatch(parquet_upsert_writer(table, "user_id", "v", 4))
-             .outputMode("update")
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="sgs_ck_"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_replay(spark, agg, lambda w: (
+        w.foreachBatch(parquet_upsert_writer(table, "user_id", "v", 4))
+        .outputMode("update").queryName("stream_upsert_state_merge")))
     return (spark.read.parquet(table)
             .select("user_id", F.col("v.n").alias("n"),
                     F.col("v.total").cast("double").alias("total")))
@@ -7398,7 +7340,6 @@ def stream_ingest_compact(spark, sf_dir):
     tune(spark)
     land = tempfile.mkdtemp(prefix="sgs_land_")
     serve = tempfile.mkdtemp(prefix="sgs_serve_")
-    ckpt = tempfile.mkdtemp(prefix="sgs_ckpt_")
     src = _events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type")
 
@@ -7409,10 +7350,8 @@ def stream_ingest_compact(spark, sf_dir):
          .partitionBy("event_type")
          .parquet(os.path.join(land, f"ingest_batch={batch_id}")))
 
-    q = (src.writeStream.foreachBatch(land_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    _run_replay(spark, src, lambda w: (
+        w.foreachBatch(land_batch).queryName("stream_ingest_compact_land")))
     compact_parquet(spark, land, serve)
     return (spark.read.parquet(serve)
             .groupBy("event_type")
@@ -7568,8 +7507,6 @@ def stream_curation_gate(spark, sf_dir):
     nothing to checkpoint beyond source offsets; at any stream rate
     the cost is pure scan CPU. Oracle = the batch DSIR weights with
     the same gate."""
-    import tempfile
-
     from .operators.sampling import (_dsir_doc_buckets,
                                      dsir_model_from_buckets)
     tune(spark)
@@ -7585,16 +7522,13 @@ def stream_curation_gate(spark, sf_dir):
     du_arr = F.lit([int(du_by_b.get(b, 0)) for b in range(512)]) \
         .cast("array<bigint>")
 
-    d = tempfile.mkdtemp(prefix="sgs_gate_")
     # r12: parallel staging (the stream_decontaminate_gate fix) — the
     # per-row tokenize/hash/fold is interpreted HOF work, so a 1-file
     # micro-batch ran it on one core; 2 x cores files at cores per
     # trigger keeps the 2-batch replay with a fully parallel scan
     par = spark.sparkContext.defaultParallelism
-    (docs.select("doc_id", "text").repartition(2 * par)
-     .write.mode("overwrite").parquet(d))
-    src = (spark.readStream.schema("doc_id bigint, text string")
-           .option("maxFilesPerTrigger", par).parquet(d))
+    src = _replay(spark, [docs.select("doc_id", "text").repartition(2 * par)],
+                  per_trigger=par)
     grams = F.expr(
         "CASE WHEN size(ws) >= 2 THEN transform(sequence(1, size(ws)-1), "
         "i -> concat(element_at(ws, i), ' ', element_at(ws, i+1))) "
@@ -7690,8 +7624,6 @@ def stream_decontaminate_gate(spark, sf_dir):
     map — GetMapValue on an ArrayBasedMapData literal is a LINEAR
     scan per probe, O(|bench buckets|) per gram. Measured at sf0.1:
     scoring 3.2 s -> 1.6 s, index build full-corpus -> 64 docs."""
-    import tempfile
-
     tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = F.split(F.trim(F.col("text")), r"\s+")
@@ -7717,7 +7649,6 @@ def stream_decontaminate_gate(spark, sf_dir):
         .distinct().collect())
     barr = F.lit([int(b) for b in bench_buckets]).cast("array<bigint>")
 
-    d = tempfile.mkdtemp(prefix="sgs_decon_gate_")
     # corpus = anti-join against the CAPPED bench id set, not the raw
     # modulo predicate: sampled docs beyond the 64-doc cap are
     # ordinary corpus and must still be gated (ADVICE r9).
@@ -7732,11 +7663,9 @@ def stream_decontaminate_gate(spark, sf_dir):
     # rather than serializing on a staging artifact. The gate is
     # stateless, so emission is identical under any batching.
     par = spark.sparkContext.defaultParallelism
-    (docs.join(F.broadcast(bench_ids), "doc_id", "left_anti")
-     .select("doc_id", "text").repartition(2 * par)
-     .write.mode("overwrite").parquet(d))
-    src = (spark.readStream.schema("doc_id bigint, text string")
-           .option("maxFilesPerTrigger", par).parquet(d))
+    corpus = docs.join(F.broadcast(bench_ids), "doc_id", "left_anti")
+    src = _replay(spark, [corpus.select("doc_id", "text").repartition(2 * par)],
+                  per_trigger=par)
     bs = (src.select("doc_id", words.alias("ws"))
           .select("doc_id", grams.alias("gs"))
           .select("doc_id",
@@ -7858,8 +7787,6 @@ def stream_semantic_decon_gate(spark, sf_dir):
     rows whose best benchmark cosine clears 0.35; oracle = the batch
     semantic_decontaminate SQL, so streaming and batch results are
     hash-identical."""
-    import tempfile
-
     from .operators.similarity import nearest_ref_vec, with_norm
 
     tune(spark)
@@ -7869,17 +7796,15 @@ def stream_semantic_decon_gate(spark, sf_dir):
              .orderBy("vec_id").limit(64)
              .select(F.col("vec_id").alias("bench_id"),
                      F.col("v").alias("bv"), F.col("norm").alias("bnorm")))
-    d = tempfile.mkdtemp(prefix="sgs_sem_gate_")
-    (emb.join(F.broadcast(bench.select(F.col("bench_id").alias("vec_id"))),
-              "vec_id", "left_anti")
-     .select("vec_id", "embedding").repartition(8)
-     .write.mode("overwrite").parquet(d))
     # r12: 8 staged files, 4 per trigger — still a multi-micro-batch
     # replay, but each batch's Arrow kernel runs on 4 tasks instead of
     # serializing on one (measured 3.6 -> 2.2 s; 32 tiny files was
     # WORSE — per-task Arrow overhead dominates under ~100 rows).
-    src = (spark.readStream.schema("vec_id bigint, embedding array<float>")
-           .option("maxFilesPerTrigger", 4).parquet(d))
+    corpus = emb.join(
+        F.broadcast(bench.select(F.col("bench_id").alias("vec_id"))),
+        "vec_id", "left_anti")
+    src = _replay(spark, [corpus.select("vec_id", "embedding").repartition(8)],
+                  per_trigger=4)
     sbase = with_norm(src).select("vec_id", "v", "norm")
     best = nearest_ref_vec(sbase, bench, ref_id_col="bench_id",
                            ref_vec_col="bv", ref_norm_col="bnorm")
@@ -7914,8 +7839,6 @@ def stream_embedding_outlier_gate(spark, sf_dir):
     flagged set is BIT-IDENTICAL to the batch screen — the oracle is
     embedding_outliers' SQL verbatim, and the same pure-integer
     cross-multiplication decides the flag on every engine."""
-    import tempfile
-
     from .operators.similarity import (
         nearest_ref_vec,
         sampled_centroids,
@@ -7941,13 +7864,10 @@ def stream_embedding_outlier_gate(spark, sf_dir):
           # the persisted blocks (r12 job-fold)
           .localCheckpoint(eager=False))
 
-    d = tempfile.mkdtemp(prefix="sgs_outlier_gate_")
     # r12: same parallel staging as stream_semantic_decon_gate (8
     # files, 4 per trigger: 2 batches x 4 kernel tasks)
-    emb.select("vec_id", "embedding").repartition(8) \
-       .write.mode("overwrite").parquet(d)
-    src = (spark.readStream.schema("vec_id bigint, embedding array<float>")
-           .option("maxFilesPerTrigger", 4).parquet(d))
+    src = _replay(spark, [emb.select("vec_id", "embedding").repartition(8)],
+                  per_trigger=4)
     sbase = with_norm(src).select("vec_id", "v", "norm")
     su = nearest_ref_vec(sbase, cents, "vec_id").select(
         "vec_id", "cent_id",
@@ -7986,14 +7906,9 @@ def stream_trending_tokens(spark, sf_dir):
     on token). The streaming shape of vocabulary monitoring — state is
     vocab-sized, not corpus-sized, and the oracle is the batch term
     frequency query."""
-    import tempfile
-
     tune(spark)
-    d = tempfile.mkdtemp(prefix="sgs_trend_")
-    (load_table(spark, sf_dir, "documents").select("doc_id", "text")
-     .repartition(4).write.mode("overwrite").parquet(d))
-    src = (spark.readStream.schema("doc_id bigint, text string")
-           .option("maxFilesPerTrigger", 1).parquet(d))
+    docs = load_table(spark, sf_dir, "documents")
+    src = _replay(spark, [docs.select("doc_id", "text").repartition(4)])
     toks = src.select(F.explode(
         F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token"))
     counts = toks.groupBy("token").agg(F.count("*").alias("cnt"))
@@ -8076,13 +7991,8 @@ def partition_backfill(spark, sf_dir):
 
     corrected = (ev.filter(F.col("event_type") == "error")
                  .withColumn("value", F.col("value") * 2.0))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (corrected.write.partitionBy("event_type")
-         .mode("overwrite").parquet(d))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (corrected.write.partitionBy("event_type").mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic").parquet(d))
     return (spark.read.parquet(d)
             .select("event_id", "user_id", "event_type", "value"))
 
@@ -9188,16 +9098,6 @@ def stream_manifest_maintenance(spark, sf_dir):
     tune(spark)
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type",
                                             "value", "ts")
-    stage = tempfile.mkdtemp(prefix="sgs_manifest_in_")
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    bounds = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    for i in range(3):
-        cond = (F.col("ts") >= bounds[i]) & (
-            (F.col("ts") < bounds[i + 1]) if i < 2
-            else (F.col("ts") <= bounds[3]))
-        (ev.filter(cond).drop("ts").coalesce(1)
-         .write.mode("overwrite").parquet(os.path.join(stage, f"f{i}")))
-
     manifest_dir = tempfile.mkdtemp(prefix="sgs_manifest_state_")
     h = F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
                16, 10).cast("bigint")
@@ -9226,20 +9126,15 @@ def stream_manifest_maintenance(spark, sf_dir):
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
         spark_l.read.parquet(tmp).write.mode("overwrite").parquet(prior_path)
 
-    src = (spark.readStream
-           .schema("event_id bigint, event_type string, value double")
-           .option("maxFilesPerTrigger", 1)
-           .option("recursiveFileLookup", "true").parquet(stage)
-           .withColumn("h", h))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        q = (src.writeStream.foreachBatch(merge_batch)
-             .option("checkpointLocation", tempfile.mkdtemp(prefix="sgs_ck_"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # three equal ts ranges -> three deterministic micro-batches
+    us = F.unix_micros("ts")
+    lo, hi = ev.agg(F.min(us), F.max(us)).first()
+    third = F.least(F.lit(2), ((us - lo) * 3 / max(hi - lo, 1)).cast("int"))
+    src = _replay(spark, [ev.filter(third == k).drop("ts").coalesce(1)
+                          for k in range(3)]).withColumn("h", h)
+    _run_replay(spark, src, lambda w: (
+        w.foreachBatch(merge_batch)
+        .queryName("stream_manifest_maintenance_merge")))
     return (spark.read.parquet(os.path.join(manifest_dir, "current"))
             .select("event_type", "n_rows",
                     F.col("total_value").cast("double").alias("total_value"),
@@ -10397,40 +10292,6 @@ def segment_overlap_hll(spark, sf_dir):
         .alias("within_bound"))
 
 
-def _staged_events_stream_ordered(spark, sf_dir, n_files: int = 4,
-                                  order_cols: tuple = ("ts", "event_id")):
-    """Stage events as n_files RANGE-PARTITIONED parquet files (file k
-    holds the k-th `order_cols` range) and stream them one per
-    micro-batch in order — an event-time-ORDERED multi-batch replay.
-    FileStreamSource picks up pre-existing files oldest-first (path
-    order breaks mtime ties), so both the part-file numbering and the
-    explicitly ascending mtimes pin batch k to range k. This is what
-    lets sequential-state streaming twins (CUSUM, the delta-alert
-    trace) hash-match their batch oracle exactly, where the unordered
-    `repartition` staging can only support order-insensitive
-    aggregates."""
-    import glob
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="sgs_ordstaged_")
-    (load_table(spark, sf_dir, "events")
-     .withColumn("ts", F.expr("unix_micros(ts)"))
-     .repartitionByRange(n_files, *order_cols)
-     .sortWithinPartitions(*order_cols)
-     .write.mode("overwrite").parquet(d))
-    base = 1_700_000_000
-    for i, f in enumerate(sorted(glob.glob(os.path.join(d, "part-*")))):
-        os.utime(f, (base + i, base + i))
-    src = (
-        spark.readStream.schema(
-            "event_id bigint, ts bigint, user_id bigint, event_type string, "
-            "value double, props string")
-        .option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    return src.withColumn("ts", F.timestamp_micros("ts"))
-
-
 @register(
     "stream_cusum_drift",
     """
@@ -10483,7 +10344,8 @@ def stream_cusum_drift(spark, sf_dir):
                # sum is negative with a remainder. count(*) > 0.
                "sum(cents) DIV count(*) - CASE WHEN sum(cents) % count(*) <> 0 "
                "AND sum(cents) < 0 THEN 1 ELSE 0 END").alias("target")))
-    src = _staged_events_stream_ordered(spark, sf_dir, n_files=4)
+    src = _replay(spark, [ev.repartitionByRange(4, "ts", "event_id")
+                          .sortWithinPartitions("ts", "event_id")])
     d = (src.select("event_id", "event_type", "ts",
                     F.round(F.col("value") * 100).cast("long")
                      .alias("cents"))
@@ -11425,7 +11287,7 @@ def stream_ab_guardrail(spark, sf_dir):
     with the batch query as its audit."""
     tune(spark)
     d38 = "decimal(38,0)"
-    src = _staged_events_stream(spark, sf_dir, n_files=4)
+    src = _replay(spark, [load_table(spark, sf_dir, "events").repartition(4)])
     e = src.select(
         "event_type",
         (dedup.base_hash(F.col("user_id").cast("string")) % 2)
@@ -11917,7 +11779,7 @@ def stream_distinct_sketch(spark, sf_dir):
     the exact count plus the same 4%% error-bound boolean as
     user_hll_rollup, so the check stays green at any scale factor."""
     tune(spark)
-    src = _staged_events_stream(spark, sf_dir, n_files=4)
+    src = _replay(spark, [load_table(spark, sf_dir, "events").repartition(4)])
     agg = (src.groupBy("event_type")
            .agg(F.hll_sketch_agg("user_id", F.lit(14)).alias("sk")))
     state = _run_to_memory(spark, agg, "stream_distinct_sketch_state",
@@ -13006,7 +12868,9 @@ def stream_session_dynamic_gap(spark, sf_dir):
     state-merge order unobservable in the hash. State is O(open
     sessions x types), watermark-evicted."""
     tune(spark)
-    src = _staged_events_stream_ordered(spark, sf_dir, n_files=4)
+    ev = load_table(spark, sf_dir, "events")
+    src = _replay(spark, [ev.repartitionByRange(4, "ts", "event_id")
+                          .sortWithinPartitions("ts", "event_id")])
     gap = (F.when(F.col("event_id") % 3 == 0, F.lit("5 minutes"))
            .when(F.col("event_id") % 3 == 1, F.lit("15 minutes"))
            .otherwise(F.lit("25 minutes")))

@@ -1079,10 +1079,9 @@ def test_autocorr_detects_constructed_memory(spark):
 def test_stream_hll_equals_batch_sketch(spark, sf_dir):
     """Mergeability: the streamed (4-batch) HLL estimate must equal
     the one-shot batch sketch estimate exactly."""
-    from examples_scala_spark.queries import (
-        _staged_events_stream, _run_to_memory)
+    from examples_scala_spark.queries import _replay, _run_to_memory
     from examples_scala_spark.sources.tables import load_table
-    src = _staged_events_stream(spark, sf_dir, n_files=4)
+    src = _replay(spark, [load_table(spark, sf_dir, "events").repartition(4)])
     agg = (src.groupBy("event_type")
            .agg(F.hll_sketch_agg("user_id", F.lit(14)).alias("sk")))
     state = _run_to_memory(spark, agg, "hll_merge_test", mode="complete")

@@ -382,3 +382,52 @@ def test_high_temp_counter_per_subtask_operator_state(spark, tmpdir):
     total = sum(r.op_high_count for r in
                 spark.sql("SELECT * FROM subtask_counts2").collect())
     assert total == 4  # 3 from batch files + 1 appended, accumulated
+
+
+# ---------------------------------------------------- registry replay harness
+
+N_REPLAY = 1000
+
+
+@pytest.mark.parametrize("make_parts, per_trigger, check", [
+    # one range-ordered part of 4 sorted files, one file per batch: the
+    # replay streams the ids in ascending order across 4 batches
+    (lambda df: [df.repartitionByRange(4, "id").sortWithinPartitions("id")],
+     1, lambda bs: len(bs) == 4 and sum(bs, []) == list(range(N_REPLAY))),
+    # 4 one-file slices: batch k is exactly slice k
+    (lambda df: [df.filter(df.id % 4 == k).coalesce(1) for k in range(4)],
+     1, lambda bs: [sorted(b) for b in bs]
+     == [list(range(k, N_REPLAY, 4)) for k in range(4)]),
+    # one part of 8 files at 4 files per trigger: 2 batches of 4 files
+    (lambda df: [df.repartition(8)],
+     4, lambda bs: len(bs) == 2
+     and sorted(sum(bs, [])) == list(range(N_REPLAY))),
+], ids=["ordered", "slices", "parallel"])
+def test_replay_streams_part_k_as_batch_k(spark, make_parts, per_trigger,
+                                          check):
+    """The staging contract of the registry replay harness: parts
+    stream in list order, files within a part in partition order, and
+    per_trigger files make one micro-batch."""
+    from examples_scala_spark.queries import _replay, _run_replay
+
+    batches: list[list[int]] = []
+    src = _replay(spark, make_parts(spark.range(N_REPLAY)), per_trigger)
+    _run_replay(spark, src, lambda w: w.foreachBatch(
+        lambda b, _: batches.append([r.id for r in b.collect()])))
+    assert check(batches), [len(b) for b in batches]
+
+
+def test_run_replay_stops_and_raises_on_timeout(spark, monkeypatch):
+    """A replay that outlives REPLAY_TIMEOUT_S must not return as if it
+    had finished: the query is stopped and the run raises."""
+    import time
+
+    from examples_scala_spark import queries
+
+    monkeypatch.setattr(queries, "REPLAY_TIMEOUT_S", 1)
+    src = queries._replay(spark, [spark.range(3).coalesce(1)])
+    with pytest.raises(TimeoutError, match="slow_replay"):
+        queries._run_replay(spark, src, lambda w: (
+            w.foreachBatch(lambda b, _: time.sleep(4))
+            .queryName("slow_replay")))
+    assert spark.streams.active == []
