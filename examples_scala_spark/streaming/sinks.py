@@ -136,6 +136,19 @@ def parquet_upsert_writer(table_dir: str, key_col: str, val_col: str,
     bucket collect, both merge branches, the write) would re-run the
     upstream micro-batch, stateful operator and state commit included.
 
+    Per batch the sink writes exactly one file per touched bucket: the
+    rows are hash-partitioned by `bucket` before the partitioned write,
+    so each bucket lands in one task. Otherwise the write keeps the
+    partitioning of `keep ∪ b`, and every task holding rows of a
+    bucket opens its own file, which each later batch re-reads. The
+    table is read with the batch's own schema, so no batch runs a
+    schema-inference job over the table's files.
+
+    The eager `localCheckpoint` of the survivors stays. Spark 4.1 also
+    accepts a dynamic overwrite that reads the buckets it replaces,
+    but dropping the checkpoint did not lower CPU (keyed upsert
+    benchmark, 3 pairs: median 65.7 s without, 63.2 s with).
+
     At 100 TB: `buckets` scales with the table so one bucket ~ one
     task; the only driver traffic is the touched-bucket id list
     (bounded by B)."""
@@ -161,7 +174,7 @@ def parquet_upsert_writer(table_dir: str, key_col: str, val_col: str,
                 for st in fs.listStatus(jpath))
             out = b
             if has_table:
-                cur = spark.read.parquet(table_dir)
+                cur = spark.read.schema(b.schema).parquet(table_dir)
                 touched = [r.bucket for r in
                            b.select("bucket").distinct().collect()]
                 keep = (cur.filter(F.col("bucket").isin(touched))
@@ -169,7 +182,8 @@ def parquet_upsert_writer(table_dir: str, key_col: str, val_col: str,
                 # localCheckpoint materializes the survivors so the
                 # overwrite below doesn't read the path it's replacing
                 out = keep.unionByName(b).localCheckpoint(eager=True)
-            (out.write.mode("overwrite").partitionBy("bucket")
+            (out.repartition("bucket")
+             .write.mode("overwrite").partitionBy("bucket")
              .option("partitionOverwriteMode", "dynamic").parquet(table_dir))
         finally:
             b.unpersist()

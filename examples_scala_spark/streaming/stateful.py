@@ -325,7 +325,10 @@ def high_temp_counter(readings: DataFrame, threshold: float = 100.0) -> DataFram
         state.update((cnt,))
         yield pd.DataFrame({"id": [sensor_id], "high_count": [cnt]})
 
-    return readings.groupBy("id").applyInPandasWithState(
+    # Catalyst does not prune columns through the pandas-with-state
+    # node: without the select every input column crosses to Python
+    keyed = readings.select("id", "temperature").groupBy("id")
+    return keyed.applyInPandasWithState(
         fn, outputStructType=COUNT_SCHEMA, stateStructType=_COUNT_STATE,
         outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout,
     )

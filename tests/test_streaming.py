@@ -166,6 +166,30 @@ def test_windowed_average_stream(spark, tmpdir):
     assert got == {(0, 50.0), (1, 0.0)}
 
 
+def test_high_temp_counter_ships_only_read_columns(spark, tmpdir):
+    """Catalyst does not prune columns through the pandas-with-state
+    node, so the counter projects its input itself: only the key and
+    the temperature cross the Arrow boundary."""
+    stream = _sensor_stream(spark, tmpdir, [("s1", 1, 150.0)]).withColumn(
+        "ts", F.timestamp_millis(F.col("timestamp")))
+    plan = stateful.high_temp_counter(stream)._jdf.queryExecution().analyzed()
+
+    def find(node):
+        if node.nodeName() == "FlatMapGroupsInPandasWithState":
+            return node
+        kids = node.children()
+        for i in range(kids.size()):
+            hit = find(kids.apply(i))
+            if hit is not None:
+                return hit
+        return None
+
+    child = find(plan).children().apply(0)
+    out = child.output()
+    assert [out.apply(i).name() for i in range(out.size())] == [
+        "id", "temperature"]
+
+
 def test_memory_sink_queryable_state(spark, tmpdir):
     # R3 — asQueryableState twin: windowed max queryable via SQL
     rows = [("s1", 1, 10.0), ("s1", 2, 99.0)]
@@ -219,7 +243,7 @@ def test_parquet_upsert_writer_merges_without_driver_collect(spark, tmpdir):
          .outputMode("update")
          .option("checkpointLocation", os.path.join(tmpdir, "ck2"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "upsert stream still running after 120 s"
     got2 = {(r.k, r.v) for r in
             spark.read.parquet(table2).select("k", "v").collect()}
     assert got2 == {(0, 2.0), (1, 1.0)}
@@ -244,7 +268,7 @@ def test_parquet_upsert_writer_runs_upstream_once(spark, tmpdir):
          .outputMode("update")
          .option("checkpointLocation", os.path.join(tmpdir, "ck"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "upsert stream still running after 120 s"
     updated = [p["stateOperators"][0]["numRowsUpdated"]
                for p in q.recentProgress if p["numInputRows"] > 0]
     assert updated == [5, 5, 5]
@@ -255,6 +279,28 @@ def test_parquet_upsert_writer_runs_upstream_once(spark, tmpdir):
             spark.read.parquet(path).groupBy("k")
             .agg(F.sum("x").alias("v")).collect()}
     assert got == want
+
+
+def test_parquet_upsert_writer_writes_one_file_per_bucket(spark, tmpdir):
+    """Each batch rewrites a touched bucket as exactly one parquet file,
+    whatever the partitioning of the merged rows; the table stays
+    last-write-wins across overlapping batches."""
+    table = os.path.join(tmpdir, "state")
+    w = sinks.parquet_upsert_writer(table, "k", "v", buckets=16)
+    want: dict[int, float] = {}
+    for i in range(5):
+        rows = [(k, float(100 * i + k)) for k in range(100 * i, 100 * i + 250)]
+        want.update(rows)
+        w(spark.createDataFrame(rows, "k long, v double").repartition(4), i)
+        per_bucket = {d: [f for f in os.listdir(os.path.join(table, d))
+                          if f.endswith(".parquet")]
+                      for d in os.listdir(table) if d.startswith("bucket=")}
+        assert len(per_bucket) == 16
+        assert {d: len(fs) for d, fs in per_bucket.items()
+                if len(fs) != 1} == {}, f"batch {i}"
+        got = {(r.k, r.v) for r in
+               spark.read.parquet(table).select("k", "v").collect()}
+        assert got == set(want.items()), f"batch {i}"
 
 
 def test_recovery_from_checkpoint_exactly_once(spark, tmpdir):
