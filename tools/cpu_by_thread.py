@@ -4,17 +4,16 @@ Structured Streaming execution thread, Python workers, the Python
 driver, and everything else.
 
 Usage:
-    python tools/cpu_by_thread.py [--interval S] [--json] -- CMD [ARG ...]
+    python tools/cpu_by_thread.py -- CMD [ARG ...]
 
 e.g. python tools/cpu_by_thread.py -- python3 perfbench/run.py \\
          --workload sensor_keyed_upsert --seconds 10 --trace 0
 
 The command runs with the caller's stdin/stdout/stderr; the split is
-printed to stderr after it exits (one JSON object with --json), so a
-wrapped command's last stdout line stays its own. Exit status is the
-command's.
+printed to stderr after it exits, so a wrapped command's last stdout
+line stays its own. Exit status is the command's.
 
-Every `--interval` seconds the tool walks /proc for the descendants of
+Every INTERVAL_S seconds the tool walks /proc for the descendants of
 the command and reads each one's /proc/<pid>/stat and
 /proc/<pid>/task/<tid>/stat (read only). A process, once seen, stays
 counted after it is re-parented. Per-class figures are the last
@@ -24,20 +23,19 @@ reading of each thread, so:
 - Python processes are counted whole (their totals include ended
   threads), as worker or driver by command line;
 - a process that starts and ends between two samples (Hadoop's
-  `chmod`, `readlink`) is missed; `processes_seen` counts the ones
+  `chmod`, `readlink`) is missed; "processes seen" counts the ones
   that were sampled.
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import subprocess
 import sys
 import time
 
 TICK = os.sysconf("SC_CLK_TCK")
+INTERVAL_S = 0.25
 
 # /proc comm is cut to 15 bytes
 JVM_THREADS = (
@@ -168,16 +166,12 @@ class Sampler:
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--interval", type=float, default=0.25,
-                    help="seconds between samples (default 0.25)")
-    ap.add_argument("--json", action="store_true",
-                    help="print the split as one JSON object")
-    ap.add_argument("cmd", nargs=argparse.REMAINDER)
-    args = ap.parse_args()
-    cmd = args.cmd[1:] if args.cmd[:1] == ["--"] else args.cmd
+    cmd = sys.argv[1:]
+    cmd = cmd[1:] if cmd[:1] == ["--"] else cmd
     if not cmd:
-        ap.error("no command given")
+        print("usage: python tools/cpu_by_thread.py -- CMD [ARG ...]",
+              file=sys.stderr)
+        return 2
 
     t0 = time.time()
     proc = subprocess.Popen(cmd)
@@ -185,24 +179,17 @@ def main() -> int:
     try:
         while proc.poll() is None:
             sampler.sample()
-            time.sleep(args.interval)
+            time.sleep(INTERVAL_S)
     except KeyboardInterrupt:
         proc.terminate()
         proc.wait()
     split = sampler.split()
     total = sum(split.values())
-    report = {"wall_s": round(time.time() - t0, 2),
-              "cpu_s": round(total, 2),
-              "processes_seen": len(sampler.kinds),
-              "classes": {k: round(v, 2) for k, v in split.items()}}
-    if args.json:
-        print(json.dumps(report), file=sys.stderr)
-    else:
-        print(f"wall {report['wall_s']} s, sampled cpu {report['cpu_s']} s, "
-              f"{report['processes_seen']} processes seen", file=sys.stderr)
-        for name, v in split.items():
-            share = 100 * v / total if total else 0.0
-            print(f"  {name:15s} {v:8.2f} s  {share:5.1f}%", file=sys.stderr)
+    print(f"wall {time.time() - t0:.2f} s, sampled cpu {total:.2f} s, "
+          f"{len(sampler.kinds)} processes seen", file=sys.stderr)
+    for name, v in split.items():
+        share = 100 * v / total if total else 0.0
+        print(f"  {name:15s} {v:8.2f} s  {share:5.1f}%", file=sys.stderr)
     return proc.returncode
 
 
