@@ -651,6 +651,10 @@ def curation_v4(spark):
 
 def run_program(spark: SparkSession, name: str, duration: int = 10,
                 sink: str = "console") -> None:
+    """Run a program on its live source for `duration` seconds, then
+    stop it and remove its checkpoint. A query that fails within
+    `duration` re-raises its error."""
+    import shutil
     import tempfile
 
     p = PROGRAMS[name]
@@ -669,9 +673,14 @@ def run_program(spark: SparkSession, name: str, duration: int = 10,
         w = (df.writeStream.format("console")
              .option("truncate", "false").option("numRows", "20")
              .outputMode(p.output_mode))
-    q = w.option("checkpointLocation", ckpt).start()
-    q.awaitTermination(duration)
-    q.stop()
+    try:
+        q = w.option("checkpointLocation", ckpt).start()
+        try:
+            q.awaitTermination(duration)
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     if sink == "memory":
         spark.sql(f"SELECT * FROM {name}").show(20, truncate=False)
 

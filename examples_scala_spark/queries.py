@@ -3908,11 +3908,8 @@ def _events_stream(spark, sf_dir):
     return normalize_ts(src, "ts")
 
 
-#: Replay harness constants: the state-store partitions of every
-#: bounded replay, and how long a replay may run before it is stopped
-#: and reported as failed.
+#: The state-store partitions of every bounded replay.
 REPLAY_STATE_PARTITIONS = 8
-REPLAY_TIMEOUT_S = 300
 
 
 def _replay(spark, parts, per_trigger=1):
@@ -3947,10 +3944,8 @@ def _replay(spark, parts, per_trigger=1):
 
 
 def _run_replay(spark, out, sink):
-    """Run the bounded replay `out` to completion. `sink` configures
-    its DataStreamWriter (memory format or foreachBatch, output mode,
-    query name); this adds a throwaway checkpoint and the availableNow
-    trigger.
+    """Run the bounded replay `out` to completion through
+    `sinks.run_bounded`, on a throwaway checkpoint.
 
     State-store partitioning is sized to the REPLAY's volume
     (REPLAY_STATE_PARTITIONS), not the session's scale default: a
@@ -3960,24 +3955,18 @@ def _run_replay(spark, out, sink):
     (measured 2-4x on the stream-stream joins). A production
     deployment sizes this to the stream rate — the knob is per-query,
     exactly as here. The session conf is restored and the checkpoint
-    deleted whatever happens. A replay still running after
-    REPLAY_TIMEOUT_S is stopped and raises TimeoutError, so a slow run
-    never returns a partial result."""
+    deleted whatever happens."""
     import shutil
     import tempfile
+
+    from .streaming.sinks import run_bounded
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     ckpt = tempfile.mkdtemp(prefix="sgs_ckpt_")
     try:
         spark.conf.set("spark.sql.shuffle.partitions",
                        str(REPLAY_STATE_PARTITIONS))
-        q = (sink(out.writeStream).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(REPLAY_TIMEOUT_S):
-            q.stop()
-            raise TimeoutError(
-                f"streaming replay {q.name or q.id} did not finish in "
-                f"{REPLAY_TIMEOUT_S} s; stopped it")
+        run_bounded(out, sink, ckpt)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)

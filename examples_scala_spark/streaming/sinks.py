@@ -17,6 +17,29 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+#: How long a bounded run may take before it is stopped and reported
+#: as failed.
+RUN_TIMEOUT_S = 300
+
+
+def run_bounded(out: DataFrame, sink: Callable, checkpoint: str):
+    """Run the bounded stream `out` until it has processed its input
+    and return the finished StreamingQuery (its `recentProgress` stays
+    readable). `sink` configures the DataStreamWriter (memory format or
+    foreachBatch, output mode, query name); this adds `checkpoint` and
+    the availableNow trigger. A failed query re-raises its error; a
+    query still running after RUN_TIMEOUT_S is stopped and raises
+    TimeoutError, so a caller never reads a live query's partial
+    output."""
+    q = (sink(out.writeStream).option("checkpointLocation", checkpoint)
+         .trigger(availableNow=True).start())
+    if not q.awaitTermination(RUN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"bounded run {q.name or q.id} did not finish in "
+            f"{RUN_TIMEOUT_S} s; stopped it")
+    return q
+
 
 def memory_sink(df: DataFrame, name: str, output_mode: str = "update"):
     """R3/K6 — queryable state: asQueryableState('maxTemperature')

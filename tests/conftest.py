@@ -1,7 +1,9 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 import pytest
 
@@ -23,3 +25,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def tmpdir() -> str:
+    """A scratch directory for one test's stream inputs, checkpoints
+    and sink tables, removed after the test."""
+    d = tempfile.mkdtemp(prefix="sgs_test_")
+    yield d
+    shutil.rmtree(d, ignore_errors=True)

@@ -43,23 +43,28 @@ def test_every_program_builds(spark):
                                   # spark_partition_id keyed op-state
                                   "operator_list_state"])
 def test_program_runs_live(spark, name):
-    """Start on the live rate source, let a few micro-batches run,
-    assert the query makes progress without error."""
+    """Start on the live rate source and stop once two micro-batches
+    have completed without error; fail if that takes over 60 s."""
+    import shutil
     import tempfile
+    import time
 
     p = programs.PROGRAMS[name]
     df = p.build(spark)
+    ckpt = tempfile.mkdtemp(prefix=f"sgs_test_prog_{name}_")
     q = (df.writeStream.format("memory").queryName(f"prog_{name}")
          .outputMode(p.output_mode)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix=f"sgs_test_prog_{name}_"))
-         .start())
+         .option("checkpointLocation", ckpt).start())
     try:
-        q.awaitTermination(12)
+        deadline = time.monotonic() + 60
+        while len(q.recentProgress) < 2:
+            assert time.monotonic() < deadline, "no 2 micro-batches in 60 s"
+            # re-raises the query's error if it failed
+            assert not q.awaitTermination(0.2), "query stopped on its own"
         assert q.exception() is None
-        assert q.lastProgress is not None
     finally:
         q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_idempotent_sink_program_runs_its_upsert_writer(spark):

@@ -10,7 +10,8 @@ import pytest
 from examples_scala_spark.queries import REGISTRY
 
 import sys
-sys.path.insert(0, "/root/repo/tools")
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 from verify_local import TABLES, value_hash  # noqa: E402
 
 # fast, structurally diverse sample for the pytest loop; the driver

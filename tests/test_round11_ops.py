@@ -7,20 +7,12 @@ fallback, and the broadcast lifecycle in train_centroids."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from examples_scala_spark.operators import similarity as sim
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sgs_r11_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+from examples_scala_spark.streaming.sinks import run_bounded
 
 
 def _emb(spark, rows):
@@ -171,11 +163,8 @@ class TestStreamingEmptyRefs:
         # ADVICE r10: must stay a STREAMING plan (a batch
         # createDataFrame under writeStream raises AnalysisException)
         assert out.isStreaming
-        q = (out.writeStream.format("memory").queryName("r11_empty_refs")
-             .outputMode("append")
-             .option("checkpointLocation", os.path.join(tmpdir, "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        run_bounded(out, lambda w: w.format("memory").queryName("r11_empty_refs"),
+                    os.path.join(tmpdir, "ckpt"))
         got = spark.sql("SELECT * FROM r11_empty_refs")
         assert got.count() == 0
         assert got.columns == ["vec_id", "cent_id", "ccos"]
@@ -192,23 +181,6 @@ class TestStreamingEmptyRefs:
 # ---------------------------------------- streaming review fixes (r11)
 
 class TestStreamingReviewFixes:
-    def _run(self, stream_df, tmpdir, name, grace: int = 10):
-        # NB processing-time-timeout queries never self-terminate under
-        # availableNow (Spark keeps scheduling no-data batches so the
-        # timeout can fire — pre-existing behavior, verified on the
-        # pre-r11 code too): wait a bounded grace for the data/timeout
-        # batches, then STOP explicitly — leaving the query active
-        # races the next run's checkpoint (state-commit
-        # FileNotFoundException)
-        q = (stream_df.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", os.path.join(tmpdir,
-                                                        f"ck_{name}"))
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(grace):
-            q.stop()
-            q.awaitTermination(60)
-
     def test_rise_warning_fires_under_continuous_data(self, spark, tmpdir):
         # the r11 fix: a monotonic rise with data arriving in EVERY
         # micro-batch must still warn once rise_ms of processing time
@@ -273,11 +245,8 @@ class TestStreamingReviewFixes:
                               "temperature double").parquet(path))
             out = timers.early_firing_window_counts(
                 stream, window_ms=30_000, interval_ms=1_000)
-            q = (out.writeStream.foreachBatch(
-                    lambda df, bid: got.extend(map(tuple, df.collect())))
-                 .outputMode("append").option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
+            run_bounded(out, lambda w: w.foreachBatch(
+                lambda df, bid: got.extend(map(tuple, df.collect()))), ckpt)
 
         run_once()
         # batch 2: data for window 30000 only; max ts unchanged -> wm

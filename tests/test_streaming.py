@@ -9,21 +9,15 @@ batch/stream model.
 
 from __future__ import annotations
 
+import ast
 import os
-import shutil
-import tempfile
+import pathlib
 
 import pyspark.sql.functions as F
 import pytest
 
 from examples_scala_spark.streaming import sinks, stateful
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sgs_test_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+from examples_scala_spark.streaming.sinks import RUN_TIMEOUT_S, run_bounded
 
 
 def _sensor_stream(spark, tmpdir, rows):
@@ -37,24 +31,13 @@ def _sensor_stream(spark, tmpdir, rows):
     )
 
 
-def _run(stream_df, tmpdir, name, output_mode="append"):
-    q = (
-        stream_df.writeStream.format("memory").queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", os.path.join(tmpdir, f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
 def test_temperature_delta_alerts_stream(spark, tmpdir):
     rows = [("s1", 1, 10.0), ("s1", 2, 10.5), ("s1", 3, 20.0),
             ("s2", 1, 5.0), ("s2", 2, 5.1)]
     out = stateful.temperature_delta_alerts(_sensor_stream(spark, tmpdir, rows),
                                             threshold=1.7)
-    _run(out, tmpdir, "delta_alerts")
+    run_bounded(out, lambda w: w.format("memory").queryName("delta_alerts"),
+                os.path.join(tmpdir, "ck"))
     got = [(r.id, r.temperature, round(r.diff, 3))
            for r in spark.sql("SELECT * FROM delta_alerts").collect()]
     assert got == [("s1", 20.0, 9.5)]
@@ -78,22 +61,16 @@ def test_delta_alerts_state_survives_batches(spark, tmpdir):
     def collect_rows(batch_df, batch_id):
         got.extend((r.id, r.temperature, r.diff) for r in batch_df.collect())
 
-    q = (out.writeStream.foreachBatch(collect_rows)
-         .outputMode("append").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    run_bounded(out, lambda w: w.foreachBatch(collect_rows), ckpt)
     # batch 2 (new file) after restart from the same checkpoint:
     # state (lastTemp=10.0) must be restored from the state store
     spark.createDataFrame([("s1", 2, 30.0)],
                           ["id", "timestamp", "temperature"]) \
         .repartition(1).write.mode("append").parquet(path)
-    q = (stateful.temperature_delta_alerts(
+    run_bounded(stateful.temperature_delta_alerts(
             spark.readStream.schema("id string, timestamp long, temperature double")
-            .option("maxFilesPerTrigger", 1).parquet(path), threshold=1.7)
-         .writeStream.foreachBatch(collect_rows)
-         .outputMode("append").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+            .option("maxFilesPerTrigger", 1).parquet(path), threshold=1.7),
+        lambda w: w.foreachBatch(collect_rows), ckpt)
     assert ("s1", 30.0, 20.0) in got  # diff vs state from batch 1
 
 
@@ -101,7 +78,9 @@ def test_high_temp_counter_update_mode(spark, tmpdir):
     rows = [("s1", 1, 150.0), ("s1", 2, 50.0), ("s1", 3, 200.0),
             ("s2", 1, 99.0)]
     out = stateful.high_temp_counter(_sensor_stream(spark, tmpdir, rows))
-    _run(out, tmpdir, "high_counts", output_mode="update")
+    run_bounded(out, lambda w: (
+        w.format("memory").queryName("high_counts").outputMode("update")),
+        os.path.join(tmpdir, "ck"))
     got = {r.id: r.high_count
            for r in spark.sql("SELECT * FROM high_counts").collect()}
     assert got == {"s1": 2, "s2": 0}
@@ -119,7 +98,13 @@ def test_switchable_forwarder(spark, tmpdir):
         .parquet(sw_path)
     )
     out = stateful.switchable_forwarder(readings, switches)
-    _run(out, tmpdir, "forwarded")
+    # A ProcessingTimeTimeout query never ends under availableNow (the
+    # timeout keeps scheduling no-data batches), so run_bounded cannot
+    # run it. Trigger.Once processes all input in one batch and ends.
+    q = (out.writeStream.format("memory").queryName("forwarded")
+         .option("checkpointLocation", os.path.join(tmpdir, "ck"))
+         .trigger(once=True).start())
+    assert q.awaitTermination(RUN_TIMEOUT_S), "forwarder still running"
     got = {(r.id, r.timestamp) for r in spark.sql("SELECT * FROM forwarded").collect()}
     # s1 armed 0..10000: rows at 100 and 500 pass, 20000 blocked; s2 never armed
     assert got == {("s1", 100), ("s1", 500)}
@@ -132,7 +117,8 @@ def test_self_cleaning_alert_emits_and_expires(spark, tmpdir):
     out = stateful.self_cleaning_delta_alerts(
         stream.withWatermark("event_ts", "1 second"), threshold=1.7,
         ttl_ms=3_600_000)
-    _run(out, tmpdir, "ttl_alerts")
+    run_bounded(out, lambda w: w.format("memory").queryName("ttl_alerts"),
+                os.path.join(tmpdir, "ck"))
     got = [(r.id, r.temperature, r.diff)
            for r in spark.sql("SELECT * FROM ttl_alerts").collect()]
     assert got == [("s1", 30.0, 20.0)]
@@ -161,7 +147,8 @@ def test_windowed_average_stream(spark, tmpdir):
         .agg(F.avg("celsius").alias("avg_temp"))
         .select(F.col("window.start").cast("long").alias("ws"), "id", "avg_temp")
     )
-    _run(out, tmpdir, "win_avg", output_mode="append")
+    run_bounded(out, lambda w: w.format("memory").queryName("win_avg"),
+                os.path.join(tmpdir, "ck"))
     got = {(r.ws, r.avg_temp) for r in spark.sql("SELECT * FROM win_avg").collect()}
     assert got == {(0, 50.0), (1, 0.0)}
 
@@ -195,10 +182,8 @@ def test_memory_sink_queryable_state(spark, tmpdir):
     rows = [("s1", 1, 10.0), ("s1", 2, 99.0)]
     out = stateful.high_temp_counter(_sensor_stream(spark, tmpdir, rows),
                                      threshold=50.0)
-    q = (sinks.memory_sink(out, "maxTemperature")
-         .option("checkpointLocation", os.path.join(tmpdir, "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    run_bounded(out, lambda _: sinks.memory_sink(out, "maxTemperature"),
+                os.path.join(tmpdir, "ck"))
     assert spark.sql("SELECT high_count FROM maxTemperature").collect()[0][0] == 1
 
 
@@ -238,12 +223,9 @@ def test_parquet_upsert_writer_merges_without_driver_collect(spark, tmpdir):
            .option("maxFilesPerTrigger", 1).parquet(path)
            .groupBy("k").agg(F.sum("x").alias("v")))
     table2 = os.path.join(tmpdir, "state2")
-    q = (agg.writeStream
-         .foreachBatch(sinks.parquet_upsert_writer(table2, "k", "v", 4))
-         .outputMode("update")
-         .option("checkpointLocation", os.path.join(tmpdir, "ck2"))
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "upsert stream still running after 120 s"
+    run_bounded(agg, lambda w: (
+        w.foreachBatch(sinks.parquet_upsert_writer(table2, "k", "v", 4))
+        .outputMode("update")), os.path.join(tmpdir, "ck2"))
     got2 = {(r.k, r.v) for r in
             spark.read.parquet(table2).select("k", "v").collect()}
     assert got2 == {(0, 2.0), (1, 1.0)}
@@ -263,12 +245,9 @@ def test_parquet_upsert_writer_runs_upstream_once(spark, tmpdir):
            .option("maxFilesPerTrigger", 1).parquet(path)
            .groupBy("k").agg(F.sum("x").alias("v")))
     table = os.path.join(tmpdir, "state")
-    q = (agg.writeStream
-         .foreachBatch(sinks.parquet_upsert_writer(table, "k", "v", 4))
-         .outputMode("update")
-         .option("checkpointLocation", os.path.join(tmpdir, "ck"))
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120), "upsert stream still running after 120 s"
+    q = run_bounded(agg, lambda w: (
+        w.foreachBatch(sinks.parquet_upsert_writer(table, "k", "v", 4))
+        .outputMode("update")), os.path.join(tmpdir, "ck"))
     updated = [p["stateOperators"][0]["numRowsUpdated"]
                for p in q.recentProgress if p["numInputRows"] > 0]
     assert updated == [5, 5, 5]
@@ -328,14 +307,10 @@ def test_recovery_from_checkpoint_exactly_once(spark, tmpdir):
 
     writer = sinks.IdempotentBatchWriter(target, write_fn=flaky_write)
     ckpt = os.path.join(tmpdir, "ckpt")
-    q = (stream().writeStream.foreachBatch(writer)
-         .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
-    with pytest.raises(Exception):
-        q.awaitTermination(120)
+    with pytest.raises(Exception, match="injected sink failure"):
+        run_bounded(stream(), lambda w: w.foreachBatch(writer), ckpt)
     # restart from the same checkpoint — batch 1 replays, batch 0 must not
-    q = (stream().writeStream.foreachBatch(writer)
-         .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    run_bounded(stream(), lambda w: w.foreachBatch(writer), ckpt)
     batch_ids = [b for b, _ in seen]
     assert sorted(batch_ids) == [0, 1, 2]          # each batch delivered once
     assert len(batch_ids) == len(set(batch_ids))   # no duplicates
@@ -383,7 +358,9 @@ def test_ordered_trace_survives_multi_chunk_groups(spark, tmpdir):
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
         out = temperature_delta_alerts_traced(stream, threshold=17.0)
-        _run(out, tmpdir, "multi_chunk_trace")
+        run_bounded(out, lambda w: (
+            w.format("memory").queryName("multi_chunk_trace")),
+            os.path.join(tmpdir, "ck"))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     got = sorted((r.event_id, round(r.diff, 6)) for r in
@@ -408,7 +385,9 @@ def test_high_temp_counter_per_subtask_operator_state(spark, tmpdir):
         .option("maxFilesPerTrigger", 2).parquet(path)
     )
     out = stateful.high_temp_counter_per_subtask(stream, threshold=100.0)
-    _run(out, tmpdir, "subtask_counts", output_mode="update")
+    run_bounded(out, lambda w: (
+        w.format("memory").queryName("subtask_counts").outputMode("update")),
+        os.path.join(tmpdir, "ck_sub"))
     got = {r.subtask: r.op_high_count for r in
            spark.sql("SELECT * FROM subtask_counts").collect()}
     assert sum(got.values()) >= 3  # every high reading counted somewhere
@@ -416,15 +395,13 @@ def test_high_temp_counter_per_subtask_operator_state(spark, tmpdir):
     spark.createDataFrame([("s5", 5, 180.0)],
                           ["id", "timestamp", "temperature"]) \
         .repartition(1).write.mode("append").parquet(path)
-    q = (stateful.high_temp_counter_per_subtask(
+    run_bounded(stateful.high_temp_counter_per_subtask(
             spark.readStream
             .schema("id string, timestamp long, temperature double")
-            .option("maxFilesPerTrigger", 2).parquet(path), threshold=100.0)
-         .writeStream.format("memory").queryName("subtask_counts2")
-         .outputMode("complete")
-         .option("checkpointLocation", os.path.join(tmpdir, "ck_sub2"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+            .option("maxFilesPerTrigger", 2).parquet(path), threshold=100.0),
+        lambda w: (w.format("memory").queryName("subtask_counts2")
+                   .outputMode("complete")),
+        os.path.join(tmpdir, "ck_sub2"))
     total = sum(r.op_high_count for r in
                 spark.sql("SELECT * FROM subtask_counts2").collect())
     assert total == 4  # 3 from batch files + 1 appended, accumulated
@@ -464,16 +441,51 @@ def test_replay_streams_part_k_as_batch_k(spark, make_parts, per_trigger,
 
 
 def test_run_replay_stops_and_raises_on_timeout(spark, monkeypatch):
-    """A replay that outlives REPLAY_TIMEOUT_S must not return as if it
+    """A replay that outlives RUN_TIMEOUT_S must not return as if it
     had finished: the query is stopped and the run raises."""
     import time
 
     from examples_scala_spark import queries
 
-    monkeypatch.setattr(queries, "REPLAY_TIMEOUT_S", 1)
+    monkeypatch.setattr(sinks, "RUN_TIMEOUT_S", 1)
     src = queries._replay(spark, [spark.range(3).coalesce(1)])
     with pytest.raises(TimeoutError, match="slow_replay"):
         queries._run_replay(spark, src, lambda w: (
             w.foreachBatch(lambda b, _: time.sleep(4))
             .queryName("slow_replay")))
     assert spark.streams.active == []
+
+
+#: Every awaitTermination call outside perfbench/, keyed by file and
+#: the top-level function that makes it, with why it may wait there.
+#: Any other wait can return False on a live query and let a test read
+#: its partial output; a bounded run goes through run_bounded.
+WAIT_SITES = {
+    ("examples_scala_spark/streaming/sinks.py", "run_bounded"):
+        "the bounded run: a timeout stops the query and raises",
+    ("examples_scala_spark/programs.py", "run_program"):
+        "live source: runs for the caller's duration, then stops",
+    ("tests/test_programs.py", "test_program_runs_live"):
+        "live source: waits for two micro-batches, then stops",
+    ("tests/test_streaming.py", "test_switchable_forwarder"):
+        "processing-time timeout: only Trigger.Once ends the query",
+    ("tests/test_streaming_extras.py", "test_temperature_rise_warning_fires"):
+        "processing-time timeout: only Trigger.Once ends the query",
+}
+
+
+def test_bounded_runs_go_through_one_function():
+    """No module or test waits on a streaming query except at the
+    sites named in WAIT_SITES."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    found = set()
+    for sub in ("examples_scala_spark", "tests"):
+        for path in sorted((root / sub).rglob("*.py")):
+            rel = path.relative_to(root).as_posix()
+            for top in ast.parse(path.read_text()).body:
+                found |= {(rel, getattr(top, "name", "<module>"))
+                          for node in ast.walk(top)
+                          if isinstance(node, ast.Call)
+                          and isinstance(node.func, ast.Attribute)
+                          and node.func.attr == "awaitTermination"}
+    assert found == set(WAIT_SITES)

@@ -4,10 +4,8 @@ late-drop observability (T5 streaming twin)."""
 from __future__ import annotations
 
 import os
-import shutil
 import socket
 import socketserver
-import tempfile
 import threading
 import time
 
@@ -16,13 +14,7 @@ import pytest
 
 from examples_scala_spark.operators.aggregations import avg_temp_pandas_udaf
 from examples_scala_spark.streaming import sinks, stateful
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sgs_extra_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+from examples_scala_spark.streaming.sinks import RUN_TIMEOUT_S, run_bounded
 
 
 def test_temperature_rise_warning_fires(spark, tmpdir):
@@ -38,27 +30,21 @@ def test_temperature_rise_warning_fires(spark, tmpdir):
             .parquet(path)
         )
         out = stateful.temperature_rise_warnings(stream, rise_ms=500)
+        # A ProcessingTimeTimeout query never ends under availableNow
+        # (the timeout keeps scheduling no-data batches), so
+        # run_bounded cannot run it. Trigger.Once processes all new
+        # input in one batch, fires expired timeouts, and ends.
         q = (out.writeStream.foreachBatch(
                 lambda df, bid: got.extend((r.id, r.message) for r in df.collect()))
              .outputMode("append").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        # a ProcessingTimeTimeout query never self-terminates under
-        # availableNow (Spark keeps scheduling no-data batches so the
-        # timeout can fire): give it a bounded window covering the
-        # data batch + the 500 ms expiry, then stop explicitly —
-        # without this each run burned the full 120 s AND left an
-        # active query racing the next run's checkpoint
-        if not q.awaitTermination(8):
-            q.stop()
-            q.awaitTermination(60)
+             .trigger(once=True).start())
+        assert q.awaitTermination(RUN_TIMEOUT_S), "rise warnings still running"
 
     # batch 1: monotonically rising temperatures for s1 -> timer armed
     spark.createDataFrame([("s1", 1, 10.0), ("s1", 2, 20.0)],
                           ["id", "timestamp", "temperature"]) \
         .repartition(1).write.mode("overwrite").parquet(path)
     run_once()
-    # (the first run may already fire the timeout in its trailing
-    # no-data batch if it outlives 500 ms — cadence is micro-batch)
     time.sleep(1.0)   # let the 500 ms processing-time timeout expire
     # batch 2: data for a different key; s1 has no new data -> its
     # timed-out state is invoked (hasTimedOut=True) -> warning
@@ -92,10 +78,8 @@ def test_socket_writer(spark, tmpdir):
             spark.readStream.schema("id string, timestamp long, temperature double")
             .parquet(path)
         )
-        q = (stream.writeStream.foreach(sinks.SocketWriter(host, port))
-             .option("checkpointLocation", os.path.join(tmpdir, "ck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        run_bounded(stream, lambda w: w.foreach(sinks.SocketWriter(host, port)),
+                    os.path.join(tmpdir, "ck"))
         deadline = time.time() + 10
         while len(srv.lines) < 2 and time.time() < deadline:
             time.sleep(0.1)
@@ -142,11 +126,8 @@ def test_watermark_drop_observability(spark, tmpdir):
         .groupBy(F.window("ts", "10 seconds"), "id")
         .agg(F.count("*").alias("cnt"))
     )
-    q = (agg.writeStream.format("memory").queryName("wm_drop")
-         .outputMode("append")
-         .option("checkpointLocation", os.path.join(tmpdir, "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    q = run_bounded(agg, lambda w: w.format("memory").queryName("wm_drop"),
+                    os.path.join(tmpdir, "ck"))
     dropped = sum(
         op.get("numRowsDroppedByWatermark", 0)
         for p in q.recentProgress for op in p["stateOperators"]
@@ -183,11 +164,8 @@ def test_stream_interval_join_matches_batch(spark, tmpdir):
     out = stream_interval_join(left, right, keys=["user_id"],
                                left_ts="err_ts", right_ts="click_ts",
                                lookback="60 seconds")
-    q = (out.writeStream.format("memory").queryName("sij")
-         .outputMode("append")
-         .option("checkpointLocation", os.path.join(tmpdir, "ckpt_sij"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    run_bounded(out, lambda w: w.format("memory").queryName("sij"),
+                os.path.join(tmpdir, "ckpt_sij"))
 
     got = sorted(
         (r.user_id, int(r.err_ts.timestamp()), int(r.click_ts.timestamp()))
@@ -235,11 +213,8 @@ def test_stream_left_outer_join_watermark_conditioned(spark, tmpdir):
     out = stream_interval_join(left, right, keys=["user_id"],
                                left_ts="err_ts", right_ts="click_ts",
                                lookback="60 seconds", how="leftOuter")
-    q = (out.writeStream.format("memory").queryName("sloj")
-         .outputMode("append")
-         .option("checkpointLocation", os.path.join(tmpdir, "ckpt_sloj"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    run_bounded(out, lambda w: w.format("memory").queryName("sloj"),
+                os.path.join(tmpdir, "ckpt_sloj"))
 
     got = sorted(
         (r.user_id, int(r.err_ts.timestamp()),
@@ -275,11 +250,8 @@ def test_stream_full_outer_join_coalesces_right_key(spark, tmpdir):
     out = stream_interval_join(left, right, keys=["user_id"],
                                left_ts="err_ts", right_ts="click_ts",
                                lookback="60 seconds", how="fullOuter")
-    q = (out.writeStream.format("memory").queryName("sfoj")
-         .outputMode("append")
-         .option("checkpointLocation", os.path.join(tmpdir, "ckpt_sfoj"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    run_bounded(out, lambda w: w.format("memory").queryName("sfoj"),
+                os.path.join(tmpdir, "ckpt_sfoj"))
 
     got = sorted(
         (r.user_id,
@@ -292,9 +264,6 @@ def test_stream_full_outer_join_coalesces_right_key(spark, tmpdir):
     assert got == [("u1", 100, 50), ("u9", None, 70)]
 
 def test_metrics_collector_captures_progress_and_state(spark, tmpdir):
-    import os
-    import time
-
     from examples_scala_spark.streaming.monitor import MetricsCollector
 
     path = os.path.join(tmpdir, "mon_in")
@@ -312,11 +281,9 @@ def test_metrics_collector_captures_progress_and_state(spark, tmpdir):
     c = MetricsCollector()
     spark.streams.addListener(c)
     try:
-        q = (agg.writeStream.format("memory").queryName("mon_q")
-             .outputMode("update")
-             .option("checkpointLocation", os.path.join(tmpdir, "mon_ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        run_bounded(agg, lambda w: (
+            w.format("memory").queryName("mon_q").outputMode("update")),
+            os.path.join(tmpdir, "mon_ckpt"))
         # listener delivery is async on the listener bus
         deadline = time.time() + 15
         while time.time() < deadline and not c.progress:
@@ -330,57 +297,44 @@ def test_metrics_collector_captures_progress_and_state(spark, tmpdir):
         spark.streams.removeListener(c)
 
 
-def test_rocksdb_state_store_matches_default_provider(spark):
+def test_rocksdb_state_store_matches_default_provider(spark, tmpdir):
     """The production state backend: at 100 TB-scale state (dedup keys,
     join buffers, window partials) the default HDFS-backed in-memory
     provider OOMs; RocksDB spills to local disk with the same
     semantics. Run the same watermarked dedup with both providers and
     require identical output — the provider is a storage swap, never a
     semantics change."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyspark.sql.functions as F
-
     rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     conf = "spark.sql.streaming.stateStore.providerClass"
-    d = tempfile.mkdtemp(prefix="sgs_rocks_")
-    try:
-        src_path = os.path.join(d, "in")
-        rows = [(i % 7, i) for i in range(100)]  # heavy duplication
-        spark.createDataFrame(rows, ["k", "seq"]) \
-            .repartition(1).write.mode("overwrite").parquet(src_path)
+    src_path = os.path.join(tmpdir, "in")
+    rows = [(i % 7, i) for i in range(100)]  # heavy duplication
+    spark.createDataFrame(rows, ["k", "seq"]) \
+        .repartition(1).write.mode("overwrite").parquet(src_path)
 
-        def run(tag, provider):
-            prev = spark.conf.get(conf, None)
-            try:
-                if provider:
-                    spark.conf.set(conf, provider)
-                stream = (spark.readStream.schema("k long, seq long")
-                          .parquet(src_path)
-                          .withColumn("ts", F.timestamp_millis(F.col("seq") * 1000))
-                          .withWatermark("ts", "10 seconds")
-                          .dropDuplicatesWithinWatermark(["k"]))
-                q = (stream.writeStream.format("memory").queryName(tag)
-                     .outputMode("append")
-                     .option("checkpointLocation", os.path.join(d, f"ckpt_{tag}"))
-                     .trigger(availableNow=True).start())
-                q.awaitTermination(120)
-                return sorted((r.k,) for r in
-                              spark.table(tag).select("k").collect())
-            finally:
-                if prev is None:
-                    spark.conf.unset(conf)
-                else:
-                    spark.conf.set(conf, prev)
+    def run(tag, provider):
+        prev = spark.conf.get(conf, None)
+        try:
+            if provider:
+                spark.conf.set(conf, provider)
+            stream = (spark.readStream.schema("k long, seq long")
+                      .parquet(src_path)
+                      .withColumn("ts", F.timestamp_millis(F.col("seq") * 1000))
+                      .withWatermark("ts", "10 seconds")
+                      .dropDuplicatesWithinWatermark(["k"]))
+            run_bounded(stream, lambda w: w.format("memory").queryName(tag),
+                        os.path.join(tmpdir, f"ckpt_{tag}"))
+            return sorted((r.k,) for r in
+                          spark.table(tag).select("k").collect())
+        finally:
+            if prev is None:
+                spark.conf.unset(conf)
+            else:
+                spark.conf.set(conf, prev)
 
-        got_rocks = run("rocks_dedup", rocks)
-        got_default = run("default_dedup", None)
-        assert got_rocks == got_default
-        assert len(got_rocks) == 7
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    got_rocks = run("rocks_dedup", rocks)
+    got_default = run("default_dedup", None)
+    assert got_rocks == got_default
+    assert len(got_rocks) == 7
 
 
 # ---------------------------------------------- multimodal round-4 plumbing

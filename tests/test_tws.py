@@ -5,19 +5,11 @@ twins (streaming/tws.py, skipped where protobuf is unavailable)."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pytest
 
 from examples_scala_spark.streaming import timers, tws
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sgs_tws_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+from examples_scala_spark.streaming.sinks import run_bounded
 
 
 def _staged_stream(spark, tmpdir, batches):
@@ -34,18 +26,6 @@ def _staged_stream(spark, tmpdir, batches):
     )
 
 
-def _run(stream_df, tmpdir, name):
-    q = (
-        stream_df.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmpdir, f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return q
-
-
 def test_early_firing_window_fire_and_purge(spark, tmpdir):
     # 30 s window [0, 30000); batch 1 puts 3 rows in it (max ts 27000
     # → watermark 22000 for batch 2); batch 2's row at ts=40000 lifts
@@ -58,7 +38,8 @@ def test_early_firing_window_fire_and_purge(spark, tmpdir):
     ])
     out = timers.early_firing_window_counts(stream, window_ms=30_000,
                                             interval_ms=1_000)
-    _run(out, tmpdir, "early_firing")
+    run_bounded(out, lambda w: w.format("memory").queryName("early_firing"),
+                os.path.join(tmpdir, "ck"))
     rows = spark.sql(
         "SELECT * FROM early_firing ORDER BY fire_ms, window_start").collect()
     w0 = [r for r in rows if r.window_start == 0]
@@ -84,7 +65,8 @@ def test_early_firing_closes_window_without_new_key_data(spark, tmpdir):
     ])
     out = timers.early_firing_window_counts(stream, window_ms=30_000,
                                             interval_ms=1_000)
-    _run(out, tmpdir, "early_firing_timer")
+    run_bounded(out, lambda w: w.format("memory").queryName("early_firing_timer"),
+                os.path.join(tmpdir, "ck"))
     finals = [r for r in spark.sql(
         "SELECT * FROM early_firing_timer").collect()
         if r.is_final and r.id == "s2"]
@@ -99,7 +81,8 @@ def test_late_rows_tagged_not_dropped(spark, tmpdir):
         [("s1", 10_000, 2.0), ("s1", 70_000, 3.0)],
     ])
     out = timers.tag_late_rows(stream, watermark_delay="5 seconds")
-    _run(out, tmpdir, "late_tagged")
+    run_bounded(out, lambda w: w.format("memory").queryName("late_tagged"),
+                os.path.join(tmpdir, "ck"))
     rows = {r.timestamp: r.is_late
             for r in spark.sql("SELECT * FROM late_tagged").collect()}
     assert rows[10_000] is True      # captured AND tagged, not dropped
@@ -124,7 +107,8 @@ def test_tws_ttl_delta_alerts(spark, tmpdir):
          ("s2", 1, 5.0), ("s2", 2, 5.1)],
     ])
     out = tws.ttl_delta_alerts(stream, threshold=1.7, ttl_ms=3_600_000)
-    _run(out, tmpdir, "ttl_alerts")
+    run_bounded(out, lambda w: w.format("memory").queryName("ttl_alerts"),
+                os.path.join(tmpdir, "ck"))
     got = [(r.id, r.temperature, round(r.diff, 3))
            for r in spark.sql("SELECT * FROM ttl_alerts").collect()]
     assert got == [("s1", 20.0, 9.5)]
@@ -140,7 +124,8 @@ def test_tws_rise_warning_timer_register_and_delete(spark, tmpdir):
         [("s1", 4, 13.0)],
     ])
     out = tws.temperature_rise_warnings_tws(stream, rise_ms=1)
-    _run(out, tmpdir, "rise_tws")
+    run_bounded(out, lambda w: w.format("memory").queryName("rise_tws"),
+                os.path.join(tmpdir, "ck"))
     got = {r.id for r in spark.sql("SELECT * FROM rise_tws").collect()}
     assert "s1" in got and "s2" not in got
 
@@ -160,7 +145,8 @@ def test_tws_late_rows_tagged_not_dropped(spark, tmpdir):
         [("s1", 10_000, 2.0), ("s1", 70_000, 3.0)],
     ])
     out = tws.tag_late_rows(stream, watermark_delay="5 seconds")
-    _run(out, tmpdir, "late_tws")
+    run_bounded(out, lambda w: w.format("memory").queryName("late_tws"),
+                os.path.join(tmpdir, "ck"))
     rows = {r.timestamp: r.is_late
             for r in spark.sql("SELECT * FROM late_tws").collect()}
     assert rows[10_000] is True      # captured AND tagged, not dropped
@@ -177,7 +163,8 @@ def test_tws_early_firing(spark, tmpdir):
     ])
     out = tws.early_firing_window_counts(stream, window_ms=30_000,
                                          interval_ms=1_000)
-    _run(out, tmpdir, "early_tws")
+    run_bounded(out, lambda w: w.format("memory").queryName("early_tws"),
+                os.path.join(tmpdir, "ck"))
     rows = spark.sql("SELECT * FROM early_tws").collect()
     finals = [r for r in rows if r.is_final and r.window_start == 0]
     assert len(finals) == 1 and finals[0].cnt == 3
@@ -203,7 +190,6 @@ def test_early_firing_finals_equal_batch_window_counts(spark, rows):
     groupBy(window) — the two implementations of the same semantics
     cross-check each other on arbitrary event sequences. All rows
     arrive in one batch (watermark 0), so none are dropped as late."""
-    import os
     import shutil
     import tempfile
 
@@ -223,11 +209,8 @@ def test_early_firing_finals_equal_batch_window_counts(spark, rows):
                   .option("maxFilesPerTrigger", 1).parquet(path))
         out = timers.early_firing_window_counts(stream, window_ms=30_000,
                                                 interval_ms=1_000)
-        q = (out.writeStream.format("memory").queryName("prop_ef")
-             .outputMode("append")
-             .option("checkpointLocation", os.path.join(d, "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
+        run_bounded(out, lambda w: w.format("memory").queryName("prop_ef"),
+                    os.path.join(d, "ckpt"))
         finals = {(r.id, r.window_start): r.cnt for r in spark.sql(
             "SELECT * FROM prop_ef WHERE is_final AND id != 'z'").collect()}
         expected = {}
@@ -259,7 +242,8 @@ def test_updating_window_counts_first_then_update(spark, tmpdir):
     ])
     out = timers.updating_window_counts_stream(
         stream, window_ms=10_000, disorder="5 seconds", lateness_ms=5_000)
-    _run(out, tmpdir, "upd_windows")
+    run_bounded(out, lambda w: w.format("memory").queryName("upd_windows"),
+                os.path.join(tmpdir, "ck"))
     rows = [(r.window_start, r.cnt, r.tag) for r in spark.sql(
         "SELECT * FROM upd_windows WHERE id='s1' AND window_start=0"
     ).collect()]
@@ -281,31 +265,27 @@ def test_early_firing_state_survives_restart(spark, tmpdir):
     def collect_rows(batch_df, batch_id):
         got.extend(tuple(r) for r in batch_df.collect())
 
-    def start():
+    def run():
         stream = (spark.readStream
                   .schema("id string, timestamp long, temperature double")
                   .option("maxFilesPerTrigger", 1).parquet(path))
         out = timers.early_firing_window_counts(stream, window_ms=30_000,
                                                 interval_ms=1_000)
-        return (out.writeStream.foreachBatch(collect_rows)
-                .outputMode("append").option("checkpointLocation", ckpt)
-                .trigger(availableNow=True).start())
+        run_bounded(out, lambda w: w.foreachBatch(collect_rows), ckpt)
 
     # run 1: two batches fill window [0, 30000) — no final fire yet
     for rows in [[("s1", 1_000, 1.0), ("s1", 5_000, 2.0)],
                  [("s1", 27_000, 3.0)]]:
         spark.createDataFrame(rows, "id string, timestamp long, temperature double") \
             .coalesce(1).write.mode("append").parquet(path)
-    q = start()
-    q.awaitTermination(120)
+    run()
     assert not [r for r in got if r[5]]  # no finals yet
 
     # run 2 (fresh query, same checkpoint): watermark passes the window
     for rows in [[("s1", 40_000, 4.0)], [("s1", 80_000, 5.0)]]:
         spark.createDataFrame(rows, "id string, timestamp long, temperature double") \
             .coalesce(1).write.mode("append").parquet(path)
-    q = start()
-    q.awaitTermination(120)
+    run()
     finals = [r for r in got if r[5] and r[1] == 0]
     # (id, window_start, window_end, fire_ms, cnt, is_final); the count
     # includes the two pre-restart rows recovered from the state store
@@ -322,7 +302,8 @@ def test_tws_per_window_early_firing(spark, tmpdir):
     ])
     out = tws.per_window_early_firing_counts(stream, window_ms=30_000,
                                              interval_ms=1_000)
-    _run(out, tmpdir, "early_perw_tws")
+    run_bounded(out, lambda w: w.format("memory").queryName("early_perw_tws"),
+                os.path.join(tmpdir, "ck"))
     rows = spark.sql("SELECT * FROM early_perw_tws").collect()
     w0 = [r for r in rows if r.window_start == 0]
     finals = [r for r in w0 if r.is_final]

@@ -9,8 +9,9 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from examples_scala_spark.queries import REGISTRY  # noqa: E402
 from examples_scala_spark.session import get_spark  # noqa: E402

@@ -14,8 +14,9 @@ Usage: python tools/plan_report.py [sf_dir] > PLANS.md
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from examples_scala_spark.plans.inspect import explain_str  # noqa: E402
 from examples_scala_spark.queries import REGISTRY  # noqa: E402

@@ -27,8 +27,9 @@ from __future__ import annotations
 import re
 import sys
 from collections import Counter
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from examples_scala_spark.plans.inspect import explain_str  # noqa: E402
 from examples_scala_spark.queries import REGISTRY  # noqa: E402
