@@ -2,7 +2,6 @@ from . import (  # noqa: F401
     transforms,
     aggregations,
     joins,
-    late_data,
     side_outputs,
     dedup,
     similarity,

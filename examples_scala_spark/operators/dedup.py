@@ -694,8 +694,7 @@ def _lcp_expr(a: str, b: str) -> F.Column:
 
 def suffix_dup_spans(docs: DataFrame, L: int = 30, chunk: int = 64,
                      text_col: str = "text",
-                     id_col: str = "doc_id",
-                     distinct_reps: bool = True) -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """ExactSubstr with VARIABLE-LENGTH maximal repeated spans — the
     paper-exact form of Lee et al. 2022 ("Deduplicating Training Data
     Makes Language Models Better"), whose reference implementation
@@ -735,13 +734,12 @@ def suffix_dup_spans(docs: DataFrame, L: int = 30, chunk: int = 64,
     loop runs O(max_repeat/chunk) rounds with an eager
     localCheckpoint per round, mirroring the dedup_clusters CC loop.
 
-    distinct_reps=True (default; ROADMAP r9, accepted on a 1.42x
-    10x best-of-2 win: 160.7s -> 113.5s, identical 50018 spans)
-    collapses identical chunks map-side before the per-round
-    lexicographic sort, so the sort runs over distinct chunks only
-    and member rows rejoin on the 32-char class hash instead of
-    carrying chunk text; False keeps the direct full-member window
-    sort (the r7/r8 shape) for A/B."""
+    Each round collapses identical chunks map-side before the
+    lexicographic sort, so the sort runs over distinct chunks only and
+    member rows rejoin on the 32-char class hash instead of carrying
+    chunk text; it replaced the direct full-member window sort on a
+    1.42x 10x best-of-2 win (160.7s -> 113.5s, identical 50018
+    spans)."""
     base = docs.select(
         F.col(id_col), F.col(text_col).alias("t"),
         F.length(text_col).cast("bigint").alias("n"))
@@ -765,7 +763,6 @@ def suffix_dup_spans(docs: DataFrame, L: int = 30, chunk: int = 64,
               # one Spark job instead of two (r12 job-fold)
               .localCheckpoint(eager=False))
     finals: list[DataFrame] = []
-    wcls = Window.partitionBy("cls").orderBy("chunk", id_col, "i")
     csize = chunk
     n_active = active.count()
     spark = docs.sparkSession
@@ -801,64 +798,40 @@ def suffix_dup_spans(docs: DataFrame, L: int = 30, chunk: int = 64,
         # e, next class) — materializing chunk + lag + lead strings
         # tripled the per-round checkpoint payload (measured at the
         # 10x hostile corpus)
-        # equality fast path: on repeat-dense corpora most rows match
-        # a neighbor's ENTIRE chunk (77% in round 0 of the 10x
-        # hostile probe) — plain string equality (early-exit JVM
-        # compare) then answers e = len(chunk) and the char-wise LCP
-        # expression only runs on the minority that diverge inside
-        # the chunk (CASE branches are lazy in codegen)
-        if distinct_reps:
-            # distinct-representative variant (ROADMAP r9 sort
-            # experiment): identical chunks collapse MAP-SIDE via the
-            # partial aggregate (77% of round-0 rows full-match on the
-            # hostile probe), so the lexicographic sort runs over
-            # DISTINCT chunks only. Exact: for a chunk occurring >= 2
-            # times, max-LCP = length(chunk) (an identical neighbor);
-            # for a unique chunk, max-LCP over the class multiset =
-            # max-LCP over its distinct values, and the lexicographic-
-            # neighbor property holds on the distinct set. Members
-            # rejoin on cls2 = md5(cls || chunk) — the group identity
-            # AND the next-round class — shipping 32 hex chars
-            # instead of the chunk text through the member shuffle.
-            ext = ext.withColumn("cls2", F.md5(F.concat("cls", "chunk")))
-            reps = (ext.groupBy("cls", "cls2")
-                    .agg(F.count("*").alias("cnt"),
-                         F.min("chunk").alias("chunk")))
-            wrep = Window.partitionBy("cls").orderBy("chunk", "cls2")
-            reps = (reps
-                    .withColumn("pv", F.lag("chunk").over(wrep))
-                    .withColumn("nx", F.lead("chunk").over(wrep))
-                    .select("cls2",
-                            F.when(F.col("cnt") >= 2,
-                                   F.length("chunk").cast("bigint"))
-                             .otherwise(
-                                 F.greatest(_lcp_expr("chunk", "pv"),
-                                            _lcp_expr("chunk", "nx")))
-                             .alias("e")))
-            ext = (ext.select(F.col(id_col), "i", "matched", "rem",
-                              "cls2")
-                   .join(reps.hint("shuffle_hash"), "cls2")
-                   .select(F.col(id_col), "i", "matched", "rem", "e",
-                           "cls2")
-                   # lazy: the round's bookkeeping agg below
-                   # materializes it (r12 job-fold)
-                   .localCheckpoint(eager=False))
-        else:
-            full = (F.col("chunk").eqNullSafe(F.col("pv"))
-                    | F.col("chunk").eqNullSafe(F.col("nx")))
-            ext = (ext
-                   .withColumn("pv", F.lag("chunk").over(wcls))
-                   .withColumn("nx", F.lead("chunk").over(wcls))
-                   .select(F.col(id_col), "i", "matched", "rem",
-                           F.when(full, F.length("chunk").cast("bigint"))
-                            .otherwise(
-                                F.greatest(_lcp_expr("chunk", "pv"),
-                                           _lcp_expr("chunk", "nx")))
-                            .alias("e"),
-                           F.md5(F.concat("cls", "chunk")).alias("cls2"))
-                   # lazy: the round's bookkeeping agg below
-                   # materializes it (r12 job-fold)
-                   .localCheckpoint(eager=False))
+        # distinct representatives: identical chunks collapse
+        # MAP-SIDE via the partial aggregate (77% of round-0 rows
+        # full-match on the 10x hostile probe), so the lexicographic
+        # sort runs over DISTINCT chunks only. Exact: for a chunk
+        # occurring >= 2 times, max-LCP = length(chunk) (an identical
+        # neighbor); for a unique chunk, max-LCP over the class
+        # multiset = max-LCP over its distinct values, and the
+        # lexicographic-neighbor property holds on the distinct set.
+        # Members rejoin on cls2 = md5(cls || chunk) — the group
+        # identity AND the next-round class — shipping 32 hex chars
+        # instead of the chunk text through the member shuffle.
+        ext = ext.withColumn("cls2", F.md5(F.concat("cls", "chunk")))
+        reps = (ext.groupBy("cls", "cls2")
+                .agg(F.count("*").alias("cnt"),
+                     F.min("chunk").alias("chunk")))
+        wrep = Window.partitionBy("cls").orderBy("chunk", "cls2")
+        reps = (reps
+                .withColumn("pv", F.lag("chunk").over(wrep))
+                .withColumn("nx", F.lead("chunk").over(wrep))
+                .select("cls2",
+                        F.when(F.col("cnt") >= 2,
+                               F.length("chunk").cast("bigint"))
+                         .otherwise(
+                             F.greatest(_lcp_expr("chunk", "pv"),
+                                        _lcp_expr("chunk", "nx")))
+                         .alias("e")))
+        ext = (ext.select(F.col(id_col), "i", "matched", "rem",
+                          "cls2")
+               .join(reps.hint("shuffle_hash"), "cls2")
+               .select(F.col(id_col), "i", "matched", "rem", "e",
+                       "cls2")
+               # lazy: the round's bookkeeping agg below
+               # materializes it (r12 job-fold)
+               .localCheckpoint(eager=False))
         finals.append(
             ext.filter(F.col("e") < csize)
             .select(F.col(id_col), "i",

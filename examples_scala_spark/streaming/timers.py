@@ -16,9 +16,9 @@ identical partial counts; they are coalesced into one fire at the
 latest due tick (documented delta: fewer duplicate partials, same
 final results).
 
-These run with no extra dependencies; the Spark-4
-`transformWithStateInPandas` ports of the same operators live in
-streaming/tws.py (needs protobuf).
+These run with no extra dependencies: Spark's one per-group state
+operator with processing- and event-time timeouts carries every timer
+the reference uses, so no second stateful API is needed.
 """
 
 from __future__ import annotations

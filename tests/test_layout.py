@@ -56,14 +56,14 @@ def test_cell_partitioned_scan_prunes(spark, sf_dir, tmp_path):
     want = ev.filter(F.col("cell") == 3).count()
     assert back.count() == want
 
-def test_compact_parquet_restores_big_files(spark, sf_dir):
+def test_compact_parquet_restores_big_files(spark, sf_dir, tmpdir):
     import glob
-    import tempfile
+    import os
 
     from examples_scala_spark.sources.layout import compact_parquet
 
-    src = tempfile.mkdtemp(prefix="sgs_smallfiles_")
-    dst = tempfile.mkdtemp(prefix="sgs_compacted_")
+    src = os.path.join(tmpdir, "smallfiles")
+    dst = os.path.join(tmpdir, "compacted")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev.repartition(32).write.mode("overwrite").parquet(src)
     assert len(glob.glob(f"{src}/part-*.parquet")) == 32

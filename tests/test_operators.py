@@ -437,20 +437,19 @@ def test_label_centroids_partition_count_invariant(spark):
     assert av == bv
 
 
-def test_dedup_keep_best_argmax_on_duplicates(spark):
+def test_dedup_keep_best_argmax_on_duplicates(spark, tmpdir):
     # two copies of the same text: keep the one with more tokens is
     # impossible (identical), so the doc_id tie-break picks the lower;
     # a third doc with distinct text forms its own group.
     from examples_scala_spark.queries import REGISTRY
-    import tempfile, os
-    d = tempfile.mkdtemp(prefix="sgs_keepbest_")
+    import os
     spark.createDataFrame(
         [(7, "a b c", "en", "s", 5), (3, "a b c", "en", "s", 5),
          (9, "x y", "en", "s", 3)],
         ["doc_id", "text", "lang", "source", "n_chars"],
-    ).write.parquet(os.path.join(d, "documents.parquet"))
+    ).write.parquet(os.path.join(tmpdir, "documents.parquet"))
     out = {r.keep_id: (r.group_size, r.keep_words)
-           for r in REGISTRY["dedup_keep_best"].fn(spark, d).collect()}
+           for r in REGISTRY["dedup_keep_best"].fn(spark, tmpdir).collect()}
     assert out == {3: (2, 3), 9: (1, 2)}
 
 

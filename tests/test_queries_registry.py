@@ -4,6 +4,8 @@ tools/verify_local.py / the driver)."""
 
 from __future__ import annotations
 
+import ast
+
 import duckdb
 import pytest
 
@@ -140,3 +142,78 @@ def test_gate_ordering_invariants():
             outcome, rno = st
             rank.append((1 if outcome == "failed" else 2, rno))
     assert rank == sorted(rank), "tail not oldest-evidence-first"
+
+
+
+# Package modules that no query, program, benchmark or tool imports,
+# each with the reason it stays.
+UNREACHED_MODULES = {
+    "examples_scala_spark.sources.connectors":
+        "Kafka, Delta and JDBC jars are absent here; the tests pin "
+        "their unavailable-error paths",
+    "examples_scala_spark.streaming.monitor":
+        "ROADMAP direction 4 attaches it to queries._run_replay",
+}
+
+
+def _imports(modules, path, package):
+    """(module, name, bound name) for each name the file at `path`
+    imports from a package module; `package` anchors relative
+    imports."""
+    out = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            out += [(a.name, None, None) for a in node.names
+                    if a.name in modules]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                up = package.rsplit(".", node.level - 1)[0]
+                base = f"{up}.{base}" if base else up
+            for a in node.names:
+                sub = f"{base}.{a.name}"
+                if sub in modules:
+                    out.append((sub, None, a.asname or a.name))
+                elif base in modules:
+                    out.append((base, a.name, a.asname or a.name))
+    return out
+
+
+def test_every_package_module_runs_outside_the_tests():
+    """Walk the import graph from the driver entry, the registry, the
+    programs, the benchmarks and the tools: every package module is
+    reached, except those named in UNREACHED_MODULES. Importing a
+    package reaches only the names taken from its `__init__`."""
+    root = Path(__file__).resolve().parents[1]
+    modules, packages = {}, {}
+    for path in (root / "examples_scala_spark").rglob("*.py"):
+        parts = path.relative_to(root).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+            packages[".".join(parts)] = path
+        modules[".".join(parts)] = path
+
+    def resolve(mod, name):
+        # a package passes a name on to the module it re-exports from
+        if mod not in packages:
+            return mod
+        return next((resolve(m, n) for m, n, bound
+                     in _imports(modules, packages[mod], mod)
+                     if name is not None and bound == name), None)
+
+    todo = [("examples_scala_spark.queries", None, None),
+            ("examples_scala_spark.programs", None, None)]
+    for path in [root / "__spark_entry__.py", root / "bench.py",
+                 *(root / "perfbench").glob("*.py"),
+                 *(root / "tools").glob("*.py")]:
+        todo += _imports(modules, path, "")
+    reached = set()
+    while todo:
+        mod, name, _ = todo.pop()
+        mod = resolve(mod, name)
+        if mod is not None and mod not in reached:
+            reached.add(mod)
+            todo += _imports(modules, modules[mod],
+                             mod.rpartition(".")[0])
+    unreached = set(modules) - set(packages) - reached
+    assert unreached == set(UNREACHED_MODULES)

@@ -372,9 +372,8 @@ class TestEpochPlanAgainstReference:
         {"a": 7, "b": 7, "c": 9_000, "d": 12},         # several capped
         {"a": 123, "b": 456, "c": 789, "d": 1011, "e": 5},
     ])
-    def test_matches_python_reference(self, spark, tokens):
+    def test_matches_python_reference(self, spark, tmpdir, tokens):
         from examples_scala_spark.queries import REGISTRY
-        import tempfile
 
         # build a documents table whose per-source token counts are
         # exactly `tokens` (one doc per source, n single-char words)
@@ -383,10 +382,9 @@ class TestEpochPlanAgainstReference:
         df = spark.createDataFrame(
             rows, "doc_id long, text string, lang string, "
                   "source string, n_chars long")
-        d = tempfile.mkdtemp(prefix="sgs_epoch_ref_")
-        df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
+        df.write.mode("overwrite").parquet(f"{tmpdir}/documents.parquet")
         got = {r.source: r.alloc_tokens for r in
-               REGISTRY["mixture_epoch_plan"].fn(spark, d).collect()}
+               REGISTRY["mixture_epoch_plan"].fn(spark, tmpdir).collect()}
         assert got == _epoch_plan_reference(tokens)
 
 

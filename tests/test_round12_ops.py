@@ -1,7 +1,6 @@
 """Round-12 ADVICE fixes: early-firing legacy-checkpoint tolerance,
-connected_components max_iterations validation, delta_upsert_writer's
-explicit order_col, and the tws late-tagger timeMode flip (the last is
-execution-proven only under protobuf — test_tws carries it)."""
+connected_components max_iterations validation and delta_upsert_writer's
+explicit order_col."""
 
 from __future__ import annotations
 

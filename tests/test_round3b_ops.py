@@ -225,7 +225,7 @@ def test_gopher_flags_thresholds_are_exact_integer_boundaries(spark):
 
 # ------------------------------------------------------- growth accounting
 
-def test_lifecycle_hand_case(spark):
+def test_lifecycle_hand_case(spark, tmpdir):
     # user 1: days 1,2,4  user 2: day 2 only; horizon max_day = 4
     rows = [(1, 1), (1, 2), (1, 4), (2, 2)]
     import datetime
@@ -237,8 +237,8 @@ def test_lifecycle_hand_case(spark):
            .withColumn("event_type", F.lit("click")) \
            .withColumn("props", F.lit("{}"))
     import examples_scala_spark.queries as Q
-    import tempfile, os
-    d = tempfile.mkdtemp()
+    import os
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     out = {r["day"]: (r["n_new"], r["n_retained"], r["n_resurrected"],
                       r["n_churned"])
@@ -313,7 +313,7 @@ def test_inverted_index_roundtrip(spark, sf_dir):
 
 # -------------------------------------------------------------------- mi
 
-def test_mutual_information_is_nonneg_and_zero_when_independent(spark, sf_dir):
+def test_mutual_information_is_nonneg_and_zero_when_independent(spark, sf_dir, tmpdir):
     from examples_scala_spark.queries import REGISTRY
     out = REGISTRY["mutual_information_bands"].fn(spark, sf_dir).collect()
     mi = sum(r["mi_term"] for r in out)
@@ -327,8 +327,8 @@ def test_mutual_information_is_nonneg_and_zero_when_independent(spark, sf_dir):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    import tempfile, os
-    d = tempfile.mkdtemp()
+    import os
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     ind = REGISTRY["mutual_information_bands"].fn(spark, d).collect()
     assert abs(sum(r["mi_term"] for r in ind)) < 1e-4
@@ -336,8 +336,8 @@ def test_mutual_information_is_nonneg_and_zero_when_independent(spark, sf_dir):
 
 # ------------------------------------------------------------- containment
 
-def test_containment_pairs_asymmetric_on_crafted_subset(spark):
-    import tempfile, os
+def test_containment_pairs_asymmetric_on_crafted_subset(spark, tmpdir):
+    import os
     long = " ".join(f"w{i}" for i in range(40))
     short = " ".join(f"w{i}" for i in range(10, 22))  # contained run
     other = " ".join(f"x{i}" for i in range(40))
@@ -346,7 +346,7 @@ def test_containment_pairs_asymmetric_on_crafted_subset(spark):
          (2, short, "en", "s", len(short)),
          (3, other, "en", "s", len(other))],
         "doc_id long, text string, lang string, source string, n_chars long")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     docs.write.parquet(os.path.join(d, "documents.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = REGISTRY["doc_containment_pairs"].fn(spark, d).collect()
@@ -374,14 +374,14 @@ def test_stream_cusum_trace_equals_batch_operator(spark, sf_dir):
 
 # ---------------------------------------------------------------- logppl
 
-def test_bigram_logppl_hand_computed(spark):
+def test_bigram_logppl_hand_computed(spark, tmpdir):
     import math
-    import tempfile, os
+    import os
     # corpus: "a b" x3 docs and one "a c" doc
     docs = spark.createDataFrame(
         [(1, "a b"), (2, "a b"), (3, "a b"), (4, "a c"), (5, "solo")],
         "doc_id long, text string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     docs.write.parquet(os.path.join(d, "documents.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["doc_id"]: r.asDict()
@@ -424,9 +424,9 @@ def test_segment_overlap_exact_and_bounds(spark, sf_dir):
 
 # ------------------------------------------------------------- recommender
 
-def test_item_cosine_hand_computed(spark):
+def test_item_cosine_hand_computed(spark, tmpdir):
     import math
-    import tempfile, os
+    import os
     # orders: {1,2} x3, {1,3} x1 -> c12=3, c13=1; c1=4, c2=3, c3=1
     rows = []
     for o, parts in [(10, (1, 2)), (11, (1, 2)), (12, (1, 2)),
@@ -441,7 +441,7 @@ def test_item_cosine_hand_computed(spark):
         "l_linenumber int, l_quantity double, l_extendedprice double, "
         "l_discount double, l_tax double, l_returnflag string, "
         "l_linestatus string, l_shipdate timestamp")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     li.write.parquet(os.path.join(d, "lineitem.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {(r["item"], r["neighbor"]): r["cosine"]
@@ -466,15 +466,15 @@ def test_item_cosine_topk_bounded_and_ranked(spark, sf_dir):
 
 # ----------------------------------------------------------------- entropy
 
-def test_source_entropy_uniform_and_degenerate(spark):
+def test_source_entropy_uniform_and_degenerate(spark, tmpdir):
     import math
-    import tempfile, os
+    import os
     docs = spark.createDataFrame(
         [(1, "a b c d", "en", "uniform", 7),
          (2, "x x x x", "en", "constant", 7),
          (3, "p p q", "en", "skewed", 5)],
         "doc_id long, text string, lang string, source string, n_chars long")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     docs.write.parquet(os.path.join(d, "documents.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["source"]: r.asDict()
@@ -489,9 +489,9 @@ def test_source_entropy_uniform_and_degenerate(spark):
 
 # ---------------------------------------------------------- decayed counts
 
-def test_decayed_counts_closed_form_equals_recursion(spark):
+def test_decayed_counts_closed_form_equals_recursion(spark, tmpdir):
     import math
-    import datetime, tempfile, os
+    import datetime, os
     base = datetime.datetime(2024, 1, 1)
     offsets = [0, 3600, 7200, 50000, 86400, 172800]  # seconds
     rows = [(i, base + datetime.timedelta(seconds=s), i % 3, "t", 1.0, "{}")
@@ -499,7 +499,7 @@ def test_decayed_counts_closed_form_equals_recursion(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = REGISTRY["events_decayed_counts"].fn(spark, d).collect()[0]
@@ -518,8 +518,8 @@ def test_decayed_counts_closed_form_equals_recursion(spark):
 
 # -------------------------------------------------------------------- psi
 
-def test_psi_zero_for_identical_halves_and_positive_for_shift(spark):
-    import datetime, tempfile, os
+def test_psi_zero_for_identical_halves_and_positive_for_shift(spark, tmpdir):
+    import datetime, os
     base = datetime.datetime(2024, 1, 1)
     rows = []
     # 'stable': same value cycle in both halves -> PSI 0
@@ -533,7 +533,7 @@ def test_psi_zero_for_identical_halves_and_positive_for_shift(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["event_type"]: r.asDict()
@@ -563,8 +563,8 @@ def test_benford_audit_shares_and_expectation(spark, sf_dir):
 
 # ------------------------------------------------------------------- paths
 
-def test_top_paths_hand_case(spark):
-    import datetime, tempfile, os
+def test_top_paths_hand_case(spark, tmpdir):
+    import datetime, os
     base = datetime.datetime(2024, 1, 1)
     seqs = {1: ["view", "click", "purchase", "view"],
             2: ["view", "click", "purchase"],
@@ -579,7 +579,7 @@ def test_top_paths_hand_case(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["path"]: r["n"]
@@ -591,8 +591,8 @@ def test_top_paths_hand_case(spark):
 
 # -------------------------------------------------------------------- zipf
 
-def test_zipf_slope_exact_power_law(spark):
-    import tempfile, os
+def test_zipf_slope_exact_power_law(spark, tmpdir):
+    import os
     # construct a source whose word frequencies are exactly c/rank
     words = []
     for rank in range(1, 21):
@@ -600,7 +600,7 @@ def test_zipf_slope_exact_power_law(spark):
     docs = spark.createDataFrame(
         [(1, " ".join(words), "en", "pow", 1)],
         "doc_id long, text string, lang string, source string, n_chars long")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     docs.write.parquet(os.path.join(d, "documents.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = REGISTRY["source_zipf_slope"].fn(spark, d).collect()[0]
@@ -610,13 +610,13 @@ def test_zipf_slope_exact_power_law(spark):
     assert out["zipf_slope"] < -1.0
 
 
-def test_zipf_slope_flat_for_uniform_frequencies(spark):
-    import tempfile, os
+def test_zipf_slope_flat_for_uniform_frequencies(spark, tmpdir):
+    import os
     words = [f"w{i}" for i in range(30)] * 4  # all freq 4
     docs = spark.createDataFrame(
         [(1, " ".join(words), "en", "flat", 1)],
         "doc_id long, text string, lang string, source string, n_chars long")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     docs.write.parquet(os.path.join(d, "documents.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = REGISTRY["source_zipf_slope"].fn(spark, d).collect()[0]
@@ -649,8 +649,8 @@ def test_cohort_ltv_identities(spark, sf_dir):
 
 # ---------------------------------------------------------------- abc/xyz
 
-def test_abc_xyz_classes_and_cv(spark):
-    import datetime, tempfile, os
+def test_abc_xyz_classes_and_cv(spark, tmpdir):
+    import datetime, os
     rows = []
     ln = 0
     # part 1: constant 10/week for 8 weeks, high revenue -> A, X
@@ -668,7 +668,7 @@ def test_abc_xyz_classes_and_cv(spark):
               "l_linenumber int, l_quantity double, l_extendedprice double, "
               "l_discount double, l_tax double, l_returnflag string, "
               "l_linestatus string, l_shipdate timestamp")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     li.write.parquet(os.path.join(d, "lineitem.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["part"]: r.asDict()
@@ -761,8 +761,8 @@ def test_ivfpq_candidates_come_from_probed_cells_and_recall(spark, sf_dir):
 
 # ------------------------------------------------------------------ wilson
 
-def test_wilson_bound_ranks_small_samples_below(spark):
-    import tempfile, os, datetime
+def test_wilson_bound_ranks_small_samples_below(spark, tmpdir):
+    import os, datetime
     rows = []
     # supplier 1: 1 return of 2;  supplier 2: 40 returns of 100
     specs = {1: (2, 1), 2: (100, 40)}
@@ -778,7 +778,7 @@ def test_wilson_bound_ranks_small_samples_below(spark):
               "l_linenumber int, l_quantity double, l_extendedprice double, "
               "l_discount double, l_tax double, l_returnflag string, "
               "l_linestatus string, l_shipdate timestamp")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     li.write.parquet(os.path.join(d, "lineitem.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["supplier"]: r.asDict()
@@ -798,8 +798,8 @@ def test_wilson_bound_ranks_small_samples_below(spark):
 
 # ------------------------------------------------------------------ bursts
 
-def test_burst_minutes_exact_threshold(spark):
-    import datetime, tempfile, os
+def test_burst_minutes_exact_threshold(spark, tmpdir):
+    import datetime, os
     base = datetime.datetime(2024, 1, 1)
     rows = []
     eid = 0
@@ -814,7 +814,7 @@ def test_burst_minutes_exact_threshold(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = REGISTRY["events_burst_minutes"].fn(spark, d).collect()
@@ -890,8 +890,8 @@ def test_stream_ab_guardrail_equals_batch(spark, sf_dir):
 
 # ------------------------------------------------------- funnel latency
 
-def test_funnel_latency_hand_case(spark):
-    import datetime, tempfile, os
+def test_funnel_latency_hand_case(spark, tmpdir):
+    import datetime, os
     base = datetime.datetime(2024, 1, 1)
     rows = [
         # u1: view at t0, purchase at +10s -> converts in 10s
@@ -910,7 +910,7 @@ def test_funnel_latency_hand_case(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = REGISTRY["funnel_time_percentiles"].fn(spark, d).collect()[0]
@@ -938,8 +938,8 @@ def test_band_sweep_monotone_in_bands(spark, sf_dir):
 
 # -------------------------------------------------------------------- chi2
 
-def test_chi2_near_zero_when_independent(spark):
-    import datetime, tempfile, os
+def test_chi2_near_zero_when_independent(spark, tmpdir):
+    import datetime, os
     rows = []
     # type = i%3, hour = (i//3)%24 — exactly balanced => chi2 = 0
     for i in range(3 * 24 * 5):
@@ -948,7 +948,7 @@ def test_chi2_near_zero_when_independent(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = REGISTRY["events_chi2_independence"].fn(spark, d).collect()
@@ -977,12 +977,12 @@ def test_chi2_matches_scipy_free_formula(spark, sf_dir):
 
 # ---------------------------------------------------------- coverage curve
 
-def test_coverage_curve_hand_case_and_monotone(spark, sf_dir):
-    import tempfile, os
+def test_coverage_curve_hand_case_and_monotone(spark, sf_dir, tmpdir):
+    import os
     docs = spark.createDataFrame(
         [(1, "a a a a b b c d", "en", "s", 15)],
         "doc_id long, text string, lang string, source string, n_chars long")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     docs.write.parquet(os.path.join(d, "documents.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["k"]: r["coverage"]
@@ -1050,8 +1050,8 @@ def test_quality_corr_matches_numpy(spark, sf_dir):
     assert abs(out["pearson_r"] - r) < 1e-5
 
 
-def test_autocorr_detects_constructed_memory(spark):
-    import datetime, tempfile, os
+def test_autocorr_detects_constructed_memory(spark, tmpdir):
+    import datetime, os
     rows = []
     base = datetime.datetime(2024, 1, 1)
     # 'trend': strictly increasing -> autocorr ~ 1
@@ -1064,7 +1064,7 @@ def test_autocorr_detects_constructed_memory(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["event_type"]: r["lag1_autocorr"]
@@ -1097,11 +1097,11 @@ def test_stream_hll_equals_batch_sketch(spark, sf_dir):
 
 # -------------------------------------------------------------------- gini
 
-def test_gini_known_distributions(spark):
-    import datetime, tempfile, os
+def test_gini_known_distributions(spark, tmpdir):
+    import datetime, os
     base = datetime.datetime(2024, 1, 1)
 
-    def write(counts):
+    def write(name, counts):
         rows = []
         eid = 0
         for u, c in enumerate(counts):
@@ -1111,16 +1111,16 @@ def test_gini_known_distributions(spark):
         ev = spark.createDataFrame(
             rows, "event_id long, ts timestamp, user_id long, "
                   "event_type string, value double, props string")
-        d = tempfile.mkdtemp()
+        d = os.path.join(tmpdir, name)
         ev.write.parquet(os.path.join(d, "events.parquet"))
         return d
 
     from examples_scala_spark.queries import REGISTRY
     equal = REGISTRY["user_activity_gini"].fn(
-        spark, write([5] * 40)).collect()[0]
+        spark, write("equal", [5] * 40)).collect()[0]
     assert equal["gini"] == 0.0
     skewed = REGISTRY["user_activity_gini"].fn(
-        spark, write([1] * 39 + [961])).collect()[0]
+        spark, write("skewed", [1] * 39 + [961])).collect()[0]
     # closed form for one dominant user: G ~ (n-1)/n * dominant share
     assert skewed["gini"] > 0.9
     # numpy cross-check on the skewed case
@@ -1133,8 +1133,8 @@ def test_gini_known_distributions(spark):
 
 # --------------------------------------------------------------- runs test
 
-def test_runs_test_detects_regimes_and_oscillation(spark):
-    import datetime, tempfile, os
+def test_runs_test_detects_regimes_and_oscillation(spark, tmpdir):
+    import datetime, os
     base = datetime.datetime(2024, 1, 1)
     rows = []
     eid = 0
@@ -1149,7 +1149,7 @@ def test_runs_test_detects_regimes_and_oscillation(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
-    d = tempfile.mkdtemp()
+    d = tmpdir
     ev.write.parquet(os.path.join(d, "events.parquet"))
     from examples_scala_spark.queries import REGISTRY
     out = {r["event_type"]: r.asDict()
@@ -1536,13 +1536,13 @@ def test_substring_dedup_incremental_equals_batch_restriction(spark):
     assert inc == full
 
 
-def test_mixture_waterfill_exact_budget_and_caps(spark):
+def test_mixture_waterfill_exact_budget_and_caps(spark, tmpdir):
     """Water-filling invariants on a forced-redistribution corpus:
     tiny sources keep everything (rate 1), big sources share one
     common lambda, and the total allocation hits the budget B = half
     the corpus tokens to within rounding."""
     from examples_scala_spark.queries import REGISTRY
-    import tempfile, os
+    import os
 
     rows = []
     did = 0
@@ -1552,7 +1552,7 @@ def test_mixture_waterfill_exact_budget_and_caps(spark):
             rows.append((did, " ".join(["w"] * words), "en", src,
                          words * 2))
             did += 1
-    d = tempfile.mkdtemp(prefix="sgs_wf_")
+    d = tmpdir
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string,"
               " n_chars long").write.mode("overwrite") \
@@ -1572,16 +1572,14 @@ def test_mixture_waterfill_exact_budget_and_caps(spark):
 
 # ---------------------------------------- round-5 session-3 additions
 
-def _write_tbl(spark, rows, schema, name):
+def _write_tbl(spark, d, rows, schema, name):
     import os
-    import tempfile
-    d = tempfile.mkdtemp(prefix="sgs_s3_")
     spark.createDataFrame(rows, schema).write.mode("overwrite") \
         .parquet(os.path.join(d, f"{name}.parquet"))
     return d
 
 
-def test_kanon_risk_audit_class_census(spark):
+def test_kanon_risk_audit_class_census(spark, tmpdir):
     """Hand-built QI classes: one k>=5 class, one class of 3, two
     singletons across two segments — the census, singleton, and
     below-k record counts must match exact hand counts."""
@@ -1600,7 +1598,7 @@ def test_kanon_risk_audit_class_census(spark):
     # segment B / nation 3 / band -1 (bal -500): singleton
     rows.append((ck, f"c{ck}", 3, -500.0, "B")); ck += 1
     d = _write_tbl(
-        spark, rows,
+        spark, tmpdir, rows,
         "c_custkey long, c_name string, c_nationkey long, "
         "c_acctbal double, c_mktsegment string", "customer")
     out = {r["c_mktsegment"]: r for r in
@@ -1616,7 +1614,7 @@ def test_kanon_risk_audit_class_census(spark):
     assert b["pct_below_k"] == 1.0
 
 
-def test_compaction_bin_packing_matches_sequential_packer(spark):
+def test_compaction_bin_packing_matches_sequential_packer(spark, tmpdir):
     """The bin assignment must equal a pure-Python sequential
     accumulate-to-target packer over the same (source, file) manifest,
     including an oversized file occupying its own span."""
@@ -1638,7 +1636,7 @@ def test_compaction_bin_packing_matches_sequential_packer(spark):
         rows.append((fid * 50 + off, "x", "en", src, byts))
         did += 1
     d = _write_tbl(
-        spark, rows,
+        spark, tmpdir, rows,
         "doc_id long, text string, lang string, source string, "
         "n_chars long", "documents")
     out = {(r["source"], r["bin"]): r for r in
@@ -1666,7 +1664,7 @@ def test_compaction_bin_packing_matches_sequential_packer(spark):
     assert out[("s1", 2)]["first_file"] == 4
 
 
-def test_doc_ngram_novelty_first_occurrence_semantics(spark):
+def test_doc_ngram_novelty_first_occurrence_semantics(spark, tmpdir):
     """doc0 introduces everything (novelty 1), an exact duplicate
     later scores 0, a half-new doc scores its new-shingle fraction,
     and sub-3-word docs are absent from the output."""
@@ -1679,7 +1677,7 @@ def test_doc_ngram_novelty_first_occurrence_semantics(spark):
         (3, "too short", "en", "s", 9),                    # no shingles
     ]
     d = _write_tbl(
-        spark, rows,
+        spark, tmpdir, rows,
         "doc_id long, text string, lang string, source string, "
         "n_chars long", "documents")
     out = {r["doc_id"]: r for r in
@@ -1714,7 +1712,7 @@ def _pav_isotonic(bands):
     return out
 
 
-def test_isotonic_calibration_equals_pav_on_crafted_bands(spark):
+def test_isotonic_calibration_equals_pav_on_crafted_bands(spark, tmpdir):
     """Hand-built corpus with non-monotone per-band high-quality rates
     [1.0, 0.25, 0.5] — the minimax formulation must pool all three
     blocks exactly like pool-adjacent-violators (7/12 everywhere)."""
@@ -1748,7 +1746,7 @@ def test_isotonic_calibration_equals_pav_on_crafted_bands(spark):
     for txt in (g2, g2, b2, b2):
         rows.append((did, txt, "en", "s", len(txt))); did += 1
     d = _write_tbl(
-        spark, rows,
+        spark, tmpdir, rows,
         "doc_id long, text string, lang string, source string, "
         "n_chars long", "documents")
     out = {r["band"]: r for r in
@@ -1873,7 +1871,7 @@ def test_dp_noised_histogram_matches_python_mechanism(spark):
     assert len(ref) < len(cells)
 
 
-def test_rater_agreement_kappa_hand_confusion_matrix(spark):
+def test_rater_agreement_kappa_hand_confusion_matrix(spark, tmpdir):
     """Crafted corpus with a known 2x2 confusion matrix between the
     composite-score rater and the Gopher rater; kappa must equal the
     closed form on exact integer counts."""
@@ -1896,7 +1894,7 @@ def test_rater_agreement_kappa_hand_confusion_matrix(spark):
     for _ in range(3):
         rows.append((did, neither, "en", "s", len(neither))); did += 1
     d = _write_tbl(
-        spark, rows,
+        spark, tmpdir, rows,
         "doc_id long, text string, lang string, source string, "
         "n_chars long", "documents")
     [r] = REGISTRY["rater_agreement_kappa"].fn(spark, d).collect()

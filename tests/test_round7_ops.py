@@ -230,11 +230,10 @@ class TestDecodeRobustness:
         assert out[4] == _fake_decode(b"RIFFxxxxWAVE", "audio/wav")
 
 
-def _brute_spans(texts):
+def _brute_spans(texts, L=5):
     """Pure-Python reference for suffix_dup_spans (O(n^2 * len)):
     dup_len(p) by direct common-prefix scan against every other
     position, then the containment filter."""
-    L = 5
     out = []
     for d, t in texts:
         kept, mx = [], -1

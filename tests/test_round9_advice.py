@@ -148,25 +148,26 @@ class TestMaxQueriesCap:
 
 class TestSuffixDistinctReps:
     def test_parity_with_direct_sort(self, spark):
-        # the distinct-representative sort (ROADMAP r9, default) must
-        # produce span-for-span identical output to the direct
-        # full-member window sort on a corpus with long repeats,
-        # multi-occurrence chunks, and early-finalizing members
+        # the distinct-representative sort (ROADMAP r9) must produce
+        # span-for-span the output of the direct brute-force scan on a
+        # corpus with long repeats, multi-occurrence chunks, and
+        # early-finalizing members; chunk=1 takes three rounds of the
+        # chunk loop
         from examples_scala_spark.operators.dedup import suffix_dup_spans
-        long_rep = "the quick brown fox jumps over the lazy dog " * 8
-        docs = spark.createDataFrame(
-            [(1, "A" * 10 + long_rep + "B" * 10),
-             (2, "C" * 5 + long_rep + "D" * 25),
-             (3, long_rep + long_rep),               # self-repeat
-             (4, "E" * 40 + long_rep[:47] + "F" * 9),  # partial
-             (5, "unique text with no repeats at all here okay")],
-            "doc_id long, text string")
-        a = suffix_dup_spans(docs, L=30, chunk=16, distinct_reps=False) \
-            .orderBy("doc_id", "span_start").collect()
-        b = suffix_dup_spans(docs, L=30, chunk=16, distinct_reps=True) \
-            .orderBy("doc_id", "span_start").collect()
-        assert a == b
-        assert len(a) > 0
+        from test_round7_ops import _brute_spans
+        long_rep = "quick brown fox " * 4
+        texts = [(1, "A" * 10 + long_rep + "B" * 10),
+                 (2, "C" * 5 + long_rep + "D" * 25),
+                 (3, long_rep + long_rep),               # self-repeat
+                 (4, "E" * 12 + long_rep[:21] + "F" * 9),  # partial
+                 (5, "unique text, no repeats")]
+        got = sorted(
+            (r.doc_id, r.span_start, r.span_len)
+            for r in suffix_dup_spans(
+                spark.createDataFrame(texts, "doc_id long, text string"),
+                L=12, chunk=1).collect())
+        assert got == _brute_spans(texts, L=12)
+        assert len(got) > 0
 
 
 class TestTopNgramCharFraction:

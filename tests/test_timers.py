@@ -1,14 +1,14 @@
-"""Timer-semantics ports: W4 early firing, T5 late capture (streaming/
-timers.py, runnable anywhere) and their transformWithStateInPandas
-twins (streaming/tws.py, skipped where protobuf is unavailable)."""
+"""Timer-semantics ports: W4 early firing, T5 late capture and T7
+updating windows (streaming/timers.py)."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
-from examples_scala_spark.streaming import timers, tws
+from examples_scala_spark.streaming import timers
 from examples_scala_spark.streaming.sinks import run_bounded
 
 
@@ -88,90 +88,6 @@ def test_late_rows_tagged_not_dropped(spark, tmpdir):
     assert rows[10_000] is True      # captured AND tagged, not dropped
     assert rows[70_000] is False
     assert rows[60_000] is False     # first batch: watermark still 0
-
-
-# ---------------------------------------------------------------
-# transformWithStateInPandas twins — need protobuf (real clusters)
-# ---------------------------------------------------------------
-
-needs_tws = pytest.mark.skipif(
-    not tws.HAS_PROTOBUF,
-    reason="transformWithStateInPandas state server needs protobuf")
-
-
-@needs_tws
-def test_tws_ttl_delta_alerts(spark, tmpdir):
-    tws.enable_tws(spark)
-    stream = _staged_stream(spark, tmpdir, [
-        [("s1", 1, 10.0), ("s1", 2, 10.5), ("s1", 3, 20.0),
-         ("s2", 1, 5.0), ("s2", 2, 5.1)],
-    ])
-    out = tws.ttl_delta_alerts(stream, threshold=1.7, ttl_ms=3_600_000)
-    run_bounded(out, lambda w: w.format("memory").queryName("ttl_alerts"),
-                os.path.join(tmpdir, "ck"))
-    got = [(r.id, r.temperature, round(r.diff, 3))
-           for r in spark.sql("SELECT * FROM ttl_alerts").collect()]
-    assert got == [("s1", 20.0, 9.5)]
-
-
-@needs_tws
-def test_tws_rise_warning_timer_register_and_delete(spark, tmpdir):
-    tws.enable_tws(spark)
-    stream = _staged_stream(spark, tmpdir, [
-        [("s1", 1, 10.0), ("s1", 2, 11.0), ("s2", 1, 10.0),
-         ("s2", 2, 11.0), ("s2", 3, 9.0)],
-        [("s1", 3, 12.0)],
-        [("s1", 4, 13.0)],
-    ])
-    out = tws.temperature_rise_warnings_tws(stream, rise_ms=1)
-    run_bounded(out, lambda w: w.format("memory").queryName("rise_tws"),
-                os.path.join(tmpdir, "ck"))
-    got = {r.id for r in spark.sql("SELECT * FROM rise_tws").collect()}
-    assert "s1" in got and "s2" not in got
-
-
-@needs_tws
-def test_tws_late_rows_tagged_not_dropped(spark, tmpdir):
-    # the TWS twin of timers.tag_late_rows: timeMode='processingTime'
-    # (r12 fix) — 'eventTime' mode late-record-filters the rows this
-    # operator exists to TAG before handleInputRows (r11 find), and
-    # 'none' (the r11 choice) makes get_timestamps() hard-return
-    # (-1, -1) so is_late would always be False (r12 ADVICE find);
-    # processingTime keeps late filtering off while the real event-time
-    # watermark is still fetched from the JVM
-    tws.enable_tws(spark)
-    stream = _staged_stream(spark, tmpdir, [
-        [("s1", 60_000, 1.0)],
-        [("s1", 10_000, 2.0), ("s1", 70_000, 3.0)],
-    ])
-    out = tws.tag_late_rows(stream, watermark_delay="5 seconds")
-    run_bounded(out, lambda w: w.format("memory").queryName("late_tws"),
-                os.path.join(tmpdir, "ck"))
-    rows = {r.timestamp: r.is_late
-            for r in spark.sql("SELECT * FROM late_tws").collect()}
-    assert rows[10_000] is True      # captured AND tagged, not dropped
-    assert rows[70_000] is False
-
-
-@needs_tws
-def test_tws_early_firing(spark, tmpdir):
-    tws.enable_tws(spark)
-    stream = _staged_stream(spark, tmpdir, [
-        [("s1", 1_000, 1.0), ("s1", 5_000, 2.0), ("s1", 27_000, 3.0)],
-        [("s1", 40_000, 4.0)],
-        [("s1", 80_000, 5.0)],
-    ])
-    out = tws.early_firing_window_counts(stream, window_ms=30_000,
-                                         interval_ms=1_000)
-    run_bounded(out, lambda w: w.format("memory").queryName("early_tws"),
-                os.path.join(tmpdir, "ck"))
-    rows = spark.sql("SELECT * FROM early_tws").collect()
-    finals = [r for r in rows if r.is_final and r.window_start == 0]
-    assert len(finals) == 1 and finals[0].cnt == 3
-
-
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
 
 
 @settings(max_examples=5, deadline=None,
@@ -290,44 +206,3 @@ def test_early_firing_state_survives_restart(spark, tmpdir):
     # (id, window_start, window_end, fire_ms, cnt, is_final); the count
     # includes the two pre-restart rows recovered from the state store
     assert [(r[4], r[3]) for r in finals] == [(3, 30_000)]
-
-
-@needs_tws
-def test_tws_per_window_early_firing(spark, tmpdir):
-    tws.enable_tws(spark)
-    stream = _staged_stream(spark, tmpdir, [
-        [("s1", 1_000, 1.0), ("s1", 5_000, 2.0), ("s1", 27_000, 3.0)],
-        [("s1", 40_000, 4.0)],
-        [("s1", 80_000, 5.0)],
-    ])
-    out = tws.per_window_early_firing_counts(stream, window_ms=30_000,
-                                             interval_ms=1_000)
-    run_bounded(out, lambda w: w.format("memory").queryName("early_perw_tws"),
-                os.path.join(tmpdir, "ck"))
-    rows = spark.sql("SELECT * FROM early_perw_tws").collect()
-    w0 = [r for r in rows if r.window_start == 0]
-    finals = [r for r in w0 if r.is_final]
-    partials = [r for r in w0 if not r.is_final]
-    # exactly one FIRE_AND_PURGE, stamped at the window end
-    assert [(r.cnt, r.fire_ms) for r in finals] == [(3, 30_000)]
-    # every partial fire is an interval tick strictly inside the window
-    assert all(0 < r.fire_ms < 30_000 and r.fire_ms % 1_000 == 0
-               for r in partials)
-    # window [30000,60000) holds the ts=40000 row and also finalizes
-    w1_finals = [r for r in rows if r.window_start == 30_000 and r.is_final]
-    assert [(r.cnt, r.fire_ms) for r in w1_finals] == [(1, 60_000)]
-
-
-def test_per_window_timer_attribution_arithmetic():
-    # the arithmetic that replaces a timer->window MapState: ticks are
-    # strictly inside a window, boundaries are end timers.
-    p = tws.PerWindowEarlyFiringCounter(window_ms=30_000, interval_ms=1_000)
-    # first tick after the watermark, clipped to the window
-    assert p._first_tick(0, 0) == 1_000
-    assert p._first_tick(0, 14_500) == 15_000
-    assert p._first_tick(0, 29_000) is None      # next tick would be >= end
-    assert p._first_tick(30_000, 0) == 31_000    # window not yet reached
-    # boundary timestamps attribute to the ENDING window, not a tick
-    assert 30_000 % p.window_ms == 0
-    assert 29_000 - 29_000 % p.window_ms == 0    # tick inside [0, 30000)
-    assert 31_000 - 31_000 % p.window_ms == 30_000
