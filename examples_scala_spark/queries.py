@@ -3908,10 +3908,6 @@ def _events_stream(spark, sf_dir):
     return normalize_ts(src, "ts")
 
 
-#: The state-store partitions of every bounded replay.
-REPLAY_STATE_PARTITIONS = 8
-
-
 def _replay(spark, parts, per_trigger=1):
     """Stage a bounded replay and return it as a streaming DataFrame.
 
@@ -3943,32 +3939,28 @@ def _replay(spark, parts, per_trigger=1):
             .option("recursiveFileLookup", "true").parquet(d))
 
 
-def _run_replay(spark, out, sink):
+def _run_replay(out, sink):
     """Run the bounded replay `out` to completion through
-    `sinks.run_bounded`, on a throwaway checkpoint.
+    `sinks.run_bounded`, on a throwaway checkpoint that is deleted
+    whatever happens.
 
-    State-store partitioning is sized to the REPLAY's volume
-    (REPLAY_STATE_PARTITIONS), not the session's scale default: a
-    streaming query locks its stateful shuffle partitioning into the
-    (fresh) checkpoint at start, and at correctness-gate SF the
-    per-micro-batch fixed cost of 32 state stores dominates runtime
-    (measured 2-4x on the stream-stream joins). A production
-    deployment sizes this to the stream rate — the knob is per-query,
-    exactly as here. The session conf is restored and the checkpoint
-    deleted whatever happens."""
+    Every stream_* builder calls `tune` before it starts its replay,
+    so each stateful operator runs `session.STREAM_STATE_PARTITIONS`
+    state stores, not one per core: a streaming query locks its
+    stateful shuffle partitioning into the (fresh) checkpoint at
+    start, and every store commits files in every micro-batch (the 28
+    replays at sf0.1 took 146 and 152 s of query time at 8 stores, 125
+    and 125 s at 1, every hash equal). A production deployment sizes
+    this to the stream rate, per query."""
     import shutil
     import tempfile
 
     from .streaming.sinks import run_bounded
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     ckpt = tempfile.mkdtemp(prefix="sgs_ckpt_")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(REPLAY_STATE_PARTITIONS))
         run_bounded(out, sink, ckpt)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
@@ -3976,7 +3968,7 @@ def _run_to_memory(spark, out, name, mode="append"):
     """Run a bounded replay to a memory sink and return the
     materialized table (held driver-side, so callers' batch reads do
     not depend on the deleted checkpoint)."""
-    _run_replay(spark, out, lambda w: (
+    _run_replay(out, lambda w: (
         w.format("memory").queryName(name).outputMode(mode)))
     return spark.table(name)
 
@@ -7295,7 +7287,7 @@ def stream_upsert_state(spark, sf_dir):
                 F.sum(F.col("value").cast("decimal(18,6)")).alias("total"))
            .select("user_id", F.struct("n", "total").alias("v")))
     table = tempfile.mkdtemp(prefix="sgs_upsert_state_")
-    _run_replay(spark, agg, lambda w: (
+    _run_replay(agg, lambda w: (
         w.foreachBatch(parquet_upsert_writer(table, "user_id", "v", 4))
         .outputMode("update").queryName("stream_upsert_state_merge")))
     return (spark.read.parquet(table)
@@ -7339,7 +7331,7 @@ def stream_ingest_compact(spark, sf_dir):
          .partitionBy("event_type")
          .parquet(os.path.join(land, f"ingest_batch={batch_id}")))
 
-    _run_replay(spark, src, lambda w: (
+    _run_replay(src, lambda w: (
         w.foreachBatch(land_batch).queryName("stream_ingest_compact_land")))
     compact_parquet(spark, land, serve)
     return (spark.read.parquet(serve)
@@ -9121,7 +9113,7 @@ def stream_manifest_maintenance(spark, sf_dir):
     third = F.least(F.lit(2), ((us - lo) * 3 / max(hi - lo, 1)).cast("int"))
     src = _replay(spark, [ev.filter(third == k).drop("ts").coalesce(1)
                           for k in range(3)]).withColumn("h", h)
-    _run_replay(spark, src, lambda w: (
+    _run_replay(src, lambda w: (
         w.foreachBatch(merge_batch)
         .queryName("stream_manifest_maintenance_merge")))
     return (spark.read.parquet(os.path.join(manifest_dir, "current"))

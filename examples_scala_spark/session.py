@@ -9,8 +9,11 @@ builder applies the settings we want on every session:
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
 - UTC session timezone (determinism of every time expression)
 - Arrow for all Python<->JVM transfer
-- shuffle partitions sized to the local core count; on a real cluster
-  AQE coalescing makes the initial number mostly a ceiling.
+- two partition counts. Batch shuffles start from the local core count
+  through AQE's initial partition number; on a real cluster AQE
+  coalescing makes it mostly a ceiling. Streams run with AQE off, so
+  they read `spark.sql.shuffle.partitions`, which holds
+  STREAM_STATE_PARTITIONS: one state store per stateful operator.
 """
 
 from __future__ import annotations
@@ -20,16 +23,32 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+#: The shuffle partitions, and so the state stores, of every stateful
+#: operator of a stream; also every shuffle inside a stream's
+#: foreachBatch. Batch shuffles do not read it: AQE is on in every
+#: session built or tuned here, and under AQE a batch shuffle starts
+#: from `spark.sql.adaptive.coalescePartitions.initialPartitionNum`.
+#: Each store commits a delta file and a checkpoint-checksum file in
+#: every micro-batch, each a tmp-file write plus a rename with Hadoop
+#: CRCs. Without native Hadoop IO each store costs 20 shelled-out
+#: `chmod`/`readlink` processes per batch: JFR `jdk.ProcessStart` over
+#: a 10-batch windowed aggregation at local[4] counted 113 process
+#: starts per batch at 4 stores and 53 at 1. A stream checkpoint fixes
+#: the count at its first batch; a stream whose rate needs more stores
+#: sets it per query.
+STREAM_STATE_PARTITIONS = 1
+
 
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, rows: int,
                               rows_per_partition: int = 500_000,
                               floor: int = 8):
-    """Clamp spark.sql.shuffle.partitions to the iterated volume for a
-    driver-side loop (connected components, PageRank, BPE), restoring
-    the session value after. At test scale this kills per-round
-    task-scheduling overhead; at cluster scale the row count drives the
-    clamp back up to the session setting, so a real run is unaffected.
+    """Clamp the batch shuffle partitions (AQE's initial partition
+    number) to the iterated volume for a driver-side loop (connected
+    components, PageRank, BPE), restoring the session value after. At
+    test scale this kills per-round task-scheduling overhead; at
+    cluster scale the row count drives the clamp back up to the
+    session setting, so a real run is unaffected.
 
     Guards (ADVICE r5): if the session value is non-numeric (e.g.
     'auto' on some runtimes) the clamp is skipped entirely rather than
@@ -37,7 +56,7 @@ def scoped_shuffle_partitions(spark: SparkSession, rows: int,
     should not run concurrent queries on the same session inside the
     scope (no registry query does; streaming replays use their own
     bounded sessions)."""
-    key = "spark.sql.shuffle.partitions"
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     prev = spark.conf.get(key)
     try:
         sess = int(prev)
@@ -76,8 +95,13 @@ def tune(spark: SparkSession) -> SparkSession:
         "spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     try:
+        # batch count first: if it cannot be set, batch shuffles read
+        # spark.sql.shuffle.partitions, which then keeps its value
+        spark.conf.set(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            os.environ.get("SPARK_GRAFT_CPUS", "32"))
         spark.conf.set("spark.sql.shuffle.partitions",
-                       os.environ.get("SPARK_GRAFT_CPUS", "32"))
+                       str(STREAM_STATE_PARTITIONS))
     except Exception:
         pass  # immutable under AQE in some builds; fine
     return spark
@@ -89,7 +113,9 @@ def get_spark(app_name: str = "examples-scala-spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+                cpus)
+        .config("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -20,6 +20,7 @@ def spark():
     s = get_spark("tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
+    s.stop()
 
 
 @pytest.fixture(scope="session")

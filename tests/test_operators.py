@@ -541,7 +541,7 @@ def test_scoped_shuffle_partitions_guard(spark):
     and (c) restore on exception."""
     from examples_scala_spark.session import scoped_shuffle_partitions
 
-    key = "spark.sql.shuffle.partitions"
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     prev = spark.conf.get(key)
     try:
         spark.conf.set(key, "32")

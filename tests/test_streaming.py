@@ -153,6 +153,38 @@ def test_windowed_average_stream(spark, tmpdir):
     assert got == {(0, 50.0), (1, 0.0)}
 
 
+def test_streams_run_one_state_store_batch_keeps_the_cores(spark, tmpdir):
+    """`tune` sets two partition counts. From the vanilla session
+    default of 200 shuffle partitions, a stream's stateful operator
+    runs STREAM_STATE_PARTITIONS state stores, while a batch shuffle
+    still starts from the core count (AQE's initial partition
+    number)."""
+    import re
+
+    from examples_scala_spark.session import STREAM_STATE_PARTITIONS, tune
+
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    spark.conf.unset(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    tune(spark)
+    stream = _sensor_stream(spark, tmpdir, [("s1", 1_000, 50.0),
+                                            ("s2", 1_500, 60.0)])
+    out = (stream.withColumn("ts", F.timestamp_millis(F.col("timestamp")))
+           .withWatermark("ts", "5 seconds")
+           .groupBy(F.window("ts", "1 second"), "id").count())
+    q = run_bounded(out, lambda w: (
+        w.format("memory").queryName("one_store").outputMode("append")),
+        os.path.join(tmpdir, "ck"))
+    store = q.lastProgress["stateOperators"][0]
+    assert store["numShufflePartitions"] == STREAM_STATE_PARTITIONS
+
+    batch = (spark.range(100).withColumn("k", F.col("id") % 7)
+             .groupBy("k").count())
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"hashpartitioning\(k#\d+L?, (\d+)\)", plan) == [
+        os.environ["SPARK_GRAFT_CPUS"]], plan
+
+
 def test_high_temp_counter_ships_only_read_columns(spark, tmpdir):
     """Catalyst does not prune columns through the pandas-with-state
     node, so the counter projects its input itself: only the key and
@@ -435,7 +467,7 @@ def test_replay_streams_part_k_as_batch_k(spark, make_parts, per_trigger,
 
     batches: list[list[int]] = []
     src = _replay(spark, make_parts(spark.range(N_REPLAY)), per_trigger)
-    _run_replay(spark, src, lambda w: w.foreachBatch(
+    _run_replay(src, lambda w: w.foreachBatch(
         lambda b, _: batches.append([r.id for r in b.collect()])))
     assert check(batches), [len(b) for b in batches]
 
@@ -450,7 +482,7 @@ def test_run_replay_stops_and_raises_on_timeout(spark, monkeypatch):
     monkeypatch.setattr(sinks, "RUN_TIMEOUT_S", 1)
     src = queries._replay(spark, [spark.range(3).coalesce(1)])
     with pytest.raises(TimeoutError, match="slow_replay"):
-        queries._run_replay(spark, src, lambda w: (
+        queries._run_replay(src, lambda w: (
             w.foreachBatch(lambda b, _: time.sleep(4))
             .queryName("slow_replay")))
     assert spark.streams.active == []

@@ -1,7 +1,7 @@
 """Run a command and split the CPU time of its process tree by thread
 class: JVM JIT compiler threads, Spark executor task threads, the
-Structured Streaming execution thread, Python workers, the Python
-driver, and everything else.
+Structured Streaming execution thread, the processes a JVM started and
+reaped, Python workers, the Python driver, and everything else.
 
 Usage:
     python tools/cpu_by_thread.py -- CMD [ARG ...]
@@ -23,8 +23,13 @@ reading of each thread, so:
 - Python processes are counted whole (their totals include ended
   threads), as worker or driver by command line;
 - a process that starts and ends between two samples (Hadoop's
-  `chmod`, `readlink`) is missed; "processes seen" counts the ones
-  that were sampled.
+  `chmod`, `readlink`) is missed as a process; "processes seen" counts
+  the ones that were sampled. Its CPU is in `jvm_children`: the rise
+  of the JVM's `cutime` + `cstime` (the CPU of the children it reaped)
+  from its first reading as a JVM, which leaves out the launcher its
+  start script ran before exec, less the children started since that
+  are counted in a class of their own (the Python daemon, with the
+  workers it reaped) and had ended by the JVM's last reading.
 """
 
 from __future__ import annotations
@@ -33,6 +38,7 @@ import os
 import subprocess
 import sys
 import time
+from typing import NamedTuple
 
 TICK = os.sysconf("SC_CLK_TCK")
 INTERVAL_S = 0.25
@@ -44,7 +50,8 @@ JVM_THREADS = (
     ("stream_thread", ("stream executio",)),
 )
 CLASSES = ("jit", "executor_tasks", "stream_thread", "jvm_other",
-           "jvm_exited", "python_workers", "python_driver", "other")
+           "jvm_exited", "jvm_children", "python_workers",
+           "python_driver", "other")
 
 
 def read_stat(path: str) -> tuple[str, list[str]] | None:
@@ -62,6 +69,11 @@ def read_stat(path: str) -> tuple[str, list[str]] | None:
 def cpu_s(fields: list[str]) -> float:
     # utime, stime: fields 14 and 15 of stat(5), 12 and 13 after comm
     return (int(fields[11]) + int(fields[12])) / TICK
+
+
+def reaped_cpu_s(fields: list[str]) -> float:
+    # cutime, cstime: fields 16 and 17 of stat(5), 14 and 15 after comm
+    return (int(fields[13]) + int(fields[14])) / TICK
 
 
 def process_kind(pid: int) -> str | None:
@@ -91,12 +103,24 @@ def thread_class(comm: str) -> str:
     return "jvm_other"
 
 
+class Reading(NamedTuple):
+    """The last reading of one process."""
+    kind: str
+    cpu: float           # its own utime + stime
+    reaped: float        # cutime + cstime: the children it waited for
+    ppid: int
+    round: int           # the sample round it was read in
+    first_round: int     # the first round it was read in as `kind`
+    first_reaped: float  # `reaped` in that round
+
+
 class Sampler:
     """Last CPU reading of every process and thread of one tree."""
 
     def __init__(self, root: int) -> None:
         self.root = root
-        self.procs: dict[tuple[int, str], tuple[str, float]] = {}
+        self.rounds = 0
+        self.procs: dict[tuple[int, str], Reading] = {}
         self.threads: dict[tuple[int, str, int], tuple[str, float]] = {}
         self.kinds: dict[tuple[int, str], str] = {}
 
@@ -125,6 +149,7 @@ class Sampler:
         return {pid: start[pid] for pid in seen | tree if pid in start}
 
     def sample(self) -> None:
+        self.rounds += 1
         for pid, started in self._tree().items():
             key = (pid, started)
             # read every time: a launcher script that execs the JVM
@@ -137,8 +162,14 @@ class Sampler:
             st = read_stat(f"/proc/{pid}/stat")
             if st is None:
                 continue
-            self.procs[key] = (self.kinds[key], cpu_s(st[1]))
-            if self.kinds[key] != "java":
+            kind, reaped = self.kinds[key], reaped_cpu_s(st[1])
+            prev = self.procs.get(key)
+            first = ((prev.first_round, prev.first_reaped)
+                     if prev is not None and prev.kind == kind
+                     else (self.rounds, reaped))
+            self.procs[key] = Reading(kind, cpu_s(st[1]), reaped,
+                                      int(st[1][1]), self.rounds, *first)
+            if kind != "java":
                 continue
             try:
                 tids = os.listdir(f"/proc/{pid}/task")
@@ -152,16 +183,21 @@ class Sampler:
 
     def split(self) -> dict[str, float]:
         out = dict.fromkeys(CLASSES, 0.0)
-        for (pid, started), (kind, total) in self.procs.items():
-            if kind != "java":
-                out[kind] += total
+        for (pid, started), r in self.procs.items():
+            if r.kind != "java":
+                out[r.kind] += r.cpu
                 continue
             live = 0.0
             for (tpid, tstart, _), (cls, cpu) in self.threads.items():
                 if (tpid, tstart) == (pid, started):
                     out[cls] += cpu
                     live += cpu
-            out["jvm_exited"] += max(0.0, total - live)
+            out["jvm_exited"] += max(0.0, r.cpu - live)
+            counted = sum(c.cpu + c.reaped for c in self.procs.values()
+                          if c.ppid == pid and c.round < r.round
+                          and c.first_round >= r.first_round)
+            out["jvm_children"] += max(
+                0.0, r.reaped - r.first_reaped - counted)
         return out
 
 

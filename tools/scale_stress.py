@@ -104,16 +104,19 @@ def main() -> None:
     # SPARK_GRAFT_STRESS_RUNS=N -> best-of-N per query (VERDICT r6:
     # probes should absorb ambient-load noise like bench.py does)
     runs = max(1, int(os.environ.get("SPARK_GRAFT_STRESS_RUNS", "1")))
-    # SPARK_GRAFT_STRESS_PARTITIONS=scaled -> size shuffle partitions
-    # to the multiplier (32 * mult, capped 256), the way a real
-    # cluster sizes them to volume. Default keeps the session's 32 so
-    # probe rows stay comparable with the historical series; use
-    # "scaled" when separating plan growth from the fixed-partition
-    # artifact (r9: w_sliding_topk, dup_ngram_char_fraction,
-    # softdedup_weights all re-measured 1.7-4x faster this way).
+    # SPARK_GRAFT_STRESS_PARTITIONS=scaled -> size batch shuffle
+    # partitions (AQE's initial partition number) to the multiplier
+    # (32 * mult, capped 256), the way a real cluster sizes them to
+    # volume. Default keeps the session's 32 so probe rows stay
+    # comparable with the historical series; use "scaled" when
+    # separating plan growth from the fixed-partition artifact. Every
+    # query calls session.tune, which sets that number from
+    # SPARK_GRAFT_CPUS, so the scaled count goes there: a conf set
+    # here is undone before the query plans (SCALE.md, the round-10
+    # correction). The session's core count was fixed by get_spark.
     if os.environ.get("SPARK_GRAFT_STRESS_PARTITIONS") == "scaled":
         scaled = min(256, 32 * mult)
-        spark.conf.set("spark.sql.shuffle.partitions", str(scaled))
+        os.environ["SPARK_GRAFT_CPUS"] = str(scaled)
         print(f"# shuffle partitions scaled to {scaled}", file=sys.stderr)
     timings: dict[str, float] = {}
     for name in names:
