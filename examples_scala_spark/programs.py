@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .operators import aggregations as agg
 from .operators import joins, transforms
 from .operators.side_outputs import freezing_monitor
+from .session import scratch_dir
 from .sources.sensor import (
     count_source_stream, sensor_source_stream, smoke_level_stream,
 )
@@ -41,9 +42,9 @@ class Program:
     reference: str
     output_mode: str = "append"
     doc: str = ""
-    # Zero-arg FACTORY returning the foreachBatch writer. Instantiated
-    # lazily in run_program so that importing this module (tests,
-    # registry listings) never creates temp dirs or poller threads.
+    # Zero-arg FACTORY returning the foreachBatch writer, called in
+    # run_program: importing this module (tests, registry listings)
+    # makes no scratch directory and starts no poller thread.
     foreach_batch: Optional[Callable[[], Callable]] = None
 
 
@@ -350,11 +351,10 @@ def _external_dashboard_writer():
     import os
     import shutil
     import sys
-    import tempfile
     import threading
     import time
 
-    snap = tempfile.mkdtemp(prefix="sgs_qstate_snap_")
+    snap = scratch_dir("sgs_qstate_snap_")
     state_dir = os.path.join(snap, "current")
     stop = threading.Event()
 
@@ -469,13 +469,7 @@ def async_function(spark):
 
 
 def _wal_writer():
-    import tempfile
-
-    writer = IdempotentBatchWriter(tempfile.mkdtemp(prefix="sgs_txn_sink_"))
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        writer(batch_df, batch_id)
-    return write
+    return IdempotentBatchWriter(scratch_dir("sgs_txn_sink_"))
 
 
 @program("transactional_sink", "chapter8/TransactionalSinkExample.scala:38-197",
@@ -491,13 +485,12 @@ def transactional_sink(spark):
 
 def _wal_stdout_writer():
     import sys
-    import tempfile
 
     def to_stdout(batch_df: DataFrame, batch_id: int) -> None:
         for row in batch_df.collect():  # demo sink: tiny 1-row windows
             print(f"WAL>> batch={batch_id} {tuple(row)}", file=sys.stderr)
 
-    return IdempotentBatchWriter(tempfile.mkdtemp(prefix="sgs_wal_stdout_"),
+    return IdempotentBatchWriter(scratch_dir("sgs_wal_stdout_"),
                                  write_fn=to_stdout)
 
 
@@ -529,11 +522,10 @@ def _derby_style_upserter():
     DerbyReader poll thread (IdempotentSinkFunctionExample.scala:33-36)
     as a per-commit readback."""
     import sys
-    import tempfile
 
     from .streaming.sinks import parquet_upsert_writer
 
-    table_dir = tempfile.mkdtemp(prefix="sgs_upsert_table_")
+    table_dir = scratch_dir("sgs_upsert_table_")
     upsert = parquet_upsert_writer(table_dir, "sensor", "temp", buckets=4)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
@@ -652,14 +644,10 @@ def curation_v4(spark):
 def run_program(spark: SparkSession, name: str, duration: int = 10,
                 sink: str = "console") -> None:
     """Run a program on its live source for `duration` seconds, then
-    stop it and remove its checkpoint. A query that fails within
-    `duration` re-raises its error."""
-    import shutil
-    import tempfile
-
+    stop it; its checkpoint is session scratch. A query that fails
+    within `duration` re-raises its error."""
     p = PROGRAMS[name]
     df = p.build(spark)
-    ckpt = tempfile.mkdtemp(prefix=f"sgs_prog_{name}_")
     writer = getattr(df, "__socket_writer__", None)
     if writer is not None:
         w = df.writeStream.foreach(writer).outputMode(p.output_mode)
@@ -673,14 +661,12 @@ def run_program(spark: SparkSession, name: str, duration: int = 10,
         w = (df.writeStream.format("console")
              .option("truncate", "false").option("numRows", "20")
              .outputMode(p.output_mode))
+    ckpt = scratch_dir(f"sgs_prog_{name}_")
+    q = w.option("checkpointLocation", ckpt).start()
     try:
-        q = w.option("checkpointLocation", ckpt).start()
-        try:
-            q.awaitTermination(duration)
-        finally:
-            q.stop()
+        q.awaitTermination(duration)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        q.stop()
     if sink == "memory":
         spark.sql(f"SELECT * FROM {name}").show(20, truncate=False)
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .session import tune
+from .session import scratch_dir, tune
 from .sources.tables import (
     load_table, normalize_ts, sensor_readings, SENSOR_READINGS_SQL)
 from .operators import aggregations as agg
@@ -3920,12 +3920,12 @@ def _replay(spark, parts, per_trigger=1):
     run of n batches, `repartition(n)` n files to group by
     `per_trigger`. Do not union slices into one part: Spark may merge
     the union's `coalesce(1)` branches into one partition. The staged
-    files stay on disk: batch twins may scan them lazily."""
+    files stay on disk until the session stops: batch twins may scan
+    them lazily."""
     import glob
     import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="sgs_replay_")
+    d = scratch_dir("sgs_replay_")
     files = []
     for k, part in enumerate(parts):
         sub = os.path.join(d, f"b{k:03d}")
@@ -3941,8 +3941,8 @@ def _replay(spark, parts, per_trigger=1):
 
 def _run_replay(out, sink):
     """Run the bounded replay `out` to completion through
-    `sinks.run_bounded`, on a throwaway checkpoint that is deleted
-    whatever happens.
+    `sinks.run_bounded`, on a throwaway checkpoint in the session's
+    scratch.
 
     Every stream_* builder calls `tune` before it starts its replay,
     so each stateful operator runs `session.STREAM_STATE_PARTITIONS`
@@ -3952,22 +3952,15 @@ def _run_replay(out, sink):
     replays at sf0.1 took 146 and 152 s of query time at 8 stores, 125
     and 125 s at 1, every hash equal). A production deployment sizes
     this to the stream rate, per query."""
-    import shutil
-    import tempfile
-
     from .streaming.sinks import run_bounded
 
-    ckpt = tempfile.mkdtemp(prefix="sgs_ckpt_")
-    try:
-        run_bounded(out, sink, ckpt)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_bounded(out, sink, scratch_dir("sgs_ckpt_"))
 
 
 def _run_to_memory(spark, out, name, mode="append"):
     """Run a bounded replay to a memory sink and return the
     materialized table (held driver-side, so callers' batch reads do
-    not depend on the deleted checkpoint)."""
+    not depend on the checkpoint)."""
     _run_replay(out, lambda w: (
         w.format("memory").queryName(name).outputMode(mode)))
     return spark.table(name)
@@ -6995,10 +6988,9 @@ def jsonl_roundtrip(spark, sf_dir):
     read is the ingest path for crawler/annotation dumps — neither
     infers schema (a second full scan at 100 TB) and parquet remains
     the query-side format."""
-    import tempfile
     from .sources.files import DOCUMENTS_SCHEMA, read_jsonl, write_jsonl
     docs = _t(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="sgs_jsonl_")
+    d = scratch_dir("sgs_jsonl_")
     write_jsonl(docs, d, partitions=4)
     return read_jsonl(spark, d, DOCUMENTS_SCHEMA)
 
@@ -7016,10 +7008,9 @@ def orc_roundtrip(spark, sf_dir):
     JSONL/CSV edges, supports pushdown, so a round trip must be
     byte-lossless including the full text column (oracle = the
     original table)."""
-    import tempfile
     from .sources.files import read_orc, write_orc
     docs = _t(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="sgs_orc_")
+    d = scratch_dir("sgs_orc_")
     write_orc(docs, d, partitions=4)
     return read_orc(spark, d)
 
@@ -7034,12 +7025,11 @@ def csv_roundtrip(spark, sf_dir):
     free text in CSV is an escaping minefield — the docstring IS the
     guidance: ship text in JSONL/parquet, keep CSV for flat metadata
     exports)."""
-    import tempfile
     from .sources.files import DOCUMENTS_SCHEMA, read_csv, write_csv
     from pyspark.sql import types as T
     schema = T.StructType([f for f in DOCUMENTS_SCHEMA if f.name != "text"])
     docs = _t(spark, sf_dir, "documents").drop("text")
-    d = tempfile.mkdtemp(prefix="sgs_csv_")
+    d = scratch_dir("sgs_csv_")
     write_csv(docs, d, partitions=4)
     return read_csv(spark, d, schema)
 
@@ -7200,11 +7190,10 @@ def partition_pruned_scan(spark, sf_dir):
     at 100 TB the scan opens 1/|types| of the files and reads zero
     bytes of the rest. The oracle is the same filter over the unstaged
     table: pruning must never change results."""
-    import tempfile
     from .sources.layout import write_cell_partitioned
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type")
-    d = tempfile.mkdtemp(prefix="sgs_part_")
+    d = scratch_dir("sgs_part_")
     write_cell_partitioned(ev, d, "event_type")
     return (spark.read.parquet(d)
             .filter(F.col("event_type") == "error")
@@ -7231,13 +7220,10 @@ def bucketed_colocated_join(spark, sf_dir):
     query on the key skips it. At 100 TB this is the difference
     between re-shuffling 100 TB per query and never shuffling it
     again."""
-    import os
     from .sources.layout import write_bucketed
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    # pid-suffixed names: concurrent gate runs must not fight over one
-    # managed-table location
-    t_o, t_l = f"sgs_orders_bkt_{os.getpid()}", f"sgs_lineitem_bkt_{os.getpid()}"
+    t_o, t_l = "sgs_orders_bkt", "sgs_lineitem_bkt"
     write_bucketed(orders, t_o, "o_orderkey", buckets=8)
     write_bucketed(li.withColumnRenamed("l_orderkey", "o_orderkey"),
                    t_l, "o_orderkey", buckets=8)
@@ -7271,7 +7257,6 @@ def stream_upsert_state(spark, sf_dir):
     collect anywhere). The final table must equal the batch aggregate,
     whatever the batch split was. Sums run in DECIMAL so accumulation
     order can't move the hash."""
-    import tempfile
     from .streaming.sinks import parquet_upsert_writer
 
     tune(spark)
@@ -7286,7 +7271,7 @@ def stream_upsert_state(spark, sf_dir):
            .agg(F.count("*").alias("n"),
                 F.sum(F.col("value").cast("decimal(18,6)")).alias("total"))
            .select("user_id", F.struct("n", "total").alias("v")))
-    table = tempfile.mkdtemp(prefix="sgs_upsert_state_")
+    table = scratch_dir("sgs_upsert_state_")
     _run_replay(agg, lambda w: (
         w.foreachBatch(parquet_upsert_writer(table, "user_id", "v", 4))
         .outputMode("update").queryName("stream_upsert_state_merge")))
@@ -7315,12 +7300,11 @@ def stream_ingest_compact(spark, sf_dir):
     aggregate over the original table: the whole land→compact→serve
     chain must be lossless."""
     import os
-    import tempfile
     from .sources.layout import compact_parquet
 
     tune(spark)
-    land = tempfile.mkdtemp(prefix="sgs_land_")
-    serve = tempfile.mkdtemp(prefix="sgs_serve_")
+    land = scratch_dir("sgs_land_")
+    serve = scratch_dir("sgs_serve_")
     src = _events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type")
 
@@ -7962,10 +7946,8 @@ def partition_backfill(spark, sf_dir):
     is the corrected full table: the backfill must be surgical AND
     lossless. At 100 TB this is how a bad day of data gets fixed
     without rewriting the year."""
-    import tempfile
-
     tune(spark)
-    d = tempfile.mkdtemp(prefix="sgs_backfill_")
+    d = scratch_dir("sgs_backfill_")
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type")
     ev.write.partitionBy("event_type").mode("overwrite").parquet(d)
@@ -8355,11 +8337,10 @@ def zorder_clustered_scan(spark, sf_dir):
     leading column (quantified in tests/test_layout.py). At 100 TB the
     rewrite is one range-repartition paid at write time; the scan-side
     win repeats on every query. sources/layout.py:write_zordered."""
-    import tempfile
     from .sources.layout import write_zordered
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value")
-    d = tempfile.mkdtemp(prefix="sgs_zorder_")
+    d = scratch_dir("sgs_zorder_")
     write_zordered(ev, d, ["user_id", "value"], bits=8, n_files=32)
     return (spark.read.parquet(d)
             .filter(F.col("user_id").between(40, 60)
@@ -9074,12 +9055,11 @@ def stream_manifest_maintenance(spark, sf_dir):
     oracle check). The running table is |cells| rows at any scale;
     per batch only the batch's rows aggregate."""
     import os
-    import tempfile
 
     tune(spark)
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type",
                                             "value", "ts")
-    manifest_dir = tempfile.mkdtemp(prefix="sgs_manifest_state_")
+    manifest_dir = scratch_dir("sgs_manifest_state_")
     h = F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
                16, 10).cast("bigint")
 

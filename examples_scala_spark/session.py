@@ -3,8 +3,8 @@
 The reference configures its environment per-program
 (StreamExecutionEnvironment.getExecutionEnvironment +
 setStreamTimeCharacteristic, see
-reference chapter1/AverageSensorReadings.scala:34-39). Here a single
-builder applies the settings we want on every session:
+reference chapter1/AverageSensorReadings.scala:34-39). Here `tune`
+applies the settings we want on every session, `get_spark`'s included:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
 - UTC session timezone (determinism of every time expression)
@@ -19,8 +19,10 @@ builder applies the settings we want on every session:
 from __future__ import annotations
 
 import os
+import tempfile
 from contextlib import contextmanager
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 #: The shuffle partitions, and so the state stores, of every stateful
@@ -37,6 +39,15 @@ from pyspark.sql import SparkSession
 #: the count at its first batch; a stream whose rate needs more stores
 #: sets it per query.
 STREAM_STATE_PARTITIONS = 1
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory for a query's, program's or tool's staging,
+    checkpoint or sink table, under the active SparkContext's files
+    root (`spark-*/userFiles-*`). Spark deletes that root when the
+    context stops, and at JVM exit without a stop; a SIGKILLed JVM
+    leaves it behind."""
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
 
 
 @contextmanager
@@ -112,14 +123,6 @@ def get_spark(app_name: str = "examples-scala-spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                cpus)
-        .config("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))

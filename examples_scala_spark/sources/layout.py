@@ -13,33 +13,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scratch_dir
+
 
 def write_bucketed(df: DataFrame, table: str, key: str,
                    buckets: int = 32, sort: bool = True) -> None:
-    """Persist `df` bucketed (and optionally sorted) by `key`. Reading
-    the table back exposes the bucketing to Catalyst: joins and
-    aggregations on `key` skip their Exchange (and with sort=True,
+    """Persist `df` as table `table`, replacing it, bucketed (and
+    optionally sorted) by `key`, its files in the session's scratch.
+    Reading the table back exposes the bucketing to Catalyst: joins
+    and aggregations on `key` skip their Exchange (and with sort=True,
     sort-merge joins skip the Sort too)."""
-    if "." in table:
-        # the stale-location probe below derives the managed path as
-        # warehouse/<table> — wrong for db-qualified names (their
-        # location is warehouse/<db>.db/<table>), which would re-expose
-        # the LOCATION_ALREADY_EXISTS failure this block prevents
-        raise ValueError(
-            f"write_bucketed: unqualified table names only, got "
-            f"{table!r} (the stale-location cleanup assumes the "
-            "default database)")
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a previous SESSION may have left the managed location behind (the
-    # default catalog is in-memory, the warehouse dir is not) — remove
-    # it or saveAsTable fails with LOCATION_ALREADY_EXISTS
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    loc = spark._jvm.org.apache.hadoop.fs.Path(warehouse, table.lower())
-    fs = loc.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(loc):
-        fs.delete(loc, True)
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
+    w = (df.write.mode("overwrite").bucketBy(buckets, key)
+         .option("path", scratch_dir(f"sgs_bkt_{table}_")))
     if sort:
         w = w.sortBy(key)
     w.saveAsTable(table)

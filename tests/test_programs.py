@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from examples_scala_spark import programs
+from examples_scala_spark.session import scratch_dir
 
 
 def test_every_program_builds(spark):
@@ -45,16 +46,14 @@ def test_every_program_builds(spark):
 def test_program_runs_live(spark, name):
     """Start on the live rate source and stop once two micro-batches
     have completed without error; fail if that takes over 60 s."""
-    import shutil
-    import tempfile
     import time
 
     p = programs.PROGRAMS[name]
     df = p.build(spark)
-    ckpt = tempfile.mkdtemp(prefix=f"sgs_test_prog_{name}_")
     q = (df.writeStream.format("memory").queryName(f"prog_{name}")
          .outputMode(p.output_mode)
-         .option("checkpointLocation", ckpt).start())
+         .option("checkpointLocation", scratch_dir(f"sgs_test_prog_{name}_"))
+         .start())
     try:
         deadline = time.monotonic() + 60
         while len(q.recentProgress) < 2:
@@ -64,32 +63,6 @@ def test_program_runs_live(spark, name):
         assert q.exception() is None
     finally:
         q.stop()
-        _wait_for_job_group(spark, str(q.runId))
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def _wait_for_job_group(spark, group, timeout_s=30):
-    """Wait until no job of `group` is running and none of its stages
-    has a task left. `stop()` returns once the query thread has ended,
-    while a cancelled stateful task may still be writing its state
-    store files into the checkpoint."""
-    import time
-
-    tracker = spark.sparkContext.statusTracker()
-
-    def busy(job_id):
-        job = tracker.getJobInfo(job_id)
-        if job is None:
-            return False
-        stages = (tracker.getStageInfo(s) for s in job.stageIds)
-        return job.status == "RUNNING" or any(
-            st is not None and st.numActiveTasks > 0 for st in stages)
-
-    deadline = time.monotonic() + timeout_s
-    while any(busy(j) for j in tracker.getJobIdsForGroup(group)):
-        assert time.monotonic() < deadline, (
-            f"jobs of {group} still running {timeout_s} s after stop()")
-        time.sleep(0.1)
 
 
 def test_idempotent_sink_program_runs_its_upsert_writer(spark):

@@ -185,6 +185,19 @@ def test_streams_run_one_state_store_batch_keeps_the_cores(spark, tmpdir):
         os.environ["SPARK_GRAFT_CPUS"]], plan
 
 
+def test_session_reads_every_runtime_conf_tune_sets(spark):
+    """`get_spark` leaves the runtime SQL confs (timezone, AQE, Arrow,
+    both partition counts) to `tune`, which sets each once: the
+    fixture session reads tune's value for every key it sets."""
+    from unittest import mock
+
+    from examples_scala_spark.session import tune
+
+    tuned = dict(c.args for c in tune(mock.Mock()).conf.set.call_args_list)
+    assert len(tuned) == 8, tuned
+    assert {k: spark.conf.get(k) for k in tuned} == tuned
+
+
 def test_high_temp_counter_ships_only_read_columns(spark, tmpdir):
     """Catalyst does not prune columns through the pandas-with-state
     node, so the counter projects its input itself: only the key and
@@ -506,12 +519,11 @@ WAIT_SITES = {
 }
 
 
-def test_bounded_runs_go_through_one_function():
-    """No module or test waits on a streaming query except at the
-    sites named in WAIT_SITES."""
+def _call_sites(method, subdirs):
+    """(file, top-level function) of each `<x>.<method>(...)` call."""
     root = pathlib.Path(__file__).resolve().parents[1]
     found = set()
-    for sub in ("examples_scala_spark", "tests"):
+    for sub in subdirs:
         for path in sorted((root / sub).rglob("*.py")):
             rel = path.relative_to(root).as_posix()
             for top in ast.parse(path.read_text()).body:
@@ -519,5 +531,60 @@ def test_bounded_runs_go_through_one_function():
                           for node in ast.walk(top)
                           if isinstance(node, ast.Call)
                           and isinstance(node.func, ast.Attribute)
-                          and node.func.attr == "awaitTermination"}
-    assert found == set(WAIT_SITES)
+                          and node.func.attr == method}
+    return found
+
+
+def test_bounded_runs_go_through_one_function():
+    """No module or test waits on a streaming query except at the
+    sites named in WAIT_SITES."""
+    assert _call_sites("awaitTermination",
+                       ("examples_scala_spark", "tests")) == set(WAIT_SITES)
+
+
+def test_scratch_comes_from_one_function():
+    """Every directory the package and the tools make is session
+    scratch: `session.scratch_dir` is the one `mkdtemp` caller."""
+    assert _call_sites("mkdtemp", ("examples_scala_spark", "tools")) == {
+        ("examples_scala_spark/session.py", "scratch_dir")}
+
+
+SCRATCH_LIFETIME = """
+import json, os, tempfile
+made, mkdtemp = [], tempfile.mkdtemp
+def recording_mkdtemp(*args, **kwargs):
+    made.append(mkdtemp(*args, **kwargs))
+    return made[-1]
+tempfile.mkdtemp = recording_mkdtemp
+from examples_scala_spark import queries
+from examples_scala_spark.session import get_spark, scratch_dir
+spark = get_spark("scratch-lifetime")
+src = queries._replay(spark, [spark.range(k, 10, 2).coalesce(1)
+                              for k in range(2)])
+queries._run_to_memory(spark, src, "lifetime")
+scratch_dir("sgs_lifetime_")
+spark.stop()
+print(json.dumps({"made": made,
+                  "left": [d for d in made if os.path.exists(d)]}))
+"""
+
+
+def test_scratch_is_gone_after_the_session_stops():
+    """A session stages a two-part replay, runs it to memory, takes one
+    more scratch directory and stops: no directory mkdtemp made in the
+    process is left, the replay's staging and checkpoint included."""
+    import json
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="2")
+    run = subprocess.run([sys.executable, "-c", SCRATCH_LIFETIME], env=env,
+                         cwd=root, capture_output=True, text=True,
+                         timeout=300)
+    assert run.returncode == 0, run.stderr[-2000:]
+    out = json.loads(run.stdout.splitlines()[-1])
+    for prefix in ("sgs_replay_", "sgs_ckpt_", "sgs_lifetime_"):
+        assert any(os.path.basename(d).startswith(prefix)
+                   for d in out["made"]), (prefix, out["made"])
+    assert out["left"] == [], out["left"]

@@ -106,10 +106,9 @@ def test_early_firing_finals_equal_batch_window_counts(spark, rows):
     groupBy(window) — the two implementations of the same semantics
     cross-check each other on arbitrary event sequences. All rows
     arrive in one batch (watermark 0), so none are dropped as late."""
-    import shutil
-    import tempfile
+    from examples_scala_spark.session import scratch_dir
 
-    d = tempfile.mkdtemp(prefix="sgs_prop_")
+    d = scratch_dir("sgs_prop_")
     try:
         path = os.path.join(d, "in")
         batches = [
@@ -135,7 +134,6 @@ def test_early_firing_finals_equal_batch_window_counts(spark, rows):
             expected[k] = expected.get(k, 0) + 1
         assert finals == expected
     finally:
-        shutil.rmtree(d, ignore_errors=True)
         spark.catalog.dropTempView("prop_ef")
 
 

@@ -10,11 +10,16 @@ Usage: python tools/dump_plans.py <tag> [outdir] [query ...]
 Streaming queries (tagged 'streaming') materialize eagerly when built;
 their plan is the memory-table scan, which is useless — for those we
 skip with a note instead.
+
+AQE `plan_id=` counters and `#<n>` expression ids, which count what the
+session planned before, are written as `plan_id=N` and `#N`, so two
+dumps of one checkout are byte-identical.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -31,6 +36,8 @@ DEFAULT = [
     "ngram_jaccard_pairs", "ann_topk_bruteforce", "token_count",
     "pipeline_training_data",
 ]
+
+SESSION_IDS = re.compile(r"(plan_id=|#)\d+")
 
 
 def main() -> None:
@@ -59,7 +66,7 @@ def main() -> None:
             # cross-host plan diffs stay interpretable
             f.write(f"# defaultParallelism={spark.sparkContext.defaultParallelism} "
                     f"sf_dir={sf_dir}\n")
-            f.write(explain_str(df, "formatted"))
+            f.write(SESSION_IDS.sub(r"\1N", explain_str(df, "formatted")))
         print(f"wrote {path}")
 
 

@@ -1,7 +1,8 @@
 """Scale stress: synthesize a ~10x-sf0.1 dataset (~1M events, ~50k
-docs, ~50k embeddings) in /tmp and run a representative query slice —
-the local stand-in for the "would this survive a 100x scale-up?"
-question. Prints one timing line per query and a JSON summary.
+docs, ~50k embeddings) in the session's scratch, removed when the
+session stops, and run a representative query slice — the local
+stand-in for the "would this survive a 100x scale-up?" question.
+Prints one timing line per query and a JSON summary.
 
 Synthesis multiplies the sf0.1 tables with shifted ids/timestamps so
 value distributions, key cardinality ratios, and text content match
@@ -15,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 from pathlib import Path
 
@@ -24,7 +24,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F  # noqa: E402
 
 from examples_scala_spark.queries import REGISTRY  # noqa: E402
-from examples_scala_spark.session import get_spark  # noqa: E402
+from examples_scala_spark.session import get_spark, scratch_dir  # noqa: E402
 from examples_scala_spark.sources.tables import load_table  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
@@ -39,7 +39,7 @@ DEFAULT_QUERIES = [
 
 
 def synthesize(spark, mult: int) -> str:
-    out = tempfile.mkdtemp(prefix=f"sgs_stress_x{mult}_")
+    out = scratch_dir(f"sgs_stress_x{mult}_")
     reps = spark.range(mult).withColumnRenamed("id", "rep")
 
     ev = load_table(spark, BASE, "events")
