@@ -1,7 +1,4 @@
 from .scalar import (  # noqa: F401
     fahrenheit_to_celsius_col,
-    celsius_to_fahrenheit_col,
     iso_datetime,
-    floor_to_bucket,
-    epoch_seconds,
 )

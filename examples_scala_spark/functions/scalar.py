@@ -20,10 +20,6 @@ def fahrenheit_to_celsius_col(col) -> Column:
     return (_c(col) - 32.0) * (5.0 / 9.0)
 
 
-def celsius_to_fahrenheit_col(col) -> Column:
-    return _c(col) * (9.0 / 5.0) + 32.0
-
-
 def iso_datetime(ts_col, millis: bool = False) -> Column:
     """TimestampType → ISO-8601 seconds string, the reference's output
     formatting (chapter8/TransactionalSinkExample.scala:83-85). For an
@@ -35,17 +31,6 @@ def iso_datetime(ts_col, millis: bool = False) -> Column:
     c = F.timestamp_millis(_c(ts_col).cast("long")) if millis \
         else _c(ts_col)
     return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
-
-
-def floor_to_bucket(ts_ms_col, bucket_ms: int) -> Column:
-    """ts - (ts % size) — the reference's manual window arithmetic
-    (chapter6/CustomWindow.scala:67)."""
-    return _c(ts_ms_col) - (_c(ts_ms_col) % F.lit(bucket_ms))
-
-
-def epoch_seconds(ts_col) -> Column:
-    """TimestampType → BIGINT epoch seconds (engine-neutral output)."""
-    return _c(ts_col).cast("long")
 
 
 _D38 = "decimal(38,0)"

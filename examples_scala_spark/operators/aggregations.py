@@ -19,7 +19,6 @@ Design for scale:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -47,31 +46,6 @@ def window_bounds(prefix: str = "window") -> list[Column]:
         F.col(f"{prefix}.start").cast("long").alias("window_start"),
         F.col(f"{prefix}.end").cast("long").alias("window_end"),
     ]
-
-
-# --- A2/A3: rolling (running) keyed aggregates -------------------------
-# Streaming form: groupBy(key).agg(...) in update output mode re-emits
-# the running value each micro-batch. Batch twin: the final state, or
-# the full running trace via a window function (used by oracles).
-
-def rolling_max_by(df: DataFrame, key: str = "id",
-                   order_col: str = "temperature") -> DataFrame:
-    """A2 — running max-by (chapter5/KeyedTransformations.scala:49-52):
-    per key, the full reading with the highest temperature. max_by is a
-    single shuffle with partial aggregation."""
-    others = [c for c in df.columns if c != key]
-    return df.groupBy(key).agg(
-        *[F.max_by(c, F.col(order_col)).alias(c) for c in others]
-    )
-
-
-def rolling_sum_trace(df: DataFrame, key: str, val: str,
-                      order: str) -> DataFrame:
-    """A3 with per-record emission cadence (chapter5/RollingSum.scala:31-33)
-    as a batch twin: cumulative sum over arrival order."""
-    w = Window.partitionBy(key).orderBy(order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn("running_sum", F.sum(val).over(w))
 
 
 # --- A4-A10: windowed aggregates --------------------------------------
@@ -120,28 +94,6 @@ def high_count(df: DataFrame, threshold: float = 100.0, key: str = "id",
         .groupBy(key)
         .agg(F.count("*").alias("high_count"))
     )
-
-
-# --- A5: custom-accumulator UDAF path ---------------------------------
-
-def avg_temp_pandas_udaf(df: DataFrame, key: str = "id",
-                         temp_col: str = "temperature") -> DataFrame:
-    """A5 — the AvgTempFunction accumulator pattern
-    (chapter6/WindowFunctions.scala:87-105) via a pandas grouped-agg
-    UDAF, proving the custom-ACC path. Built-in avg() is preferred in
-    real plans (JVM-side partial agg); this exists for UDAF parity."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def mean_udaf(v: pd.Series) -> float:
-        # count() (non-null count), not len(): sum() skips NaN/NULL, so
-        # a len() denominator silently deflated the mean whenever a
-        # reading was null — diverging from the built-in avg() this
-        # claims parity with (r11 review find)
-        n = int(v.count())
-        return float(v.sum() / n) if n else float("nan")
-
-    return df.groupBy(key).agg(mean_udaf(F.col(temp_col)).alias("avg_temp"))
 
 
 # --- trending top-k over sliding windows ------------------------------

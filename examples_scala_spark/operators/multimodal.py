@@ -259,8 +259,7 @@ def resample_nearest(px, tw: int, th: int):
     (th, tw, 3) using PURE INTEGER source mapping —
     sx = ((2*ox + 1) * w) // (2*tw) — the midpoint rule with no float
     arithmetic, so a SQL oracle can reproduce every sampled
-    coordinate exactly. The executed counterpart of resize_plan's
-    geometry (which plans scale/crop for a codec-backed resampler)."""
+    coordinate exactly."""
     import numpy as np
 
     h, w, _ = px.shape
@@ -475,71 +474,6 @@ def frame_sample(decoded: DataFrame, every_n: int = 24) -> DataFrame:
             .alias("frame_idx"),
         )
     )
-
-
-def resize_plan(decoded: DataFrame, target_w: int = 224,
-                target_h: int = 224) -> DataFrame:
-    """Resize planning for image/video rows: per asset, the
-    aspect-preserving scale factor, the scaled dimensions, and the
-    center-crop box that yields exactly (target_w, target_h) — the
-    arithmetic every preprocessing pipeline runs before the pixel
-    resample. Pure JVM-side column math (the pixel work itself needs a
-    codec and belongs in the decode UDF); emitting the plan separately
-    lets a scheduler bucket assets by output geometry and batch the
-    GPU/CPU resample per bucket."""
-    d = decoded.filter(F.col("width") > 0)
-    scale = F.greatest(F.lit(target_w) / F.col("width"),
-                       F.lit(target_h) / F.col("height"))
-    sw = F.ceil(F.col("width") * scale).cast("long")
-    sh = F.ceil(F.col("height") * scale).cast("long")
-    return d.select(
-        "doc_id", "mime", "width", "height",
-        F.round(scale, 6).alias("scale"),
-        sw.alias("scaled_w"), sh.alias("scaled_h"),
-        ((sw - target_w) / 2).cast("long").alias("crop_x"),
-        ((sh - target_h) / 2).cast("long").alias("crop_y"),
-        F.lit(target_w).alias("out_w"), F.lit(target_h).alias("out_h"),
-    )
-
-
-def extract_features(media: DataFrame, bins: int = 16) -> DataFrame:
-    """Codec-free feature extraction over the raw payload: a
-    normalized byte histogram (`bins` buckets over 0..255) as an
-    array<double> feature vector per asset — a real, deterministic
-    content signature (byte-distribution features drive format
-    detection, corruption screens, and cheap near-dup blocking before
-    any decode). Arrow-batched mapInPandas with numpy bincount per
-    batch; the payload never leaves the scan stage — only the
-    `bins`-float vector flows downstream, where the ANN/similarity
-    operators consume it like any embedding column. A real deployment
-    appends decoded-domain features (CLIP, mel spectra) in the same
-    UDF shape."""
-    import numpy as np
-
-    if bins < 1 or 256 % bins:
-        # bincount(arr // (256 // bins))[:bins] silently DROPS all
-        # bytes past bins * (256 // bins) when bins doesn't divide 256
-        # (e.g. bins=100 loses values 200..255); refuse rather than
-        # ship a histogram that isn't one
-        raise ValueError(f"bins must divide 256, got {bins}")
-    width = 256 // bins
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["media"]:
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                if len(arr) == 0:
-                    feats.append([0.0] * bins)
-                    continue
-                hist = np.bincount(arr // width, minlength=bins)[:bins]
-                feats.append((hist / len(arr)).round(6).tolist())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "mime": pdf["mime"],
-                                "byte_hist": feats})
-
-    return media.mapInPandas(
-        featurize, "doc_id bigint, mime string, byte_hist array<double>")
 
 
 def chunk_media(media: DataFrame, chunk_bytes: int = 4096) -> DataFrame:

@@ -49,36 +49,6 @@ def cosine(l_vec, r_vec, l_norm, r_norm) -> F.Column:
     return dot / (l_norm * r_norm)
 
 
-def argmax_by(df: DataFrame, part_col: str, ord_col: str, tie_col: str,
-              keep: tuple[str, ...]) -> DataFrame:
-    """Per-group argmax as ONE hash aggregate with map-side partial
-    combine: for each `part_col` group, the `keep` columns of the row
-    maximizing (`ord_col` DESC, `tie_col` ASC) — exactly the row
-    `row_number().over(Window.partitionBy(part).orderBy(ord desc,
-    tie)) == 1` selects, expressed as `max_by` over the ordering
-    struct (ord, -tie) so ties still resolve to the SMALLEST tie_col.
-
-    Why not the window form (VERDICT r9 #2): a row_number window
-    hash-exchanges EVERY candidate row — for the centroid-assignment
-    stages that is n_centroids x corpus rows, vector payload
-    included — before discarding all but rank 1. max_by is a
-    declarative aggregate, so each map partition combines a group's
-    candidates down to one row BEFORE the exchange: the dominant
-    shuffle of every IVF/SemDeDup/outlier query drops by ~n_centroids
-    x (256x at the default cap) and the exchange carries only the
-    `keep` payload.
-
-    `tie_col` must be numeric (it is negated) and (ord_col, tie_col)
-    unique per group — true for every assignment site: cent_id /
-    bench_id are distinct within a group."""
-    m = F.max_by(
-        F.struct(*[F.col(c).alias(c) for c in keep]),
-        F.struct(F.col(ord_col).alias("o"), (-F.col(tie_col)).alias("t")))
-    return (df.groupBy(part_col).agg(m.alias("__m"))
-            .select(F.col(part_col),
-                    *[F.col(f"__m.{c}").alias(c) for c in keep]))
-
-
 # hard bound on how many reference vectors nearest_ref_vec may collect
 # to the driver — the same bounded-collect contract as ivfpq_topk's
 # query table; every caller's reference set is ordered-limit capped
@@ -106,7 +76,7 @@ def nearest_ref_vec(base: DataFrame, refs: DataFrame,
     """Nearest-reference argmax-cosine, VECTORIZED and BIT-EXACT:
     for every base vector, the reference row maximizing
     cosine(v, rv) with ties broken by the SMALLEST reference id —
-    the same contract as argmax_by over the relational affinity, as
+    the same contract as max_by over the relational affinity, as
     one Arrow-batched mapInPandas pass with zero joins, zero
     exchanges, and zero sorts.
 
@@ -131,9 +101,9 @@ def nearest_ref_vec(base: DataFrame, refs: DataFrame,
     FIRST maximal index and NaN ranks greatest (first NaN wins),
     so with references sorted by id ascending the tie-break and NaN
     semantics equal the relational (ccos DESC, ref_id ASC) order.
-    Verified bit-identical against argmax_by on the 10x and 100x
-    probe corpora and hash-checked against the DuckDB oracles at
-    both driver SFs.
+    Verified bit-identical against the relational max_by on the 10x
+    and 100x probe corpora and hash-checked against the DuckDB
+    oracles at both driver SFs.
 
     Zero-norm vectors are REJECTED loudly (ValueError), matching the
     relational path's behavior under Spark's default ANSI mode,
@@ -156,7 +126,7 @@ def nearest_ref_vec(base: DataFrame, refs: DataFrame,
         raise ValueError(
             f"nearest_ref_vec: {len(rows)} reference vectors exceed the "
             f"bounded-collect contract ({_MAX_REF_COLLECT}); cap the "
-            "reference set (ordered-limit) or use argmax_by")
+            "reference set (ordered-limit)")
     schema_str = f"{id_col} bigint, {ref_id_col} bigint, ccos double"
     if carry_vec:
         schema_str += ", v array<double>, norm double"
@@ -241,17 +211,10 @@ def nearest_ref_vec(base: DataFrame, refs: DataFrame,
                 out["norm"] = pdf["norm"].to_numpy()
             yield pd.DataFrame(out)
 
-    result = (base.select(id_col, "v", "norm")
-              .mapInPandas(kernel, schema_str))
-    # broadcast lifecycle: the blocks live until the driver-side
-    # Broadcast object is GC'd (ContextCleaner) — fine for one-shot
-    # queries (<=256 refs ~ 131 KB), but iterative callers re-invoking
-    # per round (train_centroids) should unpersist the PREVIOUS round's
-    # broadcast once its consumer is checkpointed; it is exposed here
-    # for exactly that (ADVICE r10). unpersist() is non-destructive —
-    # a recompute after executor loss silently re-ships it.
-    result._nearest_ref_bc = bc
-    return result
+    # the broadcast blocks live until the driver-side Broadcast object
+    # is GC'd (ContextCleaner): <=256 refs is ~131 KB per query
+    return (base.select(id_col, "v", "norm")
+            .mapInPandas(kernel, schema_str))
 
 
 def brute_force_topk(emb: DataFrame, k: int = 5, query_mod: int = 50,
@@ -419,8 +382,9 @@ def sqrt_budget(n: int, min_nlist: int = 16,
     cap) means the n^1.5 contract holds up to n = max_nlist^2 ~ 4.3B
     vectors; past that, occupancy grows linearly again under the
     clamped budget. Beyond the horizon use semantic_dedup_snm (cost
-    linear in occupancy) or the relational argmax_by assignment,
-    which supports any nlist without a driver collect."""
+    linear in occupancy) or a relational max_by assignment over
+    cell_affinity, which supports any nlist without a driver
+    collect."""
     import math
 
     return max(min_nlist, min(max_nlist, int(math.floor(math.sqrt(n)))))
@@ -430,8 +394,7 @@ def sampled_centroids(base: DataFrame, centroid_mod: int = 23,
                       id_col: str = "vec_id",
                       max_centroids: int = 256) -> DataFrame:
     """Deterministic id-sampled centroids (cent_id, cv, cnorm) — the
-    oracle-reproducible coarse quantizer; `train_centroids` is the
-    k-means upgrade.
+    oracle-reproducible coarse quantizer.
 
     Hard-capped at max_centroids via ordered-limit (the query-set cap's
     sibling, VERDICT r8 #2 family): a modulo-only sample grows the
@@ -443,45 +406,6 @@ def sampled_centroids(base: DataFrame, centroid_mod: int = 23,
             .orderBy(id_col).limit(int(max_centroids))
             .select(F.col(id_col).alias("cent_id"), F.col("v").alias("cv"),
                     F.col("norm").alias("cnorm")))
-
-
-def train_centroids(emb: DataFrame, centroid_mod: int = 23,
-                    iterations: int = 4, dim: int = 64,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Lloyd's k-means over the embedding table, as DataFrame ops:
-    assign = vectorized exact argmax (nearest_ref_vec, one bounded
-    centroid collect per round), update = one
-    groupBy(cell) computing all `dim` component means map-side. Init =
-    the deterministic id sample, so results are reproducible.
-    `localCheckpoint` per round truncates the growing plan (same
-    iterative-Spark guard as graph.connected_components).
-
-    Returns (cent_id, cv, cnorm) for ivf_topk(centroids=...).
-    """
-    base = with_norm(emb, vec_col).select(
-        F.col(id_col), F.col("v"), F.col("norm"))
-    cents = sampled_centroids(base, centroid_mod, id_col)
-    for _ in range(iterations):
-        # vectorized exact assignment; one bounded centroid collect
-        # per Lloyd round (<= 256 rows, the cap contract)
-        assign = nearest_ref_vec(base, cents, id_col, carry_vec=True)
-        mean_vec = F.array(*[F.avg(F.col("v")[i]) for i in range(dim)])
-        cents = (
-            assign.groupBy("cent_id")
-            .agg(mean_vec.alias("cv"))
-            .withColumn("cnorm", F.sqrt(F.aggregate(
-                "cv", F.lit(0.0), lambda acc, x: acc + x * x)))
-            .localCheckpoint(eager=True)
-        )
-        # the eager checkpoint fully consumed this round's assignment:
-        # release its centroid broadcast instead of accumulating one
-        # block set per Lloyd round on driver+executors (ADVICE r10);
-        # non-destructive, so a post-loss recompute just re-ships it
-        bc = getattr(assign, "_nearest_ref_bc", None)
-        if bc is not None:
-            bc.unpersist()
-    return cents
 
 
 def cell_affinity(base: DataFrame, cents: DataFrame,
@@ -684,9 +608,8 @@ def pq_codebooks(emb, m: int = 8, codes: int = 16, dim: int = 64,
     id % sample_mod == 1 (ordered by id) donate their subvectors —
     codebook[s][c] = sample c sliced to subspace s. Returns a numpy
     array of shape (m, codes, dim//m). A production deployment swaps
-    in per-subspace k-means (the plumbing is identical — cf.
-    train_centroids for the coarse quantizer); the id sample keeps
-    every run and engine reproducible."""
+    in per-subspace k-means; the id sample keeps every run and
+    engine reproducible."""
     import numpy as np
 
     dsub = dim // m
@@ -830,8 +753,8 @@ def label_centroids(emb: DataFrame, dim: int = 64,
     vectors. Sums are exact DECIMAL(28,12) partials, so the result is
     independent of partition count and merge order (float summation is
     not associative; decimal is); the mean divides once in DOUBLE at
-    the end. The centroid table is what `train_centroids` iterates and
-    what an IVF coarse quantizer serves."""
+    the end. The centroid table is what an IVF coarse quantizer
+    serves."""
     e = emb.select(
         F.col(label_col).cast("long").alias("label"),
         F.posexplode(F.col(vec_col).cast("array<double>"))
@@ -864,8 +787,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.35,
     set rides a broadcast, and the only wide ops are the cell
     equi-join and one groupBy(id) for the neighbor minimum. The
     deterministic id-sampled quantizer keeps the whole path
-    oracle-reproducible; `train_centroids` is the drop-in k-means
-    upgrade.
+    oracle-reproducible.
 
     Centroid budget (flipped r11, VERDICT r10 #1): the DEFAULT is now
     the sqrt-corpus budget — max_centroids=None tunes nlist to

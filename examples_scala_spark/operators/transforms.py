@@ -1,5 +1,5 @@
 """Row-level transforms — the reference's map/filter/flatMap surface
-(SURVEY §2.2, P1-P7).
+(SURVEY §2.2: P4-P6).
 
 All are single narrow projections/filters: no shuffle, fully
 whole-stage-codegen'd, predicate/projection pushed into the parquet
@@ -10,17 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def fahrenheit_to_celsius(df: DataFrame, col: str = "temperature") -> DataFrame:
-    """P1 — (t-32)*5/9 (reference chapter1/AverageSensorReadings.scala:50-51)."""
-    return df.withColumn(col, (F.col(col) - 32.0) * (5.0 / 9.0))
-
-
-def project(df: DataFrame, *cols: str) -> DataFrame:
-    """P2/P3 — map-projection (chapter5/BasicTransformations.scala:54-55,
-    chapter6/WindowFunctions.scala:38)."""
-    return df.select(*cols)
 
 
 def filter_min_temperature(df: DataFrame, threshold: float = 25.0,
@@ -39,30 +28,19 @@ def split_ids(df: DataFrame, col: str = "id", sep: str = "_") -> DataFrame:
 
 
 def shuffle_timestamps(df: DataFrame, max_shift_ms: int = 7_000,
-                       seed: int = 42, ts_col: str = "ts") -> DataFrame:
-    """P6 — TimestampShuffler: add rand(0..7s) to event time to force
-    out-of-orderness (chapter6/LateDataHandling.scala:175-183)."""
-    shift = (F.rand(seed) * max_shift_ms).cast("long")
-    return df.withColumn(
-        ts_col, F.timestamp_millis(F.expr(f"unix_micros({ts_col}) div 1000") + shift)
-    )
-
-
-class FailingMapper:
-    """P7 — chaos mapper (reference chapter8/util/FailingMapper.scala:34-49):
-    raises after `fail_after` rows. Only used by recovery tests to prove
-    restart-from-checkpoint; never in a real plan."""
-
-    def __init__(self, fail_after: int = 1000):
-        self.fail_after = fail_after
-
-    def __call__(self, iterator):
-        seen = 0
-        for pdf in iterator:
-            seen += len(pdf)
-            if seen > self.fail_after:
-                raise RuntimeError(f"FailingMapper: injected failure after {seen} rows")
-            yield pdf
+                       seed: int = 42) -> DataFrame:
+    """P6 — TimestampShuffler: add 0..max_shift_ms to event time to
+    force out-of-orderness (chapter6/LateDataHandling.scala:175-183).
+    Shifts the epoch-ms `timestamp` every stateful port reads and `ts`
+    with it. The shift is a hash of (id, timestamp), like the sensor
+    source's noise, so a replay shifts each row the same way (F.rand
+    draws anew per replay and per partition layout)."""
+    shift = F.pmod(F.xxhash64("id", "timestamp", F.lit(seed)),
+                   F.lit(max_shift_ms))
+    return df.withColumns({
+        "timestamp": F.col("timestamp") + shift,
+        "ts": F.timestamp_micros(F.unix_micros("ts") + shift * 1000),
+    })
 
 
 def is_freezing(col: str = "temperature", threshold: float = 32.0) -> Column:

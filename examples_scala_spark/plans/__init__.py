@@ -1,6 +1,1 @@
-from .inspect import (  # noqa: F401
-    assert_broadcast_join,
-    assert_no_python_in_plan,
-    assert_pushed_filters,
-    explain_str,
-)
+from .inspect import explain_str  # noqa: F401

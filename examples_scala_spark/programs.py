@@ -19,7 +19,7 @@ the interactive parity surface, not the correctness gate.
 from __future__ import annotations
 
 import argparse
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +32,7 @@ from .session import scratch_dir
 from .sources.sensor import (
     count_source_stream, sensor_source_stream, smoke_level_stream,
 )
-from .streaming import stateful, timers
+from .streaming import pipelines, stateful, timers
 from .streaming.sinks import IdempotentBatchWriter
 
 
@@ -67,11 +67,7 @@ def program(name: str, reference: str, output_mode: str = "append",
 @program("average_sensor_readings", "chapter1/AverageSensorReadings.scala:31-64")
 def average_sensor_readings(spark):
     """Per-sensor 1 s tumbling average Celsius, 5 s watermark."""
-    s = sensor_source_stream(spark)
-    c = transforms.fahrenheit_to_celsius(s)
-    return agg.windowed_agg(c, "1 second",
-                            F.avg("temperature").alias("avg_temp"),
-                            watermark="5 seconds")
+    return pipelines.average_sensor_readings(spark)
 
 
 # ------------------------------------------------------------------ ch5
@@ -245,6 +241,17 @@ def late_data_handling(spark):
         watermark_delay="5 seconds")
 
 
+@program("late_data_updating_window", "chapter6/LateDataHandling.scala:112-172")
+def late_data_updating_window(spark):
+    """Allowed lateness on the same shuffled timestamps: 10 s count
+    windows fire once ('first') when the watermark passes their end
+    and re-fire ('update') for each late row within 5 s after that."""
+    s = transforms.shuffle_timestamps(sensor_source_stream(spark))
+    return timers.updating_window_counts_stream(
+        s.select("id", "timestamp", "temperature"), window_ms=10_000,
+        disorder="5 seconds", lateness_ms=5_000)
+
+
 @program("custom_window", "chapter6/CustomWindow.scala:32-168")
 def custom_window(spark):
     """30 s tumbling count windows with 1 s early firing and
@@ -273,7 +280,8 @@ def keyed_state_function(spark):
     """Delta alert: |temp - lastTemp| > 1.7 per key (ValueState)."""
     s = sensor_source_stream(spark)
     return stateful.temperature_delta_alerts(
-        s.select("id", "timestamp", "temperature"), threshold=1.7)
+        s.select("id", "timestamp", "temperature"), threshold=1.7
+    ).select("id", "temperature", "diff")
 
 
 @program("stateful_process_function",

@@ -3343,10 +3343,9 @@ def bmp_thumbnail_stats(spark, sf_dir):
     channel sums + the orientation-sensitive top-row sum. The oracle
     composes the closed-form pixel function with the same integer
     source mapping, never touching bytes — any resample coordinate
-    error (off-by-one, axis swap, orientation) hash-fails. This
-    upgrades resize_plan from geometry planning to an executed
-    decode -> resample -> features chain, all inside one Arrow
-    scan stage."""
+    error (off-by-one, axis swap, orientation) hash-fails. The
+    decode -> resample -> features chain runs inside one Arrow scan
+    stage."""
     docs = _t(spark, sf_dir, "documents")
     return multimodal.bmp_thumbnail_stats(
         multimodal.bmp_media_table(docs), tw=7, th=5)
@@ -3499,13 +3498,13 @@ def stream_delta_alerts(spark, sf_dir):
     event_id-ORDERED micro-batches through applyInPandasWithState
     (keyed last_temp ValueState), availableNow trigger, memory sink.
     Because the replay is ordered (range-partitioned staging,
-    streaming/stateful.py:temperature_delta_alerts_traced sorts each
-    Arrow batch by event_id), the streamed alert set hash-matches the
+    streaming/stateful.py:temperature_delta_alerts sorts each key's
+    batch by event_id), the streamed alert set hash-matches the
     batch lag() twin's oracle — keyed streaming state and the batch
     window provably agree, upgrading this gate row from rows-only to
     value-checked."""
     tune(spark)
-    from .streaming.stateful import temperature_delta_alerts_traced
+    from .streaming.stateful import temperature_delta_alerts
 
     ev = load_table(spark, sf_dir, "events")
     src = _replay(spark, [ev.repartitionByRange(4, "event_id")
@@ -3516,7 +3515,8 @@ def stream_delta_alerts(spark, sf_dir):
                  ((F.col("user_id") % 10) + 1).cast("string")).alias("id"),
         F.col("value").alias("temperature"),
     )
-    out = temperature_delta_alerts_traced(readings, threshold=17.0)
+    out = temperature_delta_alerts(readings, threshold=17.0,
+                                   order="event_id")
     return _run_to_memory(spark, out, "stream_delta_alerts_result")
 
 
@@ -3542,7 +3542,7 @@ def stream_delta_alerts_smallbatch(spark, sf_dir):
     batch lag() twin regardless of Arrow chunking — the adversarial
     re-prove of the r4 chunk-ordering fix."""
     tune(spark)
-    from .streaming.stateful import temperature_delta_alerts_traced
+    from .streaming.stateful import temperature_delta_alerts
 
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
@@ -3557,7 +3557,8 @@ def stream_delta_alerts_smallbatch(spark, sf_dir):
             .alias("id"),
             F.col("value").alias("temperature"),
         )
-        out = temperature_delta_alerts_traced(readings, threshold=17.0)
+        out = temperature_delta_alerts(readings, threshold=17.0,
+                                       order="event_id")
         return _run_to_memory(spark, out,
                               "stream_delta_alerts_smallbatch_result")
     finally:
@@ -9072,10 +9073,8 @@ def stream_manifest_maintenance(spark, sf_dir):
                      F.expr("bit_xor(h)").alias("checksum")))
         spark_l = batch_df.sparkSession
         prior_path = os.path.join(manifest_dir, "current")
-        try:
-            prior = spark_l.read.parquet(prior_path)
-        except Exception:
-            prior = None
+        prior = (spark_l.read.parquet(prior_path)
+                 if os.path.isdir(prior_path) else None)
         merged = (part if prior is None else
                   prior.unionByName(part)
                   .groupBy("event_type")

@@ -136,15 +136,5 @@ def get_spark(app_name: str = "examples-scala-spark") -> SparkSession:
                 os.environ.get("SPARK_GRAFT_MAX_RESULT", "4g"))
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
         .config("spark.ui.enabled", "false")
-        # shuffle/broadcast/checkpoint block codec. Measured r12
-        # (SCALE.md "shuffle codec A/B"): at bench scale (sf0.1,
-        # KB-to-MB shuffles) lz4 — the Spark default — wins every
-        # headline query (zstd's CPU cost dominates tiny blocks); at
-        # 10x fact volume zstd wins the big shufflers consistently
-        # (ngram_jaccard_pairs -35..46%, minhash_lsh_pairs -26..36%).
-        # Default stays lz4 so the driver bench is unaffected; set
-        # SPARK_GRAFT_IO_CODEC=zstd for shuffle-heavy production runs.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
     )
     return tune(builder.getOrCreate())

@@ -1,11 +1,6 @@
 from .tables import TABLES, load_table, sensor_readings
 from .sensor import sensor_source_batch, sensor_source_stream
-from .fixtures import (
-    int_triples,
-    threshold_updates,
-    filter_switches,
-    smoke_levels_batch,
-)
+from .fixtures import threshold_updates, smoke_levels_batch
 
 __all__ = [
     "TABLES",
@@ -13,8 +8,6 @@ __all__ = [
     "sensor_readings",
     "sensor_source_batch",
     "sensor_source_stream",
-    "int_triples",
     "threshold_updates",
-    "filter_switches",
     "smoke_levels_batch",
 ]

@@ -1,26 +1,13 @@
 """In-memory fixture literals (S6 twin of env.fromElements/fromCollection).
 
-Rows mirror FIXTURES.md §3-§5, which mirror the reference's literal
-streams (chapter5/RollingSum.scala:28-29,
-chapter6/CoProcessFunctionTimers.scala:23-27,
-chapter7/BroadcastStateFunction.scala:37-42). Each fixture also exposes
-a VALUES-clause SQL twin so DuckDB oracles can reference identical rows.
+Rows mirror FIXTURES.md §5, which mirrors the reference's literal
+rule stream (chapter7/BroadcastStateFunction.scala:37-42), and a
+bounded smoke-level control table for the batch correlation queries.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def int_triples(spark: SparkSession) -> DataFrame:
-    """chapter5/RollingSum.scala:28-29 literal stream (1,2,2) (2,3,1)
-    (2,2,4) (1,5,3)."""
-    return spark.createDataFrame(
-        [(1, 2, 2), (2, 3, 1), (2, 2, 4), (1, 5, 3)], ["_1", "_2", "_3"]
-    )
-
-
-INT_TRIPLES_SQL = "(VALUES (1,2,2),(2,3,1),(2,2,4),(1,5,3)) AS t(_1,_2,_3)"
 
 
 def threshold_updates(spark: SparkSession) -> DataFrame:
@@ -34,25 +21,6 @@ def threshold_updates(spark: SparkSession) -> DataFrame:
         ("sensor_3", 0.0, 5),
     ]
     return spark.createDataFrame(rows, ["id", "threshold", "seq"])
-
-
-THRESHOLD_UPDATES_SQL = (
-    "(VALUES ('sensor_1',5.0,1),('sensor_2',0.9,2),('sensor_3',0.5,3),"
-    "('sensor_1',1.2,4),('sensor_3',0.0,5)) AS r(id, threshold, seq)"
-)
-
-
-def filter_switches(spark: SparkSession) -> DataFrame:
-    """Co-process switch stream (chapter6/CoProcessFunctionTimers.scala:23-27):
-    enable forwarding of a sensor's readings for duration_ms."""
-    return spark.createDataFrame(
-        [("sensor_2", 10_000), ("sensor_7", 60_000)], ["id", "duration_ms"]
-    )
-
-
-FILTER_SWITCHES_SQL = (
-    "(VALUES ('sensor_2',10000),('sensor_7',60000)) AS s(id, duration_ms)"
-)
 
 
 def smoke_levels_batch(spark: SparkSession) -> DataFrame:
@@ -69,12 +37,3 @@ def smoke_levels_batch(spark: SparkSession) -> DataFrame:
     ]
     df = spark.createDataFrame(rows, ["ts_str", "level"])
     return df.selectExpr("to_timestamp(ts_str) AS ts", "level")
-
-
-SMOKE_LEVELS_SQL = (
-    "(VALUES (TIMESTAMP '2024-01-01 00:00:00','Low'),"
-    "(TIMESTAMP '2024-01-05 00:00:00','High'),"
-    "(TIMESTAMP '2024-01-10 00:00:00','Low'),"
-    "(TIMESTAMP '2024-01-20 00:00:00','High'),"
-    "(TIMESTAMP '2024-01-25 00:00:00','Low')) AS sm(ts, level)"
-)

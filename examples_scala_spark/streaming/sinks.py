@@ -41,17 +41,6 @@ def run_bounded(out: DataFrame, sink: Callable, checkpoint: str):
     return q
 
 
-def memory_sink(df: DataFrame, name: str, output_mode: str = "update"):
-    """R3/K6 — queryable state: asQueryableState('maxTemperature')
-    (chapter7/QueryableState.scala:47-49) becomes a named in-memory
-    table queryable with spark.sql(f"SELECT * FROM {name}") — the
-    dashboard's poll loop (QueryableState.scala:84-104) is a plain SQL
-    query. Production twin: sink to Delta/parquet and query that."""
-    return (
-        df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    )
-
-
 class IdempotentBatchWriter:
     """K3/K4/K5 — batchId-idempotent foreachBatch writer.
 
@@ -124,24 +113,11 @@ class SocketWriter:
             pass
 
 
-def upsert_writer(store: dict, key_col: str, val_col: str):
-    """K3 — in-memory twin of the Derby UPDATE-then-INSERT upsert
-    (IdempotentSinkFunctionExample.scala:89-102): last write per key
-    wins, so at-least-once redelivery converges to exactly-once state.
-    Teaching twin only (driver-side dict, parallelism-1 like the
-    reference's Derby sink); the driver-free scale path is
-    `parquet_upsert_writer` below."""
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        for row in batch_df.select(key_col, val_col).collect():
-            store[row[key_col]] = row[val_col]
-    return write
-
-
 def parquet_upsert_writer(table_dir: str, key_col: str, val_col: str,
                           buckets: int = 16):
     """K3 scale path — partition-parallel keyed upsert into a
     hash-bucketed parquet table, no table format and NO driver-side
-    row movement (the twin above collects; this one never does).
+    row movement.
 
     MERGE without Delta: the table lives as `bucket=<pmod(xxhash64(key),
     B)>` partitions. Per micro-batch: bucket the incoming keys, read

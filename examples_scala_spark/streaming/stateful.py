@@ -58,36 +58,47 @@ ALERT_SCHEMA = StructType([
 _DELTA_STATE = StructType([StructField("last_temp", DoubleType())])
 
 
-def temperature_delta_alerts(readings: DataFrame,
-                             threshold: float = 1.7) -> DataFrame:
+def temperature_delta_alerts(readings: DataFrame, threshold: float = 1.7,
+                             order: str = "timestamp") -> DataFrame:
     """F2 — TemperatureAlertFunction (reference
     chapter7/KeyedStateFunction.scala:73-100): per key, keep lastTemp in
-    ValueState; emit (id, temp, diff) when |temp - lastTemp| > threshold.
+    ValueState; emit (order, id, temp, diff) when
+    |temp - lastTemp| > threshold.
 
-    Batch twin (oracle-checked): queries.alert_temp_delta via lag().
+    Each key's micro-batch is scanned in the BIGINT column `order`,
+    which is also the first output column. Under an event_id-ordered
+    replay (range-partitioned staging) with order="event_id", the
+    alert set is identical to the batch lag() twin
+    queries.alert_temp_delta, so the registry value-hashes the stream
+    against the same DuckDB oracle.
     """
+    schema = StructType([StructField(order, LongType()),
+                         *ALERT_SCHEMA.fields])
+
     def fn(key: Tuple[str], pdfs: Iterable[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         (sensor_id,) = key
         last = state.get[0] if state.exists else None
-        out_t, out_d = [], []
-        pdf = ordered_batch(pdfs, "timestamp")
+        keys, temps, diffs = [], [], []
+        pdf = ordered_batch(pdfs, order)
         if pdf is not None:
-            for t in pdf["temperature"]:
+            for k, t in zip(pdf[order], pdf["temperature"]):
                 if last is not None and abs(t - last) > threshold:
-                    out_t.append(float(t))
-                    out_d.append(float(t - last))
+                    keys.append(int(k))
+                    temps.append(float(t))
+                    diffs.append(float(t - last))
                 last = float(t)
         state.update((last,))
-        if out_t:
+        if keys:
             yield pd.DataFrame({
-                "id": [sensor_id] * len(out_t),
-                "temperature": out_t,
-                "diff": out_d,
+                order: keys,
+                "id": [sensor_id] * len(keys),
+                "temperature": temps,
+                "diff": diffs,
             })
 
     return readings.groupBy("id").applyInPandasWithState(
-        fn, outputStructType=ALERT_SCHEMA, stateStructType=_DELTA_STATE,
+        fn, outputStructType=schema, stateStructType=_DELTA_STATE,
         outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
@@ -420,53 +431,5 @@ def cusum_trace_state(events: DataFrame, h_units: int,
 
     return events.groupBy("event_type").applyInPandasWithState(
         fn, outputStructType=CUSUM_SCHEMA, stateStructType=_CUSUM_STATE,
-        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-TRACED_ALERT_SCHEMA = StructType([
-    StructField("event_id", LongType()),
-    StructField("id", StringType()),
-    StructField("temperature", DoubleType()),
-    StructField("diff", DoubleType()),
-])
-
-
-def temperature_delta_alerts_traced(readings: DataFrame,
-                                    threshold: float = 1.7) -> DataFrame:
-    """F2's TemperatureAlertFunction with the emitted rows carrying
-    event_id and the per-batch scan ordered by it — the hash-checkable
-    form of temperature_delta_alerts: under an event_id-ordered replay
-    (range-partitioned staging) the alert set is IDENTICAL to the
-    batch lag() twin, so the gate can value-hash this stream against
-    the same DuckDB oracle instead of recording rows-only. State and
-    semantics are unchanged: one last_temp double per key — including
-    the DEFAULT threshold (1.7, matching temperature_delta_alerts; it
-    was 17.0 until the r11 review caught the silent 10x divergence —
-    registry/gate call sites always pass threshold=17.0 explicitly)."""
-    def fn(key: Tuple[str], pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        (sensor_id,) = key
-        last = state.get[0] if state.exists else None
-        ids, temps, diffs = [], [], []
-        pdf = ordered_batch(pdfs, "event_id")
-        if pdf is not None:
-            for eid, t in zip(pdf["event_id"], pdf["temperature"]):
-                if last is not None and abs(t - last) > threshold:
-                    ids.append(int(eid))
-                    temps.append(float(t))
-                    diffs.append(float(t - last))
-                last = float(t)
-        state.update((last,))
-        if ids:
-            yield pd.DataFrame({
-                "event_id": ids,
-                "id": [sensor_id] * len(ids),
-                "temperature": temps,
-                "diff": diffs,
-            })
-
-    return readings.groupBy("id").applyInPandasWithState(
-        fn, outputStructType=TRACED_ALERT_SCHEMA, stateStructType=_DELTA_STATE,
         outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout,
     )

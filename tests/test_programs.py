@@ -42,7 +42,10 @@ def test_every_program_builds(spark):
                                   # stream-static per-batch join
                                   "broadcast_state_function",
                                   # spark_partition_id keyed op-state
-                                  "operator_list_state"])
+                                  "operator_list_state",
+                                  # allowed lateness on shuffled event
+                                  # time (EventTimeTimeout)
+                                  "late_data_updating_window"])
 def test_program_runs_live(spark, name):
     """Start on the live rate source and stop once two micro-batches
     have completed without error; fail if that takes over 60 s."""

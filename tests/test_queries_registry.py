@@ -145,25 +145,22 @@ def test_gate_ordering_invariants():
 
 
 
-# Package modules that no query, program, benchmark or tool imports,
-# each with the reason it stays.
-UNREACHED_MODULES = {
-    "examples_scala_spark.sources.connectors":
-        "Kafka, Delta and JDBC jars are absent here; the tests pin "
-        "their unavailable-error paths",
-    "examples_scala_spark.streaming.monitor":
+# Package names that no query, program, benchmark or tool refers to,
+# each with the reason it stays. A module may go unimported only when
+# every name in it is listed here.
+UNREFERENCED = {
+    "examples_scala_spark.streaming.monitor.MetricsCollector":
         "ROADMAP direction 4 attaches it to queries._run_replay",
 }
 
 
-def _imports(modules, path, package):
-    """(module, name, bound name) for each name the file at `path`
-    imports from a package module; `package` anchors relative
-    imports."""
+def _imports(modules, tree, package):
+    """(module, name, bound name) for each name the parsed file imports
+    from a package module; `package` anchors relative imports."""
     out = []
-    for node in ast.walk(ast.parse(path.read_text())):
+    for node in ast.walk(tree):
         if isinstance(node, ast.Import):
-            out += [(a.name, None, None) for a in node.names
+            out += [(a.name, None, a.asname) for a in node.names
                     if a.name in modules]
         elif isinstance(node, ast.ImportFrom):
             base = node.module or ""
@@ -179,41 +176,106 @@ def _imports(modules, path, package):
     return out
 
 
+def _resolve(modules, packages, mod, name):
+    """(module, name) defining `name` as imported from `mod`: a package
+    passes a name on to the module it re-exports from. A module itself
+    resolves to (module, None)."""
+    if mod in packages and name is not None:
+        for m, n, bound in _imports(modules, modules[mod], mod):
+            if bound == name:
+                return _resolve(modules, packages, m, n)
+    return mod, name
+
+
+def _definitions(tree):
+    """Top-level functions, classes and assigned names (no dunders),
+    each with its defining statement."""
+    out = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            out[node.name] = node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = getattr(node, "targets", [getattr(node, "target", None)])
+            out.update((t.id, node) for t in targets
+                       if isinstance(t, ast.Name))
+    return {k: v for k, v in out.items() if not k.startswith("__")}
+
+
+def _registered(node):
+    return any(isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+               and d.func.id in ("register", "program")
+               for d in getattr(node, "decorator_list", ()))
+
+
+def _references(modules, packages, tree, package, own=None):
+    """(module, name) pairs the parsed file refers to: names it imports
+    (a package's re-exports excepted), attributes it reads off an
+    imported module and, for package module `own`, its own top-level
+    names used outside their own definitions."""
+    refs, aliases = set(), {}
+    for mod, name, bound in _imports(modules, tree, package):
+        mod, name = _resolve(modules, packages, mod, name)
+        if name is None:
+            aliases[bound] = mod
+        elif own not in packages:
+            refs.add((mod, name))
+    defs = _definitions(tree) if own else {}
+    for top in tree.body:
+        for node in ast.walk(top):
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in aliases):
+                refs.add(_resolve(modules, packages,
+                                  aliases[node.value.id], node.attr))
+            elif (isinstance(node, ast.Name)
+                    and isinstance(node.ctx, ast.Load)
+                    and defs.get(node.id, top) is not top):
+                refs.add((own, node.id))
+    return refs
+
+
 def test_every_package_module_runs_outside_the_tests():
-    """Walk the import graph from the driver entry, the registry, the
-    programs, the benchmarks and the tools: every package module is
-    reached, except those named in UNREACHED_MODULES. Importing a
-    package reaches only the names taken from its `__init__`."""
+    """Every package module is imported, and every top-level function,
+    class or constant is registered or referred to, by the driver
+    entry, the registry, the programs, the benchmarks or the tools —
+    not only by the tests. UNREFERENCED lists the exceptions.
+    Importing a package reaches only the names taken from its
+    `__init__`."""
     root = Path(__file__).resolve().parents[1]
-    modules, packages = {}, {}
+    modules, packages = {}, set()
     for path in (root / "examples_scala_spark").rglob("*.py"):
         parts = path.relative_to(root).with_suffix("").parts
         if parts[-1] == "__init__":
             parts = parts[:-1]
-            packages[".".join(parts)] = path
-        modules[".".join(parts)] = path
+            packages.add(".".join(parts))
+        modules[".".join(parts)] = ast.parse(path.read_text())
+    outside = [ast.parse(p.read_text()) for p in [
+        root / "__spark_entry__.py", root / "bench.py",
+        *(root / "perfbench").glob("*.py"), *(root / "tools").glob("*.py")]]
 
-    def resolve(mod, name):
-        # a package passes a name on to the module it re-exports from
-        if mod not in packages:
-            return mod
-        return next((resolve(m, n) for m, n, bound
-                     in _imports(modules, packages[mod], mod)
-                     if name is not None and bound == name), None)
+    def anchor(mod):
+        return mod if mod in packages else mod.rpartition(".")[0]
 
-    todo = [("examples_scala_spark.queries", None, None),
-            ("examples_scala_spark.programs", None, None)]
-    for path in [root / "__spark_entry__.py", root / "bench.py",
-                 *(root / "perfbench").glob("*.py"),
-                 *(root / "tools").glob("*.py")]:
-        todo += _imports(modules, path, "")
+    todo = [("examples_scala_spark.queries", None),
+            ("examples_scala_spark.programs", None)]
+    for tree in outside:
+        todo += [(m, n) for m, n, _ in _imports(modules, tree, "")]
     reached = set()
     while todo:
-        mod, name, _ = todo.pop()
-        mod = resolve(mod, name)
-        if mod is not None and mod not in reached:
+        mod, _ = _resolve(modules, packages, *todo.pop())
+        if mod not in reached:
             reached.add(mod)
-            todo += _imports(modules, modules[mod],
-                             mod.rpartition(".")[0])
-    unreached = set(modules) - set(packages) - reached
-    assert unreached == set(UNREACHED_MODULES)
+            todo += [(m, n) for m, n, _
+                     in _imports(modules, modules[mod], anchor(mod))]
+    unreached = set(modules) - packages - reached
+
+    refs = set()
+    for mod, tree in modules.items():
+        refs |= _references(modules, packages, tree, anchor(mod), own=mod)
+    for tree in outside:
+        refs |= _references(modules, packages, tree, "")
+    unreferenced = {f"{mod}.{name}" for mod, tree in modules.items()
+                    for name, node in _definitions(tree).items()
+                    if (mod, name) not in refs and not _registered(node)}
+    assert sorted(unreferenced) == sorted(UNREFERENCED)
+    assert unreached == {n.rpartition(".")[0] for n in UNREFERENCED}

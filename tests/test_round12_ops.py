@@ -1,6 +1,5 @@
-"""Round-12 ADVICE fixes: early-firing legacy-checkpoint tolerance,
-connected_components max_iterations validation and delta_upsert_writer's
-explicit order_col."""
+"""Round-12 ADVICE fixes: early-firing legacy-checkpoint tolerance and
+connected_components max_iterations validation."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from examples_scala_spark.operators.graph import connected_components
-from examples_scala_spark.sources.connectors import delta_upsert_writer
 from examples_scala_spark.streaming.timers import _decode_ef_state
 
 
@@ -64,21 +62,6 @@ class TestConnectedComponentsBudgetGuard:
             connected_components(nodes, edges, max_iterations=1)
 
 
-# ----------------------------------------- delta upsert order_col surface
-
-class TestDeltaUpsertOrderCol:
-    def test_order_col_accepted_and_gated(self, spark, tmp_path):
-        # Delta jars absent in this container: the writer must still
-        # accept order_col and fail with the documented gate error,
-        # not a Py4J stack
-        from examples_scala_spark.sources.connectors import (
-            ConnectorUnavailable)
-        w = delta_upsert_writer(str(tmp_path / "t"), "k", order_col="seq")
-        batch = spark.createDataFrame([("a", 1, 10)], "k string, seq long, v long")
-        with pytest.raises(ConnectorUnavailable):
-            w(batch, 0)
-
-
 # ------------------------------------------- multimodal guard hardening
 
 class TestFrameSampleZeroFrames:
@@ -95,25 +78,6 @@ class TestFrameSampleZeroFrames:
         got = {(r.doc_id, r.frame_idx)
                for r in frame_sample(decoded, every_n=24).collect()}
         assert got == {(2, 0), (2, 24), (2, 48)}
-
-
-class TestExtractFeaturesBinsGuard:
-    @pytest.mark.parametrize("bad", [0, 100, 7])
-    def test_non_divisor_bins_refused(self, bad):
-        # bincount[:bins] silently dropped bytes >= bins*(256//bins)
-        # for non-divisor bins; the guard refuses instead
-        from examples_scala_spark.operators.multimodal import (
-            extract_features)
-        with pytest.raises(ValueError, match="divide 256"):
-            extract_features(None, bins=bad)
-
-    def test_divisor_bins_accepted(self, spark):
-        from examples_scala_spark.operators.multimodal import (
-            extract_features, media_table)
-        docs = spark.createDataFrame([(255, "hello world")],
-                                     "doc_id long, text string")
-        rows = extract_features(media_table(docs), bins=32).collect()
-        assert len(rows) == 1 and abs(sum(rows[0].byte_hist) - 1.0) < 1e-9
 
 
 # ------------------------------------- engine-exact average rounding

@@ -36,6 +36,7 @@ def test_temperature_delta_alerts_stream(spark, tmpdir):
             ("s2", 1, 5.0), ("s2", 2, 5.1)]
     out = stateful.temperature_delta_alerts(_sensor_stream(spark, tmpdir, rows),
                                             threshold=1.7)
+    assert out.columns == ["timestamp", "id", "temperature", "diff"]
     run_bounded(out, lambda w: w.format("memory").queryName("delta_alerts"),
                 os.path.join(tmpdir, "ck"))
     got = [(r.id, r.temperature, round(r.diff, 3))
@@ -227,7 +228,8 @@ def test_memory_sink_queryable_state(spark, tmpdir):
     rows = [("s1", 1, 10.0), ("s1", 2, 99.0)]
     out = stateful.high_temp_counter(_sensor_stream(spark, tmpdir, rows),
                                      threshold=50.0)
-    run_bounded(out, lambda _: sinks.memory_sink(out, "maxTemperature"),
+    run_bounded(out, lambda w: (w.format("memory").queryName("maxTemperature")
+                                .outputMode("update")),
                 os.path.join(tmpdir, "ck"))
     assert spark.sql("SELECT high_count FROM maxTemperature").collect()[0][0] == 1
 
@@ -371,8 +373,6 @@ def test_ordered_trace_survives_multi_chunk_groups(spark, tmpdir):
     chunk size and rows staged in REVERSED event order."""
     import pandas as pd
 
-    from examples_scala_spark.streaming.stateful import (
-        temperature_delta_alerts_traced)
 
     n = 200
     # deterministic zig-zag per event: alternating spikes so the alert
@@ -402,7 +402,8 @@ def test_ordered_trace_survives_multi_chunk_groups(spark, tmpdir):
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        out = temperature_delta_alerts_traced(stream, threshold=17.0)
+        out = stateful.temperature_delta_alerts(stream, threshold=17.0,
+                                                order="event_id")
         run_bounded(out, lambda w: (
             w.format("memory").queryName("multi_chunk_trace")),
             os.path.join(tmpdir, "ck"))

@@ -1,5 +1,5 @@
-"""Timer firing (F1), socket sink (K2), pandas UDAF (A5), and
-late-drop observability (T5 streaming twin)."""
+"""Timer firing (F1), socket sink (K2) and late-drop observability
+(T5 streaming twin)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ import time
 import pyspark.sql.functions as F
 import pytest
 
-from examples_scala_spark.operators.aggregations import avg_temp_pandas_udaf
 from examples_scala_spark.streaming import sinks, stateful
 from examples_scala_spark.streaming.sinks import RUN_TIMEOUT_S, run_bounded
 
@@ -86,18 +85,6 @@ def test_socket_writer(spark, tmpdir):
         assert sorted(srv.lines) == ["('s1', 1, 10.0)", "('s2', 2, 20.0)"]
     finally:
         srv.shutdown()
-
-
-def test_avg_pandas_udaf_matches_builtin(spark, sf_dir):
-    """A5 — the custom-accumulator UDAF path agrees with built-in avg."""
-    from examples_scala_spark.sources.tables import sensor_readings
-    s = sensor_readings(spark, sf_dir)
-    udaf = {r["id"]: r["avg_temp"] for r in avg_temp_pandas_udaf(s).collect()}
-    builtin = {r["id"]: r["a"] for r in
-               s.groupBy("id").agg(F.avg("temperature").alias("a")).collect()}
-    assert set(udaf) == set(builtin)
-    for k in udaf:
-        assert abs(udaf[k] - builtin[k]) < 1e-9
 
 
 def test_watermark_drop_observability(spark, tmpdir):
@@ -335,46 +322,6 @@ def test_rocksdb_state_store_matches_default_provider(spark, tmpdir):
     got_default = run("default_dedup", None)
     assert got_rocks == got_default
     assert len(got_rocks) == 7
-
-
-# ---------------------------------------------- multimodal round-4 plumbing
-
-def test_resize_plan_covers_and_crops_exactly(spark, sf_dir):
-    from examples_scala_spark.operators.multimodal import (
-        decode_media, media_table, resize_plan)
-    from examples_scala_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    plan = resize_plan(decode_media(media_table(docs)), 224, 224).collect()
-    assert plan  # image + video rows exist in the mime mix
-    for r in plan:
-        # scaled image covers the target in both axes (scale = max of
-        # the two ratios), and the crop box stays inside it
-        assert r.scaled_w >= 224 and r.scaled_h >= 224
-        assert min(r.scaled_w - 224, r.scaled_h - 224) <= 1  # tight axis
-        assert 0 <= r.crop_x <= r.scaled_w - 224
-        assert 0 <= r.crop_y <= r.scaled_h - 224
-        assert (r.out_w, r.out_h) == (224, 224)
-
-
-def test_extract_features_matches_direct_numpy(spark, sf_dir):
-    import numpy as np
-
-    from examples_scala_spark.operators.multimodal import (
-        extract_features, media_table)
-    from examples_scala_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    media = media_table(docs)
-    got = {r.doc_id: r.byte_hist
-           for r in extract_features(media, bins=16).collect()}
-    rows = media.collect()
-    assert len(got) == len(rows)
-    for r in rows:
-        arr = np.frombuffer(bytes(r.media), dtype=np.uint8)
-        hist = np.bincount(arr // 16, minlength=16)[:16] / len(arr)
-        assert np.allclose(got[r.doc_id], hist.round(6), atol=1e-6)
-        assert abs(sum(got[r.doc_id]) - 1.0) < 1e-3
 
 
 # ---------------------------------------------- round-5 real BMP decode

@@ -34,9 +34,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from examples_scala_spark.plans.inspect import explain_str  # noqa: E402
 from examples_scala_spark.queries import REGISTRY  # noqa: E402
 from examples_scala_spark.session import get_spark  # noqa: E402
+from examples_scala_spark.sources.tables import TABLES  # noqa: E402
 
 FACTS = ("lineitem", "orders", "events", "documents", "embeddings")
-TABLES = FACTS + ("region", "nation", "customer", "supplier", "part")
 
 
 def main() -> int:

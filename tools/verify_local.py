@@ -34,9 +34,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from examples_scala_spark.queries import REGISTRY  # noqa: E402
 from examples_scala_spark.session import get_spark  # noqa: E402
-
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+from examples_scala_spark.sources.tables import TABLES  # noqa: E402
 
 
 def value_hash(df: pd.DataFrame) -> str:
