@@ -30,7 +30,8 @@ from pyspark.sql.window import Window
 
 from .session import scratch_dir, tune
 from .sources.tables import (
-    load_table, normalize_ts, sensor_readings, SENSOR_READINGS_SQL)
+    events_to_sensors, load_table, normalize_ts, sensor_readings,
+    SENSOR_READINGS_SQL)
 from .operators import aggregations as agg
 from .operators import dedup, joins, similarity, text, multimodal
 from .operators.aggregations import dec
@@ -71,12 +72,149 @@ SENSORS_CTE = f"WITH sensors AS ({SENSOR_READINGS_SQL})"
 #: exactly 2 dp in the events fixture). Its 6-dp mean is
 #: half_up("sc", F.col("cnt") * 100); AVG_CENTS_SQL is the DuckDB twin
 #: of both steps as one aggregate expression.
-def _cents_sum(col: str = "value") -> F.Column:
-    return F.sum(F.round(F.col(col) * 100).cast("long")).alias("sc")
+def _cents_sum() -> F.Column:
+    return F.sum(F.round(F.col("value") * 100).cast("long")).alias("sc")
 
 
-AVG_CENTS_SQL = half_up_sql("SUM(CAST(round(value * 100) AS BIGINT))",
-                            "100 * count(*)")
+#: DuckDB: `value` as exact integer cents.
+CENTS_SQL = "CAST(round(value * 100) AS BIGINT)"
+
+AVG_CENTS_SQL = half_up_sql(f"SUM({CENTS_SQL})", "100 * count(*)")
+
+
+# ======================================================================
+# Oracle fragments that several DuckDB oracles share, each written once
+# ======================================================================
+
+def _words_cte(name: str = "w", src: str = "documents") -> str:
+    """CTE `name`: each doc of `src` split on whitespace into `words`."""
+    return f"""{name} AS (
+      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
+      FROM {src})"""
+
+
+def _ngrams_sql(n: int) -> str:
+    """Unnests the space-joined word n-grams of a `words` column."""
+    return f"""unnest(list_transform(
+      range(1, greatest(len(words) - {n - 1}, 0) + 1),
+      i -> array_to_string(list_slice(words, i, i + {n - 1}), ' ')))"""
+
+
+#: The md5-prefix integer hash of an n-gram `g`, as dedup.py hashes
+#: shingles.
+SHINGLE_HASH_SQL = "('0x' || substr(md5(g), 1, 15))::BIGINT"
+
+
+def _shingle_hash_cte(n: int, name: str = "sh", words: str = "w") -> str:
+    """CTE `name`: the distinct hashed word n-grams (`shingle`) of each
+    doc of the words CTE `words`."""
+    return f"""{name} AS (
+      SELECT DISTINCT doc_id,
+             {SHINGLE_HASH_SQL} AS shingle
+      FROM (SELECT doc_id,
+                   {_ngrams_sql(n)}
+                     AS g
+            FROM {words}))"""
+
+
+#: DuckDB: the number of text.STOPWORDS occurrences in `text`.
+STOP_COUNT_SQL = " + ".join(
+    f"len(regexp_extract_all(lower(text), '\\b{w}\\b'))"
+    for w in text.STOPWORDS)
+
+#: The signals of `text` that the quality score reads.
+QUALITY_SIGNALS_SQL = f"""length(text)::BIGINT AS n_chars,
+             len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_words,
+             len(regexp_extract_all(text, '[^\\w\\s]'))::BIGINT AS n_punct,
+             ({STOP_COUNT_SQL})::BIGINT AS n_stop"""
+
+
+def _quality_score_sql(n_chars: str = "n_chars") -> str:
+    """The 2-dp heuristic quality score (operators/text.py) of the
+    quality signals, with the char count in column `n_chars`."""
+    return f"""round(
+               (CASE WHEN n_words >= 10 AND n_words <= 100000
+                     THEN 0.25 ELSE 0.0 END)
+             + (CASE WHEN ({n_chars} - (n_words - 1)) / n_words >= 3
+                      AND ({n_chars} - (n_words - 1)) / n_words <= 10
+                     THEN 0.25 ELSE 0.0 END)
+             + (CASE WHEN n_punct / {n_chars} < 0.2 THEN 0.25 ELSE 0.0 END)
+             + (CASE WHEN n_stop / n_words > 0.01 THEN 0.25 ELSE 0.0 END),
+               2)"""
+
+
+#: Both directions of every pair of the CTE `pairs`, as (src, dst).
+PAIR_EDGES_SQL = """
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION
+      SELECT doc_b AS src, doc_a AS dst FROM pairs"""
+
+#: CTE `e`: each embedding as a DOUBLE[] `v`.
+EMB_CTE = """e AS (
+      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"""
+
+#: CTE `n`: `e` with the L2 `norm` of `v`.
+NORM_CTE = """n AS (
+      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)"""
+
+EMB_NORM_CTES = f"{EMB_CTE},\n    {NORM_CTE}"
+
+
+def _query_set_cte(cols: str, name: str = "q", rel: str = "n") -> str:
+    """CTE `name`: `cols` of the ANN query set, the first 256 rows of
+    `rel` with vec_id % 50 = 0."""
+    return f"""{name} AS (
+      SELECT {cols}
+      FROM {rel} WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT 256)"""
+
+
+def _centroids_cte(limit: str = "LIMIT 256") -> str:
+    """CTE `c`: the id-sampled centroids (vec_id % 23 = 1) in vec_id
+    order, capped by `limit`."""
+    return f"""c AS (
+      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
+      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id
+      {limit})"""
+
+
+def _ivf_cells_ctes(*cols: str) -> str:
+    """CTEs `affinity` (each vector of `n` with every centroid of `c`,
+    ranked r by cosine, ties to the lower cent_id, plus `cols`) and
+    `assign` (each vector's nearest centroid as its `cell`)."""
+    return f"""affinity AS (
+      SELECT vec_id, cent_id, {"".join(c + ", " for c in cols)}
+             row_number() OVER (PARTITION BY vec_id
+               ORDER BY list_dot_product(v, cv) / (norm * cnorm) DESC,
+                        cent_id) AS r
+      FROM n, c),
+    assign AS (
+      SELECT vec_id, cent_id AS cell FROM affinity WHERE r = 1)"""
+
+
+def _nearest_centroid_sql(*cols: str) -> str:
+    """Subquery: each vector of `n` with its nearest centroid of `c`
+    (argmax cosine, ties to the lower cent_id), carrying `cols` of
+    `v`, `norm` and the cosine `ccos`."""
+    ccos = "list_dot_product(n.v, c.cv) / (n.norm * c.cnorm)"
+    sel = {"v": "n.v", "norm": "n.norm", "ccos": f"{ccos} AS ccos"}
+    return f"""(
+        SELECT n.vec_id, c.cent_id, {"".join(sel[c] + ", " for c in cols)}
+               row_number() OVER (
+                 PARTITION BY n.vec_id
+                 ORDER BY {ccos}
+                   DESC, c.cent_id) AS r
+        FROM n CROSS JOIN c) WHERE r = 1"""
+
+
+#: The top-5 tail of an ANN oracle over `scored(query_id, neighbor_id,
+#: cos)`: rank by cosine, ties to the lower neighbor id.
+TOPK_COS_SQL = """ranked AS (
+      SELECT query_id, neighbor_id, cos,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY cos DESC, neighbor_id) AS rank
+      FROM scored)
+    SELECT query_id, neighbor_id, rank::BIGINT AS rank, round(cos, 6) AS cos
+    FROM ranked WHERE rank <= 5"""
 
 
 # ======================================================================
@@ -424,7 +562,7 @@ def w_session_dynamic_gap(spark, sf_dir):
            .otherwise(F.lit("25 minutes")))
     out = ev.groupBy(F.session_window("ts", gap), "event_type").agg(
         F.count(F.lit(1)).alias("cnt"),
-        _cents_sum("value"))
+        _cents_sum())
     return out.select(
         "event_type",
         F.unix_micros(F.col("session_window.start"))
@@ -1595,17 +1733,17 @@ def events_distinct_users(spark, sf_dir):
 # Spark operators, so results are engine-identical.
 # ======================================================================
 
-_SHINGLES_BODY = """w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM {src}),
+def _shingles_body(src: str) -> str:
+    """CTEs `w` and `sh`: the distinct word 3-grams of each doc of
+    `src`."""
+    return f"""{_words_cte(src=src)},
     sh AS (
       SELECT DISTINCT doc_id,
-             unnest(list_transform(
-               range(1, greatest(len(words) - 2, 0) + 1),
-               i -> array_to_string(list_slice(words, i, i + 2), ' '))) AS shingle
+             {_ngrams_sql(3)} AS shingle
       FROM w)"""
 
-_SHINGLES_CTE = "\n    WITH " + _SHINGLES_BODY.format(src="documents") + "\n"
+
+_SHINGLES_CTE = "\n    WITH " + _shingles_body("documents") + "\n"
 
 
 @register(
@@ -1627,7 +1765,7 @@ def _minhash_sig_sql(src: str = "documents", prefix: str = "") -> str:
         for i, (a, b) in enumerate(dedup._hash_params(16))
     )
     return (
-        "\n    WITH " + prefix + _SHINGLES_BODY.format(src=src)
+        "\n    WITH " + prefix + _shingles_body(src)
         + f""",
     x AS (
       SELECT doc_id,
@@ -1690,10 +1828,7 @@ def minhash_lsh_pairs(spark, sf_dir):
 def _dedup_clusters_sql() -> str:
     return f"""
     WITH RECURSIVE pairs AS ({_minhash_pairs_sql()}),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b AS src, doc_a AS dst FROM pairs),
+    edges AS ({PAIR_EDGES_SQL}),
     reach(id, label) AS (
       SELECT doc_id, doc_id FROM documents
       UNION
@@ -1720,10 +1855,7 @@ def dedup_clusters(spark, sf_dir):
 def _dedup_canonical_sql() -> str:
     return f"""
     WITH RECURSIVE pairs AS ({_minhash_pairs_sql()}),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b AS src, doc_a AS dst FROM pairs),
+    edges AS ({PAIR_EDGES_SQL}),
     reach(id, label) AS (
       SELECT doc_id, doc_id FROM documents
       UNION
@@ -1825,7 +1957,8 @@ def vocab_top_ngrams(spark, sf_dir):
             .orderBy(F.col("df").desc(), F.col("shingle")).limit(100))
 
 
-def _simhash_sql(bits: int = 32) -> str:
+def _simhash_sql() -> str:
+    bits = 32
     votes = ",\n           ".join(
         f"sum(CASE WHEN (x >> {j}) & 1 = 1 THEN 1 ELSE -1 END)::BIGINT AS v_{j}"
         for j in range(bits)
@@ -1883,15 +2016,11 @@ def simhash_near_pairs(spark, sf_dir):
 
 @register(
     "ngram_jaccard_pairs",
-    """
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
+    f"""
+    WITH {_words_cte()},
     sh_str AS (
       SELECT doc_id,
-             unnest(list_transform(
-               range(1, greatest(len(words) - 2, 0) + 1),
-               i -> array_to_string(list_slice(words, i, i + 2), ' '))) AS shingle_str
+             {_ngrams_sql(3)} AS shingle_str
       FROM w),
     sh AS (
       SELECT DISTINCT doc_id,
@@ -1919,11 +2048,8 @@ def ngram_jaccard_pairs(spark, sf_dir):
 
 @register(
     "embedding_near_pairs",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)
+    f"""
+    WITH {EMB_NORM_CTES}
     SELECT l.vec_id AS doc_a, r.vec_id AS doc_b,
            round(list_dot_product(l.v, r.v) / (l.norm * r.norm), 6) AS cos
     FROM n l JOIN n r ON l.vec_id < r.vec_id
@@ -1937,25 +2063,14 @@ def embedding_near_pairs(spark, sf_dir):
     return dedup.embedding_near_pairs(emb, threshold=0.35)
 
 
-_BRUTE_TOPK_SQL = """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    q AS (
-      SELECT vec_id AS query_id, v AS qv, norm AS qnorm
-      FROM n WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT 256),
+_BRUTE_TOPK_SQL = f"""
+    WITH {EMB_NORM_CTES},
+    {_query_set_cte("vec_id AS query_id, v AS qv, norm AS qnorm")},
     scored AS (
       SELECT query_id, vec_id AS neighbor_id,
              list_dot_product(qv, v) / (qnorm * norm) AS cos
       FROM n, q WHERE vec_id != query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, rank::BIGINT AS rank, round(cos, 6) AS cos
-    FROM ranked WHERE rank <= 5"""
+    {TOPK_COS_SQL}"""
 
 
 @register(
@@ -1973,57 +2088,38 @@ def ann_topk_bruteforce(spark, sf_dir):
                       F.col("rank").cast("bigint").alias("rank"), "cos")
 
 
-def _lsh_topk_sql(num_planes: int = 8, dim: int = 64) -> str:
+def _lsh_topk_sql(match: str) -> str:
+    """Cosine top-5 among the vectors whose 8-plane LSH signature `sig`
+    meets the query's `qsig` by the predicate `match`."""
+    num_planes, dim = 8, 64
     planes = []
     for p in range(num_planes):
-        comps = ",".join(repr(similarity._plane_component(p, d)) for d in range(dim))
+        comps = ",".join(repr(similarity._plane_component(p, d))
+                         for d in range(dim))
         planes.append(
-            f"(CASE WHEN list_dot_product(v, [{comps}]) >= 0 THEN {1 << p} ELSE 0 END)"
-        )
+            f"(CASE WHEN list_dot_product(v, [{comps}]) >= 0 "
+            f"THEN {1 << p} ELSE 0 END)")
     sig = " + ".join(planes)
     return f"""
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    WITH {EMB_CTE},
     n AS (
       SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm,
              ({sig})::BIGINT AS sig
       FROM e),
-    q AS (
-      SELECT vec_id AS query_id, v AS qv, norm AS qnorm, sig AS qsig
-      FROM n WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT 256),
+    {_query_set_cte("vec_id AS query_id, v AS qv, norm AS qnorm, "
+                    "sig AS qsig")},
     scored AS (
       SELECT query_id, vec_id AS neighbor_id,
              list_dot_product(qv, v) / (qnorm * norm) AS cos
-      FROM n JOIN q ON sig = qsig AND vec_id != query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, rank::BIGINT AS rank, round(cos, 6) AS cos
-    FROM ranked WHERE rank <= 5"""
+      FROM n JOIN q ON {match} AND vec_id != query_id),
+    {TOPK_COS_SQL}"""
 
 
-_IVF_SQL = """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    c AS (
-      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id LIMIT 256),
-    affinity AS (
-      SELECT vec_id, cent_id,
-             list_dot_product(v, cv) / (norm * cnorm) AS ccos,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY list_dot_product(v, cv) / (norm * cnorm) DESC,
-                                         cent_id) AS r
-      FROM n, c),
-    assign AS (
-      SELECT vec_id, cent_id AS cell FROM affinity WHERE r = 1),
-    qs AS (
-      SELECT vec_id FROM n WHERE vec_id % 50 = 0
-      ORDER BY vec_id LIMIT 256),
+_IVF_SQL = f"""
+    WITH {EMB_NORM_CTES},
+    {_centroids_cte()},
+    {_ivf_cells_ctes("list_dot_product(v, cv) / (norm * cnorm) AS ccos")},
+    {_query_set_cte("vec_id", name="qs")},
     probes AS (
       SELECT vec_id AS query_id, cent_id AS cell
       FROM affinity JOIN qs USING (vec_id) WHERE r <= 2),
@@ -2037,13 +2133,7 @@ _IVF_SQL = """
              JOIN probes ON assign.cell = probes.cell
              JOIN q ON probes.query_id = q.query_id
       WHERE n.vec_id != q.query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, rank::BIGINT AS rank, round(cos, 6) AS cos
-    FROM ranked WHERE rank <= 5"""
+    {TOPK_COS_SQL}"""
 
 
 @register("ann_topk_ivf", _IVF_SQL, "llm", "similarity")
@@ -2058,7 +2148,7 @@ def ann_topk_ivf(spark, sf_dir):
                       F.col("rank").cast("bigint").alias("rank"), "cos")
 
 
-@register("ann_topk_lsh", _lsh_topk_sql(), "llm", "similarity")
+@register("ann_topk_lsh", _lsh_topk_sql("sig = qsig"), "llm", "similarity")
 def ann_topk_lsh(spark, sf_dir):
     """Approximate top-5: random-hyperplane LSH (8 deterministic
     planes) buckets candidates; equi-join on the signature — the
@@ -2075,9 +2165,8 @@ def ann_topk_lsh(spark, sf_dir):
 # pq_encode evaluates), and the per-query distance table is the direct
 # squared-diff form pq_adc_topk builds — so the approximate distances
 # themselves are value-checkable, not just a recall bound.
-_PQ_CODES_CTES = """
-    e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+_PQ_CODES_CTES = f"""
+    {EMB_CTE},
     bk AS (
       SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, v AS bv
       FROM (SELECT vec_id, v FROM e WHERE vec_id % 23 = 1
@@ -2094,8 +2183,7 @@ _PQ_CODES_CTES = """
                         + list_dot_product(sv, sv), code) AS rn
       FROM xs JOIN bs USING (s)),
     codes AS (SELECT vec_id, s, code FROM enc WHERE rn = 1),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e
-          WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT 256),
+    {_query_set_cte("vec_id AS query_id, v AS qv", rel="e")},
     qs AS (SELECT query_id, s, qv[s*8+1 : s*8+8] AS qsv
            FROM q CROSS JOIN ss),
     tab AS (
@@ -2192,11 +2280,7 @@ def token_count(spark, sf_dir):
     )
 
 
-def _quality_sql(rel: str = "documents") -> str:
-    stop = " + ".join(
-        f"len(regexp_extract_all(lower(text), '\\b{w}\\b'))"
-        for w in text.STOPWORDS
-    )
+def _quality_sql() -> str:
     return f"""
     WITH f AS (
       SELECT doc_id,
@@ -2204,21 +2288,15 @@ def _quality_sql(rel: str = "documents") -> str:
              len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_words,
              len(regexp_extract_all(text, '[^\\w\\s]'))::BIGINT AS n_punct,
              len(regexp_extract_all(text, '[0-9]'))::BIGINT AS n_digit,
-             ({stop})::BIGINT AS n_stop
-      FROM {rel})
+             ({STOP_COUNT_SQL})::BIGINT AS n_stop
+      FROM documents)
     SELECT doc_id, n_chars_m, n_words,
            {half_up_sql("n_chars_m - (n_words - 1)",
                         "n_words")} AS mean_word_len,
            {half_up_sql("n_punct", "n_chars_m")} AS punct_ratio,
            {half_up_sql("n_digit", "n_chars_m")} AS digit_ratio,
            {half_up_sql("n_stop", "n_words")} AS stop_ratio,
-           round(
-             (CASE WHEN n_words >= 10 AND n_words <= 100000 THEN 0.25 ELSE 0.0 END)
-           + (CASE WHEN (n_chars_m - (n_words - 1)) / n_words >= 3
-                    AND (n_chars_m - (n_words - 1)) / n_words <= 10
-                   THEN 0.25 ELSE 0.0 END)
-           + (CASE WHEN n_punct / n_chars_m < 0.2 THEN 0.25 ELSE 0.0 END)
-           + (CASE WHEN n_stop / n_words > 0.01 THEN 0.25 ELSE 0.0 END), 2)
+           {_quality_score_sql("n_chars_m")}
              AS quality_score
     FROM f"""
 
@@ -2392,8 +2470,8 @@ def dsir_importance_weights(spark, sf_dir):
                            n_buckets=512)
 
 
-def _bpe_oracle_sql(k: int = 12, apply: bool = False,
-                    encode: bool = False, by_lang: bool = False) -> str:
+def _bpe_oracle_sql(apply: bool = False, encode: bool = False,
+                    by_lang: bool = False) -> str:
     """Unrolled-CTE twin of operators/text.py:bpe_train_merges — one
     (pair-count, argmax, rewrite) CTE triple per merge round, the same
     single-replace substitution over DOUBLE-space-joined symbols (the
@@ -2403,6 +2481,7 @@ def _bpe_oracle_sql(k: int = 12, apply: bool = False,
     so K stays in one place. With apply=True the final select explodes
     the post-merge vocab into subword usage counts instead of emitting
     the merge table."""
+    k = 12
     sql = [r"""
     WITH v0 AS MATERIALIZED (
       SELECT w, count(*)::BIGINT AS c,
@@ -2488,7 +2567,7 @@ def _bpe_oracle_sql(k: int = 12, apply: bool = False,
     return "".join(sql)
 
 
-@register("bpe_train_merges", _bpe_oracle_sql(12), "llm", "text")
+@register("bpe_train_merges", _bpe_oracle_sql(), "llm", "text")
 def bpe_train_merges(spark, sf_dir):
     """BPE merge-rule training (operators/text.py:bpe_train_merges —
     Sennrich et al. 2016): the first 12 merges learned from the
@@ -2538,7 +2617,7 @@ def dsir_resample_topk(spark, sf_dir):
     return gumbel_topk(w, k=100)
 
 
-@register("bpe_encode_doc_stats", _bpe_oracle_sql(12, encode=True),
+@register("bpe_encode_doc_stats", _bpe_oracle_sql(encode=True),
           "llm", "text")
 def bpe_encode_doc_stats(spark, sf_dir):
     """Per-document encoding stats under the self-trained 12-merge BPE
@@ -2553,7 +2632,7 @@ def bpe_encode_doc_stats(spark, sf_dir):
     return text.bpe_encode_doc_stats(docs, k_merges=12)
 
 
-@register("bpe_apply_token_counts", _bpe_oracle_sql(12, apply=True),
+@register("bpe_apply_token_counts", _bpe_oracle_sql(apply=True),
           "llm", "text")
 def bpe_apply_token_counts(spark, sf_dir):
     """Corpus-wide application of the self-trained 12-merge BPE
@@ -2570,7 +2649,7 @@ def bpe_apply_token_counts(spark, sf_dir):
     return text.bpe_apply_token_counts(docs, k_merges=12)
 
 
-@register("bpe_fertility_by_lang", _bpe_oracle_sql(12, by_lang=True),
+@register("bpe_fertility_by_lang", _bpe_oracle_sql(by_lang=True),
           "llm", "text")
 def bpe_fertility_by_lang(spark, sf_dir):
     """Tokenizer fertility by LANGUAGE under the self-trained 12-merge
@@ -3277,12 +3356,17 @@ def frame_sample(spark, sf_dir):
     return multimodal.frame_sample(decoded, every_n=24)
 
 
+#: CTE `d`: each doc's synthetic image width `w` and height `h`, as
+#: multimodal.bmp_media_table draws them.
+BMP_DIMS_CTE = """d AS (
+      SELECT doc_id, 8 + doc_id % 9 AS w, 5 + doc_id % 7 AS h
+      FROM documents)"""
+
+
 @register(
     "bmp_decode_stats",
-    """
-    WITH d AS (
-      SELECT doc_id, 8 + doc_id % 9 AS w, 5 + doc_id % 7 AS h
-      FROM documents),
+    f"""
+    WITH {BMP_DIMS_CTE},
     px1 AS (SELECT doc_id, w, h, unnest(range(0, w)) AS x FROM d),
     px AS (SELECT doc_id, w, h, x, unnest(range(0, h)) AS y FROM px1)
     SELECT doc_id, w::BIGINT AS width, h::BIGINT AS height,
@@ -3314,10 +3398,8 @@ def bmp_decode_stats(spark, sf_dir):
 
 @register(
     "bmp_thumbnail_stats",
-    """
-    WITH d AS (
-      SELECT doc_id, 8 + doc_id % 9 AS w, 5 + doc_id % 7 AS h
-      FROM documents),
+    f"""
+    WITH {BMP_DIMS_CTE},
     ox AS (SELECT doc_id, w, h, unnest(range(0, 7)) AS ox FROM d),
     oxy AS (SELECT doc_id, w, h, ox, unnest(range(0, 5)) AS oy FROM ox),
     m AS (
@@ -3485,12 +3567,7 @@ def approx_distinct_users(spark, sf_dir):
 
 @register(
     "stream_delta_alerts",
-    SENSORS_CTE + """
-    SELECT event_id, id, temperature, diff FROM (
-      SELECT event_id, id, temperature,
-             temperature - lag(temperature) OVER
-               (PARTITION BY id ORDER BY event_id) AS diff
-      FROM sensors) WHERE abs(diff) > 17""",
+    REGISTRY["alert_temp_delta"].oracle,
     "streaming", "F2",
 )
 def stream_delta_alerts(spark, sf_dir):
@@ -3503,31 +3580,27 @@ def stream_delta_alerts(spark, sf_dir):
     batch lag() twin's oracle — keyed streaming state and the batch
     window provably agree, upgrading this gate row from rows-only to
     value-checked."""
+    return _delta_alert_stream(spark, sf_dir, "stream_delta_alerts_result")
+
+
+def _delta_alert_stream(spark, sf_dir, sink_name):
+    """The keyed delta alerts of the 4-batch event_id-ordered replay,
+    run into the memory sink `sink_name`."""
     tune(spark)
     from .streaming.stateful import temperature_delta_alerts
 
     ev = load_table(spark, sf_dir, "events")
     src = _replay(spark, [ev.repartitionByRange(4, "event_id")
                           .sortWithinPartitions("event_id")])
-    readings = src.select(
-        "event_id",
-        F.concat(F.lit("sensor_"),
-                 ((F.col("user_id") % 10) + 1).cast("string")).alias("id"),
-        F.col("value").alias("temperature"),
-    )
+    readings = events_to_sensors(src).select("event_id", "id", "temperature")
     out = temperature_delta_alerts(readings, threshold=17.0,
                                    order="event_id")
-    return _run_to_memory(spark, out, "stream_delta_alerts_result")
+    return _run_to_memory(spark, out, sink_name)
 
 
 @register(
     "stream_delta_alerts_smallbatch",
-    SENSORS_CTE + """
-    SELECT event_id, id, temperature, diff FROM (
-      SELECT event_id, id, temperature,
-             temperature - lag(temperature) OVER
-               (PARTITION BY id ORDER BY event_id) AS diff
-      FROM sensors) WHERE abs(diff) > 17""",
+    REGISTRY["alert_temp_delta"].oracle,
     "streaming", "F2",
 )
 def stream_delta_alerts_smallbatch(spark, sf_dir):
@@ -3541,37 +3614,19 @@ def stream_delta_alerts_smallbatch(spark, sf_dir):
     stream_delta_alerts: the streamed alert set must hash-match the
     batch lag() twin regardless of Arrow chunking — the adversarial
     re-prove of the r4 chunk-ordering fix."""
-    tune(spark)
-    from .streaming.stateful import temperature_delta_alerts
-
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-        ev = load_table(spark, sf_dir, "events")
-        src = _replay(spark, [ev.repartitionByRange(4, "event_id")
-                              .sortWithinPartitions("event_id")])
-        readings = src.select(
-            "event_id",
-            F.concat(F.lit("sensor_"),
-                     ((F.col("user_id") % 10) + 1).cast("string"))
-            .alias("id"),
-            F.col("value").alias("temperature"),
-        )
-        out = temperature_delta_alerts(readings, threshold=17.0,
-                                       order="event_id")
-        return _run_to_memory(spark, out,
-                              "stream_delta_alerts_smallbatch_result")
+        return _delta_alert_stream(spark, sf_dir,
+                                   "stream_delta_alerts_smallbatch_result")
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
 
 @register(
     "stream_early_firing",
-    """
-    WITH e AS (
-      SELECT 'sensor_' || ((user_id % 10) + 1)::VARCHAR AS id,
-             (epoch_us(ts) // 1000) AS ms
-      FROM events),
+    SENSORS_CTE + """,
+    e AS (SELECT id, timestamp AS ms FROM sensors),
     wm AS (SELECT max(ms) - 5000 AS w FROM e),
     c AS (SELECT id, (ms // 3600000) * 3600000 AS window_start,
                  count(*)::BIGINT AS cnt
@@ -3605,12 +3660,8 @@ def stream_early_firing(spark, sf_dir):
     tune(spark)
     from .streaming.timers import early_firing_window_counts
 
-    src = _events_stream(spark, sf_dir)
-    readings = src.select(
-        F.concat(F.lit("sensor_"), ((F.col("user_id") % 10) + 1).cast("string")).alias("id"),
-        F.expr("unix_micros(ts) div 1000").alias("timestamp"),  # epoch ms
-        F.col("value").alias("temperature"),
-    )
+    readings = events_to_sensors(_events_stream(spark, sf_dir)).select(
+        "id", "timestamp", "temperature")
     out = early_firing_window_counts(
         readings, window_ms=3_600_000, interval_ms=600_000,
         watermark_delay="5 seconds")
@@ -3619,13 +3670,12 @@ def stream_early_firing(spark, sf_dir):
 
 @register(
     "stream_early_firing_multibatch",
-    """
-    WITH e AS (
-      SELECT 'sensor_' || ((user_id % 10) + 1)::VARCHAR AS id,
-             (epoch_us(ts) // 1000) AS ms,
+    SENSORS_CTE + """,
+    e AS (
+      SELECT id, timestamp AS ms,
              ((row_number() OVER (ORDER BY epoch_us(ts), event_id) - 1) * 4)
                // (SELECT count(*) FROM events) AS bucket
-      FROM events),
+      FROM sensors),
     ks AS (SELECT unnest(generate_series(1, 4)) AS k),
     wm AS (
       SELECT k, (SELECT max(ms) FROM e WHERE bucket = least(k, 4) - 1) - 5000
@@ -3713,11 +3763,7 @@ def stream_early_firing_multibatch(spark, sf_dir):
             f"{tick_ms} ms — partial-fire attribution would diverge")
     src = _replay(spark, [b.filter(F.col("bucket") == k).drop("bucket")
                           .coalesce(1) for k in range(4)])
-    readings = src.select(
-        F.concat(F.lit("sensor_"), key.cast("string")).alias("id"),
-        F.expr("unix_micros(ts) div 1000").alias("timestamp"),
-        F.col("value").alias("temperature"),
-    )
+    readings = events_to_sensors(src).select("id", "timestamp", "temperature")
     out = early_firing_window_counts(
         readings, window_ms=3_600_000, interval_ms=tick_ms,
         watermark_delay="5 seconds")
@@ -4356,11 +4402,7 @@ def stream_session_windows(spark, sf_dir):
     eviction at the watermark — memory is bounded by key cardinality x
     gap, not stream length."""
     tune(spark)
-    ev = _events_stream(spark, sf_dir)
-    sens = ev.select(
-        F.concat(F.lit("sensor_"),
-                 ((F.col("user_id") % 10) + 1).cast("string")).alias("id"),
-        "ts")
+    sens = events_to_sensors(_events_stream(spark, sf_dir)).select("id", "ts")
     agg = (sens.withWatermark("ts", "0 seconds")
            .groupBy(F.session_window("ts", "10 minutes"), "id")
            .agg(F.count("*").alias("cnt")))
@@ -4505,17 +4547,13 @@ def funnel_conversion(spark, sf_dir):
 @register(
     "decontaminate_overlap",
     f"""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
+    WITH {_words_cte()},
     sh AS (
       SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(g), 1, 15))::BIGINT AS shingle,
+             {SHINGLE_HASH_SQL} AS shingle,
              greatest(len(words) - 4, 0) AS _n_raw
       FROM (SELECT doc_id, words,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 4, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 4), ' ')))
+                   {_ngrams_sql(5)}
                      AS g
             FROM w)),
     sz AS (SELECT doc_id, count(*)::BIGINT AS n_shingles
@@ -4935,28 +4973,14 @@ def q20_excess_availability(spark, sf_dir):
 # ======================================================================
 
 def _corpus_stats_sql() -> str:
-    stop = " + ".join(
-        f"len(regexp_extract_all(lower(text), '\\b{w}\\b'))"
-        for w in text.STOPWORDS
-    )
     return f"""
     WITH f AS (
       SELECT source, lang,
-             length(text)::BIGINT AS n_chars,
-             len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_words,
-             len(regexp_extract_all(text, '[^\\w\\s]'))::BIGINT AS n_punct,
-             ({stop})::BIGINT AS n_stop
+             {QUALITY_SIGNALS_SQL}
       FROM documents),
     g AS (
       SELECT source, lang, n_chars, n_words,
-             round(
-               (CASE WHEN n_words >= 10 AND n_words <= 100000
-                     THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
-                      AND (n_chars - (n_words - 1)) / n_words <= 10
-                     THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN n_punct / n_chars < 0.2 THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN n_stop / n_words > 0.01 THEN 0.25 ELSE 0.0 END), 2)
+             {_quality_score_sql()}
                AS q
       FROM f)
     SELECT source, lang,
@@ -5001,7 +5025,7 @@ def corpus_stats_by_source(spark, sf_dir):
     "ann_recall_lsh",
     f"""
     WITH brute AS ({_BRUTE_TOPK_SQL}),
-    lsh AS ({_lsh_topk_sql()}),
+    lsh AS ({REGISTRY["ann_topk_lsh"].oracle}),
     hits AS (
       SELECT b.query_id, count(*)::BIGINT AS n_hits
       FROM brute b JOIN lsh l
@@ -5040,25 +5064,30 @@ def ann_recall_lsh(spark, sf_dir):
 # Passage-level dedup over token-window chunks
 # ======================================================================
 
-def _chunk_hash_cte(window: int = 8, stride: int = 4) -> str:
+#: Token chunks of the shared-passage oracles: 8 tokens every 4.
+CHUNK_WINDOW, CHUNK_STRIDE = 8, 4
+
+
+def _chunk_hash_cte() -> str:
     return rf"""
     w AS (
       SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
       FROM documents),
     st AS (
       SELECT doc_id, t,
-             unnest(generate_series(0, greatest(len(t) - 1, 0), {stride}))
+             unnest(generate_series(0, greatest(len(t) - 1, 0),
+                                    {CHUNK_STRIDE}))
                AS s
       FROM w),
     c AS (
       SELECT doc_id,
-             md5(array_to_string(t[s + 1 : s + {window}], ' ')) AS h
+             md5(array_to_string(t[s + 1 : s + {CHUNK_WINDOW}], ' ')) AS h
       FROM st)"""
 
 
-def _chunk_hashes(spark, sf_dir, window: int = 8, stride: int = 4):
+def _chunk_hashes(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    return (text.chunk_tokens(docs, window=window, stride=stride)
+    return (text.chunk_tokens(docs, window=CHUNK_WINDOW, stride=CHUNK_STRIDE)
             .select("doc_id", F.md5("chunk_text").alias("h")))
 
 
@@ -5161,7 +5190,7 @@ def stream_windowed_avg(spark, sf_dir):
     ev = _events_stream(spark, sf_dir)
     agg = (ev.withWatermark("ts", "0 seconds")
            .groupBy(F.window("ts", "1 minute"), "event_type")
-           .agg(F.count("*").alias("cnt"), _cents_sum("value")))
+           .agg(F.count("*").alias("cnt"), _cents_sum()))
     out = agg.select(
         "event_type",
         F.expr("unix_micros(window.start) div 1000").alias("window_start_ms"),
@@ -5219,7 +5248,7 @@ def stream_session_stats(spark, sf_dir):
                           .sortWithinPartitions("ts", "event_id")])
     agg = (src.withWatermark("ts", "0 seconds")
            .groupBy(F.session_window("ts", "10 minutes"), "event_type")
-           .agg(F.count("*").alias("cnt"), _cents_sum("value")))
+           .agg(F.count("*").alias("cnt"), _cents_sum()))
     out = agg.select(
         "event_type",
         F.unix_micros("session_window.start").alias("session_start_us"),
@@ -5265,7 +5294,7 @@ def stream_sliding_avg(spark, sf_dir):
                           .sortWithinPartitions("ts", "event_id")])
     agg = (src.withWatermark("ts", "0 seconds")
            .groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
-           .agg(F.count(F.lit(1)).alias("cnt"), _cents_sum("value")))
+           .agg(F.count(F.lit(1)).alias("cnt"), _cents_sum()))
     out = agg.select(
         "event_type",
         F.col("window.start").cast("long").alias("window_start"),
@@ -5910,10 +5939,7 @@ def stream_full_outer_join(spark, sf_dir):
 
 @register(
     "flatmap_split_udtf",
-    SENSORS_CTE + """
-    SELECT token, count(*)::BIGINT AS cnt FROM (
-      SELECT unnest(string_split(id, '_')) AS token FROM sensors
-    ) GROUP BY token""",
+    REGISTRY["flatmap_split_tokens"].oracle,
     "reference", "P5", "udtf",
 )
 def flatmap_split_udtf(spark, sf_dir):
@@ -6194,13 +6220,13 @@ def stream_semi_join(spark, sf_dir):
     res = _run_to_memory(spark, out, "stream_semi_join_result")
     return res.filter(F.col("event_id") >= 0)
 
-def _pagerank_sql(iterations: int = 10, damping: float = 0.85,
-                  decimals: int = 6) -> str:
+def _pagerank_sql() -> str:
     """Unrolled power-iteration PageRank as chained CTEs — the exact
     arithmetic of operators/graph.py:pagerank (symmetrized LSH edges,
     per-round dangling-mass redistribution), 10 fixed rounds, ranks
     rounded to 6 decimals so order-dependent double summation cannot
     flip the hash (residual cross-engine error ~1e-12 << 5e-7)."""
+    iterations, damping, decimals = 10, 0.85, 6
     steps = []
     prev = "r0"
     for i in range(1, iterations + 1):
@@ -6227,10 +6253,7 @@ def _pagerank_sql(iterations: int = 10, damping: float = 0.85,
         prev = f"r{i}"
     return f"""
     WITH pairs AS MATERIALIZED ({_minhash_pairs_sql()}),
-    edges AS MATERIALIZED (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b AS src, doc_a AS dst FROM pairs),
+    edges AS MATERIALIZED ({PAIR_EDGES_SQL}),
     deg AS MATERIALIZED (
       SELECT src, count(*)::DOUBLE AS deg FROM edges GROUP BY src),
     ids AS MATERIALIZED (SELECT doc_id AS id FROM documents),
@@ -6589,53 +6612,28 @@ def minhash_incremental(spark, sf_dir):
     return dedup.minhash_delta(prior, changes, num_hashes=16, n=3)
 
 
-_SEMDEDUP_SQL = """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    c AS (
-      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id LIMIT 256),
-    a AS (
-      SELECT vec_id, cent_id, v, norm FROM (
-        SELECT n.vec_id, c.cent_id, n.v, n.norm,
-               row_number() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, c.cv) / (n.norm * c.cnorm)
-                   DESC, c.cent_id) AS r
-        FROM n CROSS JOIN c) WHERE r = 1),
-    p AS (
-      SELECT l.vec_id, min(r.vec_id) AS nbr_min
-      FROM a l JOIN a r USING (cent_id)
-      WHERE l.vec_id <> r.vec_id
-        AND list_dot_product(l.v, r.v) / (l.norm * r.norm) >= 0.35
-      GROUP BY l.vec_id)
-    SELECT a.vec_id, a.cent_id AS cell,
-           least(a.vec_id, COALESCE(nbr_min, a.vec_id))::BIGINT AS keep_id,
-           (a.vec_id = least(a.vec_id, COALESCE(nbr_min, a.vec_id))) AS kept
-    FROM a LEFT JOIN p USING (vec_id)"""
-
-
-_SEMDEDUP_AUTO_SQL = """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    c AS (
-      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id
-      -- the self-tuned budget: clamp(floor(sqrt(corpus)), 16, 65536)
+#: The sqrt-corpus centroid budget of semantic_dedup's default.
+SQRT_BUDGET_LIMIT = """\
+-- the self-tuned budget: clamp(floor(sqrt(corpus)), 16, 65536)
       LIMIT (SELECT greatest(16, least(65536,
-               CAST(floor(sqrt(count(*))) AS BIGINT))) FROM n)),
+               CAST(floor(sqrt(count(*))) AS BIGINT))) FROM n)"""
+
+
+def _semdedup_cells_sql(limit: str) -> str:
+    """CTEs e, n, c (centroids capped by `limit`) and `a`: each
+    vector's nearest-centroid cell, with v and norm."""
+    return f"""
+    WITH {EMB_NORM_CTES},
+    {_centroids_cte(limit)},
     a AS (
-      SELECT vec_id, cent_id, v, norm FROM (
-        SELECT n.vec_id, c.cent_id, n.v, n.norm,
-               row_number() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, c.cv) / (n.norm * c.cnorm)
-                   DESC, c.cent_id) AS r
-        FROM n CROSS JOIN c) WHERE r = 1),
+      SELECT vec_id, cent_id, v, norm
+      FROM {_nearest_centroid_sql("v", "norm")})"""
+
+
+def _semdedup_sql(limit: str) -> str:
+    """SemDeDup at threshold 0.35: a vector is dropped when a lower-id
+    cell-mate clears it; keep_id is the lowest such id."""
+    return _semdedup_cells_sql(limit) + """,
     p AS (
       SELECT l.vec_id, min(r.vec_id) AS nbr_min
       FROM a l JOIN a r USING (cent_id)
@@ -6646,6 +6644,10 @@ _SEMDEDUP_AUTO_SQL = """
            least(a.vec_id, COALESCE(nbr_min, a.vec_id))::BIGINT AS keep_id,
            (a.vec_id = least(a.vec_id, COALESCE(nbr_min, a.vec_id))) AS kept
     FROM a LEFT JOIN p USING (vec_id)"""
+
+
+_SEMDEDUP_SQL = _semdedup_sql("LIMIT 256")
+_SEMDEDUP_AUTO_SQL = _semdedup_sql(SQRT_BUDGET_LIMIT)
 
 
 @register(
@@ -6700,25 +6702,7 @@ def semantic_dedup_auto(spark, sf_dir):
 
 @register(
     "semantic_dedup_sweep",
-    f"""
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    c AS (
-      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id
-      -- the sqrt-corpus default budget (r11 flip, VERDICT r10 #1)
-      LIMIT (SELECT greatest(16, least(65536,
-               CAST(floor(sqrt(count(*))) AS BIGINT))) FROM n)),
-    a AS (
-      SELECT vec_id, cent_id, v, norm FROM (
-        SELECT n.vec_id, c.cent_id, n.v, n.norm,
-               row_number() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, c.cv) / (n.norm * c.cnorm)
-                   DESC, c.cent_id) AS r
-        FROM n CROSS JOIN c) WHERE r = 1),
+    _semdedup_cells_sql(SQRT_BUDGET_LIMIT) + f""",
     bl AS (
       SELECT l.vec_id,
              max(list_dot_product(l.v, r.v) / (l.norm * r.norm))
@@ -6757,23 +6741,12 @@ def semantic_dedup_sweep(spark, sf_dir):
     return _f(emb)
 
 
-_SEMDEDUP_SNM_SQL = """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    c AS (
-      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id LIMIT 256),
+_SEMDEDUP_SNM_SQL = f"""
+    WITH {EMB_NORM_CTES},
+    {_centroids_cte()},
     a AS (
-      SELECT vec_id, cent_id, v, norm, ccos FROM (
-        SELECT n.vec_id, c.cent_id, n.v, n.norm,
-               list_dot_product(n.v, c.cv) / (n.norm * c.cnorm) AS ccos,
-               row_number() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, c.cv) / (n.norm * c.cnorm)
-                   DESC, c.cent_id) AS r
-        FROM n CROSS JOIN c) WHERE r = 1),
+      SELECT vec_id, cent_id, v, norm, ccos
+      FROM {_nearest_centroid_sql("v", "norm", "ccos")}),
     rk AS (
       SELECT vec_id, cent_id, v, norm,
              (row_number() OVER (
@@ -6884,11 +6857,8 @@ def semantic_dedup_snm_recall(spark, sf_dir):
 
 @register(
     "semantic_decontaminate",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+    f"""
+    WITH {EMB_NORM_CTES},
     b AS (
       SELECT vec_id AS bench_id, v AS bv, norm AS bnorm
       FROM n WHERE vec_id % 97 = 3 ORDER BY vec_id LIMIT 64),
@@ -6927,23 +6897,11 @@ def semantic_decontaminate(spark, sf_dir):
 
 @register(
     "embedding_outliers",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    c AS (
-      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id LIMIT 256),
+    f"""
+    WITH {EMB_NORM_CTES},
+    {_centroids_cte()},
     a AS (
-      SELECT vec_id, cent_id, ccos FROM (
-        SELECT n.vec_id, c.cent_id,
-               list_dot_product(n.v, c.cv) / (n.norm * c.cnorm) AS ccos,
-               row_number() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, c.cv) / (n.norm * c.cnorm)
-                   DESC, c.cent_id) AS r
-        FROM n CROSS JOIN c) WHERE r = 1),
+      SELECT vec_id, cent_id, ccos FROM {_nearest_centroid_sql("ccos")}),
     u AS (
       SELECT vec_id, cent_id, CAST(round(ccos * 1000) AS BIGINT) AS x
       FROM a),
@@ -6998,7 +6956,7 @@ def jsonl_roundtrip(spark, sf_dir):
 
 @register(
     "orc_roundtrip",
-    "SELECT doc_id, text, lang, source, n_chars FROM documents",
+    REGISTRY["jsonl_roundtrip"].oracle,
     "sources", "llm",
 )
 def orc_roundtrip(spark, sf_dir):
@@ -7078,10 +7036,7 @@ def mixture_temperature_rates(spark, sf_dir):
 
 @register(
     "user_hll_rollup",
-    """
-    SELECT event_type, count(DISTINCT user_id)::BIGINT AS n_exact,
-           TRUE AS within_bound
-    FROM events GROUP BY event_type""",
+    REGISTRY["approx_distinct_users"].oracle,
     "llm", "sketch",
 )
 def user_hll_rollup(spark, sf_dir):
@@ -7520,16 +7475,12 @@ def stream_curation_gate(spark, sf_dir):
 @register(
     "stream_decontaminate_gate",
     rf"""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS words
-      FROM documents),
+    WITH {_words_cte()},
     sh AS (
       SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(g), 1, 15))::BIGINT % 65536 AS b
+             {SHINGLE_HASH_SQL} % 65536 AS b
       FROM (SELECT doc_id,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 3, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 3), ' ')))
+                   {_ngrams_sql(4)}
                      AS g
             FROM w)),
     bid AS (SELECT doc_id FROM documents
@@ -7652,11 +7603,8 @@ def stream_decontaminate_gate(spark, sf_dir):
 
 @register(
     "decontamination_by_benchmark",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+    f"""
+    WITH {EMB_NORM_CTES},
     b AS (
       SELECT vec_id AS bench_id, v AS bv, norm AS bnorm
       FROM n WHERE vec_id % 97 = 3 ORDER BY vec_id LIMIT 64),
@@ -8021,10 +7969,8 @@ def cdc_snapshot_merge(spark, sf_dir):
 
 @register(
     "bm25_topk",
-    """
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
+    f"""
+    WITH {_words_cte()},
     stats AS (
       SELECT count(*)::DOUBLE AS N, avg(len(words))::DOUBLE AS avgdl FROM w),
     tok AS (
@@ -8094,10 +8040,8 @@ def wav_frame_features(spark, sf_dir):
 
 @register(
     "hybrid_retrieval_rrf",
-    """
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
+    f"""
+    WITH {_words_cte()},
     stats AS (
       SELECT count(*)::DOUBLE AS N, avg(len(words))::DOUBLE AS avgdl FROM w),
     tok AS (
@@ -8121,9 +8065,7 @@ def wav_frame_features(spark, sf_dir):
       SELECT doc_id,
              row_number() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
       FROM lex20),
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+    {EMB_NORM_CTES},
     q AS (SELECT v AS qv, norm AS qnorm FROM n WHERE vec_id = 0),
     sem0 AS (
       SELECT vec_id AS doc_id,
@@ -8240,18 +8182,8 @@ def rerank_cross_encoder(spark, sf_dir):
 @register(
     "bloom_decontaminate",
     f"""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(g), 1, 15))::BIGINT AS shingle
-      FROM (SELECT doc_id,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 3, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 3), ' ')))
-                     AS g
-            FROM w)),
+    WITH {_words_cte()},
+    {_shingle_hash_cte(4)},
     sz AS (SELECT doc_id, count(*)::BIGINT AS n_shingles
            FROM sh GROUP BY doc_id),
     bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 89 = 0),
@@ -8561,18 +8493,8 @@ def dataset_manifest(spark, sf_dir):
       SELECT min(doc_id) AS doc_id FROM (
         SELECT doc_id, md5(text) AS h FROM good) GROUP BY h),
     k AS (SELECT g.* FROM good g JOIN keep USING (doc_id)),
-    w8 AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(g), 1, 15))::BIGINT AS shingle
-      FROM (SELECT doc_id,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 7, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 7), ' ')))
-                     AS g
-            FROM w8)),
+    {_words_cte("w8")},
+    {_shingle_hash_cte(8, words="w8")},
     bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
     contaminated AS (
       SELECT DISTINCT s.doc_id FROM sh s JOIN bench USING (shingle)
@@ -8682,7 +8604,7 @@ def events_gap_fill(spark, sf_dir):
                    F.expr("unix_micros(ts) div 3600000000").alias("bucket"),
                    "value")
          .groupBy("user_id", "bucket")
-         .agg(F.count("*").alias("cnt"), _cents_sum("value"))
+         .agg(F.count("*").alias("cnt"), _cents_sum())
          .select("user_id", "bucket",
                  half_up("sc", F.col("cnt") * 100).alias("v")))
     return gap_fill_locf(b, "user_id", "bucket", "v")
@@ -8770,23 +8692,10 @@ def leakage_free_split(spark, sf_dir):
 
 @register(
     "ivf_incremental_assign",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    c AS (
-      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id LIMIT 256),
-    affinity AS (
-      SELECT vec_id, cent_id,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY list_dot_product(v, cv)
-                                         / (norm * cnorm) DESC,
-                                         cent_id) AS r
-      FROM n, c),
-    assign AS (
-      SELECT vec_id, cent_id AS cell FROM affinity WHERE r = 1)
+    f"""
+    WITH {EMB_NORM_CTES},
+    {_centroids_cte()},
+    {_ivf_cells_ctes()}
     SELECT cell, count(*)::BIGINT AS n_vectors
     FROM assign GROUP BY cell""",
     "llm", "similarity", "cdc",
@@ -8874,40 +8783,8 @@ def part_cooccurrence_lift(spark, sf_dir):
             .limit(20))
 
 
-def _lsh_multiprobe_sql(num_planes: int = 8, dim: int = 64) -> str:
-    planes = []
-    for p in range(num_planes):
-        comps = ",".join(repr(similarity._plane_component(p, d))
-                         for d in range(dim))
-        planes.append(
-            f"(CASE WHEN list_dot_product(v, [{comps}]) >= 0 "
-            f"THEN {1 << p} ELSE 0 END)")
-    sig = " + ".join(planes)
-    return f"""
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm,
-             ({sig})::BIGINT AS sig
-      FROM e),
-    q AS (
-      SELECT vec_id AS query_id, v AS qv, norm AS qnorm, sig AS qsig
-      FROM n WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT 256),
-    scored AS (
-      SELECT query_id, vec_id AS neighbor_id,
-             list_dot_product(qv, v) / (qnorm * norm) AS cos
-      FROM n JOIN q
-        ON bit_count(xor(sig, qsig)) <= 1 AND vec_id != query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, rank::BIGINT AS rank, round(cos, 6) AS cos
-    FROM ranked WHERE rank <= 5"""
-
-
-@register("ann_topk_lsh_multiprobe", _lsh_multiprobe_sql(),
+@register("ann_topk_lsh_multiprobe",
+          _lsh_topk_sql("bit_count(xor(sig, qsig)) <= 1"),
           "llm", "similarity")
 def ann_topk_lsh_multiprobe(spark, sf_dir):
     """Multi-probe LSH top-5: each query probes its own bucket plus
@@ -9186,7 +9063,7 @@ def events_mad_anomalies(spark, sf_dir):
     "revenue_pareto_abc",
     f"""
     WITH u AS (
-      SELECT user_id, SUM(CAST(round(value * 100) AS BIGINT)) AS cents
+      SELECT user_id, SUM({CENTS_SQL}) AS cents
       FROM events WHERE event_type = 'purchase' GROUP BY user_id),
     t AS (SELECT SUM(cents)::BIGINT AS total FROM u),
     c AS (
@@ -9266,18 +9143,8 @@ def event_type_transitions(spark, sf_dir):
     "minhash_accuracy",
     f"""
     WITH lsh AS ({_minhash_pairs_sql()}),
-    w2 AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
-    sh2 AS (
-      SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(g), 1, 15))::BIGINT AS shingle
-      FROM (SELECT doc_id,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 2, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 2), ' ')))
-                     AS g
-            FROM w2)),
+    {_words_cte("w2")},
+    {_shingle_hash_cte(3, name="sh2", words="w2")},
     sz2 AS (SELECT doc_id, count(*)::BIGINT AS sz FROM sh2 GROUP BY doc_id),
     inter2 AS (
       SELECT l.doc_id AS doc_a, r.doc_id AS doc_b, count(*)::BIGINT AS i2
@@ -9320,18 +9187,8 @@ def minhash_accuracy(spark, sf_dir):
     "lsh_precision_recall",
     f"""
     WITH lsh AS ({_minhash_pairs_sql()}),
-    w3 AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
-    sh3 AS (
-      SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(g), 1, 15))::BIGINT AS shingle
-      FROM (SELECT doc_id,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 2, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 2), ' ')))
-                     AS g
-            FROM w3)),
+    {_words_cte("w3")},
+    {_shingle_hash_cte(3, name="sh3", words="w3")},
     sz3 AS (SELECT doc_id, count(*)::BIGINT AS sz FROM sh3 GROUP BY doc_id),
     t2 AS (
       SELECT i.doc_a, i.doc_b FROM (
@@ -9386,18 +9243,8 @@ def lsh_precision_recall(spark, sf_dir):
       WHERE ('0x' || substr(md5('lshs-' || doc_id::VARCHAR), 1, 15))::BIGINT
             % 5 = 0),
     lsh AS ({_minhash_pairs_sql(src="sdocs")}),
-    w3 AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM sdocs),
-    sh3 AS (
-      SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(g), 1, 15))::BIGINT AS shingle
-      FROM (SELECT doc_id,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 2, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 2), ' ')))
-                     AS g
-            FROM w3)),
+    {_words_cte("w3", src="sdocs")},
+    {_shingle_hash_cte(3, name="sh3", words="w3")},
     sz3 AS (SELECT doc_id, count(*)::BIGINT AS sz FROM sh3 GROUP BY doc_id),
     t2 AS (
       SELECT i.doc_a, i.doc_b FROM (
@@ -9450,10 +9297,9 @@ def lsh_tuning_sampled(spark, sf_dir):
                half_up(F.col("tp"), F.col("n_true"))).alias("recall"))
 
 
-@register(
-    "gopher_quality_flags",
-    """
-    WITH tok AS (
+#: CTEs `tok`, `cnts` and `per`: the per-doc word statistics the
+#: Gopher rules read.
+GOPHER_STATS_CTES = """tok AS (
       SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
       FROM documents),
     cnts AS (SELECT doc_id, w, count(*) AS cnt FROM tok GROUP BY 1, 2),
@@ -9465,7 +9311,13 @@ def lsh_tuning_sampled(spark, sf_dir):
                       THEN cnt ELSE 0 END)::BIGINT AS stop_cnt,
              sum(CASE WHEN regexp_matches(w, '[a-zA-Z]')
                       THEN cnt ELSE 0 END)::BIGINT AS alpha_cnt
-      FROM cnts GROUP BY doc_id),
+      FROM cnts GROUP BY doc_id)"""
+
+
+@register(
+    "gopher_quality_flags",
+    f"""
+    WITH {GOPHER_STATS_CTES},
     f AS (
       SELECT doc_id, n_words,
              (n_words >= 30 AND n_words <= 100000) AS flag_word_count,
@@ -9499,10 +9351,10 @@ def gopher_quality_flags(spark, sf_dir):
 
 @register(
     "events_cusum_drift",
-    """
+    f"""
     WITH c AS (
       SELECT event_id, event_type, ts,
-             CAST(round(value * 100) AS BIGINT) AS cents
+             {CENTS_SQL} AS cents
       FROM events),
     m AS (SELECT event_type, sum(cents) // count(*) AS target
           FROM c GROUP BY event_type),
@@ -9553,10 +9405,10 @@ def events_cusum_drift(spark, sf_dir):
 
 @register(
     "events_trend_ols",
-    """
+    f"""
     WITH c AS (
       SELECT event_type, epoch_us(ts) // 1000000 AS sec,
-             CAST(round(value * 100) AS BIGINT) AS cents
+             {CENTS_SQL} AS cents
       FROM events),
     mn AS (SELECT min(sec) AS mn FROM c),
     d AS (SELECT event_type, (sec - mn)::HUGEINT AS x, cents::HUGEINT AS y
@@ -9636,32 +9488,7 @@ def neardup_triangle_stats(spark, sf_dir):
 
 @register(
     "setsim_jaccard_prefix",
-    f"""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
-    sh_str AS (
-      SELECT doc_id,
-             unnest(list_transform(
-               range(1, greatest(len(words) - 2, 0) + 1),
-               i -> array_to_string(list_slice(words, i, i + 2), ' ')))
-               AS shingle_str
-      FROM w),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(shingle_str), 1, 15))::BIGINT AS shingle
-      FROM sh_str),
-    sz AS (SELECT doc_id, count(*)::BIGINT AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT l.doc_id AS doc_a, r.doc_id AS doc_b, count(*)::BIGINT AS inter
-      FROM sh l JOIN sh r USING (shingle)
-      WHERE l.doc_id < r.doc_id
-      GROUP BY 1, 2)
-    SELECT doc_a, doc_b,
-           {half_up_sql("inter", "sa.sz + sb.sz - inter")} AS jaccard
-    FROM inter JOIN sz sa ON sa.doc_id = doc_a
-               JOIN sz sb ON sb.doc_id = doc_b
-    WHERE inter / (sa.sz + sb.sz - inter) >= 0.5""",
+    REGISTRY["ngram_jaccard_pairs"].oracle,
     "llm", "dedup",
 )
 def setsim_jaccard_prefix(spark, sf_dir):
@@ -9820,7 +9647,7 @@ def user_lifecycle_states(spark, sf_dir):
       SELECT event_type,
              ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT % 2
                AS bucket,
-             CAST(round(value * 100) AS BIGINT) AS cents
+             {CENTS_SQL} AS cents
       FROM events),
     g AS (
       SELECT event_type,
@@ -9946,7 +9773,7 @@ def inverted_index_postings(spark, sf_dir):
     "mutual_information_bands",
     f"""
     WITH c AS (
-      SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
+      SELECT event_type, {CENTS_SQL} AS cents
       FROM events),
     qs AS (
       SELECT quantile_cont(cents, 0.25) AS q1, quantile_cont(cents, 0.5)
@@ -10018,18 +9845,8 @@ def mutual_information_bands(spark, sf_dir):
 @register(
     "doc_containment_pairs",
     f"""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, ('0x' || substr(md5(g), 1, 15))::BIGINT
-               AS shingle
-      FROM (SELECT doc_id,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 2, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 2), ' ')))
-                     AS g
-            FROM w)),
+    WITH {_words_cte()},
+    {_shingle_hash_cte(3)},
     sz AS (SELECT doc_id, count(*)::BIGINT AS sz FROM sh GROUP BY doc_id),
     inter AS (
       SELECT l.doc_id AS doc_a, r.doc_id AS doc_b, count(*)::BIGINT AS i
@@ -10076,15 +9893,11 @@ def doc_containment_pairs(spark, sf_dir):
 
 @register(
     "doc_bigram_logppl",
-    """
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
+    f"""
+    WITH {_words_cte()},
     bg AS (
       SELECT doc_id,
-             unnest(list_transform(
-               range(1, greatest(len(words) - 1, 0) + 1),
-               i -> array_to_string(list_slice(words, i, i + 1), ' ')))
+             {_ngrams_sql(2)}
                AS bigram
       FROM w),
     dbc AS (SELECT doc_id, bigram, count(*)::BIGINT AS cnt
@@ -10254,29 +10067,7 @@ def segment_overlap_hll(spark, sf_dir):
 
 @register(
     "stream_cusum_drift",
-    """
-    WITH c AS (
-      SELECT event_id, event_type, ts,
-             CAST(round(value * 100) AS BIGINT) AS cents
-      FROM events),
-    m AS (SELECT event_type, sum(cents) // count(*) AS target
-          FROM c GROUP BY event_type),
-    p AS (
-      SELECT c.event_id, c.event_type, c.ts,
-             sum(c.cents - m.target) OVER (
-               PARTITION BY c.event_type ORDER BY c.ts, c.event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-      FROM c JOIN m USING (event_type))
-    SELECT event_id, event_type,
-           (pre - least(0, min(pre) OVER (
-              PARTITION BY event_type ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)))::BIGINT
-             AS cusum_cents,
-           (pre - least(0, min(pre) OVER (
-              PARTITION BY event_type ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))) > 20000
-             AS drift
-    FROM p""",
+    REGISTRY["events_cusum_drift"].oracle,
     "streaming", "anomaly",
 )
 def stream_cusum_drift(spark, sf_dir):
@@ -10503,7 +10294,7 @@ def events_decayed_counts(spark, sf_dir):
       SELECT event_type,
              CASE WHEN epoch_us(ts) * 2 < lo + hi THEN 0 ELSE 1 END
                AS half,
-             CAST(round(value * 100) AS BIGINT) AS cents
+             {CENTS_SQL} AS cents
       FROM events CROSS JOIN mx),
     qs AS (SELECT quantile_cont(cents, 0.25) AS q1,
                   quantile_cont(cents, 0.5) AS q2,
@@ -10896,10 +10687,7 @@ def _curation_v3_sql() -> str:
       SELECT doc_a, doc_b FROM ({_minhash_pairs_sql()})
       WHERE doc_a IN (SELECT doc_id FROM surv)
         AND doc_b IN (SELECT doc_id FROM surv)),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b AS src, doc_a AS dst FROM pairs),
+    edges AS ({PAIR_EDGES_SQL}),
     reach(id, label) AS (
       SELECT doc_id, doc_id FROM surv
       UNION
@@ -10957,19 +10745,9 @@ def pipeline_curation_v3(spark, sf_dir):
     "ann_topk_ivfpq",
     f"""
     WITH {_PQ_CODES_CTES},
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-    c AS (
-      SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-      FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id LIMIT 256),
-    affinity AS (
-      SELECT vec_id, cent_id,
-             row_number() OVER (PARTITION BY vec_id
-               ORDER BY list_dot_product(v, cv) / (norm * cnorm) DESC,
-                        cent_id) AS r
-      FROM n, c),
-    assign AS (
-      SELECT vec_id, cent_id AS cell FROM affinity WHERE r = 1),
+    {NORM_CTE},
+    {_centroids_cte()},
+    {_ivf_cells_ctes()},
     probes AS (
       SELECT a.vec_id AS query_id, a.cent_id AS cell
       FROM affinity a JOIN q ON a.vec_id = q.query_id
@@ -11202,37 +10980,7 @@ def lineitem_quantity_equidepth(spark, sf_dir):
 
 @register(
     "stream_ab_guardrail",
-    f"""
-    WITH e AS (
-      SELECT event_type,
-             ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT % 2
-               AS bucket,
-             CAST(round(value * 100) AS BIGINT) AS cents
-      FROM events),
-    g AS (
-      SELECT event_type,
-             count(*) FILTER (bucket = 0)::HUGEINT AS na,
-             count(*) FILTER (bucket = 1)::HUGEINT AS nb,
-             coalesce(sum(cents) FILTER (bucket = 0), 0)::HUGEINT AS sa,
-             coalesce(sum(cents) FILTER (bucket = 1), 0)::HUGEINT AS sb,
-             coalesce(sum(cents * cents) FILTER (bucket = 0), 0)::HUGEINT
-               AS qa,
-             coalesce(sum(cents * cents) FILTER (bucket = 1), 0)::HUGEINT
-               AS qb
-      FROM e GROUP BY event_type)
-    SELECT event_type, na::BIGINT AS n_a, nb::BIGINT AS n_b,
-           CASE WHEN na > 0
-                THEN {half_up_sql("sa", "100 * na")} END AS mean_a,
-           CASE WHEN nb > 0
-                THEN {half_up_sql("sb", "100 * nb")} END AS mean_b,
-           CASE WHEN na > 1 AND nb > 1
-                AND (na * qa - sa * sa > 0 OR nb * qb - sb * sb > 0)
-                THEN round((sa::DOUBLE / na::DOUBLE - sb::DOUBLE / nb::DOUBLE)
-                 / sqrt((na * qa - sa * sa)::DOUBLE
-                        / (na * (na - 1))::DOUBLE / na::DOUBLE
-                        + (nb * qb - sb * sb)::DOUBLE
-                        / (nb * (nb - 1))::DOUBLE / nb::DOUBLE), 6) END AS z
-    FROM g""",
+    REGISTRY["ab_test_zscores"].oracle,
     "streaming", "analytics",
 )
 def stream_ab_guardrail(spark, sf_dir):
@@ -11347,19 +11095,9 @@ def funnel_time_percentiles(spark, sf_dir):
 
 
 def _lsh_band_sweep_sql() -> str:
-    truth = """
-    w4 AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents),
-    sh4 AS (
-      SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(g), 1, 15))::BIGINT AS shingle
-      FROM (SELECT doc_id,
-                   unnest(list_transform(
-                     range(1, greatest(len(words) - 2, 0) + 1),
-                     i -> array_to_string(list_slice(words, i, i + 2), ' ')))
-                     AS g
-            FROM w4)),
+    truth = f"""
+    {_words_cte("w4")},
+    {_shingle_hash_cte(3, name="sh4", words="w4")},
     sz4 AS (SELECT doc_id, count(*)::BIGINT AS sz FROM sh4 GROUP BY doc_id),
     truth AS (
       SELECT i.doc_a, i.doc_b FROM (
@@ -11552,20 +11290,8 @@ def vocab_coverage_curve(spark, sf_dir):
 
 @register(
     "gopher_rule_overlap",
-    """
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-      FROM documents),
-    cnts AS (SELECT doc_id, w, count(*) AS cnt FROM tok GROUP BY 1, 2),
-    per AS (
-      SELECT doc_id, sum(cnt)::BIGINT AS n_words,
-             count(*)::BIGINT AS n_distinct, max(cnt)::BIGINT AS top_cnt,
-             sum(len(w) * cnt)::BIGINT AS n_chars,
-             sum(CASE WHEN w IN ('the', 'and', 'of', 'to', 'a')
-                      THEN cnt ELSE 0 END)::BIGINT AS stop_cnt,
-             sum(CASE WHEN regexp_matches(w, '[a-zA-Z]')
-                      THEN cnt ELSE 0 END)::BIGINT AS alpha_cnt
-      FROM cnts GROUP BY doc_id),
+    f"""
+    WITH {GOPHER_STATS_CTES},
     fails AS (
       SELECT doc_id, unnest(list_filter([
         CASE WHEN NOT (n_words >= 30 AND n_words <= 100000)
@@ -11722,10 +11448,7 @@ def events_value_autocorr(spark, sf_dir):
 
 @register(
     "stream_distinct_sketch",
-    """
-    SELECT event_type, count(DISTINCT user_id)::BIGINT AS n_exact,
-           TRUE AS within_bound
-    FROM events GROUP BY event_type""",
+    REGISTRY["approx_distinct_users"].oracle,
     "streaming", "sketch", "R3",
 )
 def stream_distinct_sketch(spark, sf_dir):
@@ -12072,7 +11795,7 @@ def _ndcg_sql() -> str:
         f"WHEN {p} THEN {_MRR_CONST[p]}" for p in range(1, 6))
     return f"""
     WITH brute AS ({_BRUTE_TOPK_SQL}),
-    lsh AS ({_lsh_topk_sql()}),
+    lsh AS ({REGISTRY["ann_topk_lsh"].oracle}),
     j AS (
       SELECT l.query_id, l.rank AS s_rank, b.rank AS t_rank
       FROM lsh l LEFT JOIN brute b
@@ -12163,27 +11886,14 @@ def ann_ndcg_mrr(spark, sf_dir):
 
 
 def _calibration_sql() -> str:
-    stop = " + ".join(
-        f"len(regexp_extract_all(lower(text), '\\b{w}\\b'))"
-        for w in text.STOPWORDS)
     return f"""
     WITH f AS (
-      SELECT length(text)::BIGINT AS n_chars,
-             len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_words,
-             len(regexp_extract_all(text, '[^\\w\\s]'))::BIGINT AS n_punct,
-             ({stop})::BIGINT AS n_stop
+      SELECT {QUALITY_SIGNALS_SQL}
       FROM documents),
     lab AS (
       SELECT least(n_chars // 100, 19)::BIGINT AS band,
-             (CASE WHEN round(
-               (CASE WHEN n_words >= 10 AND n_words <= 100000
-                     THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
-                      AND (n_chars - (n_words - 1)) / n_words <= 10
-                     THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN n_punct / n_chars < 0.2 THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN n_stop / n_words > 0.01 THEN 0.25 ELSE 0.0 END),
-               2) >= 0.75 THEN 1 ELSE 0 END)::BIGINT AS y
+             (CASE WHEN {_quality_score_sql()} >= 0.75
+                   THEN 1 ELSE 0 END)::BIGINT AS y
       FROM f),
     bands AS (
       SELECT band, count(*)::BIGINT AS n, sum(y)::BIGINT AS pos
@@ -12322,20 +12032,8 @@ def dp_noised_histogram(spark, sf_dir):
             .filter(F.col("noisy_count") >= 10.0))
 
 
-_GOPHER_KEEP_CTE = """
-    tok AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-      FROM documents),
-    cnts AS (SELECT doc_id, w, count(*) AS cnt FROM tok GROUP BY 1, 2),
-    per AS (
-      SELECT doc_id, sum(cnt)::BIGINT AS n_words,
-             count(*)::BIGINT AS n_distinct, max(cnt)::BIGINT AS top_cnt,
-             sum(len(w) * cnt)::BIGINT AS n_chars,
-             sum(CASE WHEN w IN ('the', 'and', 'of', 'to', 'a')
-                      THEN cnt ELSE 0 END)::BIGINT AS stop_cnt,
-             sum(CASE WHEN regexp_matches(w, '[a-zA-Z]')
-                      THEN cnt ELSE 0 END)::BIGINT AS alpha_cnt
-      FROM cnts GROUP BY doc_id),
+_GOPHER_KEEP_CTE = f"""
+    {GOPHER_STATS_CTES},
     gkeep AS (
       SELECT doc_id,
              (n_words >= 30 AND n_words <= 100000
@@ -12348,30 +12046,16 @@ _GOPHER_KEEP_CTE = """
 
 
 def _kappa_sql() -> str:
-    stop = " + ".join(
-        f"len(regexp_extract_all(lower(text), '\\b{w}\\b'))"
-        for w in text.STOPWORDS)
     cross = "(n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)"
     return f"""
     WITH {_GOPHER_KEEP_CTE},
     qf AS (
       SELECT doc_id,
-             length(text)::BIGINT AS n_chars,
-             len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_words,
-             len(regexp_extract_all(text, '[^\\w\\s]'))::BIGINT AS n_punct,
-             ({stop})::BIGINT AS n_stop
+             {QUALITY_SIGNALS_SQL}
       FROM documents),
     qa AS (
       SELECT doc_id,
-             (round(
-               (CASE WHEN n_words >= 10 AND n_words <= 100000
-                     THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
-                      AND (n_chars - (n_words - 1)) / n_words <= 10
-                     THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN n_punct / n_chars < 0.2 THEN 0.25 ELSE 0.0 END)
-             + (CASE WHEN n_stop / n_words > 0.01 THEN 0.25 ELSE 0.0 END),
-               2) >= 0.75) AS keep_a
+             ({_quality_score_sql()} >= 0.75) AS keep_a
       FROM qf),
     cm AS (
       SELECT count(*)::BIGINT AS n,
@@ -12435,8 +12119,7 @@ def rater_agreement_kappa(spark, sf_dir):
 @register(
     "embedding_int8_quant",
     f"""
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    WITH {EMB_CTE},
     el AS (
       SELECT vec_id,
              unnest(generate_series(1, len(v))) - 1 AS dim,
@@ -12517,10 +12200,8 @@ def embedding_int8_quant(spark, sf_dir):
 
 @register(
     "bmp_dhash_dedup",
-    """
-    WITH d AS (
-      SELECT doc_id, 8 + doc_id % 9 AS w, 5 + doc_id % 7 AS h
-      FROM documents),
+    f"""
+    WITH {BMP_DIMS_CTE},
     ox AS (SELECT doc_id, w, h, unnest(range(0, 9)) AS ox FROM d),
     oxy AS (SELECT doc_id, w, h, ox, unnest(range(0, 8)) AS oy FROM ox),
     g AS (
@@ -12586,18 +12267,15 @@ def bmp_dhash_dedup(spark, sf_dir):
 
 @register(
     "ann_recall_truncated",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    f"""
+    WITH {EMB_CTE},
     n AS (
       SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm,
              v[1:32] AS tv,
              sqrt(list_dot_product(v[1:32], v[1:32])) AS tnorm
       FROM e),
-    q AS (
-      SELECT vec_id AS query_id, v AS qv, norm AS qnorm,
-             tv AS qtv, tnorm AS qtnorm
-      FROM n WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT 256),
+    {_query_set_cte("vec_id AS query_id, v AS qv, norm AS qnorm, "
+                    "tv AS qtv, tnorm AS qtnorm")},
     fr AS (
       SELECT query_id, vec_id AS neighbor_id,
              row_number() OVER (
@@ -12836,7 +12514,7 @@ def stream_session_dynamic_gap(spark, sf_dir):
            .otherwise(F.lit("25 minutes")))
     agg = (src.withWatermark("ts", "0 seconds")
            .groupBy(F.session_window("ts", gap), "event_type")
-           .agg(F.count("*").alias("cnt"), _cents_sum("value")))
+           .agg(F.count("*").alias("cnt"), _cents_sum()))
     out = agg.select(
         "event_type",
         F.unix_micros("session_window.start").alias("session_start_us"),
@@ -12860,9 +12538,7 @@ _HAMMING_CTE = f"""
       SELECT vec_id, {_sign_pack_sql(0, 32)} AS w0,
              {_sign_pack_sql(32, 64)} AS w1
       FROM e),
-    q AS (
-      SELECT vec_id AS query_id, w0 AS q0, w1 AS q1
-      FROM p WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT 256),
+    {_query_set_cte("vec_id AS query_id, w0 AS q0, w1 AS q1", rel="p")},
     s AS (
       SELECT query_id, vec_id AS neighbor_id,
              (bit_count(xor(w0, q0)) + bit_count(xor(w1, q1)))::BIGINT
@@ -12899,15 +12575,13 @@ def ann_topk_hamming(spark, sf_dir):
 
 @register(
     "ann_hamming_recall",
-    _HAMMING_CTE + """,
+    _HAMMING_CTE + f""",
     n AS (
       SELECT vec_id, embedding::DOUBLE[] AS fv,
              sqrt(list_dot_product(embedding::DOUBLE[],
                                    embedding::DOUBLE[])) AS norm
       FROM embeddings),
-    fq AS (
-      SELECT vec_id AS query_id, fv AS qv, norm AS qnorm
-      FROM n WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT 256),
+    {_query_set_cte("vec_id AS query_id, fv AS qv, norm AS qnorm", name="fq")},
     cr AS (
       SELECT query_id, vec_id AS neighbor_id,
              row_number() OVER (
@@ -13233,23 +12907,14 @@ def pipeline_weighted_mixture(spark, sf_dir):
 
 @register(
     "semantic_dedup_delta",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    n AS (
-      SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+    f"""
+    WITH {EMB_NORM_CTES},
     c AS (
       SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
       FROM n WHERE vec_id % 23 = 1 AND vec_id % 9 != 0
       ORDER BY vec_id LIMIT 256),
     asn AS (
-      SELECT vec_id, cent_id AS cell FROM (
-        SELECT n.vec_id, c.cent_id,
-               row_number() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, c.cv) / (n.norm * c.cnorm)
-                   DESC, c.cent_id) AS r
-        FROM n CROSS JOIN c) WHERE r = 1),
+      SELECT vec_id, cent_id AS cell FROM {_nearest_centroid_sql()}),
     m AS (
       SELECT n.vec_id, n.v, n.norm, asn.cell
       FROM n JOIN asn USING (vec_id)),

@@ -57,17 +57,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def sensor_readings(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_to_sensors(ev: DataFrame) -> DataFrame:
     """The reference's primary fixture (SensorReading: id, timestamp,
-    temperature — reference util/SensorReading.scala:19) viewed over the
-    driver `events` table per FIXTURES.md §1.
+    temperature — reference util/SensorReading.scala:19) viewed over an
+    `events` frame, batch or streaming, per FIXTURES.md §1.
 
     Mapping: id = 'sensor_' || (user_id % 10 + 1), event time = ts,
     temperature = value. Keeps both a TimestampType `ts` (required by
     window()/withWatermark) and an epoch-ms BIGINT `timestamp` for
     parity with the reference's Long timestamps.
     """
-    ev = load_table(spark, sf_dir, "events")
     return ev.select(
         F.concat(F.lit("sensor_"), ((F.col("user_id") % 10) + 1).cast("string")).alias("id"),
         F.col("ts"),
@@ -75,6 +74,11 @@ def sensor_readings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("temperature"),
         F.col("event_id"),
     )
+
+
+def sensor_readings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`events_to_sensors` over the driver `events` table."""
+    return events_to_sensors(load_table(spark, sf_dir, "events"))
 
 
 # DuckDB twin of sensor_readings() for use inside oracle SQL strings.

@@ -5,16 +5,18 @@ tools/verify_local.py / the driver)."""
 from __future__ import annotations
 
 import ast
+import re
 
 import duckdb
 import pytest
 
 from examples_scala_spark.queries import REGISTRY
+from examples_scala_spark.sources.tables import TABLES
 
 import sys
 from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-from verify_local import TABLES, value_hash  # noqa: E402
+from verify_local import value_hash  # noqa: E402
 
 # fast, structurally diverse sample for the pytest loop; the driver
 # and verify_local cover all of them
@@ -44,6 +46,8 @@ SAMPLE = [
     "rerank_cross_encoder", "value_quantile_kll", "stream_session_stats",
     "substring_dedup_scrub", "w_session_dynamic_gap",
     "stream_sliding_avg",
+    # the capped-bench decontamination and the sqrt-budget SemDeDup
+    "semantic_decontaminate", "semantic_dedup_auto",
 ]
 
 
@@ -78,6 +82,70 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     assert len(sdf) == len(odf)
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert value_hash(sdf) == value_hash(odf)
+
+
+# Oracle fragments that several registry oracles share, each as a
+# regex over queries.py's source with the number of times it may
+# appear there: once, or not at all for the sensor mapping, which
+# lives in sources/tables.py.
+ORACLE_FRAGMENTS = {
+    "embedding CTE e": (r"embedding::DOUBLE\[\] AS v FROM embeddings", 1),
+    "norm CTE n": (r"sqrt\(list_dot_product\(v, v\)\) AS norm FROM e\)",
+                   1),
+    "centroid sample c": (r"FROM n WHERE vec_id % 23 = 1 ORDER BY vec_id\s",
+                          1),
+    "nearest-centroid argmax": (r"PARTITION BY n\.vec_id\s+ORDER BY", 1),
+    "IVF affinity": (r"FROM n, c\)", 1),
+    "ANN query set": (r"WHERE vec_id % 50 = 0\s+ORDER BY vec_id LIMIT 256",
+                      1),
+    "cosine top-5 tail": (r"ORDER BY cos DESC, neighbor_id\) AS rank", 1),
+    "word split w": (
+        r"string_split_regex\(trim\(text\), '\\{1,2}s\+'\) AS words", 1),
+    "word n-gram unnest": (r"list_slice\(words, i, i \+", 1),
+    "md5 shingle hash": (r"substr\(md5\(g\), 1, 15\)", 1),
+    "pair-to-edge union": (r"SELECT doc_b AS src, doc_a AS dst FROM pairs",
+                           1),
+    "integer cents": (r"CAST\(round\(value \* 100\) AS BIGINT\)", 1),
+    "quality score": (r"n_stop / n_words > 0\.01", 1),
+    "stopword count": (r"for w in text\.STOPWORDS", 1),
+    "Gopher word stats": (r"sum\(len\(w\) \* cnt\)", 1),
+    "BMP dimensions": (r"8 \+ doc_id % 9 AS w", 1),
+    "sqrt centroid budget": (
+        r"CAST\(floor\(sqrt\(count\(\*\)\)\) AS BIGINT\)", 1),
+    "SemDeDup keeper": (
+        r"COALESCE\(nbr_min, a\.vec_id\)\)::BIGINT AS keep_id", 1),
+    "LSH planes": (r"_plane_component\(p, d\)", 1),
+    "sensor mapping, Spark": (r'F\.lit\("sensor_"\)', 0),
+    "sensor mapping, SQL": (r"'sensor_' \|\| \(\(user_id % 10\) \+ 1\)", 0),
+}
+
+
+def test_oracle_fragments_written_once():
+    """Each shared oracle fragment has one definition in queries.py,
+    and no two registrations spell out the same oracle: a stream twin
+    whose result is its batch twin's points at that oracle."""
+    root = Path(__file__).resolve().parents[1]
+    src = (root / "examples_scala_spark" / "queries.py").read_text()
+    found = {name: len(re.findall(rx, src))
+             for name, (rx, _) in ORACLE_FRAGMENTS.items()}
+    repeated = {name: k for name, k in found.items()
+                if k != ORACLE_FRAGMENTS[name][1]}
+
+    def literal(node):
+        if isinstance(node, ast.BinOp):
+            return literal(node.left) or literal(node.right)
+        return isinstance(node, ast.JoinedStr) or (
+            isinstance(node, ast.Constant) and isinstance(node.value, str))
+
+    by_text = {}
+    for node in ast.walk(ast.parse(src)):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+                and node.func.id == "register" and literal(node.args[1])):
+            name = node.args[0].value
+            text = " ".join(REGISTRY[name].oracle.split())
+            by_text.setdefault(text, []).append(name)
+    twins = [names for names in by_text.values() if len(names) > 1]
+    assert (repeated, twins) == ({}, [])
 
 
 def test_entry_smoke(spark):

@@ -4,7 +4,6 @@ outlier z-test, and the de-broadcast LM join plans."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -92,18 +91,6 @@ class TestDecontaminateBeyondCap:
             emb, threshold=0.9, bench_mod=2, bench_rem=0,
             max_bench=1).collect()}
         assert out == {2: 0}
-
-    def test_oracle_agrees_at_test_sf(self, spark, sf_dir):
-        from examples_scala_spark.queries import REGISTRY
-        q = REGISTRY["semantic_decontaminate"]
-        got = sorted(map(tuple, q.fn(spark, sf_dir).collect()))
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW embeddings AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/embeddings.parquet')")
-        exp = sorted(map(tuple, con.execute(q.oracle).fetchall()))
-        assert got == [(int(a), int(b), pytest.approx(c))
-                       for a, b, c in exp]
 
 
 class TestOutlierZTestHeadroom:
@@ -276,18 +263,6 @@ class TestSemanticDedupAuto:
         emb = _emb(spark, [(i, [float(i % 7), 1.0]) for i in range(30)])
         out = semantic_dedup_auto(emb)
         assert out.count() == 30
-
-    def test_oracle_agrees_at_test_sf(self, spark, sf_dir):
-        from examples_scala_spark.queries import REGISTRY
-        q = REGISTRY["semantic_dedup_auto"]
-        got = sorted(map(tuple, q.fn(spark, sf_dir).collect()))
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW embeddings AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/embeddings.parquet')")
-        exp = sorted((int(a), int(b), int(c), bool(k))
-                     for a, b, c, k in con.execute(q.oracle).fetchall())
-        assert got == exp
 
 
 class TestSemanticDedupSweep:

@@ -96,7 +96,7 @@ class TestAvg6EngineExactTies:
         assert round(sum(round(v * 100) for v in vals)) == 208993
         df = spark.createDataFrame([(v,) for v in vals], "value double")
         got = (df.groupBy().agg(F.count("*").alias("cnt"),
-                                _cents_sum("value"))
+                                _cents_sum())
                .select(half_up("sc", F.col("cnt") * 100).alias("avg_value"))
                .collect()[0].avg_value)
         want = duckdb.sql(
@@ -112,7 +112,7 @@ class TestAvg6EngineExactTies:
         vals = [1.01, 2.02, 3.05]
         df = spark.createDataFrame([(v,) for v in vals], "value double")
         got = (df.groupBy().agg(F.count("*").alias("cnt"),
-                                _cents_sum("value"))
+                                _cents_sum())
                .select(half_up("sc", F.col("cnt") * 100).alias("a"))
                .collect()[0].a)
         want = duckdb.sql(
